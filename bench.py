@@ -99,19 +99,15 @@ def _count(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
     from granulate_char_ocr_spark import driver_queries
     from granulate_char_ocr_spark.plans.pipeline import extract_documents
-    from granulate_char_ocr_spark.session import get_spark
+    from granulate_char_ocr_spark.session import get_spark, spark_cpus
     from granulate_char_ocr_spark.sources import synthetic
 
-    spark = get_spark(
-        app_name="gcos-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
-    )
+    cpus = spark_cpus()
+    spark = get_spark(app_name="gcos-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     times: dict[str, float] = {}

@@ -40,12 +40,7 @@ def main() -> None:
     from granulate_char_ocr_spark import driver_queries
     from granulate_char_ocr_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="gcos-bench-extra",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
-    )
+    spark = get_spark(app_name="gcos-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     names = args.queries or BENCH_QUERIES
     sf_name = args.sf.rstrip("/").rsplit("/", 1)[-1]

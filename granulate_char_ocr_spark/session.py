@@ -7,7 +7,9 @@ real cluster shuffle partitions and maxPartitionBytes scale with executors):
 * Arrow transport on for the pandas/mapInPandas kernels, with a bounded
   records-per-batch so a batch of pixel rows stays well under Python worker
   memory (one media row ≈ 64·width bytes — SURVEY.md §7 R4),
-* UTC session timezone so timestamp semantics match the DuckDB oracle.
+* UTC session timezone so timestamp semantics match the DuckDB oracle,
+* Python workers forked from ``worker_daemon`` (``WORKER_DAEMON_CONF``), which
+  stops every task from re-reading pyspark.zip and the spark-core jar.
 """
 
 from __future__ import annotations
@@ -16,18 +18,48 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Apply to every session that runs the engine's Python stages, including one
+# built by spark-submit; the workers must be able to import the package.
+WORKER_DAEMON_CONF = {
+    "spark.python.daemon.module": "granulate_char_ocr_spark.worker_daemon",
+}
+# the directory (or zip) this package is imported from, for local workers
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def submitted_worker_daemon_conf() -> dict[str, str]:
+    """``WORKER_DAEMON_CONF`` minus every key the launching spark-submit
+    already sets (``--conf`` or spark-defaults.conf), so a submitted daemon
+    module wins over the package's."""
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()  # joins spark-submit's JVM, or starts one
+    submitted = SparkConf()  # loads that JVM's spark.* properties
+    return {k: v for k, v in WORKER_DAEMON_CONF.items() if not submitted.contains(k)}
+
+
+def spark_cpus() -> int:
+    """Task slots for local mode: ``SPARK_GRAFT_CPUS``, else the cores this
+    process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return len(os.sched_getaffinity(0)) if cpus == "*" else int(cpus)
+
 
 def get_spark(
     app_name: str = "granulate-char-ocr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus if cpus != "*" else 32)
+    shuffle_partitions = shuffle_partitions or cpus
     return (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=WORKER_DAEMON_CONF)
+        # workers start with the JVM's cwd; let them import the package (and
+        # the daemon) from wherever this driver does
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

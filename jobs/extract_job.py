@@ -1,7 +1,8 @@
-"""Production entrypoint: spark-submit --py-files gcos.zip jobs/extract_job.py
+"""Production entrypoint, run with spark-submit:
 
     spark-submit \
       --py-files dist/granulate_char_ocr_spark.zip \
+      --conf spark.executorEnv.PYTHONPATH=granulate_char_ocr_spark.zip \
       jobs/extract_job.py \
       --documents s3://bucket/warehouse/docs \
       --media s3://bucket/warehouse/media \
@@ -12,6 +13,14 @@
 Reads the interleaved documents table + media store, runs the extraction
 pipeline with idempotent bucket-ledger resume, and appends per-partition
 lineage rows to ``<output>/metrics``.
+
+The session forks its Python workers from
+``granulate_char_ocr_spark.worker_daemon`` (``session.WORKER_DAEMON_CONF``)
+unless the submit names a ``spark.python.daemon.module`` itself. That daemon
+starts before any task has put ``--py-files`` on the workers' path, so the
+``spark.executorEnv.PYTHONPATH`` line above puts the zip, which executors
+fetch into their working directory, on it from the start; it must name the
+``--py-files`` zip's file name.
 """
 
 from __future__ import annotations
@@ -49,10 +58,15 @@ def main() -> None:
 
     from granulate_char_ocr_spark.plans import resume
     from granulate_char_ocr_spark.plans.lineage import partition_lineage
+    from granulate_char_ocr_spark.session import submitted_worker_daemon_conf
 
     # on a cluster the session comes from spark-submit; local fallback for
     # smoke runs
-    spark = SparkSession.builder.appName("gcos-extract").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("gcos-extract")
+        .config(map=submitted_worker_daemon_conf())
+        .getOrCreate()
+    )
     docs = spark.read.parquet(args.documents)
     media = spark.read.parquet(args.media)
 

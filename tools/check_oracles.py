@@ -68,7 +68,7 @@ def main() -> int:
     import __spark_entry__ as e
     from granulate_char_ocr_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
