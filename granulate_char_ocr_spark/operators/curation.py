@@ -1,7 +1,8 @@
 """Corpus-curation operators an LLM training-data pipeline runs after the
 text-analysis pass: PII redaction, benchmark decontamination, training-
 sequence packing, TF-IDF keyword extraction, and boilerplate line dedup.
-All pure column expressions (whole-stage codegen, no UDF anywhere); the
+Column expressions (whole-stage codegen), except TF-IDF's term counts, a
+per-document text kernel (operators/doc_kernel.py). The
 first four are graded at the gate with exact DuckDB oracles in
 driver_queries.py, the line dedup (the driver surface is capped at 50
 entries) is pinned against a DuckDB replica in tests/test_curation.py.
@@ -373,44 +374,17 @@ def _tf_kernel(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf): per-document term counts computed in-row
     (Counter per doc; empty terms dropped, mirroring the explode's
     ``term != ''`` filter). Integer counts — identical rows to the
-    explode + groupBy formulation (_tf_expr)."""
-    import pandas as pd
+    explode + groupBy formulation (tests/reference_twins.py:_tf_expr)."""
+    from collections import Counter
 
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
+    from granulate_char_ocr_spark.operators.doc_kernel import doc_kernel
 
-    def fn(batches):
-        from collections import Counter
+    def per_doc(text, h):
+        c = Counter(text.split(" "))
+        c.pop("", None)
+        return c.keys(), c.values()
 
-        for pdf in batches:
-            ids, terms, tfs = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                c = Counter(text.split(" "))
-                c.pop("", None)
-                ids.extend([doc_id] * len(c))
-                terms.extend(c.keys())
-                tfs.extend(c.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "term": pd.Series(terms, dtype="object"),
-                    "tf": pd.Series(tfs, dtype="int64"),
-                }
-            )
-
-    return widen_narrow_scan(docs.select("doc_id", "text")).mapInPandas(
-        fn, schema="doc_id bigint, term string, tf bigint"
-    )
-
-
-def _tf_expr(docs: DataFrame) -> DataFrame:
-    """Reference formulation of :func:`_tf_kernel` (explode + aggregate),
-    kept as the cross-check twin and the oracle-shaped build."""
-    words = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).where(F.col("term") != "")
-    return words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    return doc_kernel(docs, per_doc, "term string, tf bigint")
 
 
 def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
@@ -432,7 +406,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     Counter per document) instead of exploding every token occurrence
     (~2.7M rows at sf1.0) through a hash-aggregate exchange — term
     counts are integers, so the rows are identical to the explode+agg
-    formulation (retained as _tf_expr, parity-pinned by
+    formulation (tests/reference_twins.py:_tf_expr, parity-pinned by
     tests/test_curation.py). The one in-query eager checkpoint stops
     the df branch from re-running the kernel (recomputed from parquet
     every invocation; nothing persists across runs)."""

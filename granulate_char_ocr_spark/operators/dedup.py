@@ -1,22 +1,23 @@
 """Deduplication operators over a document corpus — the training-data-pipeline
 surface (exact, MinHash+LSH, SimHash, n-gram Jaccard).
 
-All four are pure DataFrame compositions (no UDFs): hashing is `md5`, which is
-bit-identical across engines, so every operator has an exact DuckDB oracle.
+Hashing is `md5`, which is bit-identical across engines, so every operator
+has an exact DuckDB oracle. The reference formulations are pure DataFrame
+compositions; the hot paths run Python kernels (per-document text kernels on
+operators/doc_kernel.py, plus the n-gram and embedding pair kernels), each
+pinned to its reference by a parity test.
 
 Scale notes:
 * exact dedup — one hash-aggregate shuffle on the fingerprint; at 100 TB this
   is the cheapest possible formulation (map-side partial agg, AQE coalesce).
-* MinHash+LSH — signatures are k grouped `min()`s over exploded shingles
-  (partial aggregation applies), candidates come from an equi-join on
+* MinHash+LSH — signatures are per-seed minima computed in-row per
+  document (no shuffle), candidates come from an equi-join on
   (band, band_hash): only docs sharing a band bucket ever meet, which is the
   whole point of LSH at 10^12 docs — no quadratic pair enumeration.
-* n-gram Jaccard — the shingle-inverted-index self-join; skewy shingles
-  (stop-shingles) are the classic hazard: ``max_shingle_df`` drops shingles
-  seen in more than N docs before the join (standard df-cut), bounding the
-  join fan-out.
-* SimHash — 16 independent conditional sums per doc (single aggregate, no
-  explosion beyond tokens).
+* n-gram Jaccard — an inverted shingle index; skewy shingles (stop-shingles)
+  are the classic hazard: ``max_shingle_df`` drops shingles seen in more
+  than N docs before pairing (standard df-cut), bounding the fan-out.
+* SimHash — per-document ±1 votes over token hashes, computed in-row.
 """
 
 from __future__ import annotations
@@ -80,35 +81,17 @@ def _shingles_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
     cost is dominated by the window build; :func:`shingles` stays the
     expression-shaped reference (and the oracle-shaped build). Pinned
     equal by tests/test_dedup_ops.py."""
-    import pandas as pd
+    from granulate_char_ocr_spark.operators.doc_kernel import doc_kernel
 
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
+    def per_doc(text, h):
+        toks = text.split(" ")
+        return (
+            dict.fromkeys(
+                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+            ),
+        )
 
-    def fn(batches):
-        for pdf in batches:
-            ids, grams = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                if len(toks) < n:
-                    continue
-                gs = dict.fromkeys(
-                    " ".join(toks[i : i + n])
-                    for i in range(len(toks) - n + 1)
-                )
-                ids.extend([doc_id] * len(gs))
-                grams.extend(gs)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "shingle": pd.Series(grams, dtype="object"),
-                }
-            )
-
-    return widen_narrow_scan(docs.select("doc_id", "text")).mapInPandas(
-        fn, schema="doc_id bigint, shingle string"
-    )
+    return doc_kernel(docs, per_doc, "shingle string")
 
 
 def minhash_signatures(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
@@ -125,77 +108,30 @@ def minhash_signatures(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
     next to its occurrence stream), so the signature stage now has ZERO
     shuffle and each distinct shingle is hashed once per task. Hash
     definition unchanged (md5 hex of f"{seed}:{shingle}", lexicographic
-    min), so signatures are identical to the retained expression twin
-    (_minhash_signatures_expr) — pinned by tests/test_dedup_ops.py.
+    min), so signatures are identical to the expression twin
+    (tests/reference_twins.py:_minhash_signatures_expr) — pinned by
+    tests/test_dedup_ops.py.
     Tokenization mirrors Catalyst split(text, ' ') exactly (Java split
     limit -1 == str.split(' '): empty tokens kept everywhere)."""
-    import pandas as pd
+    from hashlib import md5
 
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
+    from granulate_char_ocr_spark.operators.doc_kernel import doc_kernel
 
     seeds = [f"{s}:" for s in range(k)]
-    cols = [f"mh_{s}" for s in range(k)]
+    no_row = ((),) * k  # expression twin: no shingles -> no row
 
-    def fn(batches):
-        from hashlib import md5
+    def hashes(g: str):
+        return tuple(md5((p + g).encode("utf-8")).hexdigest() for p in seeds)
 
-        memo: dict = {}
+    def per_doc(text, h):
+        toks = text.split(" ")
+        grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        if not grams:
+            return no_row
+        return [[min(col)] for col in zip(*(h[g] for g in grams))]
 
-        def hashes(g: str):
-            v = memo.get(g)
-            if v is None:
-                v = tuple(
-                    md5((p + g).encode("utf-8")).hexdigest() for p in seeds
-                )
-                memo[g] = v
-            return v
-
-        for pdf in batches:
-            out = {"doc_id": []}
-            for c in cols:
-                out[c] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                if len(toks) < n:
-                    continue  # expression twin: no shingles -> no row
-                if len(memo) > 4_000_000:  # bound per-task memo growth
-                    memo.clear()
-                grams = {
-                    " ".join(toks[i : i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                mins = [min(col) for col in zip(*map(hashes, grams))]
-                out["doc_id"].append(doc_id)
-                for c, m in zip(cols, mins):
-                    out[c].append(m)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    **{c: pd.Series(out[c], dtype="object") for c in cols},
-                }
-            )
-
-    schema = "doc_id bigint, " + ", ".join(f"{c} string" for c in cols)
-    return widen_narrow_scan(docs.select("doc_id", "text")).mapInPandas(
-        fn, schema=schema
-    )
-
-
-def _minhash_signatures_expr(
-    docs: DataFrame, k: int = 8, n: int = 3
-) -> DataFrame:
-    """Reference formulation of :func:`minhash_signatures` (the r1-r5
-    pure-expression explode + k seeded-md5 min aggregate), kept as the
-    cross-check twin the Arrow kernel is pinned against
-    (tests/test_dedup_ops.py) and as the DuckDB-oracle-shaped build."""
-    sh = shingles(docs, n)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"mh_{s}")
-        for s in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    schema = ", ".join(f"mh_{s} string" for s in range(k))
+    return doc_kernel(docs, per_doc, schema, memo=hashes)
 
 
 def lsh_candidate_pairs(
@@ -463,50 +399,6 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     return summed.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def _embedding_near_pairs_hof(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    sign_dims: int = 4,
-    probe_rings: int = 1,
-) -> DataFrame:
-    """Reference formulation of :func:`embedding_near_pairs` (the pure-SQL
-    multi-probe cell equi-join + per-pair Catalyst HOF cosine). Kept as the
-    cross-check twin the blocked kernel is pinned against
-    (tests/test_dedup_ops.py) — the r6 kernel must emit the IDENTICAL pair
-    set and sims. Do not call on large corpora: the per-candidate
-    interpreted HOF dot product made this the r5 board's worst entry by far
-    (242 s of a 354 s board at sf1.0)."""
-    from granulate_char_ocr_spark.operators.similarity import (
-        COSINE_EXPR,
-        probe_cells_expr,
-        with_cell,
-        with_norm,
-    )
-
-    celled = with_cell(with_norm(embeddings), sign_dims)
-    l = (
-        celled.withColumn(
-            "probe",
-            F.explode(F.expr(probe_cells_expr(sign_dims, probe_rings))),
-        )
-        .alias("l")
-    )
-    r = celled.alias("r")
-    return (
-        l.join(
-            r.hint("shuffle_hash"),
-            (F.col("l.probe") == F.col("r.cell"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-            F.round(F.expr(COSINE_EXPR), 5).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-    )
-
-
 def embedding_near_pairs(
     embeddings: DataFrame,
     threshold: float = 0.4,
@@ -540,7 +432,8 @@ def embedding_near_pairs(
     side's vector arrays, and a mapInPandas kernel evaluates each block
     pair as tiled rank-1-update accumulation in float64 — the SAME
     per-element operation order as the HOF (acc_d = acc_{d-1} + x_d*y_d),
-    so sims are bit-identical, pinned against the retained HOF twin by
+    so sims are bit-identical, pinned against the HOF twin
+    (tests/reference_twins.py:_embedding_near_pairs_hof) by
     tests/test_dedup_ops.py. Rounding uses the fast float emulation as a
     prefilter with a one-grid-step margin, then exact
     Decimal(shortest-repr) HALF_UP — Spark's BigDecimal.valueOf round —
@@ -849,62 +742,32 @@ def _simhash_kernel(docs: DataFrame, bits: int = 16) -> DataFrame:
     kernel computes each doc's signature in-row from its token Counter
     with token→hash memoized per task (guide §4.2). Pinned equal to the
     expression-shaped :func:`simhash` by tests/test_dedup_ops.py."""
-    import pandas as pd
+    from collections import Counter
+    from hashlib import md5
 
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
+    import numpy as np
+
+    from granulate_char_ocr_spark.operators.doc_kernel import doc_kernel
 
     if not 1 <= bits <= 60:
         raise ValueError(f"bits must be in [1, 60], got {bits}")
     hex_digits = (bits + 3) // 4
+    shifts = np.arange(bits, dtype=np.int64)
+    pows = (np.int64(1) << shifts).astype(np.int64)
 
-    def fn(batches):
-        from collections import Counter
-        from hashlib import md5
+    def token_hash(tok: str) -> int:
+        return int(md5(tok.encode("utf-8")).hexdigest()[:hex_digits], 16)
 
-        import numpy as np
+    def per_doc(text, h):
+        c = Counter(text.split(" "))
+        ths = np.fromiter((h[t] for t in c), dtype=np.int64, count=len(c))
+        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
+        votes = (
+            cnts[:, None] * (2 * ((ths[:, None] >> shifts) & 1) - 1)
+        ).sum(axis=0)
+        return ([int(pows[votes > 0].sum())],)
 
-        shifts = np.arange(bits, dtype=np.int64)
-        pows = (np.int64(1) << shifts).astype(np.int64)
-        memo: dict = {}
-
-        def h(tok: str) -> int:
-            v = memo.get(tok)
-            if v is None:
-                v = int(
-                    md5(tok.encode("utf-8")).hexdigest()[:hex_digits], 16
-                )
-                memo[tok] = v
-            return v
-
-        for pdf in batches:
-            ids, sims = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                if len(memo) > 4_000_000:
-                    memo.clear()
-                c = Counter(text.split(" "))
-                ths = np.fromiter(
-                    (h(t) for t in c), dtype=np.int64, count=len(c)
-                )
-                cnts = np.fromiter(
-                    c.values(), dtype=np.int64, count=len(c)
-                )
-                votes = (
-                    cnts[:, None] * (2 * ((ths[:, None] >> shifts) & 1) - 1)
-                ).sum(axis=0)
-                ids.append(doc_id)
-                sims.append(int(pows[votes > 0].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "simhash": pd.Series(sims, dtype="int64"),
-                }
-            )
-
-    return widen_narrow_scan(docs.select("doc_id", "text")).mapInPandas(
-        fn, schema="doc_id bigint, simhash bigint"
-    )
+    return doc_kernel(docs, per_doc, "simhash bigint", memo=token_hash)
 
 
 def simhash_near_pairs(docs: DataFrame, bits: int = 16, max_hd: int = 2) -> DataFrame:

@@ -99,15 +99,12 @@ def temperature_resample(
 
 
 def _hashed_grams(
-    df: DataFrame,
-    key_col: str,
-    text_col: str,
-    buckets: int,
-    carry_cols: tuple[str, ...] = (),
+    df: DataFrame, buckets: int, carry_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(key, bucket): one row per unigram/bigram OCCURRENCE (counts matter
-    for DSIR's bag model), each hashed into ``buckets`` via the _draw32
-    definition (first 8 md5 hex digits mod buckets).
+    """(doc_id, *carry_cols, bucket): one row per unigram/bigram
+    OCCURRENCE (counts matter for DSIR's bag model), each hashed into
+    ``buckets`` via the _draw32 definition (first 8 md5 hex digits mod
+    buckets).
 
     r6 execution (guide §4.2): the former pure-expression plan built the
     gram windows with per-token transform/slice/concat_ws expressions and
@@ -118,110 +115,36 @@ def _hashed_grams(
     order as the expression's explode (unigrams in token order, then
     bigrams) — order matters because per-doc float summation downstream
     accumulates in row order. Row set and order pinned against the
-    retained expression twin (_hashed_grams_expr) by tests/test_dsir.py.
-    Tokenization mirrors Catalyst split(text, ' ') (Java split limit -1
-    == str.split(' ')); empty UNIGRAMS are dropped (the length(_g) > 0
-    filter) while bigrams containing empty tokens survive, exactly as in
-    the expression form."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
+    expression twin (tests/reference_twins.py:_hashed_grams_expr) by
+    tests/test_dsir.py. Tokenization mirrors Catalyst split(text, ' ')
+    (Java split limit -1 == str.split(' ')); empty UNIGRAMS are dropped
+    (the length(_g) > 0 filter) while bigrams containing empty tokens
+    survive, exactly as in the expression form."""
+    from hashlib import md5
 
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
+    from granulate_char_ocr_spark.operators.doc_kernel import doc_kernel
 
-    src = widen_narrow_scan(df).select(key_col, *carry_cols, text_col)
-    in_schema = {f.name: f for f in src.schema.fields}
-    out_schema = StructType(
-        [in_schema[key_col]]
-        + [in_schema[c] for c in carry_cols]
-        + [StructField("bucket", LongType())]
-    )
-    carries = list(carry_cols)
+    def bucket(g: str) -> int:
+        return int(md5(g.encode("utf-8")).hexdigest()[:8], 16) % buckets
 
-    def fn(batches):
-        from hashlib import md5
+    def per_doc(text, h):
+        toks = text.split(" ")
+        gs = [h[t] for t in toks if t != ""]
+        gs += [h[toks[i] + " " + toks[i + 1]] for i in range(len(toks) - 1)]
+        return (gs,)
 
-        memo: dict = {}
-
-        def b(g: str) -> int:
-            v = memo.get(g)
-            if v is None:
-                v = int(md5(g.encode("utf-8")).hexdigest()[:8], 16) % buckets
-                memo[g] = v
-            return v
-
-        for pdf in batches:
-            keys, bks = [], []
-            carry_out = {c: [] for c in carries}
-            for row in zip(
-                pdf[key_col], pdf[text_col], *(pdf[c] for c in carries)
-            ):
-                key, text, cvals = row[0], row[1], row[2:]
-                if text is None:
-                    continue
-                if len(memo) > 4_000_000:  # bound per-task memo growth
-                    memo.clear()
-                toks = text.split(" ")
-                gs = [b(t) for t in toks if t != ""]
-                gs += [
-                    b(toks[i] + " " + toks[i + 1])
-                    for i in range(len(toks) - 1)
-                ]
-                keys.extend([key] * len(gs))
-                bks.extend(gs)
-                for c, v in zip(carries, cvals):
-                    carry_out[c].extend([v] * len(gs))
-            out = {key_col: keys}
-            out.update(carry_out)
-            out["bucket"] = bks
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(fn, schema=out_schema)
-
-
-def _hashed_grams_expr(
-    df: DataFrame,
-    key_col: str,
-    text_col: str,
-    buckets: int,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Reference formulation of :func:`_hashed_grams` (the r1-r5 pure
-    expression gram-window explode + per-occurrence md5), kept as the
-    cross-check twin the Arrow kernel is pinned against
-    (tests/test_dsir.py) and as the DuckDB-oracle-shaped build. The gram
-    windows come from dedup's shared builder so DSIR's gram space can
-    never silently diverge from the dedup/decontamination one."""
-    from granulate_char_ocr_spark.operators.dedup import _gram_windows_expr
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
-
-    uni = _gram_windows_expr(1, with_pos=False, distinct=False)
-    bi = _gram_windows_expr(2, with_pos=False, distinct=False)
-    return (
-        widen_narrow_scan(df)
-        .withColumn("_toks", F.split(F.col(text_col), " "))
-        .select(
-            key_col,
-            *carry_cols,
-            F.explode(F.expr(f"concat({uni}, {bi})")).alias("_g"),
-        )
-        .where(F.length("_g") > 0)
-        .select(
-            key_col,
-            *carry_cols,
-            (_draw32(F.col("_g")) % buckets).alias("bucket"),
-        )
+    return doc_kernel(
+        df, per_doc, "bucket bigint", memo=bucket, carry=carry_cols
     )
 
 
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame | None,
-    key_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 1024,
     target_predicate=None,
 ) -> DataFrame:
-    """(key, n_grams, log_weight): DSIR importance weights (Xie et al.
+    """(doc_id, n_grams, log_weight): DSIR importance weights (Xie et al.
     2023, 'Data Selection for Language Models via Importance Resampling').
     Bag-of-hashed-ngrams generative models (unigram + bigram occurrences
     hashed into ``buckets`` buckets, add-one smoothing) are fit on the
@@ -259,19 +182,17 @@ def dsir_weights(
             "_is_tgt", F.coalesce(target_predicate, F.lit(False))
         )
         g_raw = _hashed_grams(
-            raw, key_col, text_col, buckets, carry_cols=("_is_tgt",)
+            raw, buckets, carry_cols=("_is_tgt",)
         ).localCheckpoint(eager=True)
         mc = g_raw.groupBy("bucket").agg(
             F.count("*").alias("_cr"),
             F.sum(F.when(F.col("_is_tgt"), 1).otherwise(0)).alias("_ct"),
         )
     else:
-        g_raw = _hashed_grams(raw, key_col, text_col, buckets).localCheckpoint(
-            eager=True
+        g_raw = _hashed_grams(raw, buckets).localCheckpoint(eager=True)
+        ct = _hashed_grams(target, buckets).groupBy("bucket").agg(
+            F.count("*").alias("_ct")
         )
-        ct = _hashed_grams(target, key_col, text_col, buckets).groupBy(
-            "bucket"
-        ).agg(F.count("*").alias("_ct"))
         cr = g_raw.groupBy("bucket").agg(F.count("*").alias("_cr"))
         mc = ct.join(cr, "bucket", "full_outer")
     # corpus-total gram counts as empty-partition window sums over the
@@ -293,14 +214,14 @@ def dsir_weights(
     )
     scored = (
         g_raw.join(F.broadcast(model), "bucket")
-        .groupBy(key_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
             F.round(F.sum("_lr"), 6).alias("log_weight"),
         )
     )
-    return raw.select(key_col).join(scored, key_col, "left").select(
-        key_col,
+    return raw.select("doc_id").join(scored, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
         F.coalesce("log_weight", F.lit(0.0)).alias("log_weight"),
     )
@@ -310,8 +231,6 @@ def dsir_select(
     raw: DataFrame,
     target: DataFrame | None,
     k: int,
-    key_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 1024,
     target_predicate=None,
 ) -> DataFrame:
@@ -332,19 +251,16 @@ def dsir_select(
     slice of ``raw``, pass the predicate instead of a target DataFrame
     and the weights derive everything from ONE gram explosion (see
     dsir_weights)."""
-    w = dsir_weights(
-        raw, target, key_col, text_col, buckets,
-        target_predicate=target_predicate,
-    )
-    u = (_draw32(F.col(key_col)) + 0.5) / F.lit(4294967296.0)
+    w = dsir_weights(raw, target, buckets, target_predicate=target_predicate)
+    u = (_draw32(F.col("doc_id")) + 0.5) / F.lit(4294967296.0)
     winners = (
         w.withColumn(
             "sample_key",
             F.round(F.col("log_weight") - F.log(-F.log(u)), 6),
         )
-        .orderBy(F.col("sample_key").desc(), F.col(key_col))
+        .orderBy(F.col("sample_key").desc(), F.col("doc_id"))
         .limit(k)
     )
-    return raw.join(F.broadcast(winners), key_col).orderBy(
-        F.col("sample_key").desc(), F.col(key_col)
+    return raw.join(F.broadcast(winners), "doc_id").orderBy(
+        F.col("sample_key").desc(), F.col("doc_id")
     )

@@ -1,6 +1,7 @@
 """Text-analysis operators over a document corpus: language-ID, quality
-scoring, token counting, fingerprinting. All pure column expressions
-(whole-stage codegen), each with an exact DuckDB oracle.
+scoring, token counting, fingerprinting. Column expressions (whole-stage
+codegen) where Catalyst can say it; winnowing runs as a per-document text
+kernel (operators/doc_kernel.py). Each has an exact DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -434,96 +435,35 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     memoizes gram→hash per task (each distinct gram is hashed once per
     task), takes window minima via one vectorized sliding-window view, and
     keeps the identical hash definition, so the output row set is
-    unchanged — pinned against the retained expression twin
-    (_winnow_fingerprints_expr) by
+    unchanged — pinned against the expression twin
+    (tests/reference_twins.py:_winnow_fingerprints_expr) by
     tests/test_textstats_repetition.py. Python-side
     normalization mirrors the Catalyst expressions exactly: strip(' ')
     (trim), ASCII \\s+ collapse (Java's default \\s class), then lower."""
-    import pandas as pd
+    import re
+    from hashlib import md5
 
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
+    import numpy as np
 
-    def fn(batches):
-        import re
-        from hashlib import md5
+    from granulate_char_ocr_spark.operators.doc_kernel import doc_kernel
 
-        import numpy as np
+    ws = re.compile(r"\s+", re.ASCII)
 
-        ws = re.compile(r"\s+", re.ASCII)
-        memo: dict = {}
+    def gram_hash(g: str) -> int:
+        return int(md5(g.encode("utf-8")).hexdigest()[:8], 16)
 
-        def h(g: str) -> int:
-            v = memo.get(g)
-            if v is None:
-                v = int(md5(g.encode("utf-8")).hexdigest()[:8], 16)
-                memo[g] = v
-            return v
+    def per_doc(text, h):
+        s = ws.sub(" ", text.strip(" ")).lower()
+        m = len(s) - k + 1
+        if m < w:  # fewer than w gram hashes -> no windows
+            return ((),)
+        hs = np.fromiter(
+            (h[s[i : i + k]] for i in range(m)), dtype=np.int64, count=m
+        )
+        wins = np.lib.stride_tricks.sliding_window_view(hs, w).min(axis=1)
+        return (np.unique(wins).tolist(),)
 
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                s = ws.sub(" ", text.strip(" ")).lower()
-                n = len(s)
-                if n - k + 1 < w:  # fewer than w gram hashes -> no windows
-                    continue
-                if len(memo) > 4_000_000:  # bound per-task memo growth
-                    memo.clear()
-                hs = np.fromiter(
-                    (h(s[i : i + k]) for i in range(n - k + 1)),
-                    dtype=np.int64,
-                    count=n - k + 1,
-                )
-                mins = np.unique(
-                    np.lib.stride_tricks.sliding_window_view(hs, w).min(axis=1)
-                )
-                ids.extend([doc_id] * len(mins))
-                fps.append(mins)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "fp": (
-                        np.concatenate(fps)
-                        if fps
-                        else pd.Series([], dtype="int64")
-                    ),
-                }
-            )
-
-    return widen_narrow_scan(docs.select("doc_id", "text")).mapInPandas(
-        fn, schema="doc_id bigint, fp bigint"
-    )
-
-
-def _winnow_fingerprints_expr(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
-    """Reference formulation of :func:`winnow_fingerprints` (the r1-r5
-    pure-column-expression plan), kept as the cross-check twin the Arrow
-    kernel is pinned against (tests/test_textstats_repetition.py) and as the DuckDB-
-    oracle-shaped build."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    grams = (
-        f"transform(sequence(1, greatest(length(_norm) - {k - 1}, 1)), "
-        f"i -> substring(_norm, i, {k}))"
-    )
-    hashes = (
-        f"transform(filter({grams}, g -> length(g) = {k}), "
-        "g -> cast(conv(substring(md5(g), 1, 8), 16, 10) as bigint))"
-    )
-    wins = (
-        f"case when size(_hashes) >= {w} then "
-        f"array_distinct(transform(sequence(1, size(_hashes) - {w - 1}), "
-        f"j -> array_min(slice(_hashes, j, {w})))) "
-        "else array() end"
-    )
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
-
-    return (
-        widen_narrow_scan(docs)
-        .withColumn("_norm", norm)
-        .withColumn("_hashes", F.expr(hashes))
-        .select("doc_id", F.explode(F.expr(wins)).alias("fp"))
-    )
+    return doc_kernel(docs, per_doc, "fp bigint", memo=gram_hash)
 
 
 # The 8 required stopwords of the Gopher document filter (Rae et al. 2021,

@@ -6,6 +6,7 @@ scale (broadcast sides, partitioned windows, no UDFs)."""
 import pytest
 from pyspark.sql import functions as F
 
+import reference_twins as twins
 from granulate_char_ocr_spark.operators import curation
 
 
@@ -384,5 +385,5 @@ def test_tf_kernel_equals_expr(spark):
     )
     docs = base.unionAll(edges)
     new = {tuple(r) for r in curation._tf_kernel(docs).collect()}
-    ref = {tuple(r) for r in curation._tf_expr(docs).collect()}
+    ref = {tuple(r) for r in twins._tf_expr(docs).collect()}
     assert new == ref

@@ -5,6 +5,7 @@ parity; these check the semantics are the intended ones)."""
 import pytest
 from pyspark.sql import functions as F
 
+import reference_twins as twins
 from granulate_char_ocr_spark.operators import dedup, similarity, textstats
 
 
@@ -566,7 +567,7 @@ def test_embedding_near_pairs_blocked_kernel_equals_hof(spark):
         )
         ref = sorted(
             (r["vec_a"], r["vec_b"], r["sim"])
-            for r in dedup._embedding_near_pairs_hof(
+            for r in twins._embedding_near_pairs_hof(
                 emb, threshold=0.4, probe_rings=rings
             ).collect()
         )
@@ -624,7 +625,7 @@ def test_minhash_signatures_kernel_equals_expr(spark):
         }
         ref = {
             tuple(r)
-            for r in dedup._minhash_signatures_expr(docs, k, n).collect()
+            for r in twins._minhash_signatures_expr(docs, k, n).collect()
         }
         assert new == ref, f"k={k},n={n}: kernel diverged from expr twin"
 

@@ -1,6 +1,7 @@
 """DSIR importance weighting + Gumbel-top-k selection
 (operators/sampling.py) — semantics and exact DuckDB parity."""
 
+import reference_twins as twins
 from granulate_char_ocr_spark.driver_queries import _DSIR_GRAMS_SQL
 from granulate_char_ocr_spark.operators.sampling import (
     dsir_select,
@@ -175,12 +176,12 @@ def test_hashed_grams_kernel_equals_expr(spark):
     new = Counter(
         tuple(r)
         for r in sampling._hashed_grams(
-            docs, "doc_id", "text", 64, carry_cols=("_is_tgt",)
+            docs, 64, carry_cols=("_is_tgt",)
         ).collect()
     )
     ref = Counter(
         tuple(r)
-        for r in sampling._hashed_grams_expr(
+        for r in twins._hashed_grams_expr(
             docs, "doc_id", "text", 64, carry_cols=("_is_tgt",)
         ).collect()
     )

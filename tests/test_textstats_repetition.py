@@ -6,6 +6,7 @@ import duckdb
 import pandas as pd
 import pytest
 
+import reference_twins as twins
 from granulate_char_ocr_spark.operators import textstats
 
 
@@ -158,7 +159,7 @@ def test_winnow_kernel_equals_expression_twin(spark):
     )
     ref = sorted(
         (r["doc_id"], r["fp"])
-        for r in textstats._winnow_fingerprints_expr(docs).collect()
+        for r in twins._winnow_fingerprints_expr(docs).collect()
     )
     assert new == ref and len(new) > 0
     parquet = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -168,6 +169,6 @@ def test_winnow_kernel_equals_expression_twin(spark):
     )
     ref2 = sorted(
         (r["doc_id"], r["fp"])
-        for r in textstats._winnow_fingerprints_expr(parquet).collect()
+        for r in twins._winnow_fingerprints_expr(parquet).collect()
     )
     assert new2 == ref2 and len(new2) > 0
