@@ -25,6 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from granulate_char_ocr_spark.operators.skew import (
+    core_partitions,
+    widen_narrow_scan,
+)
+
+
 def TOKENS():
     # built lazily: Column construction needs an active SparkContext
     return F.split(F.col("text"), " ")
@@ -62,8 +68,6 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     distinct happens IN-ROW (array_distinct before the explode), not as a
     post-explode ``.distinct()`` — same rows for unique doc_ids, zero
     shuffle. Docs shorter than n tokens contribute no rows."""
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
-
     expr = _gram_windows_expr(n, with_pos=False, distinct=True)
     return (
         widen_narrow_scan(docs)
@@ -181,7 +185,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int = 100,
-    n_slices: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard): exact n-gram Jaccard over the shingle
     inverted index; shingles appearing in > max_shingle_df docs are cut
@@ -196,9 +199,9 @@ def ngram_jaccard_pairs(
     sum C(df,2) ~ 67M candidate pair rows through a join + 1.4 GB
     hash-agg exchange — the df-cut survivors cluster just under the cut,
     so nearly every candidate pair is join fan-out. The r6 plan
-    replicates the packed index to ``n_slices`` tasks via a single-row
-    broadcast equi-join (executor-side; no driver collect) and a NumPy
-    kernel enumerates only the pair slice with doc_a %% n_slices == pid,
+    replicates the packed index to P slice tasks, one per core, via a
+    single-row broadcast equi-join (executor-side; no driver collect) and
+    a NumPy kernel enumerates only the pair slice with doc_a %% P == pid,
     bincounts packed (a, b) keys, derives both set sizes from the same
     index, and emits only survivors — the candidate pair stream never
     touches a shuffle. Rounding: fast float emulation as a prefilter
@@ -213,10 +216,11 @@ def ngram_jaccard_pairs(
     import pandas as pd
 
     spark = docs.sparkSession
-    # P = cores measured best (A/B P in {16,32,64} at sf1.0: the index
-    # payload ships once per slice, so transfer grows linearly in P while
-    # the vectorized kernel splits fine at one slice per core)
-    P = n_slices or max(16, spark.sparkContext.defaultParallelism)
+    # one slice per core: the index payload ships once per slice, so
+    # transfer grows linearly in P while the vectorized kernel splits fine
+    # at one slice per core (4 cores, sf0.1, min of 5: 0.93/1.32 s at P=4
+    # vs 1.17/1.81 s at 16)
+    P = core_partitions(spark)
     sh = _shingles_kernel(docs, n)
     by = (
         sh.groupBy("shingle")
@@ -374,8 +378,6 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     # group documents.parquet serializes the whole md5+32-sum stage on one
     # core, and at sf1.0 the interleaved A/B is 3.64 s serial vs 2.26 s
     # widened (sf0.1: 1.20 vs 1.15 — neutral where it used to lose).
-    from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
-
     if not 1 <= bits <= 60:
         raise ValueError(f"bits must be in [1, 60], got {bits}")
     hex_digits = (bits + 3) // 4
@@ -404,7 +406,6 @@ def embedding_near_pairs(
     threshold: float = 0.4,
     sign_dims: int = 4,
     probe_rings: int = 1,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """(vec_a, vec_b, sim): embedding-cosine near-duplicate pairs — the
     semantic-dedup leg.
@@ -427,7 +428,7 @@ def embedding_near_pairs(
     effectively an all-pairs cosine — r5 evaluated it with the per-pair
     interpreted HOF inside the probe equi-join (242 s at sf1.0, 2.4 s/M
     pairs). This formulation computes the same values at NumPy rate:
-    vectors are grouped round-robin (vec_id % n_blocks) into blocks, the
+    vectors are grouped round-robin (vec_id % nb) into nb blocks, the
     tiny (bl, br) block-pair relation (bl <= br) broadcast-joins each
     side's vector arrays, and a mapInPandas kernel evaluates each block
     pair as tiled rank-1-update accumulation in float64 — the SAME
@@ -439,9 +440,9 @@ def embedding_near_pairs(
     Decimal(shortest-repr) HALF_UP — Spark's BigDecimal.valueOf round —
     on the few survivors.
 
-    Scale shape: the block-pair relation has nb(nb+1)/2 rows; each task
-    is one bounded block pair (work N^2 d / nb^2, accumulator tiled to
-    ~4 MB), so nb grows with the corpus to keep tasks constant-cost.
+    Scale shape: nb is one block per core and the block-pair relation
+    has nb(nb+1)/2 rows; each task is one block pair (work N^2 d / nb^2,
+    accumulator tiled to ~4 MB).
     Only block KEYS shuffle (the fat vector arrays ride one broadcast
     per side); past broadcastable corpus size, shard by IVF cell first
     and run the kernel per shard — the quadratic candidate set is
@@ -451,10 +452,11 @@ def embedding_near_pairs(
     import pandas as pd
 
     spark = embeddings.sparkSession
-    # nb = cores measured best at 32 cores (A/B nb in {16,32,48,64}:
-    # 5.7/4.0/4.6/5.0 s at sf1.0) — fewer blocks save Arrow transfer but
-    # the fatter tasks straggle; more blocks pay linear transfer growth.
-    nb = n_blocks or max(16, spark.sparkContext.defaultParallelism)
+    # one block per core: each vector ships in nb + 1 block pairs, so
+    # transfer grows linearly in nb (4 cores, sf0.1, min of 5: 1.1-1.3 s at
+    # nb=4 vs 2.2-2.3 s at 16; 32 cores, sf1.0: nb=32 4.0 s vs 5.7/4.6/5.0 s
+    # at 16/48/64)
+    nb = core_partitions(spark)
     blocks = (
         embeddings.select("vec_id", "embedding")
         .withColumn("b", F.pmod(F.col("vec_id"), F.lit(nb)).cast("int"))

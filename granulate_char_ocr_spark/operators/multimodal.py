@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.functions import kernels
+from granulate_char_ocr_spark.operators.skew import kernel_partitions
 
 MULTIMODAL_SCHEMA = (
     "media_ref string, modality string, codec string, width int, height int, "
@@ -129,11 +130,7 @@ MEDIA_STORE_SCHEMA = (
 )
 
 
-def decode_media_store(
-    media: DataFrame,
-    permissive: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def decode_media_store(media: DataFrame, permissive: bool = False) -> DataFrame:
     """Decompress a media dimension table in place: (media_ref, word,
     width, height, pixels=PNG/JPEG/raw bytes) → the same shape with raw
     grayscale pixel buffers, codec sniffed from the payload signature.
@@ -147,16 +144,14 @@ def decode_media_store(
     collapses those to empty results — the reference's error contract,
     ocr_service.py:164-171) instead of failing the task.
 
-    The input is REPARTITIONED before the decode UDF (r4): encoded
-    payloads are byte-small (a glyph PNG is ~600 B, so a 40 000-image
-    store is ~24 MB → the parquet scan packs it into one or two input
-    splits) while decode is CPU-heavy per row — exactly the
-    bytes-blind-spot the kernel-stage exchanges already guard against.
-    Without the explicit exchange the whole decode of a compressed store
-    runs near-serial regardless of cluster size (measured: a 40 000-image
+    The input is REPARTITIONED into ``skew.kernel_partitions`` before the
+    decode UDF (r4): encoded payloads are byte-small (a glyph PNG is ~600
+    B, so a 40 000-image store is ~24 MB → the parquet scan packs it into
+    one or two input splits) while decode is CPU-heavy per row. Without
+    the explicit exchange the whole decode of a compressed store runs
+    near-serial regardless of cluster size (measured: a 40 000-image
     scaling corpus spent ~14 s in a single decode task at every core
-    count). Default ``defaultParallelism × 4``; pass ``num_partitions=0``
-    to skip (e.g. an already well-partitioned input)."""
+    count)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -193,34 +188,24 @@ def decode_media_store(
                 columns=["media_ref", "word", "width", "height", "pixels"],
             )
 
-    cols = ["media_ref", "word", "width", "height", "pixels"]
-    selected = media.select(*cols)
-    if num_partitions is None:
-        num_partitions = (
-            media.sparkSession.sparkContext.defaultParallelism * 4
-        )
-    if num_partitions:
-        selected = selected.repartition(num_partitions)
+    selected = media.select(
+        "media_ref", "word", "width", "height", "pixels"
+    ).repartition(kernel_partitions(media.sparkSession))
     return selected.mapInPandas(fn, schema=MEDIA_STORE_SCHEMA)
 
 
 PAGED_MEDIA_SCHEMA = MEDIA_STORE_SCHEMA + ", page_no int"
 
 
-def explode_tiff_pages(
-    media: DataFrame,
-    permissive: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def explode_tiff_pages(media: DataFrame, permissive: bool = False) -> DataFrame:
     """1→N page explode for multi-page TIFF payloads (the fax/scanned-
     document convention: one IFD per page): (media_ref, word, width,
     height, pixels=TIFF bytes) → one MEDIA_STORE-shaped row PER PAGE
     plus ``page_no``, pixels decoded to the raw grayscale buffer the
     extraction kernel takes. Single-page payloads yield one row with
-    page_no 0, so mixed stores work unchanged. Same explicit-repartition
-    rationale as decode_media_store: encoded pages are byte-small but
-    decode-heavy, and bytes-based split sizing would serialize the
-    stage. ``permissive`` maps a failed payload to one null-pixel row."""
+    page_no 0, so mixed stores work unchanged. Repartitioned like
+    decode_media_store: encoded pages are byte-small but decode-heavy.
+    ``permissive`` maps a failed payload to one null-pixel row."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from granulate_char_ocr_spark.functions.tiff import decode_tiff_pages
@@ -254,14 +239,9 @@ def explode_tiff_pages(
                 ],
             )
 
-    cols = ["media_ref", "word", "width", "height", "pixels"]
-    selected = media.select(*cols)
-    if num_partitions is None:
-        num_partitions = (
-            media.sparkSession.sparkContext.defaultParallelism * 4
-        )
-    if num_partitions:
-        selected = selected.repartition(num_partitions)
+    selected = media.select(
+        "media_ref", "word", "width", "height", "pixels"
+    ).repartition(kernel_partitions(media.sparkSession))
     return selected.mapInPandas(fn, schema=PAGED_MEDIA_SCHEMA)
 
 

@@ -43,7 +43,10 @@ from granulate_char_ocr_spark.operators.extract import (
     extract_media_spans,
     extract_unique_media,
 )
-from granulate_char_ocr_spark.operators.skew import salt_repartition
+from granulate_char_ocr_spark.operators.skew import (
+    kernel_partitions,
+    salt_repartition,
+)
 from granulate_char_ocr_spark.operators.stitch import assemble_documents
 
 
@@ -55,24 +58,15 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def unique_media_repartitioned(
-    media_refs: DataFrame,
-    media_side: DataFrame,
-    num_partitions: int | None = None,
+    media_refs: DataFrame, media_side: DataFrame
 ) -> DataFrame:
-    """distinct media_ref keys → EXPLICIT kernel-stage repartition → payload
-    join. The one place the partition policy for the extraction kernel
-    lives: the distinct output is key-only bytes, so AQE's bytes-based
-    sizing would coalesce the downstream pixel-UDF stage to ~1 partition
-    (the key-only-exchange blind spot) — hence cores × 4 unless overridden.
-    ``media_side`` should already be broadcast-wrapped when dim-sized."""
-    par = (
-        num_partitions
-        or media_refs.sparkSession.sparkContext.defaultParallelism * 4
-    )
+    """distinct media_ref keys → ``skew.kernel_partitions`` repartition →
+    payload join. ``media_side`` should already be broadcast-wrapped when
+    dim-sized."""
     return (
         media_refs.select("media_ref")
         .distinct()
-        .repartition(par, "media_ref")
+        .repartition(kernel_partitions(media_refs.sparkSession), "media_ref")
         .join(media_side, "media_ref", "left")
     )
 
@@ -81,7 +75,6 @@ def extract_flat(
     docs: DataFrame,
     media: DataFrame,
     n_salts: int = 8,
-    num_partitions: int | None = None,
     noisy: bool = False,
     broadcast_media: bool = True,
     dedup_media: bool = True,
@@ -135,8 +128,7 @@ def extract_flat(
     )
     if dedup_media:
         # classify each distinct image once; join tiny results back
-        # (kernel-stage partition policy lives in unique_media_repartitioned)
-        uniq = unique_media_repartitioned(media_spans, media_side, num_partitions)
+        uniq = unique_media_repartitioned(media_spans, media_side)
         rec_uniq = extract_unique_media(
             uniq, noisy=noisy, detail=detail, segmenter=segmenter
         )
@@ -147,9 +139,7 @@ def extract_flat(
         # Order matters at scale: repartition the TINY span keys first, then
         # attach pixels via the (broadcast) media join inside each partition —
         # pixel bytes never enter the salt exchange.
-        salted = salt_repartition(
-            media_spans, n_salts=n_salts, num_partitions=num_partitions
-        )
+        salted = salt_repartition(media_spans, n_salts=n_salts)
         joined = salted.join(media_side, "media_ref", "left")
         recognized = extract_media_spans(
             joined, noisy=noisy, detail=detail, segmenter=segmenter
@@ -173,7 +163,6 @@ def extract_documents(
     docs: DataFrame,
     media: DataFrame,
     n_salts: int = 8,
-    num_partitions: int | None = None,
     noisy: bool = False,
     broadcast_media: bool = True,
     dedup_media: bool = True,
@@ -190,7 +179,6 @@ def extract_documents(
         docs,
         media,
         n_salts=n_salts,
-        num_partitions=num_partitions,
         noisy=noisy,
         broadcast_media=broadcast_media,
         dedup_media=dedup_media,

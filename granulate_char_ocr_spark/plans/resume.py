@@ -7,8 +7,10 @@ Mechanism — a deterministic bucket ledger, not Structured Streaming state:
 * output parquet is partitioned by ``bucket`` and written with dynamic
   partition overwrite, so re-writing a bucket is idempotent (same doc set →
   byte-identical span rows, since the whole pipeline is deterministic);
-* a JSON ledger records committed buckets; on restart, committed buckets are
-  skipped (the anti-join of pending work against the ledger).
+* a JSON ledger records committed buckets and ``n_buckets``; on restart,
+  committed buckets are skipped (the anti-join of pending work against the
+  ledger). Another ``n_buckets`` moves documents between buckets, so a
+  resume with it is refused (a ledger without the count is accepted).
 
 At cluster scale the ledger lives next to the output (object store / Iceberg
 snapshot metadata); bucket count is sized so one bucket ≈ one comfortable
@@ -36,19 +38,23 @@ def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def read_ledger(out_dir: str) -> list[int]:
+def _load_ledger(out_dir: str) -> dict:
     path = os.path.join(out_dir, LEDGER_NAME)
     if not os.path.exists(path):
-        return []
+        return {"committed_buckets": []}
     with open(path) as f:
-        return sorted(json.load(f)["committed_buckets"])
+        return json.load(f)
 
 
-def _write_ledger(out_dir: str, buckets: Sequence[int]) -> None:
+def read_ledger(out_dir: str) -> list[int]:
+    return sorted(_load_ledger(out_dir)["committed_buckets"])
+
+
+def _write_ledger(out_dir: str, ledger: dict) -> None:
     path = os.path.join(out_dir, LEDGER_NAME)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"committed_buckets": sorted(set(buckets))}, f)
+        json.dump(ledger, f)
     os.replace(tmp, path)  # atomic commit
 
 
@@ -57,7 +63,7 @@ def run_with_resume(
     docs: DataFrame,
     media: DataFrame,
     out_dir: str,
-    n_buckets: int = 16,
+    n_buckets: int,
     only_buckets: Sequence[int] | None = None,
     n_salts: int = 8,
     **extract_kwargs,
@@ -65,9 +71,16 @@ def run_with_resume(
     """Run extraction for all not-yet-committed buckets; returns the buckets
     processed this invocation. ``only_buckets`` restricts the run (used by
     tests to simulate a mid-job kill). Extra keyword args (noisy,
-    dedup_media, segmenter, ...) pass through to ``extract_documents``."""
+    dedup_media, segmenter, ...) pass through to ``extract_documents``.
+    Raises ``ValueError`` if the ledger records another ``n_buckets``."""
     os.makedirs(out_dir, exist_ok=True)
-    committed = set(read_ledger(out_dir))
+    ledger = _load_ledger(out_dir)
+    if ledger.get("n_buckets", n_buckets) != n_buckets:
+        raise ValueError(
+            f"{out_dir} has n_buckets={ledger['n_buckets']}, not {n_buckets}: "
+            "resuming would skip or duplicate documents"
+        )
+    committed = set(ledger["committed_buckets"])
     target = set(range(n_buckets)) - committed
     if only_buckets is not None:
         target &= set(only_buckets)
@@ -88,7 +101,10 @@ def run_with_resume(
         .mode("overwrite")
         .parquet(os.path.join(out_dir, "extracted"))
     )
-    _write_ledger(out_dir, sorted(committed | set(todo)))
+    _write_ledger(
+        out_dir,
+        {"n_buckets": n_buckets, "committed_buckets": sorted(committed | target)},
+    )
     return todo
 
 

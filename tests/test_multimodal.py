@@ -213,7 +213,7 @@ def test_explode_tiff_pages(spark):
         pdf,
         "media_ref string, word string, width int, height int, pixels binary",
     )
-    rows = explode_tiff_pages(df, permissive=True, num_partitions=4).collect()
+    rows = explode_tiff_pages(df, permissive=True).collect()
     by_ref: dict[str, dict[int, object]] = {}
     for r in rows:
         by_ref.setdefault(r["media_ref"], {})[r["page_no"]] = r
@@ -230,7 +230,7 @@ def test_explode_tiff_pages(spark):
     import pytest as _pytest
 
     with _pytest.raises(Exception):
-        explode_tiff_pages(df, permissive=False, num_partitions=4).collect()
+        explode_tiff_pages(df, permissive=False).collect()
 
 
 def test_multipage_fax_to_ocr_end_to_end(spark):
@@ -262,7 +262,7 @@ def test_multipage_fax_to_ocr_end_to_end(spark):
         rows,
         "media_ref string, word string, width int, height int, pixels binary",
     )
-    paged = explode_tiff_pages(media, num_partitions=4).withColumn(
+    paged = explode_tiff_pages(media).withColumn(
         "media_ref",
         F.concat_ws("#", "media_ref", F.col("page_no").cast("string")),
     )
@@ -304,7 +304,7 @@ def test_explode_tiff_pages_rgb_luminance(spark):
         pdf,
         "media_ref string, word string, width int, height int, pixels binary",
     )
-    [row] = explode_tiff_pages(df, num_partitions=1).collect()
+    [row] = explode_tiff_pages(df).collect()
     gray = np.frombuffer(row["pixels"], np.uint8).reshape(8, 8)
     assert int(gray[0, 0]) == 76  # 0.299 * 255, not 0.114 * 255 = 29
 

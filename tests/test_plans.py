@@ -80,7 +80,7 @@ def test_salt_spreads_heavy_doc(spark):
 
     docs, _, _ = corpus_spark(spark, 110, seed=42)  # includes heavy doc #7
     spans = explode_spans(docs).filter(F.col("kind") == "media")
-    salted = salt_repartition(spans, n_salts=8, num_partitions=16)
+    salted = salt_repartition(spans, n_salts=8)
     heavy = (
         salted.withColumn("pid", F.spark_partition_id())
         .filter(F.col("doc_id") == "doc_00000007")
@@ -179,6 +179,48 @@ def test_kernel_stage_exchange_has_explicit_partition_count(spark, corpus):
     want = spark.sparkContext.defaultParallelism * 4
     counts = re.findall(r"hashpartitioning\(media_ref[^)]*, (\d+)\)", plan)
     assert str(want) in counts, (want, counts)
+
+
+def test_partition_policy_at_four_cores(spark, corpus):
+    """operators/skew.py's policy at the suite's local[4]: exchanges that
+    feed a kernel get cores x 4 = 16 partitions; the n-gram slices and the
+    embedding blocks, whose every task ships a replicated payload, get one
+    per core (4 slices; 4 blocks = 10 block pairs)."""
+    import re
+
+    from granulate_char_ocr_spark.operators import dedup
+    from granulate_char_ocr_spark.operators.multimodal import decode_media_store
+    from granulate_char_ocr_spark.plans.pipeline import extract_documents
+
+    assert spark.sparkContext.defaultParallelism == 4
+    docs, media = corpus
+    by_num = r"hashpartitioning\({}, 16\), REPARTITION_BY_NUM"
+    shared = _plan(extract_documents(docs, media), "simple")
+    assert re.search(by_num.format(r"media_ref#\d+"), shared), shared
+    salted = _plan(extract_documents(docs, media, dedup_media=False), "simple")
+    assert re.search(by_num.format(r"doc_id#\d+, _salt#\d+L"), salted), salted
+    decoded = _plan(decode_media_store(media), "simple")
+    assert "RoundRobinPartitioning(16), REPARTITION_BY_NUM" in decoded, decoded
+
+    texts = spark.createDataFrame(
+        [(i, "a b c d e") for i in range(8)], "doc_id bigint, text string"
+    )
+    ngram = _plan(dedup.ngram_jaccard_pairs(texts), "simple")
+    assert "Range (0, 4, step=1, splits=4)" in ngram, ngram
+
+    vectors = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(8)], "vec_id long, embedding array<float>"
+    )
+    near = dedup.embedding_near_pairs(vectors, sign_dims=2)
+    # the block-pair relation is the in-memory RDD scan that outputs bl, br
+    stack, pair_rows = [near._jdf.queryExecution().sparkPlan()], []
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() == "Scan ExistingRDD" and "bl#" in node.toString():
+            pair_rows.append(node.rdd().count())
+    assert pair_rows == [10], pair_rows
 
 
 def test_sorted_unique_event_types(spark):

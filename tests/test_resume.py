@@ -85,3 +85,25 @@ def test_run_with_resume_accepts_job_kwargs(spark, tmp_path):
     )
     assert sorted(done) == [0, 1, 2, 3]
     assert resume.read_output(spark, str(tmp_path / "out")).count() > 0
+
+
+def test_resume_refuses_a_changed_bucket_count(spark, corpus, tmp_path):
+    """A document's bucket depends on n_buckets, so a ledger of committed
+    buckets only means something under the count it was written with:
+    resuming with another count would skip documents whose new bucket was
+    committed under the old count, or rewrite committed ones."""
+    import json
+
+    docs, media, _ = corpus
+    out = str(tmp_path / "out")
+    resume.run_with_resume(spark, docs, media, out, n_buckets=4, only_buckets=[0])
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        resume.run_with_resume(spark, docs, media, out, n_buckets=8)
+    assert resume.read_ledger(out) == [0]
+
+    # a ledger written before the count was recorded is still accepted
+    with open(tmp_path / "out" / resume.LEDGER_NAME, "w") as f:
+        json.dump({"committed_buckets": [0]}, f)
+    assert resume.run_with_resume(spark, docs, media, out, n_buckets=4) == [1, 2, 3]
+    got = resume.read_output(spark, out)
+    assert got.count() == got.select("doc_id").distinct().count() == N_DOCS
