@@ -3124,245 +3124,131 @@ import os as _os
 _SF_DOCS = {"sf0.001": 200, "sf0.01": 800, "sf0.1": 2000}
 _ORACLE_N_DOCS = _SF_DOCS["sf0.01"]  # the driver's oracle-compare tier
 
-_GOLDEN_DIR = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-    "dist",
-    "golden",
-)
+_PKG_DIR = _os.path.dirname(_os.path.abspath(__file__))
+_GOLDEN_DIR = _os.path.join(_os.path.dirname(_PKG_DIR), "dist", "golden")
 
 
-def _generator_fingerprint() -> str:
-    """Content key of every module the golden parquets are a function of
-    (ADVICE r2: a filename keyed only on n_docs lets a stale golden survive a
-    generator/kernel change silently). Any edit to these sources changes the
-    fingerprint → new filenames → goldens regenerate on next import."""
+def _fingerprint(*sources: str) -> str:
+    """Content key of the source files a golden parquet is a function of
+    (paths relative to the package, or absolute). ADVICE r2: a filename
+    keyed only on n_docs lets a stale golden survive a generator/kernel
+    change silently; with the key in the filename, any edit to these
+    sources names a new file, and the golden regenerates on next import."""
     import hashlib as _hashlib
 
-    base = _os.path.dirname(_os.path.abspath(__file__))
     h = _hashlib.md5()
-    for rel in (
-        "sources/synthetic.py",
-        "functions/kernels.py",
-        "functions/text.py",
-        "alphabet.py",
-    ):
-        with open(_os.path.join(base, rel), "rb") as f:
+    for src in sources:
+        with open(_os.path.join(_PKG_DIR, src), "rb") as f:
             h.update(f.read())
     return h.hexdigest()[:10]
 
 
-_GOLDEN_FP = _generator_fingerprint()
-_GOLDEN_FLAT = _os.path.join(
-    _GOLDEN_DIR, f"ocr_expected_flat_{_ORACLE_N_DOCS}_{_GOLDEN_FP}.parquet"
+def _golden(name: str) -> str:
+    return _os.path.join(_GOLDEN_DIR, f"{name}.parquet")
+
+
+def _write_golden(path: str, frame, fields) -> None:
+    import pyarrow as _pa
+
+    from granulate_char_ocr_spark.sources.synthetic import (
+        write_parquet_atomic,
+    )
+
+    write_parquet_atomic(
+        _pa.Table.from_pandas(
+            frame, schema=_pa.schema(fields), preserve_index=False
+        ),
+        path,
+    )
+
+
+# the OCR goldens are a function of the generator and the whole kernel
+# chain that produced the expected spans
+_GOLDEN_FP = _fingerprint(
+    "sources/synthetic.py",
+    "functions/kernels.py",
+    "functions/text.py",
+    "alphabet.py",
 )
-_GOLDEN_INK = _os.path.join(
-    _GOLDEN_DIR, f"media_ink_bits_{_GOLDEN_FP}.parquet"
-)
-_GOLDEN_NOISY = _os.path.join(
-    _GOLDEN_DIR, f"ocr_expected_noisy_{_ORACLE_N_DOCS}_{_GOLDEN_FP}.parquet"
-)
-_GOLDEN_MULTIROW = _os.path.join(
-    _GOLDEN_DIR,
-    f"ocr_expected_multirow_{_ORACLE_N_DOCS}_{_GOLDEN_FP}.parquet",
+_GOLDEN_FLAT = _golden(f"ocr_expected_flat_{_ORACLE_N_DOCS}_{_GOLDEN_FP}")
+_GOLDEN_INK = _golden(f"media_ink_bits_{_GOLDEN_FP}")
+_GOLDEN_NOISY = _golden(f"ocr_expected_noisy_{_ORACLE_N_DOCS}_{_GOLDEN_FP}")
+_GOLDEN_MULTIROW = _golden(
+    f"ocr_expected_multirow_{_ORACLE_N_DOCS}_{_GOLDEN_FP}"
 )
 
 
-def _bpe_fingerprint() -> str:
-    """Content key of the merged-BPE golden: the encoder module + the
-    committed merges table (same staleness rationale as
-    _generator_fingerprint)."""
-    import hashlib as _hashlib
+def _build_ink(path: str) -> None:
+    """Ink-bit count of every glyph media row (aHash bit sum)."""
+    import numpy as _np
+    import pyarrow as _pa
 
-    from granulate_char_ocr_spark.functions import bpe as _bpe
+    from granulate_char_ocr_spark.functions.kernels import ahash_bits
+    from granulate_char_ocr_spark.sources.synthetic import glyph_media_pandas
 
-    base = _os.path.dirname(_os.path.abspath(__file__))
-    h = _hashlib.md5()
-    for path in (
-        _os.path.join(base, "functions", "bpe.py"),
-        _bpe.MERGES_PATH,
-    ):
-        with open(path, "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:10]
+    rows = [
+        (
+            r.media_ref,
+            float(
+                ahash_bits(
+                    _np.frombuffer(r.pixels, dtype=_np.uint8).reshape(
+                        r.height, r.width
+                    )
+                ).sum()
+            ),
+        )
+        for r in glyph_media_pandas().itertuples(index=False)
+    ]
+    _write_golden(
+        path,
+        pd.DataFrame(rows, columns=["media_ref", "n_ink_bits"]),
+        [("media_ref", _pa.string()), ("n_ink_bits", _pa.float64())],
+    )
 
 
-_GOLDEN_BPE = _os.path.join(
-    _GOLDEN_DIR, f"bpe_merged_{_bpe_fingerprint()}.parquet"
-)
 _ORACLE_SF_DIR = "/root/testdata/sf0.01"  # the driver's compare tier
 
 
-def _audio_fingerprint() -> str:
-    """Content key of the audio-features golden: the mel front-end, the
-    WAV codec, and the clip generator (sources/synthetic.py)."""
-    import hashlib as _hashlib
-
-    base = _os.path.dirname(_os.path.abspath(__file__))
-    h = _hashlib.md5()
-    for rel in ("functions/audio.py", "functions/wav.py",
-                "sources/synthetic.py"):
-        with open(_os.path.join(base, rel), "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:10]
-
-
-_GOLDEN_AUDIO = _os.path.join(
-    _GOLDEN_DIR, f"audio_mel_{_audio_fingerprint()}.parquet"
-)
-
-
-def _stream_fingerprint() -> str:
-    """Content key of the stream-info golden: the mixed-store generator
-    alone — the golden is generator ground truth (construction
-    parameters via published container math), NOT a parser twin, so a
-    probe change that breaks agreement must FAIL the gate rather than
-    regenerate the golden."""
-    import hashlib as _hashlib
-
-    base = _os.path.dirname(_os.path.abspath(__file__))
-    h = _hashlib.md5()
-    with open(_os.path.join(base, "sources", "synthetic.py"), "rb") as f:
-        h.update(f.read())
-    return h.hexdigest()[:10]
-
-
-_GOLDEN_STREAM = _os.path.join(
-    _GOLDEN_DIR, f"stream_truth_{_stream_fingerprint()}.parquet"
-)
-
-
-def _ensure_goldens() -> None:
-    """Materialize the golden parquets the oracle SQL reads (idempotent;
-    filenames carry the generator fingerprint, so a stale golden from an
-    older generator is simply never read — and is deleted here)."""
-    import glob as _glob
-
-    live_fps = (
-        _GOLDEN_FP,
-        _os.path.basename(_GOLDEN_BPE),
-        _os.path.basename(_GOLDEN_AUDIO),
-        _os.path.basename(_GOLDEN_STREAM),
-    )
-    for old in _glob.glob(_os.path.join(_GOLDEN_DIR, "*.parquet")):
-        if not any(fp in _os.path.basename(old) for fp in live_fps):
-            try:
-                _os.unlink(old)
-            except OSError:
-                pass
-    if not _os.path.exists(_GOLDEN_NOISY):
-        from granulate_char_ocr_spark.sources.synthetic import write_golden_noisy
-
-        write_golden_noisy(_GOLDEN_NOISY, _ORACLE_N_DOCS, seed=42)
-    if not _os.path.exists(_GOLDEN_MULTIROW):
-        from granulate_char_ocr_spark.sources.synthetic import (
-            write_golden_multirow,
-        )
-
-        write_golden_multirow(_GOLDEN_MULTIROW, _ORACLE_N_DOCS)
-    if not _os.path.exists(_GOLDEN_FLAT):
-        from granulate_char_ocr_spark.sources.synthetic import write_golden_flat
-
-        write_golden_flat(_GOLDEN_FLAT, _ORACLE_N_DOCS, seed=42)
-    if not _os.path.exists(_GOLDEN_INK):
-        import numpy as _np
-        import pandas as _pd
-        import pyarrow as _pa
-
-        from granulate_char_ocr_spark.functions.kernels import ahash_bits
-        from granulate_char_ocr_spark.sources.synthetic import (
-            glyph_media_pandas,
-            write_parquet_atomic,
-        )
-
-        media = glyph_media_pandas()
-        rows = [
-            (
-                r.media_ref,
-                float(
-                    ahash_bits(
-                        _np.frombuffer(r.pixels, dtype=_np.uint8).reshape(
-                            r.height, r.width
-                        )
-                    ).sum()
-                ),
-            )
-            for r in media.itertuples(index=False)
-        ]
-        write_parquet_atomic(
-            _pa.Table.from_pandas(
-                _pd.DataFrame(rows, columns=["media_ref", "n_ink_bits"]),
-                schema=_pa.schema(
-                    [("media_ref", _pa.string()), ("n_ink_bits", _pa.float64())]
-                ),
-                preserve_index=False,
-            ),
-            _GOLDEN_INK,
-        )
-
-
-_ensure_goldens()
-
-
-def _ensure_bpe_golden() -> None:
+def _build_bpe(path: str) -> None:
     """Merged-BPE counts of the sf0.01 documents table via the Python
     twin (functions/bpe.count_tokens — the byte-identical logic the
     pandas UDF runs). Skipped when the testdata tier is absent."""
     doc_path = _os.path.join(_ORACLE_SF_DIR, "documents.parquet")
-    if _os.path.exists(_GOLDEN_BPE) or not _os.path.exists(doc_path):
+    if not _os.path.exists(doc_path):
         return
     import duckdb as _duckdb
-    import pandas as _pd
     import pyarrow as _pa
 
     from granulate_char_ocr_spark.functions.bpe import (
         count_tokens,
         load_ranks,
     )
-    from granulate_char_ocr_spark.sources.synthetic import (
-        write_parquet_atomic,
-    )
 
     rows = _duckdb.sql(
         f"SELECT doc_id, text FROM '{doc_path}' ORDER BY doc_id"
     ).fetchall()
     ranks, cache = load_ranks(), {}
-    out = _pd.DataFrame(
+    out = pd.DataFrame(
         {
             "doc_id": [r[0] for r in rows],
             "n_bpe_merged": [count_tokens(r[1], ranks, cache) for r in rows],
         }
     )
-    write_parquet_atomic(
-        _pa.Table.from_pandas(
-            out,
-            schema=_pa.schema(
-                [("doc_id", _pa.int64()), ("n_bpe_merged", _pa.int64())]
-            ),
-            preserve_index=False,
-        ),
-        _GOLDEN_BPE,
+    _write_golden(
+        path, out, [("doc_id", _pa.int64()), ("n_bpe_merged", _pa.int64())]
     )
 
 
-_ensure_bpe_golden()
-
-
-def _ensure_audio_golden() -> None:
+def _build_audio(path: str) -> None:
     """Log-mel feature sums of the synthetic WAV store via the Python
-    twin — the SAME decode_wav + mel_features chain the pandas UDF runs,
-    with the feature-sum left fold matching Spark's F.aggregate order,
-    so the doubles are bit-identical (no rounding needed)."""
-    if _os.path.exists(_GOLDEN_AUDIO):
-        return
-    import pandas as _pd
+    twin — the SAME decode_wav + mel_features chain the Arrow kernel
+    runs, with the feature-sum left fold matching Spark's F.aggregate
+    order, so the doubles are bit-identical (no rounding needed)."""
     import pyarrow as _pa
 
     from granulate_char_ocr_spark.functions.audio import mel_features
     from granulate_char_ocr_spark.functions.wav import decode_wav
-    from granulate_char_ocr_spark.sources.synthetic import (
-        audio_store_pandas,
-        write_parquet_atomic,
-    )
+    from granulate_char_ocr_spark.sources.synthetic import audio_store_pandas
 
     rows = []
     for r in audio_store_pandas().itertuples(index=False):
@@ -3372,69 +3258,106 @@ def _ensure_audio_golden() -> None:
         for v in feat:
             s += float(v)
         rows.append((r.media_ref, len(mono) / float(rate), s))
-    write_parquet_atomic(
-        _pa.Table.from_pandas(
-            _pd.DataFrame(
-                rows, columns=["media_ref", "duration_sec", "mel_sum"]
-            ),
-            schema=_pa.schema(
-                [
-                    ("media_ref", _pa.string()),
-                    ("duration_sec", _pa.float64()),
-                    ("mel_sum", _pa.float64()),
-                ]
-            ),
-            preserve_index=False,
-        ),
-        _GOLDEN_AUDIO,
+    _write_golden(
+        path,
+        pd.DataFrame(rows, columns=["media_ref", "duration_sec", "mel_sum"]),
+        [
+            ("media_ref", _pa.string()),
+            ("duration_sec", _pa.float64()),
+            ("mel_sum", _pa.float64()),
+        ],
     )
 
 
-_ensure_audio_golden()
-
-
-def _ensure_stream_golden() -> None:
+def _build_stream(path: str) -> None:
     """Generator ground truth of the mixed-stream store: the expected
     metadata columns are the CONSTRUCTION parameters (spec math — frame
     counts × samples-per-frame / rate, mvhd ticks / timescale, avih
-    microseconds-per-frame, SPS macroblock geometry), written once per
-    generator fingerprint. Independent of the probe parsers the gate
-    query runs."""
-    if _os.path.exists(_GOLDEN_STREAM):
-        return
+    microseconds-per-frame, SPS macroblock geometry). Independent of the
+    probe parsers the gate query runs."""
     import pyarrow as _pa
 
-    from granulate_char_ocr_spark.sources.synthetic import (
-        stream_media_pandas,
-        write_parquet_atomic,
-    )
+    from granulate_char_ocr_spark.sources.synthetic import stream_media_pandas
 
-    truth = stream_media_pandas().drop(columns=["payload"])
-    write_parquet_atomic(
-        _pa.Table.from_pandas(
-            truth,
-            schema=_pa.schema(
-                [
-                    ("media_ref", _pa.string()),
-                    ("format", _pa.string()),
-                    ("duration_sec", _pa.float64()),
-                    ("sample_rate", _pa.int32()),
-                    ("channels", _pa.int32()),
-                    ("bitrate_kbps", _pa.float64()),
-                    ("vbr", _pa.bool_()),
-                    ("width", _pa.int32()),
-                    ("height", _pa.int32()),
-                    ("profile_level", _pa.string()),
-                    ("n_frames", _pa.int32()),
-                ]
-            ),
-            preserve_index=False,
-        ),
-        _GOLDEN_STREAM,
+    _write_golden(
+        path,
+        stream_media_pandas().drop(columns=["payload"]),
+        [
+            ("media_ref", _pa.string()),
+            ("format", _pa.string()),
+            ("duration_sec", _pa.float64()),
+            ("sample_rate", _pa.int32()),
+            ("channels", _pa.int32()),
+            ("bitrate_kbps", _pa.float64()),
+            ("vbr", _pa.bool_()),
+            ("width", _pa.int32()),
+            ("height", _pa.int32()),
+            ("profile_level", _pa.string()),
+            ("n_frames", _pa.int32()),
+        ],
     )
 
 
-_ensure_stream_golden()
+def _synthetic_golden(writer: str, **kwargs):
+    def build(path: str) -> None:
+        from granulate_char_ocr_spark.sources import synthetic
+
+        getattr(synthetic, writer)(path, _ORACLE_N_DOCS, **kwargs)
+
+    return build
+
+
+from granulate_char_ocr_spark.functions.bpe import (  # noqa: E402
+    MERGES_PATH as _BPE_MERGES,
+)
+
+_GOLDEN_BPE = _golden(
+    "bpe_merged_" + _fingerprint("functions/bpe.py", _BPE_MERGES)
+)
+_GOLDEN_AUDIO = _golden(
+    "audio_mel_"
+    + _fingerprint(
+        "functions/audio.py", "functions/wav.py", "sources/synthetic.py"
+    )
+)
+# generator ground truth (construction parameters via published container
+# math), NOT a parser twin: keyed on the generator alone, so a probe change
+# that breaks agreement FAILS the gate rather than regenerating the golden
+_GOLDEN_STREAM = _golden(
+    "stream_truth_" + _fingerprint("sources/synthetic.py")
+)
+
+# (golden, builder) in build order
+_GOLDENS = (
+    (_GOLDEN_NOISY, _synthetic_golden("write_golden_noisy", seed=42)),
+    (_GOLDEN_MULTIROW, _synthetic_golden("write_golden_multirow")),
+    (_GOLDEN_FLAT, _synthetic_golden("write_golden_flat", seed=42)),
+    (_GOLDEN_INK, _build_ink),
+    (_GOLDEN_BPE, _build_bpe),
+    (_GOLDEN_AUDIO, _build_audio),
+    (_GOLDEN_STREAM, _build_stream),
+)
+
+
+def _ensure_goldens() -> None:
+    """Materialize the golden parquets the oracle SQL reads (idempotent;
+    filenames carry their sources' fingerprint, so a golden built from
+    older sources is never read — and is deleted here)."""
+    import glob as _glob
+
+    live = {_os.path.basename(path) for path, _ in _GOLDENS}
+    for old in _glob.glob(_os.path.join(_GOLDEN_DIR, "*.parquet")):
+        if _os.path.basename(old) not in live:
+            try:
+                _os.unlink(old)
+            except OSError:
+                pass
+    for path, build in _GOLDENS:
+        if not _os.path.exists(path):
+            build(path)
+
+
+_ensure_goldens()
 
 ORACLES["bpe_token_count_docs"] = rf"""
     SELECT d.doc_id,

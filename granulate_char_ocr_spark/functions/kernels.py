@@ -855,6 +855,24 @@ def classify_batch_cascade(
     ]
 
 
+def segment_image(
+    img: np.ndarray, noisy: bool = False, segmenter: str = "projection"
+) -> tuple[np.ndarray, np.ndarray | None, list[tuple[int, int, int, int]]]:
+    """The recognition chain up to classification: ``(pre, gray,
+    regions)``. Clean path: ``preprocess`` → segment, ``gray`` None.
+    ``noisy``: ``preprocess_noisy_pair`` → segment → adjacent-region merge
+    (a glyph split in two by a noise cut re-joins), and ``gray`` is the
+    geometry-aligned smoothed plane the vote tier re-binarizes.
+    ``segmenter`` 'cc' segments by connected components, otherwise by
+    projection profile."""
+    segment = segment_regions_cc if segmenter == "cc" else segment_regions
+    if noisy:
+        pre, gray = preprocess_noisy_pair(img)
+        return pre, gray, merge_adjacent_regions(segment(pre), NOISY_MERGE_GAP)
+    pre = preprocess(img)
+    return pre, None, segment(pre)
+
+
 def recognize_word_vote(img: np.ndarray) -> str:
     """Majority vote across three binarizations (fixed-128, Otsu, adaptive) —
     the reference's per-bubble OCR vote (extract_from_reference.py:352-356).
@@ -890,14 +908,12 @@ def recognize_word(img: np.ndarray, noisy: bool = False) -> list[dict]:
     ``{latin, confidence, method, x, y, w, h}``. Unrecognized regions are
     dropped (reference ocr_service.py:149-154 appends only on recognition).
     """
-    if noisy:
-        pre, gray = preprocess_noisy_pair(img)
-        regions = merge_adjacent_regions(segment_regions(pre), NOISY_MERGE_GAP)
-        gray_crops = [gray[y : y + h, x : x + w] for (x, y, w, h) in regions]
-    else:
-        pre = preprocess(img)
-        regions = segment_regions(pre)
-        gray_crops = None
+    pre, gray, regions = segment_image(img, noisy)
+    gray_crops = (
+        None
+        if gray is None
+        else [gray[y : y + h, x : x + w] for (x, y, w, h) in regions]
+    )
     crops = [pre[y : y + h, x : x + w] for (x, y, w, h) in regions]
     results = classify_batch_cascade(crops, gray_crops)
     chars = []

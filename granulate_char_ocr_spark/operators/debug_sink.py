@@ -12,16 +12,13 @@ fuse-mounted object store or swap the open() for a storage client)."""
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from granulate_char_ocr_spark.functions import kernels
 from granulate_char_ocr_spark.functions.png import encode_png
-
-DEBUG_SCHEMA = "media_ref string, n_regions int, png binary"
+from granulate_char_ocr_spark.operators.doc_kernel import row_kernel
 
 
 def _annotate(pre: np.ndarray, regions: list[tuple[int, int, int, int]]) -> np.ndarray:
@@ -42,37 +39,18 @@ def debug_images(
     Takes the same (noisy, segmenter) options as the extraction operators so
     the overlay always shows the regions classification actually sees."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        segment = (
-            kernels.segment_regions_cc
-            if segmenter == "cc"
-            else kernels.segment_regions
-        )
-        for pdf in batches:
-            refs, counts, pngs = [], [], []
-            for r in pdf.itertuples(index=False):
-                img = np.frombuffer(r.pixels, dtype=np.uint8).reshape(
-                    r.height, r.width
-                )
-                # mirror extract._process_batch's segmentation chain exactly
-                # (including the noisy path's adjacent-region merge)
-                if noisy:
-                    pre = kernels.preprocess_noisy(img)
-                    regions = kernels.merge_adjacent_regions(
-                        segment(pre), kernels.NOISY_MERGE_GAP
-                    )
-                else:
-                    pre = kernels.preprocess(img)
-                    regions = segment(pre)
-                refs.append(r.media_ref)
-                counts.append(len(regions))
-                pngs.append(encode_png(_annotate(pre, regions)))
-            yield pd.DataFrame(
-                {"media_ref": refs, "n_regions": counts, "png": pngs}
-            )
+    def per_row(width, height, pixels):
+        img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
+        pre, _, regions = kernels.segment_image(img, noisy, segmenter)
+        return [len(regions)], [encode_png(_annotate(pre, regions))]
 
-    cols = ["media_ref", "width", "height", "pixels"]
-    return media.select(*cols).mapInPandas(fn, schema=DEBUG_SCHEMA)
+    return row_kernel(
+        media,
+        ("media_ref",),
+        ("width", "height", "pixels"),
+        lambda: per_row,
+        "n_regions int, png binary",
+    )
 
 
 def write_debug_image_files(debug_df: DataFrame, out_dir: str) -> None:

@@ -443,8 +443,9 @@ def embedding_near_pairs(
     Scale shape: nb is one block per core and the block-pair relation
     has nb(nb+1)/2 rows; each task is one block pair (work N^2 d / nb^2,
     accumulator tiled to ~4 MB).
-    Only block KEYS shuffle (the fat vector arrays ride one broadcast
-    per side); past broadcastable corpus size, shard by IVF cell first
+    The pair relation is sliced one pair a task and never shuffles (the
+    fat vector arrays ride one broadcast per side); past broadcastable
+    corpus size, shard by IVF cell first
     and run the kernel per shard — the quadratic candidate set is
     inherent to the pinned 4-bit quantizer, not to this execution.
     """
@@ -466,9 +467,13 @@ def embedding_near_pairs(
         )
         .select("b", F.col("v.vec_id").alias("ids"), F.col("v.embedding").alias("embs"))
     )
+    # one task per block pair: a hash exchange left some partitions with
+    # two pairs and most empty, so slice the local list one pair a slice
+    pair_list = [(bl, br) for bl in range(nb) for br in range(bl, nb)]
     pairs = spark.createDataFrame(
-        [(bl, br) for bl in range(nb) for br in range(bl, nb)], "bl int, br int"
-    ).repartition(nb * 8, "bl", "br")
+        spark.sparkContext.parallelize(pair_list, len(pair_list)),
+        "bl int, br int",
+    )
     joined = pairs.join(
         F.broadcast(
             blocks.select(

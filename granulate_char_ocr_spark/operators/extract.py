@@ -56,11 +56,6 @@ def _process_batch(
     detail: bool,
     segmenter: str = "projection",
 ) -> pd.DataFrame:
-    segment = (
-        kernels.segment_regions_cc
-        if segmenter == "cc"
-        else kernels.segment_regions
-    )
     n = len(pdf)
     crops: list[np.ndarray] = []
     gray_crops: list[np.ndarray] = []  # vote-tier inputs (noisy path only)
@@ -80,16 +75,8 @@ def _process_batch(
                 regions_per_row.append(0)
                 continue
             img = np.frombuffer(buf, dtype=np.uint8).reshape(h_i, w_i)
-            if noisy:
-                # merge noise-split glyphs; keep the aligned gray plane for
-                # the vote tier (same chain as kernels.recognize_word)
-                pre, gray = kernels.preprocess_noisy_pair(img)
-                regs = kernels.merge_adjacent_regions(
-                    segment(pre), kernels.NOISY_MERGE_GAP
-                )
-            else:
-                pre = kernels.preprocess(img)
-                regs = segment(pre)
+            # noisy: gray is the aligned plane the vote tier re-binarizes
+            pre, gray, regs = kernels.segment_image(img, noisy, segmenter)
         except Exception:
             regions_per_row.append(0)
             continue

@@ -1,5 +1,7 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` payloads with
-typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
+typed metadata, processed by Arrow-batched per-row kernels
+(operators/doc_kernel.row_kernel; ``image_embeddings`` hashes a whole
+batch at once and keeps its own ``mapInPandas``).
 
 The Spark-side plumbing — schemas, partitioning, UDF signatures, batch
 shapes — is real and tested, and so are the containers and codecs:
@@ -31,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.functions import kernels
+from granulate_char_ocr_spark.operators.doc_kernel import row_kernel
 from granulate_char_ocr_spark.operators.skew import kernel_partitions
 
 MULTIMODAL_SCHEMA = (
@@ -125,9 +128,9 @@ def decode_payload(
 # image: media-store decompression
 # ---------------------------------------------------------------------------
 
-MEDIA_STORE_SCHEMA = (
-    "media_ref string, word string, width int, height int, pixels binary"
-)
+# a media store's row: (media_ref, word) keys, then the image plane
+_PLANE = "width int, height int, pixels binary"
+MEDIA_STORE_SCHEMA = "media_ref string, word string, " + _PLANE
 
 
 def decode_media_store(media: DataFrame, permissive: bool = False) -> DataFrame:
@@ -153,48 +156,36 @@ def decode_media_store(media: DataFrame, permissive: bool = False) -> DataFrame:
     scaling corpus spent ~14 s in a single decode task at every core
     count)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    payload = bytes(r.pixels) if r.pixels is not None else None
-                    if payload is None:
-                        raise ValueError("null payload")
-                    try:
-                        img = decode_payload(payload, "auto", r.width, r.height)
-                    except ValueError as e:
-                        if "unknown image signature" in str(e) and len(
-                            payload
-                        ) == int(r.width) * int(r.height):
-                            img = decode_payload(
-                                payload, "raw", r.width, r.height
-                            )
-                        else:
-                            raise
-                except Exception:
-                    if not permissive:
-                        raise
-                    rows.append((r.media_ref, r.word, 0, 0, None))
-                    continue
-                rows.append(
-                    (
-                        r.media_ref, r.word, img.shape[1], img.shape[0],
-                        img.tobytes(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "word", "width", "height", "pixels"],
-            )
+    def per_row(width, height, pixels):
+        try:
+            if pixels is None:
+                raise ValueError("null payload")
+            payload = bytes(pixels)
+            try:
+                img = decode_payload(payload, "auto", width, height)
+            except ValueError as e:
+                if "unknown image signature" in str(e) and len(
+                    payload
+                ) == int(width) * int(height):
+                    img = decode_payload(payload, "raw", width, height)
+                else:
+                    raise
+        except Exception:
+            if not permissive:
+                raise
+            return [0], [0], [None]
+        return [img.shape[1]], [img.shape[0]], [img.tobytes()]
 
     selected = media.select(
         "media_ref", "word", "width", "height", "pixels"
     ).repartition(kernel_partitions(media.sparkSession))
-    return selected.mapInPandas(fn, schema=MEDIA_STORE_SCHEMA)
-
-
-PAGED_MEDIA_SCHEMA = MEDIA_STORE_SCHEMA + ", page_no int"
+    return row_kernel(
+        selected,
+        ("media_ref", "word"),
+        ("width", "height", "pixels"),
+        lambda: per_row,
+        _PLANE,
+    )
 
 
 def explode_tiff_pages(media: DataFrame, permissive: bool = False) -> DataFrame:
@@ -207,49 +198,46 @@ def explode_tiff_pages(media: DataFrame, permissive: bool = False) -> DataFrame:
     decode_media_store: encoded pages are byte-small but decode-heavy.
     ``permissive`` maps a failed payload to one null-pixel row."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_task():
         from granulate_char_ocr_spark.functions.tiff import decode_tiff_pages
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    pages = decode_tiff_pages(bytes(r.pixels))
-                except Exception:
-                    if not permissive:
-                        raise
-                    rows.append((r.media_ref, r.word, 0, 0, None, 0))
-                    continue
-                for i, img in enumerate(pages):
-                    if img.ndim == 3:  # kernel takes grayscale planes
-                        # decode_tiff returns RGB(A); to_grayscale weights
-                        # BGR (B first) — reverse like every other caller
-                        img = kernels.to_grayscale(img[..., 2::-1])
-                    rows.append(
-                        (
-                            r.media_ref, r.word, img.shape[1], img.shape[0],
-                            img.tobytes(), i,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "word", "width", "height", "pixels",
-                    "page_no",
-                ],
+        def per_row(pixels):
+            try:
+                pages = decode_tiff_pages(bytes(pixels))
+            except Exception:
+                if not permissive:
+                    raise
+                return [0], [0], [None], [0]
+            # decode_tiff returns RGB(A); to_grayscale weights BGR (B
+            # first) — reverse like every other caller
+            planes = [
+                kernels.to_grayscale(p[..., 2::-1]) if p.ndim == 3 else p
+                for p in pages
+            ]
+            return (
+                [g.shape[1] for g in planes],
+                [g.shape[0] for g in planes],
+                [g.tobytes() for g in planes],
+                range(len(planes)),
             )
+
+        return per_row
 
     selected = media.select(
         "media_ref", "word", "width", "height", "pixels"
     ).repartition(kernel_partitions(media.sparkSession))
-    return selected.mapInPandas(fn, schema=PAGED_MEDIA_SCHEMA)
+    return row_kernel(
+        selected,
+        ("media_ref", "word"),
+        ("pixels",),
+        per_task,
+        _PLANE + ", page_no int",
+    )
 
 
 # ---------------------------------------------------------------------------
 # image: resize
 # ---------------------------------------------------------------------------
-
-RESIZED_SCHEMA = "media_ref string, width int, height int, payload binary"
 
 
 def resize_images(
@@ -258,21 +246,20 @@ def resize_images(
     """Batch image resize (area-average) over raw payloads.
     (media_ref, codec, width, height, payload) → fixed-size raw payloads."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = decode_payload(r.payload, r.codec, r.width, r.height)
-                small = np.clip(
-                    kernels.resize_area(img, out_h, out_w), 0, 255
-                ).astype(np.uint8)
-                out.append((r.media_ref, out_w, out_h, small.tobytes()))
-            yield pd.DataFrame(
-                out, columns=["media_ref", "width", "height", "payload"]
-            )
+    def per_row(codec, width, height, payload):
+        img = decode_payload(payload, codec, width, height)
+        small = np.clip(
+            kernels.resize_area(img, out_h, out_w), 0, 255
+        ).astype(np.uint8)
+        return [out_w], [out_h], [small.tobytes()]
 
-    cols = ["media_ref", "codec", "width", "height", "payload"]
-    return images.select(*cols).mapInPandas(fn, schema=RESIZED_SCHEMA)
+    return row_kernel(
+        images,
+        ("media_ref",),
+        ("codec", "width", "height", "payload"),
+        lambda: per_row,
+        "width int, height int, payload binary",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -353,36 +340,33 @@ def image_near_pairs(images: DataFrame, max_hd: int = 6) -> DataFrame:
 # video: frame sampling (raw = concatenated frames)
 # ---------------------------------------------------------------------------
 
-FRAME_SCHEMA = (
-    "media_ref string, frame_index int, width int, height int, payload binary"
-)
+# the columns a video row's frames decode from (_iter_gray_frames' args)
+_VIDEO = ("codec", "width", "height", "n_frames", "payload")
 
 
 def sample_frames(videos: DataFrame, every_k: int = 2) -> DataFrame:
-    """1→N frame sampler (the mapInPandas UDTF shape — one input row fans
-    out to many output rows). 'raw' payloads are n_frames concatenated
+    """1→N frame sampler (the UDTF shape — one input row fans out to
+    many output rows). 'raw' payloads are n_frames concatenated
     (height×width) uint8 frames; 'mjpeg'/'avi' payloads are REAL MJPEG-AVI
     containers (functions/avi.py — each frame a standalone JPEG, decoded
     to grayscale). Temporal codecs (H.264) stay stubbed in-sandbox."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                for i, g in _iter_gray_frames(r, step=every_k):
-                    out.append(
-                        (r.media_ref, i, g.shape[1], g.shape[0], g.tobytes())
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_ref", "frame_index", "width", "height", "payload"],
-            )
+    def per_row(*video):
+        return tuple(zip(*(
+            (i, g.shape[1], g.shape[0], g.tobytes())
+            for i, g in _iter_gray_frames(*video, step=every_k)
+        )))
 
-    cols = ["media_ref", "codec", "width", "height", "n_frames", "payload"]
-    return videos.select(*cols).mapInPandas(fn, schema=FRAME_SCHEMA)
+    return row_kernel(
+        videos,
+        ("media_ref",),
+        _VIDEO,
+        lambda: per_row,
+        "frame_index int, width int, height int, payload binary",
+    )
 
 
-def _iter_gray_frames(r, step: int = 1):
+def _iter_gray_frames(codec, width, height, n_frames, payload, step=1):
     """(frame_index, grayscale ndarray) for every ``step``-th frame of
     one video row — the shared codec dispatch of the frame sampler and
     the scene-change detector. 'auto' sniffs the container. A NULL
@@ -390,30 +374,30 @@ def _iter_gray_frames(r, step: int = 1):
     not a task failure), and a truncated raw payload yields only its
     COMPLETE frames (review finding r4: reshaping a short final slice
     raised and killed the task)."""
-    if r.payload is None:
+    if payload is None:
         return
-    codec = r.codec
-    if codec == "auto":
-        head = bytes(r.payload[:12])
+    kind = codec
+    if kind == "auto":
+        head = bytes(payload[:12])
         if head[:4] == b"RIFF" and head[8:12] == b"AVI ":
-            codec = "avi"
+            kind = "avi"
         elif head[:6] in (b"GIF87a", b"GIF89a"):
-            codec = "gif"
+            kind = "gif"
         else:
-            codec = "raw"
-    if codec == "gif":
+            kind = "raw"
+    if kind == "gif":
         from granulate_char_ocr_spark.functions.gif import iter_gif_frames
 
         # GIF composition is sequential (each frame builds on the
         # previous canvas), so every frame decodes even when sampled —
         # unlike MJPEG, whose frames are independent standalone JPEGs.
         # The generator keeps only one canvas resident.
-        for i, frame in enumerate(iter_gif_frames(bytes(r.payload))):
+        for i, frame in enumerate(iter_gif_frames(bytes(payload))):
             if i % step:
                 continue
             yield i, kernels.to_grayscale(frame[..., 2::-1])
         return
-    if codec in ("avi", "mjpeg"):
+    if kind in ("avi", "mjpeg"):
         from granulate_char_ocr_spark.functions.avi import (
             iter_mjpeg_payloads,
         )
@@ -421,7 +405,7 @@ def _iter_gray_frames(r, step: int = 1):
 
         # decode ONLY the selected frames — JPEG decode is the dominant
         # per-frame cost in this UDF
-        for i, p in enumerate(iter_mjpeg_payloads(bytes(r.payload))):
+        for i, p in enumerate(iter_mjpeg_payloads(bytes(payload))):
             if i % step:
                 continue
             frame = decode_jpeg(p)
@@ -429,18 +413,18 @@ def _iter_gray_frames(r, step: int = 1):
                 frame = kernels.to_grayscale(frame[..., 2::-1])
             yield i, frame
         return
-    if codec != "raw":
+    if kind != "raw":
         raise NotImplementedError(
-            f"video decode for codec={r.codec!r} is stubbed "
+            f"video decode for codec={codec!r} is stubbed "
             "(raw / mjpeg-avi only in-sandbox)"
         )
-    frame_bytes = r.width * r.height
-    for i in range(0, int(r.n_frames), step):
-        chunk = bytes(r.payload[i * frame_bytes : (i + 1) * frame_bytes])
+    frame_bytes = width * height
+    for i in range(0, int(n_frames), step):
+        chunk = bytes(payload[i * frame_bytes : (i + 1) * frame_bytes])
         if len(chunk) < frame_bytes:
             break  # truncated tail: emit complete frames only
         yield i, np.frombuffer(chunk, dtype=np.uint8).reshape(
-            int(r.height), int(r.width)
+            int(height), int(width)
         )
 
 
@@ -448,7 +432,8 @@ def _iter_gray_frames(r, step: int = 1):
 # audio: feature extraction (real NumPy log-mel front-end)
 # ---------------------------------------------------------------------------
 
-AUDIO_FEAT_SCHEMA = "media_ref string, duration_sec double, features array<float>"
+# the columns an audio row's samples decode from (_audio_samples' args)
+_AUDIO = ("codec", "sample_rate", "payload")
 
 
 def audio_features(audio: DataFrame, n_mels: int = 16) -> DataFrame:
@@ -461,62 +446,59 @@ def audio_features(audio: DataFrame, n_mels: int = 16) -> DataFrame:
     the earlier block-RMS stand-in). Batch shape, schema and
     partitioning are production-real. MP3/AAC stay stubbed."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_task():
         from granulate_char_ocr_spark.functions.audio import mel_features
 
-        for pdf in batches:
-            refs, durs, feats = [], [], []
-            for r in pdf.itertuples(index=False):
-                samples, rate = _audio_samples(r)
-                durs.append(len(samples) / float(rate))
-                feats.append(mel_features(samples, float(rate), n_mels))
-                refs.append(r.media_ref)
-            yield pd.DataFrame(
-                {"media_ref": refs, "duration_sec": durs, "features": feats}
+        def per_row(*clip):
+            samples, rate = _audio_samples(*clip)
+            return (
+                [len(samples) / float(rate)],
+                [mel_features(samples, float(rate), n_mels)],
             )
 
-    cols = ["media_ref", "codec", "sample_rate", "payload"]
-    return audio.select(*cols).mapInPandas(fn, schema=AUDIO_FEAT_SCHEMA)
+        return per_row
+
+    return row_kernel(
+        audio,
+        ("media_ref",),
+        _AUDIO,
+        per_task,
+        "duration_sec double, features array<float>",
+    )
 
 
-def _audio_samples(r) -> tuple[np.ndarray, float]:
+def _audio_samples(codec, sample_rate, payload) -> tuple[np.ndarray, float]:
     """(float64 mono samples, rate) for one audio row — the shared
     codec dispatch of the featurizer and the VAD segmenter ('auto'
     sniffs the RIFF/WAVE signature; raw is int16 PCM at the row's
     sample_rate)."""
     from granulate_char_ocr_spark.functions.wav import decode_wav
 
-    if r.payload is None:
+    if payload is None:
         # NULL payload: zero samples at a valid rate — the featurizer
         # and VAD emit an empty/zero-duration row instead of raising
-        rate = float(r.sample_rate) if r.sample_rate else 16000.0
+        rate = float(sample_rate) if sample_rate else 16000.0
         return np.zeros(0, dtype=np.float64), rate
-    codec = r.codec
-    if codec == "auto":
-        head = bytes(r.payload[:12])
-        codec = (
+    kind = codec
+    if kind == "auto":
+        head = bytes(payload[:12])
+        kind = (
             "wav"
             if head[:4] == b"RIFF" and head[8:12] == b"WAVE"
             else "raw"
         )
-    if codec == "wav":
-        mono, rate = decode_wav(bytes(r.payload))
+    if kind == "wav":
+        mono, rate = decode_wav(bytes(payload))
         return mono.astype(np.float64), float(rate)
-    if codec == "raw":
-        samples = np.frombuffer(r.payload, dtype=np.int16).astype(
+    if kind == "raw":
+        samples = np.frombuffer(payload, dtype=np.int16).astype(
             np.float64
         )
-        return samples, float(r.sample_rate)
+        return samples, float(sample_rate)
     raise NotImplementedError(
-        f"audio decode for codec={r.codec!r} is stubbed "
+        f"audio decode for codec={codec!r} is stubbed "
         "(raw / wav only in-sandbox)"
     )
-
-
-SEGMENT_SCHEMA = (
-    "media_ref string, seg_index int, start_sec double, end_sec double, "
-    "active boolean"
-)
 
 
 def audio_segments(
@@ -532,34 +514,27 @@ def audio_segments(
     boundaries. Zero exchanges — the clip row is the unit of
     parallelism (temporal state is per-clip)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_task():
         from granulate_char_ocr_spark.functions.audio import (
             activity_segments,
         )
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                samples, rate = _audio_samples(r)
-                for i, (s, e, a) in enumerate(
-                    activity_segments(
-                        samples,
-                        rate,
-                        threshold_db=threshold_db,
-                        min_ms=min_ms,
-                    )
-                ):
-                    out.append((r.media_ref, i, s, e, a))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_ref", "seg_index", "start_sec", "end_sec",
-                    "active",
-                ],
+        def per_row(*clip):
+            samples, rate = _audio_samples(*clip)
+            segs = activity_segments(
+                samples, rate, threshold_db=threshold_db, min_ms=min_ms
             )
+            return tuple(zip(*((i, *seg) for i, seg in enumerate(segs))))
 
-    cols = ["media_ref", "codec", "sample_rate", "payload"]
-    return audio.select(*cols).mapInPandas(fn, schema=SEGMENT_SCHEMA)
+        return per_row
+
+    return row_kernel(
+        audio,
+        ("media_ref",),
+        _AUDIO,
+        per_task,
+        "seg_index int, start_sec double, end_sec double, active boolean",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -567,22 +542,11 @@ def audio_segments(
 # ---------------------------------------------------------------------------
 
 EXIF_SCHEMA = (
-    "media_ref string, make string, model string, orientation int, "
-    "datetime string, datetime_original string, exposure_time double, "
-    "f_number double, iso int, gps_lat double, gps_lon double"
+    "make string, model string, orientation int, datetime string, "
+    "datetime_original string, exposure_time double, f_number double, "
+    "iso int, gps_lat double, gps_lon double"
 )
-_EXIF_FIELDS = (
-    "make",
-    "model",
-    "orientation",
-    "datetime",
-    "datetime_original",
-    "exposure_time",
-    "f_number",
-    "iso",
-    "gps_lat",
-    "gps_lon",
-)
+_EXIF_FIELDS = tuple(f.split()[0] for f in EXIF_SCHEMA.split(", "))
 
 
 def image_exif(images: DataFrame) -> DataFrame:
@@ -593,31 +557,19 @@ def image_exif(images: DataFrame) -> DataFrame:
     task failure (functions/exif.py's contract). Pure map — zero
     exchanges at any scale."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_task():
         from granulate_char_ocr_spark.functions.exif import exif_from_jpeg
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                # NULL payload == absent EXIF (the never-fail contract)
-                f = exif_from_jpeg(
-                    b"" if r.payload is None else bytes(r.payload)
-                )
-                rows.append(
-                    (r.media_ref, *(f[k] for k in _EXIF_FIELDS))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", *_EXIF_FIELDS]
-            )
+        def per_row(payload):
+            # NULL payload == absent EXIF (the never-fail contract)
+            f = exif_from_jpeg(b"" if payload is None else bytes(payload))
+            return [[f[k]] for k in _EXIF_FIELDS]
 
-    return images.select("media_ref", "payload").mapInPandas(
-        fn, schema=EXIF_SCHEMA
+        return per_row
+
+    return row_kernel(
+        images, ("media_ref",), ("payload",), per_task, EXIF_SCHEMA
     )
-
-
-SCENE_SCHEMA = (
-    "media_ref string, frame_index int, diff double, is_scene_start boolean"
-)
 
 
 def scene_changes(videos: DataFrame, threshold: float = 24.0) -> DataFrame:
@@ -636,36 +588,22 @@ def scene_changes(videos: DataFrame, threshold: float = 24.0) -> DataFrame:
     parallelism); emits ALL frames with their diffs so the caller can
     re-threshold without re-decoding. Zero exchanges."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                prev = None
-                for i, g in _iter_gray_frames(r):
-                    small = kernels.resize_area(g, 8, 8).astype(np.float64)
-                    diff = (
-                        0.0
-                        if prev is None
-                        else float(np.abs(small - prev).mean())
-                    )
-                    out.append(
-                        (
-                            r.media_ref,
-                            i,
-                            diff,
-                            prev is None or diff > threshold,
-                        )
-                    )
-                    prev = small
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_ref", "frame_index", "diff", "is_scene_start",
-                ],
-            )
+    def per_row(*video):
+        rows, prev = [], None
+        for i, g in _iter_gray_frames(*video):
+            small = kernels.resize_area(g, 8, 8).astype(np.float64)
+            diff = 0.0 if prev is None else float(np.abs(small - prev).mean())
+            rows.append((i, diff, prev is None or diff > threshold))
+            prev = small
+        return tuple(zip(*rows))
 
-    cols = ["media_ref", "codec", "width", "height", "n_frames", "payload"]
-    return videos.select(*cols).mapInPandas(fn, schema=SCENE_SCHEMA)
+    return row_kernel(
+        videos,
+        ("media_ref",),
+        _VIDEO,
+        lambda: per_row,
+        "frame_index int, diff double, is_scene_start boolean",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -673,10 +611,11 @@ def scene_changes(videos: DataFrame, threshold: float = 24.0) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 STREAM_INFO_SCHEMA = (
-    "media_ref string, format string, duration_sec double, sample_rate int, "
-    "channels int, bitrate_kbps double, vbr boolean, width int, height int, "
+    "format string, duration_sec double, sample_rate int, channels int, "
+    "bitrate_kbps double, vbr boolean, width int, height int, "
     "profile_level string, n_frames int"
 )
+_NO_STREAM = (None,) * 10  # unrecognized or NULL payload: format NULL
 
 
 def _image_geometry(data: bytes):
@@ -757,91 +696,67 @@ def media_stream_info(media: DataFrame) -> DataFrame:
     unrecognized payloads keep their row with format NULL (the
     decode_error-surfacing convention, sources/binary_files.py).
 
-    Same Arrow-batched mapInPandas shape as the codec operators: one
+    Same Arrow-batched row-kernel shape as the codec operators: one
     Python stage, no shuffle; at scale this runs over the distinct
     media store, so cost is per unique blob."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_task():
         from granulate_char_ocr_spark.functions.avi import avi_info
         from granulate_char_ocr_spark.functions.h264 import parse_h264
         from granulate_char_ocr_spark.functions.mp3 import parse_mp3
         from granulate_char_ocr_spark.functions.mp4 import parse_mp4
         from granulate_char_ocr_spark.functions.wav import wav_info
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                # NULL payloads keep their row with format NULL — the
-                # stated contract; sibling operators guard the same way
-                # (ADVICE r4)
-                if r.payload is None:
-                    rows.append((r.media_ref, None) + (None,) * 9)
-                    continue
-                payload = bytes(r.payload)
-                # strongest signatures first: image magics, RIFF and
-                # ftyp are unambiguous, the MP3 sync scan is
-                # probabilistic
-                img = _image_geometry(payload)
-                if img is not None:
-                    fmt, iw, ih = img
-                    rows.append((
-                        r.media_ref, fmt, None, None, None, None, None,
-                        iw, ih, None, None,
-                    ))
-                    continue
-                w = wav_info(payload)
-                if w is not None:
-                    tag, rate, channels, duration = w
-                    rows.append((
-                        r.media_ref, f"wav/{tag}", duration, rate,
-                        channels, None, None, None, None, None, None,
-                    ))
-                    continue
-                a = avi_info(payload)
-                if a is not None:
-                    aw, ah, n_frames, duration = a
-                    rows.append((
-                        r.media_ref, "avi", duration, None, None, None,
-                        None, aw, ah, None, n_frames,
-                    ))
-                    continue
-                p4 = parse_mp4(payload)
-                if p4 is not None:
-                    rows.append((
-                        r.media_ref, f"mp4/{p4.brand}", p4.duration_s,
-                        p4.audio_sample_rate, p4.audio_channels, None,
-                        None, p4.width, p4.height, p4.profile_level,
-                        None,
-                    ))
-                    continue
-                m = parse_mp3(payload)
-                if m is not None:
-                    rows.append((
-                        r.media_ref, f"mp3v{m.version}L{m.layer}",
-                        m.duration_s, m.sample_rate, m.channels,
-                        m.bitrate_kbps, m.vbr, None, None, None,
-                        m.n_frames,
-                    ))
-                    continue
-                v = parse_h264(payload)
-                if v is not None:
-                    rows.append((
-                        r.media_ref, "h264", None, None, None, None,
-                        None, v.width, v.height,
-                        f"{v.profile_idc}@{v.level_idc / 10:.1f}",
-                        v.n_slices,
-                    ))
-                    continue
-                rows.append((r.media_ref, None) + (None,) * 9)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "format", "duration_sec", "sample_rate",
-                    "channels", "bitrate_kbps", "vbr", "width", "height",
-                    "profile_level", "n_frames",
-                ],
-            )
+        def info(payload):
+            # NULL payloads keep their row with format NULL — the stated
+            # contract; sibling operators guard the same way (ADVICE r4)
+            if payload is None:
+                return _NO_STREAM
+            payload = bytes(payload)
+            # strongest signatures first: image magics, RIFF and ftyp are
+            # unambiguous, the MP3 sync scan is probabilistic
+            img = _image_geometry(payload)
+            if img is not None:
+                fmt, iw, ih = img
+                return (fmt, None, None, None, None, None, iw, ih, None, None)
+            w = wav_info(payload)
+            if w is not None:
+                tag, rate, channels, duration = w
+                return (
+                    f"wav/{tag}", duration, rate, channels,
+                    None, None, None, None, None, None,
+                )
+            a = avi_info(payload)
+            if a is not None:
+                aw, ah, n_frames, duration = a
+                return (
+                    "avi", duration, None, None, None, None, aw, ah, None,
+                    n_frames,
+                )
+            p4 = parse_mp4(payload)
+            if p4 is not None:
+                return (
+                    f"mp4/{p4.brand}", p4.duration_s, p4.audio_sample_rate,
+                    p4.audio_channels, None, None, p4.width, p4.height,
+                    p4.profile_level, None,
+                )
+            m = parse_mp3(payload)
+            if m is not None:
+                return (
+                    f"mp3v{m.version}L{m.layer}", m.duration_s,
+                    m.sample_rate, m.channels, m.bitrate_kbps, m.vbr, None,
+                    None, None, m.n_frames,
+                )
+            v = parse_h264(payload)
+            if v is not None:
+                return (
+                    "h264", None, None, None, None, None, v.width, v.height,
+                    f"{v.profile_idc}@{v.level_idc / 10:.1f}", v.n_slices,
+                )
+            return _NO_STREAM
 
-    return media.select("media_ref", "payload").mapInPandas(
-        fn, schema=STREAM_INFO_SCHEMA
+        return lambda payload: tuple(zip(info(payload)))
+
+    return row_kernel(
+        media, ("media_ref",), ("payload",), per_task, STREAM_INFO_SCHEMA
     )

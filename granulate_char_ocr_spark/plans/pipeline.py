@@ -24,9 +24,9 @@ Two recognition strategies, both Arrow-batched mapInPandas kernels:
 
 The span stream crosses exactly two exchanges either way: into the
 recognition join (or salted repartition) and out through the doc_id
-re-assembly. The media store / recognized-results join broadcasts when small
-and degrades to an AQE-skew-protected shuffle hash join on ``media_ref``
-otherwise.
+re-assembly. The media store join and the recognized-results join are
+always broadcast (``F.broadcast``): both sides are dimension-sized, one row
+per distinct image.
 """
 
 from __future__ import annotations
@@ -76,7 +76,6 @@ def extract_flat(
     media: DataFrame,
     n_salts: int = 8,
     noisy: bool = False,
-    broadcast_media: bool = True,
     dedup_media: bool = True,
     detail: bool = True,
     segmenter: str = "projection",
@@ -122,7 +121,7 @@ def extract_flat(
             ),
         )
 
-    media_side = F.broadcast(media) if broadcast_media else media
+    media_side = F.broadcast(media)
     media_spans = spans.filter(F.col("kind") == "media").select(
         "doc_id", "offset", "media_ref"
     )
@@ -132,8 +131,9 @@ def extract_flat(
         rec_uniq = extract_unique_media(
             uniq, noisy=noisy, detail=detail, segmenter=segmenter
         )
-        rec_side = F.broadcast(rec_uniq) if broadcast_media else rec_uniq
-        recognized = media_spans.join(rec_side, "media_ref", "left")
+        recognized = media_spans.join(
+            F.broadcast(rec_uniq), "media_ref", "left"
+        )
     else:
         # per-span extraction behind a doc_id-salted repartition.
         # Order matters at scale: repartition the TINY span keys first, then
@@ -164,7 +164,6 @@ def extract_documents(
     media: DataFrame,
     n_salts: int = 8,
     noisy: bool = False,
-    broadcast_media: bool = True,
     dedup_media: bool = True,
     keep_empty_docs: bool = False,
     segmenter: str = "projection",
@@ -180,7 +179,6 @@ def extract_documents(
         media,
         n_salts=n_salts,
         noisy=noisy,
-        broadcast_media=broadcast_media,
         dedup_media=dedup_media,
         detail=False,  # the stitch reads only (offset, kind, text, media_ref)
         segmenter=segmenter,

@@ -82,10 +82,7 @@ def read_image_corpus(
     pixels and the reason in ``decode_error`` instead of failing the task —
     at 100 TB some files ARE broken, and one of them must not kill a stage.
     ``permissive=False`` raises, for corpora that must be clean."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    from granulate_char_ocr_spark.operators.doc_kernel import row_kernel
     from granulate_char_ocr_spark.operators.multimodal import decode_payload
 
     raw = spark.read.format("binaryFile").load(glob_path).select(
@@ -100,39 +97,22 @@ def read_image_corpus(
         "content",
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    img = decode_payload(bytes(r.content), "auto", 0, 0)
-                    out.append(
-                        (r.path, r.expected, img.shape[1], img.shape[0],
-                         img.tobytes(), None)
-                    )
-                except Exception as ex:
-                    if not permissive:
-                        raise
-                    out.append((r.path, r.expected, None, None, None, str(ex)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "path", "expected", "width", "height", "pixels",
-                    "decode_error",
-                ],
-            )
+    def per_row(content):
+        try:
+            img = decode_payload(bytes(content), "auto", 0, 0)
+        except Exception as ex:
+            if not permissive:
+                raise
+            return [None], [None], [None], [str(ex)]
+        return [img.shape[1]], [img.shape[0]], [img.tobytes()], [None]
 
-    return raw.mapInPandas(
-        fn,
-        schema=(
-            "path string, expected string, width int, height int, "
-            "pixels binary, decode_error string"
-        ),
+    return row_kernel(
+        raw,
+        ("path", "expected"),
+        ("content",),
+        lambda: per_row,
+        "width int, height int, pixels binary, decode_error string",
     )
-
-
-# backwards-compatible name (r2 early API)
-read_png_corpus = read_image_corpus
 
 
 def decode_error_summary(corpus: DataFrame) -> DataFrame:

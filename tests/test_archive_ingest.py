@@ -38,19 +38,19 @@ def test_tarball_to_texts_end_to_end(spark):
     )
     members.cache()
     assert members.count() == 4
-
-    docx = docx_texts(
-        members.filter(F.col("ext") == "docx"),
-        payload_col="member", key_col="member_name",
+    # the format legs read (doc_id, payload): a member is a document
+    routed = members.select(
+        F.col("member_name").alias("doc_id"),
+        F.col("member").alias("payload"),
+        "ext",
     )
-    got_docx = {r["member_name"]: r["extracted"] for r in docx.collect()}
+
+    docx = docx_texts(routed.filter(F.col("ext") == "docx"))
+    got_docx = {r["doc_id"]: r["extracted"] for r in docx.collect()}
     assert got_docx == {"docs/report.docx": "Quarterly\nResults"}
 
-    pdf = pdf_texts(
-        members.filter(F.col("ext") == "pdf"),
-        payload_col="member", key_col="member_name",
-    )
-    got_pdf = {r["member_name"]: r["extracted"] for r in pdf.collect()}
+    pdf = pdf_texts(routed.filter(F.col("ext") == "pdf"))
+    got_pdf = {r["doc_id"]: r["extracted"] for r in pdf.collect()}
     assert got_pdf["docs/paper.pdf"].splitlines() == [
         "PDF LINE ONE", "PDF LINE TWO",
     ]

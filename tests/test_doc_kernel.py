@@ -4,6 +4,7 @@ six kernels built on it."""
 from collections import Counter
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 import reference_twins as twins
@@ -26,9 +27,10 @@ def _words(text, h):
 
 
 def _run(pdf, keys=("doc_id",), cap=doc_kernel.MEMO_CAP):
-    fn = doc_kernel._batches(_words, OUT, list(keys), len, cap)
-    (out,) = fn(iter([pdf]))
-    return out
+    per_task = doc_kernel._text_task(_words, len, cap)
+    fn = doc_kernel._batches(per_task, OUT, list(keys), ("text",))
+    (out,) = fn(iter([pa.RecordBatch.from_pandas(pdf, preserve_index=False)]))
+    return out.to_pandas()
 
 
 def test_null_text_and_zero_row_docs_emit_nothing():

@@ -131,13 +131,13 @@ def test_ascii_text_rows_normalize_without_python(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    flat = extract_flat(docs, media, broadcast_media=False)
+    flat = extract_flat(docs, media)
     got = {r["doc_id"]: r["text"] for r in flat.collect()}
     assert got == {f"d{i}": normalize_python(t) for i, t in enumerate(mixed)}
 
     ascii_docs = docs.filter(SF.col("doc_id").isin("d0", "d2"))
     plan = (
-        extract_flat(ascii_docs, media, broadcast_media=False)
+        extract_flat(ascii_docs, media)
         .filter(SF.col("kind") == "text")
         ._jdf.queryExecution()
         .executedPlan()
@@ -185,7 +185,7 @@ def test_partition_policy_at_four_cores(spark, corpus):
     """operators/skew.py's policy at the suite's local[4]: exchanges that
     feed a kernel get cores x 4 = 16 partitions; the n-gram slices and the
     embedding blocks, whose every task ships a replicated payload, get one
-    per core (4 slices; 4 blocks = 10 block pairs)."""
+    per core (4 slices; 4 blocks = 10 block pairs, one per task)."""
     import re
 
     from granulate_char_ocr_spark.operators import dedup
@@ -212,15 +212,32 @@ def test_partition_policy_at_four_cores(spark, corpus):
         [(i, [float(i), 1.0]) for i in range(8)], "vec_id long, embedding array<float>"
     )
     near = dedup.embedding_near_pairs(vectors, sign_dims=2)
-    # the block-pair relation is the in-memory RDD scan that outputs bl, br
-    stack, pair_rows = [near._jdf.queryExecution().sparkPlan()], []
-    while stack:
-        node = stack.pop()
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-        if node.nodeName() == "Scan ExistingRDD" and "bl#" in node.toString():
-            pair_rows.append(node.rdd().count())
+
+    def walk(node):
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        yield node, kids
+        for kid in kids:
+            yield from walk(kid)
+
+    def pair_scan(node):  # the in-memory RDD scan that outputs bl, br
+        return node.nodeName() == "Scan ExistingRDD" and "bl#" in node.toString()
+
+    def has(root, pred):
+        return any(pred(n) for n, _ in walk(root))
+
+    plan = near._jdf.queryExecution().sparkPlan()
+    pair_rows = [n.rdd().count() for n, _ in walk(plan) if pair_scan(n)]
     assert pair_rows == [10], pair_rows
+    # the kernel's tasks are the partitions in which the first join streams
+    # the pair relation: one block pair each, no task runs two or none
+    per_task = [
+        [len(part) for part in kid.execute().glom().collect()]
+        for node, kids in walk(plan)
+        if "Join" in node.nodeName()
+        for kid in kids
+        if has(kid, pair_scan) and not has(kid, lambda n: "Join" in n.nodeName())
+    ]
+    assert per_task == [[1] * 10], per_task
 
 
 def test_sorted_unique_event_types(spark):

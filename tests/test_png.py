@@ -56,13 +56,13 @@ def test_png_corpus_scan_end_to_end(spark, tmp_path):
     """The reference's real corpus shape: a directory of <LABEL>_<n>.png
     files → distributed scan → decode → recognize → 100% on clean glyphs."""
     from granulate_char_ocr_spark.operators.extract import extract_media_spans
-    from granulate_char_ocr_spark.sources.binary_files import read_png_corpus
+    from granulate_char_ocr_spark.sources.binary_files import read_image_corpus
 
     words = ["PLEASURE", "TEAM", "WE"]
     for i, w in enumerate(words):
         img = render_word(w, i % 3)
         (tmp_path / f"{w}_{i + 1}.png").write_bytes(encode_png(img))
-    corpus = read_png_corpus(spark, str(tmp_path / "*.png"))
+    corpus = read_image_corpus(spark, str(tmp_path / "*.png"))
     rec = extract_media_spans(
         corpus.select(
             corpus.path.alias("doc_id"),
@@ -82,20 +82,20 @@ def test_png_corpus_scan_end_to_end(spark, tmp_path):
 def test_png_corpus_permissive_mode(spark, tmp_path):
     """A corrupt file yields a decode_error row, never a task failure
     (permissive=True); strict mode raises."""
-    from granulate_char_ocr_spark.sources.binary_files import read_png_corpus
+    from granulate_char_ocr_spark.sources.binary_files import read_image_corpus
 
     (tmp_path / "GOOD_1.png").write_bytes(encode_png(render_word("WE", 0)))
     (tmp_path / "BAD_2.png").write_bytes(b"\x89PNG but truncated garbage")
     rows = {
         r["path"].rsplit("/", 1)[-1]: r
-        for r in read_png_corpus(spark, str(tmp_path / "*.png")).collect()
+        for r in read_image_corpus(spark, str(tmp_path / "*.png")).collect()
     }
     assert rows["GOOD_1.png"]["decode_error"] is None
     assert rows["GOOD_1.png"]["pixels"] is not None
     assert rows["BAD_2.png"]["pixels"] is None
     assert "signature" in rows["BAD_2.png"]["decode_error"]
     with pytest.raises(Exception):
-        read_png_corpus(spark, str(tmp_path / "*.png"), permissive=False).collect()
+        read_image_corpus(spark, str(tmp_path / "*.png"), permissive=False).collect()
 
 
 def test_png_media_embeddings_match_raw(spark):

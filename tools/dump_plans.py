@@ -42,8 +42,8 @@ for, per the 100 TB design claims:
   `SortMergeJoin` on equi-keys for everything else — **no
   CartesianProduct / BroadcastNestedLoopJoin anywhere** (pinned by
   tests/test_plan_invariants.py);
-* Python appears only as `MapInPandas` / `ArrowEvalPython` (Arrow-batched),
-  never `BatchEvalPython` (row-at-a-time);
+* Python appears only as `MapInPandas` / `MapInArrow` / `ArrowEvalPython`
+  (Arrow-batched), never `BatchEvalPython` (row-at-a-time);
 * `Exchange hashpartitioning(media_ref, ...)` with an explicit partition
   count before the extraction kernel (the AQE key-only-exchange
   workaround), and exactly one `Exchange hashpartitioning(doc_id, ...)`
