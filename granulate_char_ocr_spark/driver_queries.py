@@ -1491,7 +1491,7 @@ def warc_extract_docs(spark, sf_dir):
     into boilerplate pages, packed into Common Crawl-layout WARC files
     (per-record gzip members, warcinfo + HTTP response records —
     functions/warc.py), then the READ path runs: record explode
-    (docparse.warc_records, 1→N mapInPandas over file payloads), HTTP
+    (docparse.warc_records, 1→N mapInArrow over file payloads), HTTP
     envelope strip, charset decode, and the pure-codegen boilerplate
     strip — recovering exactly the whitespace-collapsed source text the
     oracle computes directly. Container build, record framing, HTTP

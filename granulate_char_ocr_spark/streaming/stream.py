@@ -171,7 +171,7 @@ def warc_ingest_stream(spark, warc_dir: str) -> DataFrame:
     """Continuous crawl ingest — the web-tier streaming front door:
     WARC files landing in a directory stream through the SAME stages as
     the batch fetch leg (operators/docparse.py) — record explode
-    (mapInPandas is streaming-compatible as-is), 200-response filter,
+    (mapInArrow is streaming-compatible as-is), 200-response filter,
     charset-sniffed body decode, pure-codegen boilerplate strip —
     yielding an append-mode (url, main_text) stream.
 

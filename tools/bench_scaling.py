@@ -259,7 +259,7 @@ def write_warc_corpus(corpus_dir: str, n_pages: int) -> None:
 
 def one_round_warc(cores: int, corpus_dir: str) -> dict:
     """The WARC-ingest pipeline at one core level: record explode
-    (mapInPandas over file payloads), response/200 filter,
+    (mapInArrow over file payloads), response/200 filter,
     charset-sniffed body decode, pure-codegen boilerplate strip — the
     fetch-leg stages the web tier runs per crawled page. The unit of
     parallelism is the WARC FILE, exactly the cluster-scale layout."""
