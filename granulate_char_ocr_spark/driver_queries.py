@@ -798,7 +798,7 @@ def vocab_kmv_docs(spark, sf_dir):
         .select(                         # map-side partial agg on one core
             "lang",
             F.explode(
-                F.expr(_gram_windows_expr(2, with_pos=False, distinct=False))
+                F.expr(_gram_windows_expr(2, distinct=False))
             ).alias("g"),
         )
     )
@@ -1996,7 +1996,7 @@ def page_metadata_docs(spark, sf_dir):
     """Page-metadata extraction (r4): title / lang / canonical URL /
     meta description / published date pulled from synthesized pages by
     the pure-codegen cascade in functions/metadata.py
-    (operators/docparse.page_metadata). Branch corners: entity-bearing
+    (page_metadata_cols). Branch corners: entity-bearing
     title + JSON-LD datePublished; flipped attribute orders + bare
     attribute values + article:published_time; uppercase multiline
     <TITLE> + <time datetime>; a metadata-free page (all NULL). The

@@ -1,11 +1,11 @@
 """Minimal pure-Python AVI (RIFF) container with MJPEG video frames.
 
 Motion-JPEG-in-AVI is the one mainstream video format that needs no
-temporal codec — every frame is a standalone JPEG — so with the T.81
-codec in functions/jpeg.py the video leg of the multimodal column family
-gets a REAL container end to end: parse the RIFF chunk tree, find the
-``movi`` list, decode each ``..dc``/``..db`` chunk as a JPEG. Temporal
-codecs (H.264 et al.) remain honestly out of scope in-sandbox.
+temporal codec — every frame is a standalone JPEG (functions/jpeg.py).
+The writer builds the synthetic video corpus; ``avi_info`` parses the
+RIFF chunk tree for the stream metadata (frame count, duration,
+geometry) without decoding a frame. Temporal codecs (H.264 et al.)
+remain honestly out of scope in-sandbox.
 
 Layout (OpenDML/MS AVI RIFF spec): RIFF('AVI ' LIST('hdrl' avih
 LIST('strl' strh strf)) LIST('movi' 00dc...) [idx1]); chunks are
@@ -18,7 +18,7 @@ import struct
 
 import numpy as np
 
-from granulate_char_ocr_spark.functions.jpeg import decode_jpeg, encode_jpeg
+from granulate_char_ocr_spark.functions.jpeg import encode_jpeg
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -67,39 +67,6 @@ def encode_avi_mjpeg(
     return b"RIFF" + struct.pack(
         "<I", 4 + len(hdrl) + len(movi)
     ) + b"AVI " + hdrl + movi
-
-
-def iter_mjpeg_payloads(data: bytes) -> list[bytes]:
-    """AVI bytes -> the raw JPEG payload of every video frame chunk
-    (``..dc`` compressed / ``..db`` uncompressed-naming variants), in
-    stream order."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("AVI: bad RIFF/AVI signature")
-    out: list[bytes] = []
-
-    def walk(buf: bytes, pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            tag = buf[pos : pos + 4]
-            (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-            body_end = min(pos + 8 + size, end)
-            if tag == b"LIST":
-                four_cc = buf[pos + 8 : pos + 12]
-                if four_cc in (b"movi", b"hdrl", b"strl", b"rec "):
-                    walk(buf, pos + 12, body_end)
-            elif tag[2:4] in (b"dc", b"db"):
-                out.append(bytes(buf[pos + 8 : body_end]))
-            pos = pos + 8 + size + (size & 1)  # word alignment
-
-    walk(data, 12, len(data))
-    if not out:
-        raise ValueError("AVI: no video frame chunks found")
-    return out
-
-
-def decode_avi_mjpeg(data: bytes) -> list[np.ndarray]:
-    """AVI bytes -> decoded frames (uint8 arrays as decode_jpeg returns
-    them: (H, W) grayscale or (H, W, 3) RGB)."""
-    return [decode_jpeg(p) for p in iter_mjpeg_payloads(data)]
 
 
 def avi_info(data: bytes):

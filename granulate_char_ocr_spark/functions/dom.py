@@ -14,7 +14,7 @@ class="sidebar">` link farms, related-article link lists, pagination
 bars) because it never looks at element names beyond block boundaries.
 
 Deterministic pipeline, mirrored byte-identically in Spark (Java
-regex), DuckDB (RE2) and Python (fixtures):
+regex), DuckDB (RE2) and Python (tests/reference_twins.py):
 
 1. hard-drop only the non-content SUBTREES that are code rather than
    prose: <head>, <script>, <style>, and comments. Named boilerplate
@@ -45,8 +45,6 @@ identically in Java regex and RE2, so the DuckDB oracle is exact
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -57,7 +55,6 @@ from granulate_char_ocr_spark.functions.html import (
     _TAG,
     _WS_CLASS,
     _numeric_entities_expr,
-    _numeric_entities_python,
     _numeric_entities_sql,
 )
 
@@ -130,33 +127,6 @@ def main_content_expr(col: Column) -> Column:
     return F.trim(
         F.regexp_replace(_entities_expr(joined), _WS_CLASS, " ")
     )
-
-
-def _flat_python(s: str) -> str:
-    return re.sub(_WS_CLASS, " ", re.sub(_TAG, " ", s)).strip(" ")
-
-
-def main_content_python(html: str) -> str:
-    """Same-logic Python twin (fixtures/goldens)."""
-    out = html
-    for pat in _DROP_CODE_SUBTREES:
-        out = re.sub(pat, " ", out)
-    out = re.sub(_COMMENT, " ", out)
-    kept = []
-    for b in re.split(_BLOCK_SPLIT, out):
-        t = _flat_python(b)
-        ln = len(_flat_python(" ".join(re.findall(_LINK_INNER, b))))
-        if (
-            len(t) >= MIN_BLOCK_CHARS
-            and ln * LINK_DENSITY_DEN <= len(t) * LINK_DENSITY_NUM
-        ):
-            kept.append(t)
-    joined = " ".join(kept)
-    for ent, rep in _ENTITIES_PRE:
-        joined = joined.replace(ent, rep)
-    joined = _numeric_entities_python(joined)
-    joined = joined.replace(*_ENTITY_AMP)
-    return re.sub(_WS_CLASS, " ", joined).strip(" ")
 
 
 def _flat_sql(e: str) -> str:

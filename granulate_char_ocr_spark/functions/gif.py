@@ -262,7 +262,7 @@ def _parse_gce(data: bytes, pos: int):
 def decode_gif(data: bytes) -> np.ndarray:
     """GIF bytes -> first frame as uint8 (H, W, 3) RGB, or (H, W, 4) RGBA
     when the frame declares a transparent index. Animations decode their
-    FIRST frame; use ``decode_gif_frames`` for the composed sequence."""
+    FIRST frame."""
     sw, sh, bg, gct, pos = _parse_screen(data)
     transparent = None
     while pos < len(data):
@@ -296,106 +296,3 @@ def decode_gif(data: bytes) -> np.ndarray:
         alpha = np.where(idx == transparent, 0, 255).astype(np.uint8)
         return np.dstack([rgb, alpha])
     raise ValueError("GIF: no image descriptor")
-
-
-def encode_gif_frames(
-    frames: list[np.ndarray],
-    palette: np.ndarray,
-    delay_cs: int = 10,
-    transparent: int | None = None,
-) -> bytes:
-    """Animated GIF89a: each uint8 (H, W) index frame full-size with its
-    own graphic-control extension (disposal 1 = leave in place,
-    ``delay_cs`` hundredths of a second per frame)."""
-    if not frames:
-        raise ValueError("encode_gif_frames: no frames")
-    frames = [np.ascontiguousarray(f, dtype=np.uint8) for f in frames]
-    h, w = frames[0].shape
-    if any(f.shape != (h, w) for f in frames):
-        raise ValueError("encode_gif_frames: frames must share one size")
-    palette = np.ascontiguousarray(palette, dtype=np.uint8)
-    depth = max(int(len(palette) - 1).bit_length(), 1)
-    if max(int(f.max(initial=0)) for f in frames) >= (1 << depth):
-        raise ValueError("encode_gif_frames: index out of palette range")
-    gct = np.zeros((1 << depth, 3), dtype=np.uint8)
-    gct[: len(palette)] = palette
-    out = bytearray(
-        b"GIF89a"
-        + struct.pack(
-            "<HHBBB", w, h, 0x80 | ((depth - 1) << 4) | (depth - 1), 0, 0
-        )
-        + gct.tobytes()
-    )
-    min_code = max(depth, 2)
-    flags = (1 << 2) | (0x01 if transparent is not None else 0)
-    for f in frames:
-        out += (
-            b"\x21\xf9\x04"
-            + struct.pack("<BHB", flags, delay_cs, transparent or 0)
-            + b"\x00"
-        )
-        out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, 0)
-        out += bytes([min_code]) + _subblocks(_lzw_encode(f, min_code))
-    out += b"\x3b"
-    return bytes(out)
-
-
-def iter_gif_frames(data: bytes, max_frames: int = 10000):
-    """Yield composed animation frames one at a time: uint8 (H, W, 3)
-    RGB at the logical screen size, honoring sub-rectangle frames,
-    per-frame transparency (a compositing hole, not an alpha channel)
-    and the GIF89a disposal methods (1 leave, 2 restore-to-background,
-    3 restore-to-previous). Composition is inherently sequential, but a
-    streaming consumer (e.g. a frame sampler) holds only one canvas at
-    a time instead of the whole animation. The frame count is capped so
-    a corrupt stream terminates; a stream with no image descriptor
-    raises on the first next()."""
-    sw, sh, bg, gct, pos = _parse_screen(data)
-    bg_rgb = (
-        gct[bg] if gct is not None and bg < len(gct)
-        else np.zeros(3, np.uint8)
-    )
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).copy()
-    n_frames = 0
-    transparent, disposal = None, 0
-    while pos < len(data):
-        block = data[pos]
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            t, d, pos, was_gce = _parse_gce(data, pos)
-            if was_gce:  # keep pending GCE across comment/app extensions
-                transparent, disposal = t, d
-            continue
-        if block != 0x2C:
-            raise ValueError(f"GIF: unknown block 0x{block:02x}")
-        if n_frames >= max_frames:
-            raise ValueError("GIF: frame count exceeds max_frames")
-        idx, ct, left, top, pos = _parse_image_block(data, pos, gct)
-        h, w = idx.shape
-        if top + h > sh or left + w > sw:
-            raise ValueError("GIF: frame exceeds logical screen")
-        saved = canvas.copy() if disposal == 3 else None
-        region = canvas[top : top + h, left : left + w]
-        rgb = ct[idx]
-        if transparent is not None:
-            mask = idx != transparent
-            region[mask] = rgb[mask]
-        else:
-            region[...] = rgb
-        n_frames += 1
-        yield canvas.copy()
-        if disposal == 2:
-            canvas[top : top + h, left : left + w] = bg_rgb
-        elif disposal == 3 and saved is not None:
-            canvas = saved
-        transparent, disposal = None, 0
-    if n_frames == 0:
-        raise ValueError("GIF: no image descriptor")
-
-
-def decode_gif_frames(
-    data: bytes, max_frames: int = 10000
-) -> list[np.ndarray]:
-    """All composed animation frames as a list — see iter_gif_frames."""
-    return list(iter_gif_frames(data, max_frames))

@@ -21,11 +21,9 @@ can mirror (the DuckDB oracle runs the byte-identical transform):
 
 Lazy quantifiers and (?s) dot-all behave identically in Java regex
 (Spark) and RE2 (DuckDB), so the oracle is exact. A same-logic Python
-twin exists for fixtures."""
+twin lives in tests/reference_twins.py."""
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -126,14 +124,6 @@ def decode_entities_expr(out: Column, pre=None) -> Column:
     return F.replace(out, F.lit(_ENTITY_AMP[0]), F.lit(_ENTITY_AMP[1]))
 
 
-def decode_entities_python(out: str, pre=None) -> str:
-    """Python twin of decode_entities_expr."""
-    for ent, rep in pre if pre is not None else _ENTITIES_PRE:
-        out = out.replace(ent, rep)
-    out = _numeric_entities_python(out)
-    return out.replace(*_ENTITY_AMP)
-
-
 def main_text_expr(col: Column) -> Column:
     """html string column -> extracted main text column."""
     out = col
@@ -143,40 +133,6 @@ def main_text_expr(col: Column) -> Column:
     out = F.regexp_replace(out, _TAG, " ")
     out = decode_entities_expr(out)
     return F.trim(F.regexp_replace(out, _WS_CLASS, " "))
-
-
-def _numeric_entities_python(s: str) -> str:
-    parts = s.split("&#")
-    out = [parts[0]]
-    for p in parts[1:]:
-        m = re.match(_DEC_ENT, p) or re.match(_HEX_ENT, p)
-        code = (
-            None
-            if m is None
-            else int(m.group(1), 10 if p[0].isdigit() else 16)
-        )
-        if (
-            code is not None
-            and 9 <= code <= 0xFFFF
-            and not (0xD800 <= code <= 0xDFFF)
-        ):
-            out.append(chr(code) + p[m.end():])
-        else:
-            out.append("&#" + p)
-    return "".join(out)
-
-
-def main_text_python(html: str) -> str:
-    """Same-logic Python twin (fixtures/goldens)."""
-    out = html
-    for pat in _DROP_SUBTREES:
-        out = re.sub(pat, " ", out)
-    out = re.sub(_COMMENT, " ", out)
-    out = re.sub(_TAG, " ", out)
-    out = decode_entities_python(out)
-    # strip(" ") not strip(): Python's bare strip eats Unicode whitespace
-    # (NBSP) that Spark/DuckDB trim() leave alone
-    return re.sub(_WS_CLASS, " ", out).strip(" ")
 
 
 def _numeric_entities_sql(out: str) -> str:
@@ -207,21 +163,6 @@ def _numeric_entities_sql(out: str) -> str:
         f"(({parts})[1] || coalesce(array_to_string("
         f"list_transform(({parts})[2:], p -> {piece}), ''), ''))"
     )
-
-
-def main_text_oracle_sql(col_sql: str) -> str:
-    """The byte-identical DuckDB (RE2) transform for the oracle side."""
-    out = col_sql
-    for pat in _DROP_SUBTREES:
-        out = f"regexp_replace({out}, '{pat}', ' ', 'g')"
-    out = f"regexp_replace({out}, '{_COMMENT}', ' ', 'g')"
-    out = f"regexp_replace({out}, '{_TAG}', ' ', 'g')"
-    for ent, rep in _ENTITIES_PRE:
-        lit = rep.replace("'", "''")
-        out = f"replace({out}, '{ent}', '{lit}')"
-    out = _numeric_entities_sql(out)
-    out = f"replace({out}, '{_ENTITY_AMP[0]}', '{_ENTITY_AMP[1]}')"
-    return rf"trim(regexp_replace({out}, '{_WS_CLASS}', ' ', 'g'))"
 
 
 def escape_text(col: Column) -> Column:

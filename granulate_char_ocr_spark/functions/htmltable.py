@@ -16,7 +16,7 @@ way the main-text legs flatten prose (shared ``_TAG``/``_WS_CLASS``/
 everywhere at once).
 
 Deterministic pipeline, mirrored byte-identically in Spark (Java
-regex), DuckDB (RE2) and Python:
+regex), DuckDB (RE2) and Python (tests/reference_twins.py):
 
 1. strip comments, drop <script>/<style> subtrees (a table literal in
    JavaScript is code, not content);
@@ -63,10 +63,8 @@ from granulate_char_ocr_spark.functions.html import (
     _ENTITY_AMP,
     _TAG,
     _WS_CLASS,
-    _numeric_entities_python,
     _numeric_entities_sql,
     decode_entities_expr,
-    decode_entities_python,
 )
 
 _DROP_CODE = [
@@ -127,29 +125,6 @@ def table_rows_expr(df: DataFrame, html_col: str = "html") -> DataFrame:
             F.size(raw).alias("n_cells"),
         )
     )
-
-
-def table_rows_python(html: str) -> list[tuple[int, int, bool, list[str]]]:
-    """Same-logic Python twin (fixtures): [(table_idx, row_idx,
-    is_header, [cell, …]), …]."""
-    h = html
-    for pat in _DROP_CODE:
-        h = re.sub(pat, " ", h)
-    h = re.sub(_COMMENT, " ", h)
-    out = []
-    for ti, tbl in enumerate(re.findall(_TABLE, h)):
-        for ri, row in enumerate(re.findall(_TR, tbl)):
-            cells = []
-            for c in re.findall(_CELL, row):
-                c = re.sub(_TAG, " ", c)
-                c = decode_entities_python(c)
-                c = c.replace(CELL_SEP, " ")  # &#31; == the separator
-                # strip(" ") not strip(): Spark/DuckDB trim() leave
-                # Unicode whitespace (NBSP) alone
-                cells.append(re.sub(_WS_CLASS, " ", c).strip(" "))
-            if cells:
-                out.append((ti, ri, re.search(_TH, row) is not None, cells))
-    return out
 
 
 def _cell_text_sql(c: str) -> str:

@@ -33,14 +33,13 @@ common-crawl-reality subset — a full CommonMark emitter is out of
 scope and documented as such).
 
 Replacement strings use Java's ``$n`` group syntax (Spark regexp's
-engine); the Python twin uses ``\\n``. The gate oracle does NOT mirror
-this cascade — it constructs the expected Markdown independently from
-the source fields, which is the stronger check.
+engine); the Python twin in tests/reference_twins.py uses ``\\n``. The
+gate oracle does NOT mirror this cascade — it constructs the expected
+Markdown independently from the source fields, which is the stronger
+check.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -50,7 +49,6 @@ from granulate_char_ocr_spark.functions.html import (
     _TAG,
     _WS_CLASS,
     decode_entities_expr,
-    decode_entities_python,
 )
 
 # head/script/style drop wholesale — SHARED semantics with html.py's
@@ -93,10 +91,6 @@ _INLINE_J = [  # Java $n replacements (Spark)
     (r"(?is)<code\b[^>]*>(.*?)</code\s*>", "`$1`"),
     (r'(?is)<img\s[^>]*?src="([^"]*)"[^>]*>', "![]($1)"),
 ]
-_INLINE_P = [  # \n replacements (Python twin)
-    (p, j.replace("$1", "\\1").replace("$2", "\\2")) for p, j in _INLINE_J
-]
-
 _HWS = r"[ \t\r\f\x0B]+"  # horizontal whitespace (entity-decoded too)
 
 
@@ -116,20 +110,3 @@ def to_markdown_expr(col: Column) -> Column:
     out = F.regexp_replace(out, r" *\n *", "\n")
     out = F.regexp_replace(out, r"\n{3,}", "\n\n")
     return F.btrim(out, F.lit(" \n"))
-
-
-def to_markdown_python(html: str) -> str:
-    """Same-logic Python twin (fixtures/property tests)."""
-    out = re.sub(_WS_CLASS, " ", html)
-    for pat in _DROP:
-        out = re.sub(pat, " ", out)
-    for pat, rep in _BLOCK:
-        out = re.sub(pat, rep, out)
-    for pat, rep in _INLINE_P:
-        out = re.sub(pat, rep, out)
-    out = re.sub(_TAG, " ", out)
-    out = decode_entities_python(out)
-    out = re.sub(_HWS, " ", out)
-    out = re.sub(r" *\n *", "\n", out)
-    out = re.sub(r"\n{3,}", "\n\n", out)
-    return out.strip(" \n")

@@ -49,7 +49,6 @@ from granulate_char_ocr_spark.functions.html import (
     _TAG,
     _WS_CLASS,
     decode_entities_expr,
-    decode_entities_python,
 )
 
 # HTML permits whitespace around the attribute '='
@@ -286,129 +285,3 @@ def indexability_cols(
         nofollow_expr(html, headers).alias("nofollow"),
         soft404_expr(html).alias("soft404"),
     ]
-
-
-# --- Python twin (fixtures/tests pin expr ≡ python) ---------------------
-
-
-def _first_py(s: str, *patterns: str) -> str | None:
-    for p in patterns:
-        m = re.search(p, s)
-        if m and m.group(1) != "":
-            return m.group(1)
-    return None
-
-
-def _clean_text_py(s: str | None) -> str | None:
-    if s is None:
-        return None
-    out = re.sub(_WS_CLASS, " ", decode_entities_python(s)).strip()
-    return out or None
-
-
-def _published_py(html: str) -> str | None:
-    block = _first_py(html, _LD_SCRIPT)
-    ld = _first_py(block, _LD_DATE) if block else None
-    return ld or _first_py(html, _PUB_PC, _PUB_CP, _TIME)
-
-
-def page_metadata_python(html: str) -> dict[str, str | None]:
-    """Python twin of page_metadata_cols over one page."""
-    return {
-        "title": _clean_text_py(_first_py(html, _TITLE)),
-        "lang": _first_py(html, _LANG),
-        "canonical_url": _first_py(html, _CANON_RH, _CANON_HR),
-        "description": _clean_text_py(
-            _first_py(html, _DESC_ND, _DESC_NS, _DESC_DN, _DESC_SN)
-        ),
-        "published": _published_py(html),
-    }
-
-
-def indexability_python(
-    html: str, headers: str | None = None
-) -> dict[str, bool]:
-    """Python twin of indexability_cols over one page."""
-    c = _first_py(html, *_ROBOTS_PATTERNS) or ""
-    h = headers or ""
-    noindex = bool(re.search(_NOINDEX_TOK, c)) or bool(
-        re.search(_XROB_NOINDEX, h)
-    )
-    nofollow = bool(re.search(_NOFOLLOW_TOK, c)) or bool(
-        re.search(_XROB_NOFOLLOW, h)
-    )
-    title = _clean_text_py(_first_py(html, _TITLE)) or ""
-    # .strip(" ") — ASCII space only, mirroring F.trim exactly (a bare
-    # .strip() also eats \t\n\r and diverges the <200-char length check)
-    body = re.sub(_TAG, " ", html).strip(" ")
-    soft404 = bool(re.search(_S404_MARK, title)) or (
-        bool(re.search(_S404_MARK, body)) and len(body) < _S404_BODY_MAX
-    )
-    return {"noindex": noindex, "nofollow": nofollow, "soft404": soft404}
-
-
-# --- JSON-LD structured data ---------------------------------------------
-#
-# schema.org JSON-LD is the machine-readable page summary publishers
-# actually maintain (search engines consume it, so it is kept accurate
-# where visible HTML rots). The published-date ladder above already
-# trusts it first; these columns surface the other curation-relevant
-# fields. The FIRST ld+json block wins (the page's primary entity by
-# convention); JSON traversal is JVM-side get_json_object — a
-# non-string @type (array form) comes back as its compact JSON text,
-# documented rather than exploded.
-
-_LD_TYPE_PATH = "$['@type']"
-_LD_HEADLINE_PATH = "$.headline"
-_LD_AUTHOR_NAME_PATH = "$.author.name"
-_LD_AUTHOR_PATH = "$.author"
-
-
-def jsonld_cols(col: Column) -> list[Column]:
-    """(ld_type, ld_headline, ld_author) from the first
-    application/ld+json block; NULL when absent or malformed
-    (get_json_object returns NULL on bad JSON — never throws)."""
-    block = F.nullif(F.regexp_extract(col, _LD_SCRIPT, 1), F.lit(""))
-    author = F.coalesce(
-        F.get_json_object(block, _LD_AUTHOR_NAME_PATH),
-        F.get_json_object(block, _LD_AUTHOR_PATH),
-    )
-    return [
-        F.get_json_object(block, _LD_TYPE_PATH).alias("ld_type"),
-        F.get_json_object(block, _LD_HEADLINE_PATH).alias("ld_headline"),
-        author.alias("ld_author"),
-    ]
-
-
-def jsonld_python(html: str) -> dict[str, str | None]:
-    """Python twin (pinned on the test matrix; exotic JSON renderings
-    may differ from Jackson's compact form — the tests stay within the
-    common subset)."""
-    import json
-
-    m = re.search(_LD_SCRIPT, html)
-    out = {"ld_type": None, "ld_headline": None, "ld_author": None}
-    if not m or not m.group(1).strip():
-        return out
-    try:
-        doc = json.loads(m.group(1))
-    except ValueError:
-        return out
-    if not isinstance(doc, dict):
-        return out
-
-    def render(v):
-        if v is None:
-            return None
-        if isinstance(v, str):
-            return v
-        return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-
-    out["ld_type"] = render(doc.get("@type"))
-    out["ld_headline"] = render(doc.get("headline"))
-    author = doc.get("author")
-    if isinstance(author, dict) and isinstance(author.get("name"), str):
-        out["ld_author"] = author["name"]
-    else:
-        out["ld_author"] = render(author)
-    return out

@@ -34,8 +34,8 @@ this module resolves it the way every production fixer does: a text
 whose non-ASCII content parses exactly as UTF-8-through-cp1252 is
 overwhelmingly more likely to be mojibake than intent.
 
-The forward direction (``mojibake_expr``/``mojibake_python``) is
-provided for tests and gate corpora: repair o corrupt == identity for
+The forward direction (``mojibake_expr``; its Python twin is in
+tests/reference_twins.py) is provided for tests and gate corpora: repair o corrupt == identity for
 EVERY string (property-tested), because corrupt produces precisely the
 strings validate accepts.
 
@@ -51,8 +51,6 @@ C1 character ever sits in a source line.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -131,33 +129,3 @@ def mojibake_expr(col: Column) -> Column:
         C1_CONTROLS,
         CP1252_DISPLAY,
     )
-
-
-# --- Python twins (fixtures/tests pin expr == python) --------------------
-
-_UNDISPLAY_TABLE = str.maketrans(CP1252_DISPLAY, C1_CONTROLS)
-_DISPLAY_TABLE = str.maketrans(C1_CONTROLS, CP1252_DISPLAY)
-_VALID_RE = re.compile(VALID_UTF8_AS_LATIN1_RE)
-_LEAD_RE = re.compile(_HAS_LEAD_RE)
-
-
-def mojibake_python(s: str | None) -> str | None:
-    if s is None:
-        return None
-    return s.encode("utf-8").decode("latin-1").translate(_DISPLAY_TABLE)
-
-
-def is_mojibake_python(s: str | None) -> bool:
-    if s is None:
-        return False
-    u = s.translate(_UNDISPLAY_TABLE)
-    return bool(_VALID_RE.match(u)) and bool(_LEAD_RE.search(u))
-
-
-def fix_mojibake_python(s: str | None) -> str | None:
-    if s is None:
-        return None
-    u = s.translate(_UNDISPLAY_TABLE)
-    if _VALID_RE.match(u) and _LEAD_RE.search(u):
-        return u.encode("latin-1").decode("utf-8")
-    return s

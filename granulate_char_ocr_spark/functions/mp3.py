@@ -11,7 +11,7 @@ sample-accurate duration estimate. Full PCM decode stays honestly
 stubbed (operators/multimodal.py — no ffmpeg in-sandbox); this parser
 makes the metadata leg real.
 
-Robustness contract (same as functions/exif.py): malformed or
+Robustness contract: malformed or
 non-MP3 bytes yield ``None``, never an exception — resync after junk is
 bounded (``_MAX_RESYNC``), and a stream must contain at least
 ``_MIN_FRAMES`` consecutive parseable frames to count as MP3 at all

@@ -105,15 +105,6 @@ def _filter_rows(rows: np.ndarray, filter_type: int, bpp: int) -> bytes:
     return b"".join(out)
 
 
-def _pack_subbyte(vals: np.ndarray, depth: int) -> np.ndarray:
-    """(h, w) small ints -> (h, ceil(w*depth/8)) bytes, fields packed
-    big-endian-first within each byte (spec §7.2)."""
-    h, w = vals.shape
-    shifts = np.arange(depth - 1, -1, -1, dtype=np.uint8)
-    bits = ((vals[:, :, None] >> shifts) & 1).reshape(h, w * depth)
-    return np.packbits(bits, axis=1)  # zero-padded to byte boundary
-
-
 def encode_png(
     img: np.ndarray,
     filter_type: int = 0,
@@ -156,44 +147,6 @@ def encode_png(
         + _chunk(b"IDAT", idat)
         + _chunk(b"IEND", b"")
     )
-
-
-def encode_png_palette(
-    indices: np.ndarray,
-    palette: np.ndarray,
-    trns: np.ndarray | None = None,
-    filter_type: int = 0,
-    depth: int = 8,
-    interlace: int = 0,
-) -> bytes:
-    """Indexed-color (type 3) PNG: uint8 (H,W) palette indices + (N,3)
-    RGB palette [+ per-entry alpha] -> PNG bytes. ``depth`` 1/2/4/8 packs
-    indices big-endian-first within each byte (spec §7.2)."""
-    indices = np.ascontiguousarray(indices, dtype=np.uint8)
-    palette = np.ascontiguousarray(palette, dtype=np.uint8)
-    if indices.ndim != 2 or palette.ndim != 2 or palette.shape[1] != 3:
-        raise ValueError("encode_png_palette: (H,W) indices + (N,3) palette")
-    if depth not in (1, 2, 4, 8):
-        raise ValueError(f"PNG: invalid palette bit depth {depth}")
-    if int(indices.max(initial=0)) >= min(len(palette), 1 << depth):
-        raise ValueError("PNG: palette index out of range for depth")
-    h, w = indices.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, interlace)
-    body = []
-    for (x0, y0, dx, dy, pw, ph) in _passes(w, h, interlace):
-        if pw == 0 or ph == 0:
-            continue
-        sub = indices[y0::dy, x0::dx]
-        packed = sub if depth == 8 else _pack_subbyte(sub, depth)
-        body.append(_filter_rows(packed, filter_type, 1))
-    chunks = [_chunk(b"IHDR", ihdr), _chunk(b"PLTE", palette.tobytes())]
-    if trns is not None:
-        chunks.append(
-            _chunk(b"tRNS", np.ascontiguousarray(trns, np.uint8).tobytes())
-        )
-    chunks.append(_chunk(b"IDAT", zlib.compress(b"".join(body), 6)))
-    chunks.append(_chunk(b"IEND", b""))
-    return _SIGNATURE + b"".join(chunks)
 
 
 def _unfilter(

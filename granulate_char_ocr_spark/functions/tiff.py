@@ -2,8 +2,8 @@
 
 Implements the TIFF 6.0 baseline slice OCR scan corpora actually use:
 little- and big-endian files, multi-strip and tiled (§15) layouts,
-single- and multi-page (IFD chains), bilevel (1-bit, both photometric
-polarities), 8-bit grayscale (both polarities), 8-bit RGB(A), 16-bit
+single- and multi-page (IFD chains; the first page decodes), bilevel
+(1-bit, both photometric polarities), 8-bit grayscale (both polarities), 8-bit RGB(A), 16-bit
 gray/RGB samples, and 16-bit-valued palette color; compressions none (1),
 CCITT MH-RLE (2), G3 in both 1D and 2D modes (3, T4Options-driven),
 G4 fax (4) — functions/ccitt.py —
@@ -214,40 +214,6 @@ def encode_tiff(
         img, 8, 0, compression, rows_per_strip, predictor, bilevel,
         t4_2d, fill_order, tile,
     )
-
-
-def encode_tiff_multipage(
-    pages: list[np.ndarray],
-    compression: int = _NONE,
-    rows_per_strip: int | None = None,
-    predictor: int = 1,
-    bilevel: bool = False,
-    t4_2d: bool = False,
-    fill_order: int = 1,
-    tile: int | None = None,
-) -> bytes:
-    """Multi-page TIFF (the fax/scanned-document convention: one IFD per
-    page chained by the next-IFD pointer). Page block sizes are
-    offset-independent, so a sizing pass fixes the chain offsets and a
-    second pass emits each block with absolute strip offsets (pages
-    encode twice — an accepted cost: writes are corpus-generation only,
-    decode is the hot path)."""
-    if not pages:
-        raise ValueError("encode_tiff_multipage: no pages")
-    opts = (compression, rows_per_strip, predictor, bilevel, t4_2d,
-            fill_order, tile)
-    sizes = [len(_encode_page(p, 8, 0, *opts)) for p in pages]
-    offs, off = [], 8
-    for s in sizes:
-        offs.append(off)
-        off += s
-    blocks = [
-        _encode_page(
-            p, offs[i], offs[i + 1] if i + 1 < len(pages) else 0, *opts
-        )
-        for i, p in enumerate(pages)
-    ]
-    return b"II*\x00" + struct.pack("<I", 8) + b"".join(blocks)
 
 
 def _encode_page(
@@ -505,36 +471,11 @@ def _tiff_end(data: bytes) -> str:
 def decode_tiff(data: bytes, scale_16bit: bool = True) -> np.ndarray:
     """TIFF bytes -> uint8 (H, W) grayscale (bilevel scales to 0/255,
     WhiteIsZero inverts) or (H, W, 3/4) RGB(A) / palette-expanded.
-    Multi-page files decode their FIRST page only; use
-    ``decode_tiff_pages`` for the whole IFD chain."""
+    Multi-page files decode their FIRST page only."""
     end = _tiff_end(data)
     (ifd_off,) = struct.unpack(end + "I", data[4:8])
     img, _ = _decode_ifd(data, end, ifd_off, scale_16bit)
     return img
-
-
-def decode_tiff_pages(
-    data: bytes, max_pages: int = 10000, scale_16bit: bool = True
-) -> list[np.ndarray]:
-    """Every page of a (multi-page) TIFF — the fax/scanned-document
-    convention of one IFD per page chained by the next-IFD pointer.
-    The chain is cycle-checked and capped so corrupt pointers terminate
-    instead of looping."""
-    end = _tiff_end(data)
-    (off,) = struct.unpack(end + "I", data[4:8])
-    pages: list[np.ndarray] = []
-    seen: set[int] = set()
-    while off:
-        if off in seen:
-            raise ValueError("TIFF: IFD chain cycle")
-        if len(pages) >= max_pages:
-            raise ValueError("TIFF: IFD chain exceeds max_pages")
-        seen.add(off)
-        img, off = _decode_ifd(data, end, off, scale_16bit)
-        pages.append(img)
-    if not pages:
-        raise ValueError("TIFF: empty IFD chain")
-    return pages
 
 
 def _decode_ifd(

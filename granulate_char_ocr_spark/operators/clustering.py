@@ -1,28 +1,16 @@
-"""Embedding clustering for corpus curation: Lloyd k-means and
-SemDeDup-style semantic dedup (Abbas et al. 2023 — cluster, then drop
-near-identical vectors within each cluster).
+"""Embedding clustering for corpus curation: the k-means assignment step
+from deterministic seeds.
 
-Scale shapes, by stage:
-
-* **Assignment is a pure projection.** Centroids are k×d doubles — they
-  travel to executors as literal expressions, so assigning N vectors is
-  map-side whole-stage codegen with ZERO shuffle, whatever N is. This is
-  the step that touches all 100 TB; everything driver-side is O(k·d).
-* **Each Lloyd iteration is ONE shuffle**: posexplode the assigned
-  vectors and average per (cluster, dim) — a partial-aggregated groupBy
-  whose output is k·d rows. The driver collects only that.
-* **SemDeDup's pairwise stage is cluster-local**: the self-join keys on
-  cluster_id, so each task compares ~N/k vectors, never all pairs; the
-  equality join prunes the candidate space exactly the way the paper's
-  per-cluster loop does.
+Scale shape: assignment is a pure projection. Centroids are k×d doubles —
+they travel to executors as literal expressions, so assigning N vectors is
+map-side whole-stage codegen with ZERO shuffle, whatever N is. This is the
+step that touches all 100 TB; everything driver-side is O(k·d).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from granulate_char_ocr_spark.operators import similarity
 
 
 def seed_centroids(emb: DataFrame, k: int) -> list[list[float]]:
@@ -65,81 +53,4 @@ def assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
         "embedding",
         F.col("_best.cid").alias("cluster_id"),
         F.col("_best.d").alias("dist2"),
-    )
-
-
-def kmeans_fit(
-    emb: DataFrame, k: int = 8, iters: int = 5
-) -> tuple[list[list[float]], list[float]]:
-    """Lloyd's algorithm from the deterministic seeds: returns the final
-    centroids and the per-iteration inertia trace (sum of dist2 — Lloyd
-    guarantees it non-increasing, which the tests pin). Empty clusters
-    keep their previous centroid. One shuffle per iteration (the
-    per-(cluster, dim) mean); the driver never holds more than k·d
-    doubles plus the trace."""
-    cent = seed_centroids(emb, k)
-    trace: list[float] = []
-    for _ in range(iters):
-        a = assign(emb, cent)
-        agg = (
-            a.select(
-                "cluster_id", "dist2", F.posexplode("embedding").alias("dim", "x")
-            )
-            .groupBy("cluster_id", "dim")
-            .agg(
-                F.avg(F.col("x").cast("double")).alias("mean_x"),
-                # dist2 repeats once per exploded dim, so summing it per
-                # (cluster, dim) and reading only the dim==0 rows below
-                # yields each cluster's inertia exactly once
-                F.sum("dist2").alias("dist2_sum"),
-            )
-            .collect()
-        )
-        new = [list(c) for c in cent]
-        inertia = 0.0
-        for r in agg:
-            new[r["cluster_id"]][r["dim"]] = r["mean_x"]
-            if r["dim"] == 0:
-                inertia += r["dist2_sum"]
-        trace.append(inertia)
-        cent = new
-    return cent, trace
-
-
-def semdedup(
-    emb: DataFrame, k: int = 8, iters: int = 3, threshold: float = 0.95
-) -> DataFrame:
-    """(vec_id, cluster_id, keep): SemDeDup — k-means the embeddings,
-    then inside each cluster drop every vector whose cosine similarity to
-    a LOWER-vec_id cluster member exceeds ``threshold`` (the kept
-    representative is the lowest id, matching the exact-dedup
-    convention). The pairwise stage joins on cluster_id, so candidate
-    pairs are cluster-local, not corpus-global."""
-    cent, _ = kmeans_fit(emb, k=k, iters=iters)
-    # the assignment projection feeds three plan branches (both self-join
-    # sides + the final keep-join): persist it so the corpus is scanned
-    # and the k-centroid argmin evaluated once, not three times
-    a = (
-        similarity.with_norm(assign(emb, cent))
-        .select("vec_id", "cluster_id", "embedding", "norm")
-        .persist()
-    )
-    l, r = a.alias("l"), a.alias("r")
-    dropped = (
-        l.join(
-            r,
-            (F.col("l.cluster_id") == F.col("r.cluster_id"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .where(F.expr(similarity.COSINE_EXPR) > threshold)
-        .select(F.col("r.vec_id").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        a.join(dropped.withColumn("_drop", F.lit(1)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cluster_id",
-            F.when(F.col("_drop").isNull(), 1).otherwise(0).alias("keep"),
-        )
     )

@@ -1,11 +1,10 @@
 """Corpus-curation operators an LLM training-data pipeline runs after the
 text-analysis pass: PII redaction, benchmark decontamination, training-
-sequence packing, TF-IDF keyword extraction, and boilerplate line dedup.
-Column expressions (whole-stage codegen), except TF-IDF's term counts, a
-per-document text kernel (operators/doc_kernel.py). The
-first four are graded at the gate with exact DuckDB oracles in
-driver_queries.py, the line dedup (the driver surface is capped at 50
-entries) is pinned against a DuckDB replica in tests/test_curation.py.
+sequence packing, TF-IDF keyword extraction, and the fused Gopher/C4
+quality gate. Column expressions (whole-stage codegen), except TF-IDF's
+term counts, a per-document text kernel (operators/doc_kernel.py). Each
+is graded with an exact DuckDB oracle, at the gate in driver_queries.py
+or in tests/.
 
 Regex dialect note (shared with textstats/html): every pattern stays in
 the common Java-regex / RE2 subset — character classes, bounded
@@ -160,7 +159,11 @@ def pack_sequences(
 
 def _chunk_lines_col(words_per_line: int):
     """lines Column over a frame carrying ``text`` and ``_toks``
-    (= split(text, ' ')) — shared by chunk_lines and quality_filter."""
+    (= split(text, ' ')): deterministic fixed-width word chunks standing
+    in for newline-delimited lines (the driver corpus is single-line word
+    soup; real corpora split on '\\n' instead — only this helper
+    changes). The final chunk may be short; null/empty text gets an
+    empty array (split('') would otherwise yield [''])."""
     w = words_per_line
     chunks = (
         f"transform(sequence(0, greatest(cast(ceil(size(_toks) / {w}.0) "
@@ -173,84 +176,10 @@ def _chunk_lines_col(words_per_line: int):
     )
 
 
-def chunk_lines(docs: DataFrame, words_per_line: int = 8) -> DataFrame:
-    """(doc_id, lines): deterministic fixed-width word chunks standing in
-    for newline-delimited lines (the driver corpus is single-line word
-    soup; real corpora split on '\\n' instead — only this helper changes).
-    The final chunk may be short; null/empty text gets an empty array
-    (split('') would otherwise yield [''], making '' a spurious
-    'boilerplate line' shared by every empty doc)."""
-    return docs.select(
-        "doc_id", "text", F.split("text", " ").alias("_toks")
-    ).select(
-        "doc_id",
-        _chunk_lines_col(words_per_line).alias("lines"),
-    )
-
-
-def dedup_boilerplate_lines(docs_lines: DataFrame, min_df: int = 2) -> DataFrame:
-    """(doc_id, n_lines, n_removed, clean_text): RefinedWeb/CCNet-style
-    line-level dedup — a line occurring in >= ``min_df`` DISTINCT documents
-    is boilerplate (nav menus, cookie banners, footers) and is removed from
-    every document, order of the surviving lines preserved. Input needs
-    (doc_id, lines array<string>); see chunk_lines.
-
-    Scale shape: per-doc-distinct explode -> line document-frequency (a
-    partial-aggregated groupBy whose output is vocabulary-of-lines-sized),
-    then posexplode + an explicitly broadcast hash join against the
-    (vocabulary-of-boilerplate-sized) set and one groupBy(doc_id) stitch
-    (sort_array over (pos, line) structs) to reassemble order — the same
-    re-assembly pattern as the OCR span stitch. No driver-side collect
-    anywhere."""
-    per_doc = docs_lines.select(
-        "doc_id", F.explode(F.array_distinct("lines")).alias("line")
-    )
-    boiler = (
-        per_doc.groupBy("line")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") >= min_df)
-        .select("line")
-    )
-    pos = docs_lines.select(
-        "doc_id",
-        F.size("lines").alias("n_lines"),
-        F.posexplode_outer("lines").alias("pos", "line"),
-    )
-    # marker left-join rather than anti-join: a fully-boilerplate document
-    # must still come out (n_removed == n_lines, empty text), and the
-    # posexplode_outer null row keeps empty-array docs alive too
-    marked = pos.join(
-        F.broadcast(boiler.withColumn("_b", F.lit(1))), "line", "left"
-    )
-    keep_row = F.col("_b").isNull() & F.col("line").isNotNull()
-    return (
-        marked.groupBy("doc_id", "n_lines")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(keep_row, F.struct("pos", "line"))
-                        )
-                    ),
-                    lambda s: s.line,
-                ),
-                " ",
-            ).alias("clean_text"),
-            F.count(F.when(keep_row, 1)).alias("_n_kept"),
-        )
-        .select(
-            "doc_id",
-            "n_lines",
-            (F.col("n_lines") - F.col("_n_kept")).alias("n_removed"),
-            "clean_text",
-        )
-    )
-
-
 def gopher_line_cols() -> dict:
     """name -> Column of the two line-level Gopher signals over a
-    ``lines`` column (shared with quality_filter)."""
+    ``lines`` column (Rae et al. 2021 §A1.1: reject documents with > 90%
+    of lines starting with a bullet or > 30% ending with an ellipsis)."""
     bullet = F.filter(
         F.col("lines"), lambda l: l.rlike(r"^\s*[-*•‣▪]")
     )
@@ -272,23 +201,12 @@ def line_pass_col():
     )
 
 
-def gopher_line_flags(docs_lines: DataFrame) -> DataFrame:
-    """(doc_id, n_lines, frac_bullet_lines, frac_ellipsis_lines,
-    line_pass): the two LINE-level Gopher rules (Rae et al. 2021 §A1.1 —
-    the doc-level rules live in textstats.gopher_quality_flags): reject
-    documents with > 90% of lines starting with a bullet or > 30% ending
-    with an ellipsis. Input needs (doc_id, lines array<string>); see
-    chunk_lines. Pure per-row HOF projection — no shuffle, no UDF."""
-    out = docs_lines.select(
-        "doc_id", *(c.alias(n) for n, c in gopher_line_cols().items())
-    )
-    return out.withColumn("line_pass", line_pass_col())
-
-
 def c4_cols(min_words: int = 3) -> dict:
     """name -> Column of the C4 line-keep signals over a ``lines`` column
-    (shared with quality_filter; n_lines is gopher_line_cols' — the two
-    families share it when fused)."""
+    (Raffel et al. 2020 §2.2: keep only lines that end in terminal
+    punctuation AND have >= ``min_words`` words; flag 'lorem ipsum' and
+    curly braces). n_lines is gopher_line_cols' — the two families share
+    it when fused."""
     kept = F.filter(
         F.col("lines"),
         lambda l: l.rlike('[.!?"”]\\s*$')
@@ -310,26 +228,6 @@ def c4_pass_col(min_kept_lines: int = 3):
         & ~F.col("has_lorem")
         & ~F.col("has_brace")
     )
-
-
-def c4_line_filter(
-    docs_lines: DataFrame, min_words: int = 3, min_kept_lines: int = 3
-) -> DataFrame:
-    """(doc_id, n_lines, n_kept, clean_text, has_lorem, has_brace,
-    c4_pass): the C4 cleaning rules (Raffel et al. 2020 §2.2) — keep only
-    lines that end in terminal punctuation AND have >= ``min_words``
-    words; flag documents containing 'lorem ipsum' or a curly brace
-    (code); a document passes when >= ``min_kept_lines`` lines survive
-    and neither flag fires. Input needs (doc_id, lines array<string>);
-    see chunk_lines. Pure per-row HOF projection — no shuffle, no UDF.
-    (The original's bad-words list and 3-sentence-span dedup legs live in
-    dedup_boilerplate_lines / dedup.duplicated_passage_stats.)"""
-    out = docs_lines.select(
-        "doc_id",
-        F.size("lines").alias("n_lines"),
-        *(c.alias(n) for n, c in c4_cols(min_words).items()),
-    )
-    return out.withColumn("c4_pass", c4_pass_col(min_kept_lines))
 
 
 def quality_filter(

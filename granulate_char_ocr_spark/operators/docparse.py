@@ -39,39 +39,6 @@ def html_main_contents(
     )
 
 
-def page_metadata(
-    df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
-) -> DataFrame:
-    """(key, html) -> (key, title, lang, canonical_url, description,
-    published): the header metadata a corpus manifest stores next to
-    the main text (functions/metadata.py) — regexp cascades + shared
-    entity decode, pure codegen, NULL for absent fields."""
-    from granulate_char_ocr_spark.functions.metadata import (
-        page_metadata_cols,
-    )
-
-    return df.select(key_col, *page_metadata_cols(F.col(html_col)))
-
-
-def page_indexability(
-    df: DataFrame,
-    html_col: str = "html",
-    headers_col: str | None = None,
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """(key, html[, headers]) -> (key, noindex, nofollow, soft404): the
-    keep/drop signals an ingest pipeline checks before a fetched page
-    enters the corpus — robots META directives, X-Robots-Tag response
-    headers, and soft-404 (error page served as HTTP 200) detection
-    (functions/metadata.py). Pure codegen, zero exchanges."""
-    from granulate_char_ocr_spark.functions.metadata import (
-        indexability_cols,
-    )
-
-    h = F.col(headers_col) if headers_col else None
-    return df.select(key_col, *indexability_cols(F.col(html_col), h))
-
-
 def html_tables(
     df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
 ) -> DataFrame:
@@ -216,146 +183,4 @@ def decode_bodies(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
 
     return row_kernel(
         df, (key_col,), ("body", "content_type"), per_task, "text string"
-    )
-
-
-def pdf_pages(df: DataFrame) -> DataFrame:
-    """1→N page explode: (doc_id, pdf_bytes=payload) -> (doc_id, page_no,
-    page_text), one row per text content stream in document order (page
-    boundaries for one-stream-per-page files — this module's writer and
-    the dominant real-world layout). The joined page texts equal
-    ``pdf_texts``'s output exactly."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions.pdf import (
-            decode_pdf_text_pages,
-        )
-
-        def per_row(p):
-            texts = decode_pdf_text_pages(bytes(p))
-            return range(len(texts)), texts
-
-        return per_row
-
-    return row_kernel(
-        df, ("doc_id",), ("payload",), per_task,
-        "page_no int, page_text string",
-    )
-
-
-def jsonld_metadata(
-    df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
-) -> DataFrame:
-    """(key, html) -> (key, ld_type, ld_headline, ld_author): the
-    schema.org JSON-LD fields of the page's first ld+json block
-    (functions/metadata.jsonld_cols) — JVM-side get_json_object, NULL
-    on absent/malformed JSON, zero exchanges."""
-    from granulate_char_ocr_spark.functions.metadata import jsonld_cols
-
-    return df.select(key_col, *jsonld_cols(F.col(html_col)))
-
-
-def docx_texts(df: DataFrame) -> DataFrame:
-    """(doc_id, office_bytes=payload) -> (doc_id, extracted, n_members):
-    word-processor text extraction (functions/zipdocx.py — ZIP
-    central-directory walk + WordprocessingML flatten, falling back to
-    the ODF content.xml flatten, so both .docx and .odt route through one
-    operator). Unrecognized payloads yield NULL extracted (the permissive
-    corpus contract: a crawl's office links include mislabeled HTML and
-    truncated downloads); n_members is the ZIP census when the container
-    parses at all."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions.zipdocx import (
-            docx_text,
-            odt_text,
-            zip_entries,
-        )
-
-        def per_row(p):
-            data = bytes(p)
-            entries = zip_entries(data)
-            t = docx_text(data)
-            return (
-                [t if t is not None else odt_text(data)],
-                [len(entries) if entries is not None else None],
-            )
-
-        return per_row
-
-    return row_kernel(
-        df, ("doc_id",), ("payload",), per_task,
-        "extracted string, n_members int",
-    )
-
-
-def archive_members(df: DataFrame) -> DataFrame:
-    """(doc_id, archive_bytes=payload) -> (doc_id, member_name,
-    member_size, member): 1-to-N explode of TAR (incl. .tar.gz) and ZIP
-    payloads into member rows — the ingest front of corpus tarballs and
-    office containers. Container kind is sniffed per row (gzip/ustar
-    checksum vs ZIP central directory); non-archives yield zero rows
-    (count them upstream via an anti-join on key, the S4 decode_error
-    convention).
-
-    Scale shape: one Arrow-batched Python stage, no shuffle; member
-    rows inherit the input partitioning, so a downstream router
-    (extension dispatch into the pdf/docx/html/image legs) stays
-    pipeline-local. Arrow's 2 GiB per-cell bound applies to archives as
-    it does to every other payload column — shard bigger tarballs at
-    the source."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions import tar as tarmod
-        from granulate_char_ocr_spark.functions import zipdocx
-
-        def per_row(p):
-            data = bytes(p)
-            entries = zipdocx.zip_entries(data)
-            if entries is not None:
-                pairs = [
-                    (name, zipdocx.zip_read(data, name))
-                    for name, _ in entries
-                ]
-            else:
-                pairs = [
-                    (name, payload)
-                    for name, tf, payload in tarmod.iter_tar(data)
-                    if tf != "5"
-                ]
-            # a CRC-corrupt ZIP member reads as None: skip it
-            return tuple(zip(*(
-                (name, len(b), b) for name, b in pairs if b is not None
-            )))
-
-        return per_row
-
-    return row_kernel(
-        df, ("doc_id",), ("payload",), per_task,
-        "member_name string, member_size long, member binary",
-    )
-
-
-def xlsx_tables(df: DataFrame, sheet: int = 1) -> DataFrame:
-    """(doc_id, xlsx_bytes=payload) -> (doc_id, row_idx, cells, n_cells):
-    spreadsheet rows recovered as structured data
-    (functions/zipdocx.xlsx_rows — shared/inline strings resolved,
-    numbers verbatim), the SpreadsheetML sibling of html_tables. Non-XLSX
-    payloads yield zero rows (count them upstream via an anti-join on
-    key). Arrow-batched, rows inherit the input partitioning."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions.zipdocx import xlsx_rows
-
-        def per_row(p):
-            rows = xlsx_rows(bytes(p), sheet=sheet)
-            if rows is None:
-                return ()
-            return range(len(rows)), rows, [len(r) for r in rows]
-
-        return per_row
-
-    return row_kernel(
-        df, ("doc_id",), ("payload",), per_task,
-        "row_idx int, cells array<string>, n_cells int",
     )

@@ -8,13 +8,13 @@ shapes — is real and tested, and so are the containers and codecs:
 ``decode_payload`` handles the engine's native ``raw`` format plus REAL
 pure-NumPy PNG (functions/png.py, incl. palette/Adam7/16-bit) and JPEG
 (functions/jpeg.py, baseline + progressive) decoders; audio accepts WAV
-containers (functions/wav.py, PCM + IEEE float) and video accepts
-MJPEG-AVI (functions/avi.py — every frame a standalone JPEG). The
-``auto`` codec sniffs the payload signature. Only temporal/perceptual
-codecs (H.264/MP3 — no ffmpeg in-sandbox) raise a clearly-marked
-``NotImplementedError``; swap in torchcodec/ffmpeg behind the same
-signature in production. Feature extractors (resize, frame sampling,
-aHash embeddings) are fully implemented in NumPy.
+containers (functions/wav.py, PCM + IEEE float). The ``auto`` codec
+sniffs the payload signature. Temporal/perceptual codecs (H.264/MP3 —
+no ffmpeg in-sandbox) are probed for stream metadata only
+(``media_stream_info``) and raise a clearly-marked
+``NotImplementedError`` on decode; swap in torchcodec/ffmpeg behind the
+same signature in production. The feature extractors (aHash embeddings,
+log-mel audio features) are fully implemented in NumPy.
 
 Schema convention for a multimodal table:
     (media_ref string, modality string,      -- 'image' | 'audio' | 'video'
@@ -30,7 +30,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.functions import kernels
 from granulate_char_ocr_spark.operators.doc_kernel import row_kernel
@@ -188,79 +187,6 @@ def decode_media_store(media: DataFrame, permissive: bool = False) -> DataFrame:
     )
 
 
-def explode_tiff_pages(media: DataFrame, permissive: bool = False) -> DataFrame:
-    """1→N page explode for multi-page TIFF payloads (the fax/scanned-
-    document convention: one IFD per page): (media_ref, word, width,
-    height, pixels=TIFF bytes) → one MEDIA_STORE-shaped row PER PAGE
-    plus ``page_no``, pixels decoded to the raw grayscale buffer the
-    extraction kernel takes. Single-page payloads yield one row with
-    page_no 0, so mixed stores work unchanged. Repartitioned like
-    decode_media_store: encoded pages are byte-small but decode-heavy.
-    ``permissive`` maps a failed payload to one null-pixel row."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions.tiff import decode_tiff_pages
-
-        def per_row(pixels):
-            try:
-                pages = decode_tiff_pages(bytes(pixels))
-            except Exception:
-                if not permissive:
-                    raise
-                return [0], [0], [None], [0]
-            # decode_tiff returns RGB(A); to_grayscale weights BGR (B
-            # first) — reverse like every other caller
-            planes = [
-                kernels.to_grayscale(p[..., 2::-1]) if p.ndim == 3 else p
-                for p in pages
-            ]
-            return (
-                [g.shape[1] for g in planes],
-                [g.shape[0] for g in planes],
-                [g.tobytes() for g in planes],
-                range(len(planes)),
-            )
-
-        return per_row
-
-    selected = media.select(
-        "media_ref", "word", "width", "height", "pixels"
-    ).repartition(kernel_partitions(media.sparkSession))
-    return row_kernel(
-        selected,
-        ("media_ref", "word"),
-        ("pixels",),
-        per_task,
-        _PLANE + ", page_no int",
-    )
-
-
-# ---------------------------------------------------------------------------
-# image: resize
-# ---------------------------------------------------------------------------
-
-
-def resize_images(
-    images: DataFrame, out_h: int = 64, out_w: int = 64
-) -> DataFrame:
-    """Batch image resize (area-average) over raw payloads.
-    (media_ref, codec, width, height, payload) → fixed-size raw payloads."""
-
-    def per_row(codec, width, height, payload):
-        img = decode_payload(payload, codec, width, height)
-        small = np.clip(
-            kernels.resize_area(img, out_h, out_w), 0, 255
-        ).astype(np.uint8)
-        return [out_w], [out_h], [small.tobytes()]
-
-    return row_kernel(
-        images,
-        ("media_ref",),
-        ("codec", "width", "height", "payload"),
-        lambda: per_row,
-        "width int, height int, payload binary",
-    )
-
 
 # ---------------------------------------------------------------------------
 # image: feature extraction (aHash embedding — real, feeds similarity ops)
@@ -298,134 +224,6 @@ def image_embeddings(images: DataFrame) -> DataFrame:
 
     cols = ["media_ref", "codec", "width", "height", "payload"]
     return images.select(*cols).mapInPandas(fn, schema=EMBED_SCHEMA)
-
-
-def image_phashes(images: DataFrame) -> DataFrame:
-    """(media_ref, phash): the 64-bit perceptual hash per image — the
-    aHash bit vector of ``image_embeddings`` packed into ONE bigint,
-    entirely engine-side (zip_with the bit array against bit positions,
-    fold with bitwise OR — OR, not +, because bit 63 as an addend would
-    overflow signed bigint and ANSI mode would throw)."""
-    pack = F.expr(
-        "aggregate(zip_with(embedding, sequence(0, 63),"
-        " (b, i) -> IF(b > 0.5D, shiftleft(1L, i), 0L)),"
-        " 0L, (a, x) -> a | x)"
-    )
-    return image_embeddings(images).select(
-        "media_ref", pack.alias("phash")
-    )
-
-
-def image_near_pairs(images: DataFrame, max_hd: int = 6) -> DataFrame:
-    """(ref_a, ref_b, hd): image pairs whose perceptual hashes are
-    within Hamming distance ``max_hd`` — near-duplicate IMAGE dedup,
-    the media twin of text SimHash dedup (the step a multimodal corpus
-    runs so recompressed/lightly-retouched copies of one image don't
-    multiply in training data).
-
-    Decode + hash happen once per image (Arrow-batched, shape-grouped);
-    the pair search is the EXACT pigeonhole equi-join shared with
-    SimHash (dedup.hamming_near_pairs, bits=64) — no cross join, and
-    brute-force-identical results by verification."""
-    from granulate_char_ocr_spark.operators.dedup import hamming_near_pairs
-
-    return hamming_near_pairs(
-        image_phashes(images), "media_ref", "phash", 64, max_hd
-    ).select(
-        F.col("id_a").alias("ref_a"), F.col("id_b").alias("ref_b"), "hd"
-    )
-
-
-# ---------------------------------------------------------------------------
-# video: frame sampling (raw = concatenated frames)
-# ---------------------------------------------------------------------------
-
-# the columns a video row's frames decode from (_iter_gray_frames' args)
-_VIDEO = ("codec", "width", "height", "n_frames", "payload")
-
-
-def sample_frames(videos: DataFrame, every_k: int = 2) -> DataFrame:
-    """1→N frame sampler (the UDTF shape — one input row fans out to
-    many output rows). 'raw' payloads are n_frames concatenated
-    (height×width) uint8 frames; 'mjpeg'/'avi' payloads are REAL MJPEG-AVI
-    containers (functions/avi.py — each frame a standalone JPEG, decoded
-    to grayscale). Temporal codecs (H.264) stay stubbed in-sandbox."""
-
-    def per_row(*video):
-        return tuple(zip(*(
-            (i, g.shape[1], g.shape[0], g.tobytes())
-            for i, g in _iter_gray_frames(*video, step=every_k)
-        )))
-
-    return row_kernel(
-        videos,
-        ("media_ref",),
-        _VIDEO,
-        lambda: per_row,
-        "frame_index int, width int, height int, payload binary",
-    )
-
-
-def _iter_gray_frames(codec, width, height, n_frames, payload, step=1):
-    """(frame_index, grayscale ndarray) for every ``step``-th frame of
-    one video row — the shared codec dispatch of the frame sampler and
-    the scene-change detector. 'auto' sniffs the container. A NULL
-    payload yields no frames (a corpus row with missing media is empty,
-    not a task failure), and a truncated raw payload yields only its
-    COMPLETE frames (review finding r4: reshaping a short final slice
-    raised and killed the task)."""
-    if payload is None:
-        return
-    kind = codec
-    if kind == "auto":
-        head = bytes(payload[:12])
-        if head[:4] == b"RIFF" and head[8:12] == b"AVI ":
-            kind = "avi"
-        elif head[:6] in (b"GIF87a", b"GIF89a"):
-            kind = "gif"
-        else:
-            kind = "raw"
-    if kind == "gif":
-        from granulate_char_ocr_spark.functions.gif import iter_gif_frames
-
-        # GIF composition is sequential (each frame builds on the
-        # previous canvas), so every frame decodes even when sampled —
-        # unlike MJPEG, whose frames are independent standalone JPEGs.
-        # The generator keeps only one canvas resident.
-        for i, frame in enumerate(iter_gif_frames(bytes(payload))):
-            if i % step:
-                continue
-            yield i, kernels.to_grayscale(frame[..., 2::-1])
-        return
-    if kind in ("avi", "mjpeg"):
-        from granulate_char_ocr_spark.functions.avi import (
-            iter_mjpeg_payloads,
-        )
-        from granulate_char_ocr_spark.functions.jpeg import decode_jpeg
-
-        # decode ONLY the selected frames — JPEG decode is the dominant
-        # per-frame cost in this UDF
-        for i, p in enumerate(iter_mjpeg_payloads(bytes(payload))):
-            if i % step:
-                continue
-            frame = decode_jpeg(p)
-            if frame.ndim == 3:
-                frame = kernels.to_grayscale(frame[..., 2::-1])
-            yield i, frame
-        return
-    if kind != "raw":
-        raise NotImplementedError(
-            f"video decode for codec={codec!r} is stubbed "
-            "(raw / mjpeg-avi only in-sandbox)"
-        )
-    frame_bytes = width * height
-    for i in range(0, int(n_frames), step):
-        chunk = bytes(payload[i * frame_bytes : (i + 1) * frame_bytes])
-        if len(chunk) < frame_bytes:
-            break  # truncated tail: emit complete frames only
-        yield i, np.frombuffer(chunk, dtype=np.uint8).reshape(
-            int(height), int(width)
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -468,15 +266,14 @@ def audio_features(audio: DataFrame, n_mels: int = 16) -> DataFrame:
 
 
 def _audio_samples(codec, sample_rate, payload) -> tuple[np.ndarray, float]:
-    """(float64 mono samples, rate) for one audio row — the shared
-    codec dispatch of the featurizer and the VAD segmenter ('auto'
-    sniffs the RIFF/WAVE signature; raw is int16 PCM at the row's
-    sample_rate)."""
+    """(float64 mono samples, rate) for one audio row — the featurizer's
+    codec dispatch ('auto' sniffs the RIFF/WAVE signature; raw is int16
+    PCM at the row's sample_rate)."""
     from granulate_char_ocr_spark.functions.wav import decode_wav
 
     if payload is None:
         # NULL payload: zero samples at a valid rate — the featurizer
-        # and VAD emit an empty/zero-duration row instead of raising
+        # emits a zero-duration row instead of raising
         rate = float(sample_rate) if sample_rate else 16000.0
         return np.zeros(0, dtype=np.float64), rate
     kind = codec
@@ -498,111 +295,6 @@ def _audio_samples(codec, sample_rate, payload) -> tuple[np.ndarray, float]:
     raise NotImplementedError(
         f"audio decode for codec={codec!r} is stubbed "
         "(raw / wav only in-sandbox)"
-    )
-
-
-def audio_segments(
-    audio: DataFrame,
-    threshold_db: float = -35.0,
-    min_ms: float = 100.0,
-) -> DataFrame:
-    """1→N energy-VAD segmentation (functions/audio.activity_segments):
-    each clip becomes its run-length speech/silence segments — the
-    pre-transcription stage that lets an audio-curation pass keep only
-    voiced spans, drop silence, and bound ASR costs. Relative-threshold
-    energy VAD with hangover smoothing; deterministic, frame-granular
-    boundaries. Zero exchanges — the clip row is the unit of
-    parallelism (temporal state is per-clip)."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions.audio import (
-            activity_segments,
-        )
-
-        def per_row(*clip):
-            samples, rate = _audio_samples(*clip)
-            segs = activity_segments(
-                samples, rate, threshold_db=threshold_db, min_ms=min_ms
-            )
-            return tuple(zip(*((i, *seg) for i, seg in enumerate(segs))))
-
-        return per_row
-
-    return row_kernel(
-        audio,
-        ("media_ref",),
-        _AUDIO,
-        per_task,
-        "seg_index int, start_sec double, end_sec double, active boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# image: EXIF capture metadata (functions/exif.py)
-# ---------------------------------------------------------------------------
-
-EXIF_SCHEMA = (
-    "make string, model string, orientation int, datetime string, "
-    "datetime_original string, exposure_time double, f_number double, "
-    "iso int, gps_lat double, gps_lon double"
-)
-_EXIF_FIELDS = tuple(f.split()[0] for f in EXIF_SCHEMA.split(", "))
-
-
-def image_exif(images: DataFrame) -> DataFrame:
-    """(media_ref, payload) -> the EXIF capture fields a media-curation
-    pass stores as typed metadata (orientation, capture time, device,
-    GPS — the GPS columns being exactly what a PII scrub then drops).
-    Arrow-batched; malformed or absent EXIF yields NULL fields, never a
-    task failure (functions/exif.py's contract). Pure map — zero
-    exchanges at any scale."""
-
-    def per_task():
-        from granulate_char_ocr_spark.functions.exif import exif_from_jpeg
-
-        def per_row(payload):
-            # NULL payload == absent EXIF (the never-fail contract)
-            f = exif_from_jpeg(b"" if payload is None else bytes(payload))
-            return [[f[k]] for k in _EXIF_FIELDS]
-
-        return per_row
-
-    return row_kernel(
-        images, ("media_ref",), ("payload",), per_task, EXIF_SCHEMA
-    )
-
-
-def scene_changes(videos: DataFrame, threshold: float = 24.0) -> DataFrame:
-    """Shot-boundary detection per video: every frame's mean absolute
-    luminance difference against its predecessor, on an 8×8 area-mean
-    thumbnail (the downsample makes the metric resolution-invariant and
-    keeps the per-frame cost at the decode, not the diff). Frame 0 and
-    every frame whose diff exceeds ``threshold`` (≈ a tenth of the
-    luminance range — content cuts in practice land far above it,
-    in-scene motion far below) are scene starts — the frames a
-    training-data pipeline keeps as the video's representative stills,
-    replacing blind every-k sampling with content-aware sampling.
-
-    One sequential pass per video inside the Arrow batch (temporal
-    state is per-video, so the video row is the right unit of
-    parallelism); emits ALL frames with their diffs so the caller can
-    re-threshold without re-decoding. Zero exchanges."""
-
-    def per_row(*video):
-        rows, prev = [], None
-        for i, g in _iter_gray_frames(*video):
-            small = kernels.resize_area(g, 8, 8).astype(np.float64)
-            diff = 0.0 if prev is None else float(np.abs(small - prev).mean())
-            rows.append((i, diff, prev is None or diff > threshold))
-            prev = small
-        return tuple(zip(*rows))
-
-    return row_kernel(
-        videos,
-        ("media_ref",),
-        _VIDEO,
-        lambda: per_row,
-        "frame_index int, diff double, is_scene_start boolean",
     )
 
 
@@ -641,8 +333,7 @@ def _image_geometry(data: bytes):
                 if data[pos] != 0xFF:
                     return None
                 # legal 0xFF fill bytes may precede any marker
-                # (T.81 B.1.1.2) and TEM/RSTn are standalone — same
-                # walk discipline as exif_from_jpeg (ADVICE r4)
+                # (T.81 B.1.1.2) and TEM/RSTn are standalone (ADVICE r4)
                 while pos + 4 <= len(data) and data[pos + 1] == 0xFF:
                     pos += 1
                 if pos + 4 > len(data):

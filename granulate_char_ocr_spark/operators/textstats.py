@@ -474,8 +474,14 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 def gopher_doc_cols() -> dict:
     """name -> Column of the five document-level Gopher quality signals
-    over a ``text`` column — shared by gopher_quality_flags and
-    curation.quality_filter (which fuses them into one projection)."""
+    over a ``text`` column (Rae et al. 2021 §A1.1) — curation.quality_filter
+    fuses them into one projection:
+
+    - 50 <= word count <= 100 000
+    - 3 <= mean word length <= 10
+    - symbol-to-word ratio ('#', '…', '...') <= 0.1
+    - >= 80% of words contain an alphabetic character
+    - >= 2 of the 8 required stopwords present"""
     toks = "filter(split(text, ' '), t -> length(t) > 0)"
     toks_l = "filter(split(lower(text), ' '), t -> length(t) > 0)"
     n_words = F.expr(f"size({toks})")
@@ -519,27 +525,6 @@ def gopher_pass_col():
         & (F.col("frac_alpha_words") >= 0.8)
         & (F.col("n_req_stopwords") >= 2)
     )
-
-
-def gopher_quality_flags(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_words, mean_word_len, symbol_ratio, frac_alpha_words,
-    n_req_stopwords, gopher_pass): the document-level Gopher quality rules
-    (Rae et al. 2021 §A1.1) as one pure-codegen projection — no shuffle,
-    no UDF, exact DuckDB oracle:
-
-    - 50 <= word count <= 100 000
-    - 3 <= mean word length <= 10
-    - symbol-to-word ratio ('#', '…', '...') <= 0.1
-    - >= 80% of words contain an alphabetic character
-    - >= 2 of the 8 required stopwords present
-
-    The two line-level Gopher rules (bullet-start / ellipsis-end line
-    fractions) need a line structure and live in
-    curation.gopher_line_flags."""
-    out = docs.select(
-        "doc_id", *(c.alias(n) for n, c in gopher_doc_cols().items())
-    )
-    return out.withColumn("gopher_pass", gopher_pass_col())
 
 
 def charlm_perplexity(docs: DataFrame, ref: DataFrame | None = None) -> DataFrame:
@@ -606,36 +591,6 @@ def charlm_perplexity(docs: DataFrame, ref: DataFrame | None = None) -> DataFram
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame, ref: DataFrame | None = None, by: str = "lang"
-) -> DataFrame:
-    """(doc_id, <by>, perplexity, bucket): CCNet's head/middle/tail split —
-    perplexity terciles within each ``by`` group (per-language in CCNet),
-    'head' being the cleanest third. Deterministic tie-break on doc_id;
-    unscorable docs (NULL perplexity) sort last. Note ntile splits by ROW
-    COUNT, not value: NULLs land in 'tail' only while they are fewer than
-    a third of their group (true of any real corpus; in a 3-doc group with
-    2 unscorable docs, one of them would be bucketed 'middle')."""
-    from pyspark.sql import Window
-
-    scored = charlm_perplexity(docs, ref).join(
-        docs.select("doc_id", by), "doc_id"
-    )
-    t = F.ntile(3).over(
-        Window.partitionBy(by).orderBy(
-            F.col("perplexity").asc_nulls_last(), "doc_id"
-        )
-    )
-    return scored.select(
-        "doc_id",
-        by,
-        "perplexity",
-        F.element_at(
-            F.array(F.lit("head"), F.lit("middle"), F.lit("tail")), t
-        ).alias("bucket"),
-    )
-
-
 # --- sentence segmentation ------------------------------------------------
 
 # sentence-final punctuation, optional closing quote/bracket, then
@@ -665,11 +620,3 @@ def explode_sentences(
         )
         .filter(F.trim(F.col("sentence")) != "")
     )
-
-
-def split_sentences_python(text: str) -> list[str]:
-    """Python twin of explode_sentences' split (same pattern; Python
-    re and Java regex agree on fixed-width lookbehind/lookahead)."""
-    import re as _re
-
-    return [p for p in _re.split(SENTENCE_SPLIT_RE, text) if p.strip()]

@@ -81,20 +81,28 @@ def read_image_corpus(
     PERMISSIVE JSON mode): a corrupt/unsupported file yields a row with null
     pixels and the reason in ``decode_error`` instead of failing the task —
     at 100 TB some files ARE broken, and one of them must not kill a stage.
-    ``permissive=False`` raises, for corpora that must be clean."""
+    ``permissive=False`` raises, for corpora that must be clean.
+
+    The binaryFile source does not list zero-length files, so they are
+    listed on the driver with the same glob: each becomes a null-pixel
+    row with ``decode_error = 'empty file'``, or raises with its path
+    under ``permissive=False``."""
     from granulate_char_ocr_spark.operators.doc_kernel import row_kernel
     from granulate_char_ocr_spark.operators.multimodal import decode_payload
 
+    empties = _empty_files(spark, glob_path)
+    if empties and not permissive:
+        raise ValueError(f"empty file: {empties[0]}")
+
+    expected = F.upper(
+        F.regexp_extract(
+            F.element_at(F.split(F.col("path"), "/"), -1),
+            _IMAGE_LABEL_RE,
+            1,
+        )
+    ).alias("expected")
     raw = spark.read.format("binaryFile").load(glob_path).select(
-        "path",
-        F.upper(
-            F.regexp_extract(
-                F.element_at(F.split(F.col("path"), "/"), -1),
-                _IMAGE_LABEL_RE,
-                1,
-            )
-        ).alias("expected"),
-        "content",
+        "path", expected, "content"
     )
 
     def per_row(content):
@@ -106,12 +114,40 @@ def read_image_corpus(
             return [None], [None], [None], [str(ex)]
         return [img.shape[1]], [img.shape[0]], [img.tobytes()], [None]
 
-    return row_kernel(
+    out = row_kernel(
         raw,
         ("path", "expected"),
         ("content",),
         lambda: per_row,
         "width int, height int, pixels binary, decode_error string",
+    )
+    if not empties:
+        return out
+    empty_rows = spark.createDataFrame(
+        [(p,) for p in empties], "path string"
+    ).select(
+        "path",
+        expected,
+        F.lit(None).cast("int").alias("width"),
+        F.lit(None).cast("int").alias("height"),
+        F.lit(None).cast("binary").alias("pixels"),
+        F.lit("empty file").alias("decode_error"),
+    )
+    return out.unionByName(empty_rows)
+
+
+def _empty_files(spark: SparkSession, glob_path: str) -> list[str]:
+    """Zero-length files matching the glob, which the binaryFile source
+    skips: hidden ``_``/``.`` names are excluded as in Spark's own
+    listing, and paths are qualified like the scan's ``path`` column."""
+    pattern = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(glob_path)
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return sorted(
+        st.getPath().toString()
+        for st in fs.globStatus(pattern) or []
+        if st.isFile()
+        and st.getLen() == 0
+        and not st.getPath().getName().startswith(("_", "."))
     )
 
 

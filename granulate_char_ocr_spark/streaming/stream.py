@@ -165,46 +165,3 @@ def keep_last_n(spans: DataFrame, n: int = 50) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def warc_ingest_stream(spark, warc_dir: str) -> DataFrame:
-    """Continuous crawl ingest — the web-tier streaming front door:
-    WARC files landing in a directory stream through the SAME stages as
-    the batch fetch leg (operators/docparse.py) — record explode
-    (mapInArrow is streaming-compatible as-is), 200-response filter,
-    charset-sniffed body decode, pure-codegen boilerplate strip —
-    yielding an append-mode (url, main_text) stream.
-
-    The unit of parallelism AND of progress tracking is the FILE
-    (binaryFile source rows); a writer checkpointLocation makes re-runs
-    resume from unprocessed files only, and trigger(availableNow=True)
-    drains the backlog and stops — the incremental-ingest posture a
-    recurring crawl drop-off wants. Output equality with the batch path
-    over the same files is pinned in tests/test_streaming.py."""
-    from granulate_char_ocr_spark.operators.docparse import (
-        decode_bodies,
-        html_main_texts,
-        warc_records,
-    )
-
-    files = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require an explicit schema; this is the
-        # binaryFile source's fixed one
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(warc_dir)
-        .select(
-            F.col("path").alias("file_id"),
-            F.col("content").alias("payload"),
-        )
-    )
-    recs = warc_records(files)
-    pages = recs.filter(
-        (F.col("rec_type") == "response") & (F.col("http_status") == 200)
-    ).select("url", "body", "content_type")
-    texts = decode_bodies(pages, key_col="url")
-    return html_main_texts(texts, html_col="text", key_col="url")

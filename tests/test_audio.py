@@ -215,36 +215,6 @@ def test_activity_segments_click_suppressed_and_silence():
     assert activity_segments(np.zeros(0), sr) == []
 
 
-def test_audio_segments_operator_wav_and_raw(spark):
-    import numpy as np
-
-    from granulate_char_ocr_spark.functions.wav import encode_wav
-    from granulate_char_ocr_spark.operators import multimodal
-
-    sr = 8000
-    t = np.arange(int(0.4 * sr))
-    voiced = (np.sin(2 * np.pi * 330 * t / sr) * 9000).astype(np.int16)
-    pcm = np.concatenate(
-        [np.zeros(int(0.3 * sr), np.int16), voiced]
-    )
-    wav = encode_wav(pcm, sr)
-    df = spark.createDataFrame(
-        [
-            ("w", "audio", "auto", 0, 0, 0, 0, bytearray(wav)),
-            ("r", "audio", "raw", 0, 0, 0, sr, pcm.tobytes()),
-        ],
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    rows = multimodal.audio_segments(df).collect()
-    by_ref = {}
-    for r in rows:
-        by_ref.setdefault(r.media_ref, []).append(r)
-    for ref in ("w", "r"):
-        segs = sorted(by_ref[ref], key=lambda r: r.seg_index)
-        assert [s.active for s in segs] == [False, True]
-        assert abs(segs[1].start_sec - 0.3) < 0.05
-
-
 def test_activity_segments_partition_whole_clip():
     # segments are disjoint and sum to the clip duration (review r4:
     # the tail beyond the last full frame was previously uncovered)

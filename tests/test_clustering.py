@@ -1,9 +1,5 @@
-"""k-means + SemDeDup (operators/clustering.py): hand-checked assignment,
-a NumPy Lloyd twin over the real embeddings table, and the plan shapes
-(zero-shuffle assignment, cluster-local pairwise join)."""
-
-import numpy as np
-import pytest
+"""k-means assignment (operators/clustering.py): hand-checked assignment,
+deterministic seeds, the zero-shuffle plan shape and the gate entry."""
 
 from granulate_char_ocr_spark.operators import clustering
 
@@ -38,58 +34,6 @@ def test_assign_is_zero_shuffle(spark):
 def test_seed_centroids_deterministic(spark):
     emb = _emb(spark, [(5, [5.0]), (1, [1.0]), (3, [3.0])])
     assert clustering.seed_centroids(emb, 2) == [[1.0], [3.0]]
-
-
-def test_kmeans_fit_matches_numpy_twin(spark):
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    k, iters = 4, 3
-    cent, trace = clustering.kmeans_fit(emb, k=k, iters=iters)
-
-    pdf = emb.orderBy("vec_id").toPandas()
-    X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    C = X[:k].copy()
-    np_trace = []
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        a = d2.argmin(axis=1)  # argmin ties -> first index = lower cid
-        np_trace.append(d2[np.arange(len(X)), a].sum())
-        for c in range(k):
-            if (a == c).any():
-                C[c] = X[a == c].mean(axis=0)
-    assert np.allclose(trace, np_trace, rtol=1e-9)
-    assert np.allclose(np.array(cent), C, rtol=1e-9, atol=1e-9)
-    # Lloyd inertia is non-increasing
-    assert all(b <= a * (1 + 1e-12) for a, b in zip(trace, trace[1:]))
-
-
-def test_semdedup_drops_near_duplicates(spark):
-    emb = _emb(
-        spark,
-        [
-            (0, [1.0, 0.0]),
-            (1, [1.0, 0.0]),  # exact dup of 0 -> dropped (higher vec_id)
-            (2, [0.0, 1.0]),  # orthogonal -> kept
-        ],
-    )
-    out = {
-        r["vec_id"]: r["keep"]
-        for r in clustering.semdedup(emb, k=2, iters=1, threshold=0.99).collect()
-    }
-    assert out == {0: 1, 1: 0, 2: 1}
-
-
-def test_semdedup_pairwise_is_cluster_local(spark):
-    emb = _emb(spark, [(i, [float(i), 1.0]) for i in range(6)])
-    # the dropped-side join must be an equi-join on cluster_id, not a
-    # nested loop over all pairs
-    plan = (
-        clustering.semdedup(emb, k=2, iters=1, threshold=0.999)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Cartesian" not in plan, plan
 
 
 def test_gate_entry_matches_registry(spark):

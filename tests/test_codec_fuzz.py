@@ -19,6 +19,7 @@ import time
 import numpy as np
 import pytest
 
+import codec_fixtures as fx
 from granulate_char_ocr_spark.functions import bmp, gif, jpeg, png, tiff
 from granulate_char_ocr_spark.operators.multimodal import decode_payload
 
@@ -45,7 +46,7 @@ def _encoders() -> list[tuple[str, bytes]]:
         ("gif", gif.encode_gif(img, _palette())),
         ("bmp", bmp.encode_bmp(img)),
         ("jpeg", jpeg.encode_jpeg(img)),
-        ("jpeg_prog", jpeg.encode_jpeg_progressive(img)),
+        ("jpeg_prog", fx.encode_jpeg_progressive(img)),
         ("tiff_none", tiff.encode_tiff(img, compression=1)),
         ("tiff_packbits", tiff.encode_tiff(img, compression=32773)),
         ("tiff_lzw", tiff.encode_tiff(img, compression=5)),
@@ -106,29 +107,29 @@ def _container_cases():
     frame = np.full((32, 48), 200, np.uint8)
     return [
         ("tiff_multipage",
-         tiff.encode_tiff_multipage([frame, frame // 2], compression=5),
-         tiff.decode_tiff_pages),
+         fx.encode_tiff_multipage([frame, frame // 2], compression=5),
+         tiff.decode_tiff),
         ("wav", wav.encode_wav(pcm, 16000), wav.decode_wav),
         ("wav_ulaw", wav.encode_wav(pcm, 8000, codec="ulaw"),
          wav.decode_wav),
         ("wav_ima", wav.encode_wav(pcm, 8000, codec="ima"),
          wav.decode_wav),
         ("avi", avi.encode_avi_mjpeg([frame, frame // 2], 10),
-         avi.decode_avi_mjpeg),
+         avi.avi_info),
         ("pdf14", pdf.encode_pdf(["Hello fuzz world " * 40] * 3),
          pdf.decode_pdf_text),
         ("pdf15", pdf.encode_pdf(["Object stream page " * 40] * 3,
                                  object_streams=True), pdf.decode_pdf_text),
         ("gif_anim",
-         gif.encode_gif_frames(
+         fx.encode_gif_frames(
              [np.full((16, 16), i % 4, np.uint8) for i in range(3)],
              np.stack([np.arange(4) * 80] * 3, axis=1).astype(np.uint8),
          ),
-         gif.decode_gif_frames),
+         gif.decode_gif),
         ("pdf_multipage",
-         pdf.encode_pdf_pages([["pg one text"], ["pg two text"],
-                               ["pg three"]], object_streams=True),
-         pdf.decode_pdf_text_pages),
+         fx.encode_pdf_pages([["pg one text"], ["pg two text"],
+                              ["pg three"]], object_streams=True),
+         pdf.decode_pdf_layout_pages),
     ]
 
 

@@ -1,14 +1,12 @@
 """WAV (RIFF PCM) and MJPEG-AVI container codecs + their Spark operator
-paths: real containers through audio_features and sample_frames."""
+paths: real WAV containers through audio_features, the AVI writer read
+back chunk by chunk and through its header probe."""
 
 import numpy as np
 import pytest
 
-from granulate_char_ocr_spark.functions.avi import (
-    decode_avi_mjpeg,
-    encode_avi_mjpeg,
-    iter_mjpeg_payloads,
-)
+from granulate_char_ocr_spark.functions.avi import avi_info, encode_avi_mjpeg
+from granulate_char_ocr_spark.functions.jpeg import decode_jpeg
 from granulate_char_ocr_spark.functions.wav import decode_wav, encode_wav
 
 
@@ -54,27 +52,39 @@ def test_wav_rejects_garbage_and_compressed():
         decode_wav(bytes(data))
 
 
+def _frame_payloads(avi: bytes) -> list[bytes]:
+    """The ``00dc`` chunk payloads of the writer's ``movi`` list."""
+    out, i = [], avi.find(b"movi")
+    while (i := avi.find(b"00dc", i)) >= 0:
+        size = int.from_bytes(avi[i + 4 : i + 8], "little")
+        out.append(avi[i + 8 : i + 8 + size])
+        i += 8 + size
+    return out
+
+
 def test_avi_mjpeg_roundtrip_gray_and_color():
     rng = np.random.default_rng(5)
     gray = [rng.integers(0, 256, (48, 64), dtype=np.uint8) for _ in range(4)]
-    dec = decode_avi_mjpeg(encode_avi_mjpeg(gray, fps=10, quality=95))
+    avi = encode_avi_mjpeg(gray, fps=10, quality=95)
+    assert avi_info(avi) == (64, 48, 4, 0.4)
+    dec = [decode_jpeg(p) for p in _frame_payloads(avi)]
     assert len(dec) == 4
     for a, b in zip(gray, dec):
         mse = np.mean((a.astype(float) - b.astype(float)) ** 2)
         assert 10 * np.log10(255**2 / mse) > 35
     color = [rng.integers(0, 256, (32, 40, 3), dtype=np.uint8) for _ in range(2)]
-    dec = decode_avi_mjpeg(encode_avi_mjpeg(color, quality=90))
-    assert dec[0].shape == (32, 40, 3)
+    avi = encode_avi_mjpeg(color, quality=90)
+    assert avi_info(avi)[:3] == (40, 32, 2)
+    assert decode_jpeg(_frame_payloads(avi)[0]).shape == (32, 40, 3)
 
 
 def test_avi_payloads_are_standalone_jpegs():
     frames = [np.full((16, 16), 90, np.uint8)] * 3
-    payloads = iter_mjpeg_payloads(encode_avi_mjpeg(frames))
+    payloads = _frame_payloads(encode_avi_mjpeg(frames))
     assert len(payloads) == 3
     for p in payloads:
         assert p[:2] == b"\xff\xd8" and p[-2:] == b"\xff\xd9"
-    with pytest.raises(ValueError, match="signature"):
-        iter_mjpeg_payloads(b"RIFFxxxxWAVE")
+    assert avi_info(b"RIFFxxxxWAVE") is None
 
 
 def test_audio_features_wav_matches_raw(spark):
@@ -102,40 +112,6 @@ def test_audio_features_wav_matches_raw(spark):
     }
     assert rows["wav"]["duration_sec"] == rows["raw"]["duration_sec"] == 0.5
     assert rows["wav"]["features"] == rows["raw"]["features"]
-
-
-def test_sample_frames_mjpeg_avi(spark):
-    """A real MJPEG-AVI container fans out to per-frame rows through the
-    sniffing sample_frames path, every_k applied to stream order."""
-    import pandas as pd
-
-    from granulate_char_ocr_spark.operators import multimodal
-    from granulate_char_ocr_spark.sources.synthetic import render_word
-
-    frames = [render_word(w, 0) for w in ("WE", "US", "TEAM", "WORK")]
-    # uniform canvas so the container is well-formed
-    W = max(f.shape[1] for f in frames)
-    frames = [np.pad(f, ((0, 0), (0, W - f.shape[1]))) for f in frames]
-    avi = encode_avi_mjpeg(frames, fps=5, quality=95)
-    pdf = pd.DataFrame(
-        [("vid", "video", "auto", 0, 0, len(frames), 0, avi)],
-        columns=[
-            "media_ref", "modality", "codec", "width", "height",
-            "n_frames", "sample_rate", "payload",
-        ],
-    )
-    df = spark.createDataFrame(pdf, schema=multimodal.MULTIMODAL_SCHEMA)
-    rows = sorted(
-        multimodal.sample_frames(df, every_k=2).collect(),
-        key=lambda r: r["frame_index"],
-    )
-    assert [r["frame_index"] for r in rows] == [0, 2]
-    for r in rows:
-        assert (r["height"], r["width"]) == frames[0].shape
-        got = np.frombuffer(bytes(r["payload"]), dtype=np.uint8)
-        want = frames[r["frame_index"]].reshape(-1)
-        mse = np.mean((got.astype(float) - want.astype(float)) ** 2)
-        assert 10 * np.log10(255**2 / max(mse, 1e-9)) > 35
 
 
 def test_wav_invalid_rate_and_partial_sample():

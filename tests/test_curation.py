@@ -217,138 +217,28 @@ def test_pii_gate_injection_hits_and_passthrough(spark):
     ).count() == 0
 
 
-# ------------------------------------------------- line-level boilerplate
-
-
-def _lines(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, lines array<string>")
-
-
-def test_dedup_boilerplate_lines_semantics(spark):
-    out = {
-        r["doc_id"]: (r["n_lines"], r["n_removed"], r["clean_text"])
-        for r in curation.dedup_boilerplate_lines(
-            _lines(
-                spark,
-                [
-                    (1, ["x", "B", "y"]),
-                    (2, ["B", "z"]),
-                    (3, ["B"]),  # fully boilerplate -> still reported
-                    (4, []),  # empty doc survives
-                    (5, ["w", "w"]),  # in-doc repeat is NOT boilerplate
-                    (6, ["B", "B", "u"]),  # both copies removed
-                ],
-            ),
-            min_df=2,
-        ).collect()
-    }
-    assert out[1] == (3, 1, "x y")
-    assert out[2] == (2, 1, "z")
-    assert out[3] == (1, 1, "")
-    assert out[4] == (0, 0, "")
-    assert out[5] == (2, 0, "w w")  # df counts DISTINCT docs per line
-    assert out[6] == (3, 2, "u")
-    assert len(out) == 6
+# ------------------------------------------------------ line chunking
 
 
 def test_chunk_lines_empty_and_null_text(spark):
-    """Null/empty text yields an EMPTY lines array — split('') would give
-    [''], turning '' into a fake boilerplate line shared by every empty
-    doc and inflating n_removed."""
+    """Null/empty text yields an EMPTY lines array in quality_filter's
+    line chunking — split('') would give [''], a fake line that every
+    empty doc would count."""
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, ""), (3, None)], "doc_id bigint, text string"
     )
-    out = {
+    lines = {
         r["doc_id"]: r["lines"]
-        for r in curation.chunk_lines(docs, 2).collect()
+        for r in docs.select("doc_id", "text", F.split("text", " ").alias("_toks"))
+        .select("doc_id", curation._chunk_lines_col(2).alias("lines"))
+        .collect()
     }
-    assert out[1] == ["a b", "c"]
-    assert out[2] == [] and out[3] == []
-    dedup = {
-        r["doc_id"]: (r["n_lines"], r["n_removed"])
-        for r in curation.dedup_boilerplate_lines(
-            curation.chunk_lines(docs, 2), min_df=2
-        ).collect()
+    assert lines == {1: ["a b", "c"], 2: [], 3: []}
+    n_lines = {
+        r["doc_id"]: r["n_lines"]
+        for r in curation.quality_filter(docs, words_per_line=2).collect()
     }
-    assert dedup[2] == (0, 0) and dedup[3] == (0, 0)
-
-
-def test_dedup_boilerplate_lines_broadcasts_boiler_set(spark):
-    plan = (
-        curation.dedup_boilerplate_lines(
-            _lines(spark, [(1, ["a", "b"]), (2, ["a"])]), min_df=2
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_dedup_boilerplate_lines_duckdb_parity(spark):
-    """chunk_lines + dedup_boilerplate_lines over the real docs (with a
-    deterministically injected banner line so removal is non-vacuous)
-    must match a DuckDB replica exactly."""
-    import duckdb
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit("accept all cookies banner menu home login search "),
-                "text",
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    got = {
-        r["doc_id"]: (r["n_lines"], r["n_removed"], r["clean_text"])
-        for r in curation.dedup_boilerplate_lines(
-            curation.chunk_lines(docs, 8), min_df=3
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        r[0]: (r[1], r[2], r[3])
-        for r in con.execute(
-            """
-        WITH inj AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 2 = 0 THEN
-                   'accept all cookies banner menu home login search ' || text
-                 ELSE text END AS text
-          FROM documents),
-        l AS (
-          SELECT doc_id,
-                 CASE WHEN text IS NULL OR text = '' THEN []
-                 ELSE list_transform(
-                   range(0, greatest(CAST(ceil(len(t) / 8.0) AS INT), 1)),
-                   i -> array_to_string(list_slice(t, i*8+1, i*8+8), ' '))
-                 END AS lines
-          FROM (SELECT doc_id, text, string_split(text, ' ') AS t
-                FROM inj)),
-        d AS (SELECT doc_id, unnest(list_distinct(lines)) AS line FROM l),
-        b AS (SELECT line FROM d GROUP BY line HAVING count(*) >= 3),
-        bl AS (SELECT coalesce(list(line), []) AS blist FROM b),
-        c AS (SELECT doc_id, len(lines) AS n_lines,
-                     list_filter(lines,
-                       x -> NOT list_contains(bl.blist, x)) AS kept
-              FROM l, bl)
-        SELECT doc_id, CAST(n_lines AS BIGINT),
-               CAST(n_lines - len(kept) AS BIGINT),
-               array_to_string(kept, ' ')
-        FROM c
-        """
-        ).fetchall()
-    }
-    assert got == want
-    assert sum(v[1] for v in got.values()) > 0  # removal non-vacuous
+    assert n_lines == {1: 2, 2: 0, 3: 0}
 
 
 def test_pack_sequences_docs_parity(spark):

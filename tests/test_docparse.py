@@ -5,11 +5,9 @@ operators/docparse.py)."""
 import numpy as np
 import pytest
 
-from granulate_char_ocr_spark.functions.html import (
-    escape_text,
-    main_text_oracle_sql,
-    main_text_python,
-)
+from reference_twins import main_text_oracle_sql, main_text_python
+
+from granulate_char_ocr_spark.functions.html import escape_text
 from granulate_char_ocr_spark.functions.pdf import (
     decode_pdf_text,
     encode_pdf,
@@ -156,7 +154,13 @@ def test_pdf_text_containing_operator_lookalikes():
 def test_pdf_invalid_octal_escape_tolerated():
     """Review fix: \\8 and \\9 are not octal; the spec says unknown
     escapes pass the character through, not crash."""
-    from granulate_char_ocr_spark.functions.pdf import _decode_pdf_string
+    from granulate_char_ocr_spark.functions.pdf import (
+        _pdf_text,
+        _unescape_pdf_string,
+    )
+
+    def _decode_pdf_string(raw):
+        return _pdf_text(_unescape_pdf_string(raw))
 
     assert _decode_pdf_string(rb"a\8b") == "a8b"
     assert _decode_pdf_string(rb"a\101b") == "aAb"  # real octal still works
@@ -214,10 +218,11 @@ def test_pdf_15_xref_stream_entries():
     down (W [1 2 2], /Index [0 9], Predictor 12)."""
     import re
 
+    from codec_fixtures import parse_xref_stream
+
     from granulate_char_ocr_spark.functions.pdf import (
         _STREAM_RE,
         expand_object_streams,
-        parse_xref_stream,
     )
 
     data = encode_pdf(["xref entries"], object_streams=True)
@@ -260,56 +265,14 @@ def test_pdf_15_large_file_offsets():
     assert decode_pdf_text(data) == "\n".join(lines)
 
 
-def test_pdf_pages_operator(spark):
-    """1→N page explode: per-page rows in document order, and the joined
-    pages equal pdf_texts' concatenated output exactly."""
-    import pandas as pd
-
-    from granulate_char_ocr_spark.functions.pdf import (
-        decode_pdf_text_pages,
-        encode_pdf_pages,
-    )
-    from granulate_char_ocr_spark.operators.docparse import pdf_pages, pdf_texts
-
-    docs = {
-        "d0": ["first page words", "second page words", "third"],
-        "d1": ["only page"],
-        "d2": ["obj stream pg 1", "obj stream pg 2"],
-    }
-    pdf = pd.DataFrame(
-        {
-            "doc_id": list(docs),
-            "payload": [
-                encode_pdf_pages(
-                    [[line] for line in pages],
-                    object_streams=(k == "d2"),
-                )
-                for k, pages in docs.items()
-            ],
-        }
-    )
-    df = spark.createDataFrame(pdf, "doc_id string, payload binary")
-    rows = pdf_pages(df).collect()
-    got: dict[str, dict[int, str]] = {}
-    for r in rows:
-        got.setdefault(r["doc_id"], {})[r["page_no"]] = r["page_text"]
-    assert {k: [v[i] for i in sorted(v)] for k, v in got.items()} == docs
-    # python twin parity: joined pages == whole-doc extraction
-    flat = {r["doc_id"]: r["extracted"] for r in pdf_texts(df).collect()}
-    for k, pages in docs.items():
-        assert "\n".join(decode_pdf_text_pages(bytes(pdf.set_index("doc_id").loc[k, "payload"]))) == flat[k]
-
-
 def test_pdf_pages_skip_textless_streams():
     """Review fix: a BT/ET block with no text operators is not a page —
     page join stays exactly equal to whole-document extraction."""
     import zlib as _zlib
 
-    from granulate_char_ocr_spark.functions.pdf import (
-        decode_pdf_text,
-        decode_pdf_text_pages,
-        encode_pdf_pages,
-    )
+    from codec_fixtures import encode_pdf_pages
+
+    from granulate_char_ocr_spark.functions.pdf import decode_pdf_layout_pages
 
     data = encode_pdf_pages([["page one"], ["page two"]])
     # graft a text-less BT/ET stream object between the pages
@@ -322,7 +285,7 @@ def test_pdf_pages_skip_textless_streams():
     )
     i = data.index(b"xref")
     patched = data[:i] + graft + data[i:]
-    pages = decode_pdf_text_pages(patched)
+    pages = decode_pdf_layout_pages(patched)
     assert pages == ["page one", "page two"]
     assert "\n".join(pages) == decode_pdf_text(patched)
 

@@ -7,12 +7,12 @@ import duckdb
 import pandas as pd
 import pytest
 
+from reference_twins import main_content_python, main_text_python
+
 from granulate_char_ocr_spark.functions.dom import (
     MIN_BLOCK_CHARS,
     main_content_oracle_sql,
-    main_content_python,
 )
-from granulate_char_ocr_spark.functions.html import main_text_python
 
 PAGE = (
     '<html><head><title>T</title><style>p{x:1}</style>'

@@ -1,11 +1,36 @@
-"""Gopher document/line filters and the C4 line filter
-(operators/textstats.py, operators/curation.py) — rule-by-rule semantics
-and exact DuckDB parity."""
+"""Gopher document/line filters and the C4 line filter, fused in
+curation.quality_filter (column builders in operators/textstats.py and
+operators/curation.py) — rule-by-rule semantics and exact DuckDB parity."""
 
 from pyspark.sql import functions as F
 
-from granulate_char_ocr_spark.operators import curation
-from granulate_char_ocr_spark.operators.textstats import gopher_quality_flags
+from granulate_char_ocr_spark.operators import curation, textstats
+
+_GOPHER = ("n_words", "mean_word_len", "symbol_ratio", "frac_alpha_words",
+           "n_req_stopwords", "gopher_pass")
+_LINE = ("n_lines", "frac_bullet_lines", "frac_ellipsis_lines", "line_pass")
+_C4 = ("n_lines", "n_kept", "clean_text", "has_lorem", "has_brace", "c4_pass")
+
+
+def gopher_quality_flags(docs):
+    """The document-level Gopher columns of the fused quality gate."""
+    return curation.quality_filter(docs).select("doc_id", *_GOPHER)
+
+
+def _line_flags(dl):
+    """quality_filter's line-level Gopher family over a lines column."""
+    return dl.select(
+        "doc_id", *(c.alias(n) for n, c in curation.gopher_line_cols().items())
+    ).withColumn("line_pass", curation.line_pass_col())
+
+
+def _c4_flags(dl, min_kept_lines=3):
+    """quality_filter's C4 family over a lines column."""
+    return dl.select(
+        "doc_id",
+        F.size("lines").alias("n_lines"),
+        *(c.alias(n) for n, c in curation.c4_cols().items()),
+    ).withColumn("c4_pass", curation.c4_pass_col(min_kept_lines))
 
 
 def test_gopher_quality_flags_each_rule(spark):
@@ -117,7 +142,7 @@ def test_gopher_line_flags_semantics(spark):
         ],
         "doc_id bigint, lines array<string>",
     )
-    got = {r["doc_id"]: r.asDict() for r in curation.gopher_line_flags(dl).collect()}
+    got = {r["doc_id"]: r.asDict() for r in _line_flags(dl).collect()}
     assert got[1]["line_pass"] is True and got[1]["frac_bullet_lines"] == 0.75
     assert got[2]["line_pass"] is False
     assert got[3]["line_pass"] is False
@@ -139,7 +164,7 @@ def test_c4_line_filter_semantics(spark):
         ],
         "doc_id bigint, lines array<string>",
     )
-    got = {r["doc_id"]: r.asDict() for r in curation.c4_line_filter(dl).collect()}
+    got = {r["doc_id"]: r.asDict() for r in _c4_flags(dl).collect()}
     # doc 1: 'short.' has < 3 words, 'no punct' has no terminal punctuation
     assert got[1]["n_kept"] == 2 and got[1]["c4_pass"] is False
     assert got[1]["clean_text"] == "This is a sentence. Another good line!"
@@ -189,17 +214,13 @@ def test_line_filters_duckdb_parity(spark):
     import duckdb
 
     sf = "/root/testdata/sf0.001"
-    dl = curation.chunk_lines(_injected_docs(spark, sf), 8)
-    got_g = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in curation.gopher_line_flags(dl).collect()
-    }
     # min_kept_lines=1: the injected punctuation can only land on each
     # doc's FINAL chunk-line, so the default 3 would be vacuously false
-    got_c = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in curation.c4_line_filter(dl, min_kept_lines=1).collect()
-    }
+    rows = curation.quality_filter(
+        _injected_docs(spark, sf), min_kept_lines=1
+    ).collect()
+    got_g = {r["doc_id"]: tuple(r[c] for c in _LINE) for r in rows}
+    got_c = {r["doc_id"]: tuple(r[c] for c in _C4) for r in rows}
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
@@ -256,21 +277,32 @@ def test_line_filters_duckdb_parity(spark):
 
 def test_quality_filter_fused_equals_separate(spark):
     """curation.quality_filter (single projection, zero exchange) must
-    equal the three separate operators row-for-row, and its physical plan
-    must contain no Exchange (the fusion exists to avoid the doc_id
-    self-joins the naive compose would shuffle on)."""
+    equal the three rule families built as separate projections
+    row-for-row, and its physical plan must contain no Exchange (the
+    fusion exists to avoid the doc_id self-joins the naive compose would
+    shuffle on)."""
     sf = "/root/testdata/sf0.001"
     docs = _injected_docs(spark, sf)
     fused = curation.quality_filter(docs, min_kept_lines=1)
     assert "Exchange" not in fused._jdf.queryExecution().executedPlan().toString()
     got = {r["doc_id"]: r.asDict() for r in fused.collect()}
 
-    g = {r["doc_id"]: r.asDict() for r in gopher_quality_flags(docs).collect()}
-    dl = curation.chunk_lines(docs, 8)
-    gl = {r["doc_id"]: r.asDict() for r in curation.gopher_line_flags(dl).collect()}
+    g = {
+        r["doc_id"]: r.asDict()
+        for r in docs.select(
+            "doc_id",
+            *(c.alias(n) for n, c in textstats.gopher_doc_cols().items()),
+        )
+        .withColumn("gopher_pass", textstats.gopher_pass_col())
+        .collect()
+    }
+    dl = docs.select(
+        "doc_id", "text", F.split("text", " ").alias("_toks")
+    ).select("doc_id", curation._chunk_lines_col(8).alias("lines"))
+    gl = {r["doc_id"]: r.asDict() for r in _line_flags(dl).collect()}
     c4 = {
         r["doc_id"]: r.asDict()
-        for r in curation.c4_line_filter(dl, min_kept_lines=1).collect()
+        for r in _c4_flags(dl, min_kept_lines=1).collect()
     }
     assert set(got) == set(g)
     for i, row in got.items():

@@ -176,88 +176,16 @@ def test_lzw_deferred_clear_codes():
 
 
 def test_gif_animation_roundtrip():
-    """Multi-frame GIF89a: per-frame GCE + full-size frames round-trip
-    through the composed-sequence decoder; decode_gif stays first-frame."""
-    from granulate_char_ocr_spark.functions.gif import (
-        decode_gif,
-        decode_gif_frames,
-        encode_gif,
-        encode_gif_frames,
-    )
+    """Multi-frame GIF89a (per-frame GCE + full-size frames): decode_gif
+    reads the first frame and stops there."""
+    from codec_fixtures import encode_gif_frames
 
     rng = np.random.default_rng(8)
     pal = np.stack([np.arange(16) * 17] * 3, axis=1).astype(np.uint8)
     frames = [rng.integers(0, 16, (24, 31)).astype(np.uint8) for _ in range(5)]
     data = encode_gif_frames(frames, pal)
-    got = decode_gif_frames(data)
-    assert len(got) == 5
-    for f, g in zip(frames, got):
-        assert np.array_equal(g, pal[f])
     assert np.array_equal(decode_gif(data), pal[frames[0]])
-    # a plain single-frame file is a 1-frame animation
-    assert len(decode_gif_frames(encode_gif(frames[0], pal))) == 1
-
-
-def test_gif_animation_transparency_is_compositing_hole():
-    """In animation composition a transparent index keeps the underlying
-    canvas pixel (it is NOT an alpha channel on the output frame)."""
-    from granulate_char_ocr_spark.functions.gif import (
-        decode_gif_frames,
-        encode_gif_frames,
-    )
-
-    pal = np.stack([np.arange(16) * 17] * 3, axis=1).astype(np.uint8)
-    f0 = np.zeros((10, 10), np.uint8)
-    f1 = np.full((10, 10), 3, np.uint8)
-    f1[2:5, 2:5] = 7
-    seq = decode_gif_frames(encode_gif_frames([f0, f1], pal, transparent=7))
-    assert seq[1].shape == (10, 10, 3)
-    assert np.array_equal(seq[1][3, 3], pal[0])  # hole shows frame 0
-    assert np.array_equal(seq[1][0, 0], pal[3])
-
-
-def test_gif_animation_disposal_methods():
-    """Hand-built streams: disposal 2 restores the frame region to the
-    background color, disposal 3 restores the pre-frame canvas."""
-    import struct
-
-    from granulate_char_ocr_spark.functions.gif import (
-        _lzw_encode,
-        _subblocks,
-        decode_gif_frames,
-    )
-
-    pal = np.stack([np.arange(4) * 80] * 3, axis=1).astype(np.uint8)
-    gct = np.zeros((4, 3), np.uint8)
-    gct[: len(pal)] = pal
-
-    def frame_block(idx, left, top, disposal):
-        h, w = idx.shape
-        gce = b"\x21\xf9\x04" + struct.pack(
-            "<BHB", (disposal << 2), 1, 0
-        ) + b"\x00"
-        desc = struct.pack("<BHHHHB", 0x2C, left, top, w, h, 0)
-        return gce + desc + bytes([2]) + _subblocks(_lzw_encode(idx, 2))
-
-    header = b"GIF89a" + struct.pack("<HHBBB", 6, 6, 0x80 | 0x01, 1, 0)
-    base = np.zeros((6, 6), np.uint8)
-    patch = np.full((2, 2), 3, np.uint8)
-    data = (
-        header + gct.tobytes()
-        + frame_block(base, 0, 0, 1)      # leave in place
-        + frame_block(patch, 2, 2, 2)     # then restore region to bg (1)
-        + frame_block(patch, 0, 0, 3)     # then restore previous canvas
-        + frame_block(base, 0, 0, 1)
-        + b"\x3b"
-    )
-    seq = decode_gif_frames(data)
-    assert len(seq) == 4
-    assert np.array_equal(seq[1][3, 3], pal[3])  # patch visible
-    # after disposal 2, the patch region shows the BACKGROUND color (1)
-    assert np.array_equal(seq[2][3, 3], pal[1])
-    assert np.array_equal(seq[2][1, 1], pal[3])  # frame 3's own patch
-    # after disposal 3, frame 4 paints over the RESTORED canvas
-    assert np.array_equal(seq[3], pal[base])
+    assert np.array_equal(decode_gif(encode_gif(frames[0], pal)), pal[frames[0]])
 
 
 def test_gif_gce_survives_interleaved_extensions():
@@ -266,12 +194,7 @@ def test_gif_gce_survives_interleaved_extensions():
     (the GCE applies to the NEXT graphic block)."""
     import struct
 
-    from granulate_char_ocr_spark.functions.gif import (
-        _lzw_encode,
-        _subblocks,
-        decode_gif,
-        decode_gif_frames,
-    )
+    from granulate_char_ocr_spark.functions.gif import _lzw_encode, _subblocks
 
     pal = np.stack([np.arange(16) * 17] * 3, axis=1).astype(np.uint8)
     gct = np.zeros((16, 3), np.uint8)
@@ -292,15 +215,17 @@ def test_gif_gce_survives_interleaved_extensions():
     gce = b"\x21\xf9\x04" + struct.pack("<BHB", 0x01, 1, 7) + b"\x00"
     data = (
         header + gct.tobytes()
-        + img_block(f0)
         + gce + comment + img_block(f1)  # comment BETWEEN gce and image
+        + img_block(f0)
         + b"\x3b"
     )
-    seq = decode_gif_frames(data)
-    assert np.array_equal(seq[1][2, 2], pal[0])  # hole shows frame 0
-    assert np.array_equal(seq[1][0, 0], pal[3])
-    # decode_gif (first frame) unaffected
-    assert decode_gif(data).shape == (6, 6, 3)
+    out = decode_gif(data)
+    assert out.shape == (6, 6, 4)  # the GCE's transparency survived
+    assert out[2, 2, 3] == 0 and out[0, 0, 3] == 255
+    assert np.array_equal(out[0, 0, :3], pal[3])
+    # without the GCE the same frame decodes opaque RGB
+    plain = header + gct.tobytes() + comment + img_block(f1) + b"\x3b"
+    assert decode_gif(plain).shape == (6, 6, 3)
 
 
 def test_gif_implausible_screen_rejected():
@@ -308,26 +233,6 @@ def test_gif_implausible_screen_rejected():
     gigapixel canvas must reject before allocation."""
     import struct
 
-    from granulate_char_ocr_spark.functions.gif import decode_gif_frames
-
     data = b"GIF89a" + struct.pack("<HHBBB", 65535, 65535, 0, 0, 0) + b"\x3b"
     with pytest.raises(ValueError, match="implausible"):
-        decode_gif_frames(data)
-
-
-def test_gif_frame_iterator_matches_list():
-    """Review fix: iter_gif_frames streams one canvas at a time; the
-    list wrapper is exactly equal."""
-    from granulate_char_ocr_spark.functions.gif import (
-        decode_gif_frames,
-        encode_gif_frames,
-        iter_gif_frames,
-    )
-
-    pal = np.stack([np.arange(8) * 32] * 3, axis=1).astype(np.uint8)
-    frames = [np.full((9, 7), i % 8, np.uint8) for i in range(4)]
-    data = encode_gif_frames(frames, pal)
-    streamed = [f.copy() for f in iter_gif_frames(data)]
-    listed = decode_gif_frames(data)
-    assert len(streamed) == len(listed) == 4
-    assert all(np.array_equal(a, b) for a, b in zip(streamed, listed))
+        decode_gif(data)

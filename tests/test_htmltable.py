@@ -4,11 +4,12 @@ plus the documented scope bounds (nested truncation, unclosed rows)."""
 import duckdb
 import pytest
 
+from reference_twins import table_rows_python
+
 from granulate_char_ocr_spark.functions.htmltable import (
     CELL_SEP,
     table_rows_expr,
     table_rows_oracle_sql,
-    table_rows_python,
 )
 
 PAGE = """<html><head>
@@ -105,11 +106,6 @@ def test_carried_columns_pass_through(spark):
 def test_separator_entity_cannot_desync_cells():
     # &#31; decodes to the US join separator — must be neutralized so
     # cells.split(CELL_SEP) always has exactly n_cells parts (review r4)
-    from granulate_char_ocr_spark.functions.htmltable import (
-        CELL_SEP,
-        table_rows_python,
-    )
-
     rows = table_rows_python(
         "<table><tr><td>A&#31;B</td><td>C</td></tr></table>"
     )

@@ -15,6 +15,17 @@ def _psnr(a, b):
     return float("inf") if mse == 0 else 10 * np.log10(255**2 / mse)
 
 
+def test_app1_segment_is_skipped():
+    """A camera JPEG carries an EXIF APP1 segment (and fill bytes before
+    markers are legal, T.81 B.1.1.2): the decoder skips both."""
+    img = (np.arange(48 * 32, dtype=np.uint8).reshape(48, 32) % 251)
+    plain = encode_jpeg(img)
+    body = b"Exif\x00\x00II*\x00" + bytes(range(40))
+    app1 = b"\xff\xe1" + (len(body) + 2).to_bytes(2, "big") + body
+    tagged = plain[:2] + b"\xff\xff" + app1 + plain[2:]
+    assert np.array_equal(decode_jpeg(tagged), decode_jpeg(plain))
+
+
 @pytest.mark.parametrize(
     "shape", [(8, 8), (24, 40), (17, 33), (64, 64), (1, 1), (9, 8)]
 )
@@ -265,7 +276,7 @@ def test_restart_stream_missing_segment_rejected():
 # progressive (SOF2)
 # --------------------------------------------------------------------------
 
-from granulate_char_ocr_spark.functions.jpeg import encode_jpeg_progressive
+from codec_fixtures import encode_jpeg_progressive
 
 
 def _prog_case(shape, sub):

@@ -4,7 +4,7 @@ DuckDB oracle."""
 
 import pytest
 
-from granulate_char_ocr_spark.functions.markdown import to_markdown_python
+from reference_twins import to_markdown_python
 
 
 CASES = [

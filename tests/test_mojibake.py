@@ -13,6 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import reference_twins as twins
 from granulate_char_ocr_spark.functions import mojibake as mj
 
 CASES = [
@@ -34,31 +35,31 @@ CASES = [
 @settings(max_examples=300, deadline=None)
 @given(st.text(max_size=120))
 def test_repair_undoes_corrupt_always(s):
-    assert mj.fix_mojibake_python(mj.mojibake_python(s)) == s
+    assert twins.fix_mojibake_python(twins.mojibake_python(s)) == s
 
 
 @settings(max_examples=150, deadline=None)
 @given(st.text(max_size=60))
 def test_double_corruption_unwinds_one_layer_at_a_time(s):
-    twice = mj.mojibake_python(mj.mojibake_python(s))
-    once = mj.fix_mojibake_python(twice)
-    assert once == mj.mojibake_python(s)
-    assert mj.fix_mojibake_python(once) == s
+    twice = twins.mojibake_python(twins.mojibake_python(s))
+    once = twins.fix_mojibake_python(twice)
+    assert once == twins.mojibake_python(s)
+    assert twins.fix_mojibake_python(once) == s
 
 
 def test_clean_text_untouched():
     for s in ["café au lait", "你好世界", "ASCII", "", "naïve — dash €"]:
-        assert mj.fix_mojibake_python(s) == s
+        assert twins.fix_mojibake_python(s) == s
         # the only clean case that COULD repair is text that already
         # parses as mojibake; none of these do
-        assert not mj.is_mojibake_python(s)
+        assert not twins.is_mojibake_python(s)
 
 
 def test_ambiguous_case_repairs():
     # "Ã©" is byte-identical to mojibake of "é" — the documented
     # resolution is to repair
-    assert mj.fix_mojibake_python("Ã©") == "é"
-    assert mj.is_mojibake_python("Ã©")
+    assert twins.fix_mojibake_python("Ã©") == "é"
+    assert twins.is_mojibake_python("Ã©")
 
 
 def test_validity_regex_rejects_rfc3629_corners():
@@ -75,16 +76,16 @@ def test_validity_regex_rejects_rfc3629_corners():
         "abcdef",  # bare continuation byte
     ]
     for s in corners:
-        assert not mj.is_mojibake_python(s), repr(s)
-        assert mj.fix_mojibake_python(s) == s, repr(s)
+        assert not twins.is_mojibake_python(s), repr(s)
+        assert twins.fix_mojibake_python(s) == s, repr(s)
 
 
 def test_undefined_cp1252_bytes_pass_through():
     # 丁 = E4 B8 81, 不 = E4 B8 8D: 0x81/0x8D have no cp1252 display
     # char, so the corrupted text carries raw C1 controls (sloppy-cp1252)
-    broken = mj.mojibake_python("丁不")
+    broken = twins.mojibake_python("丁不")
     assert "\x81" in broken and "\x8d" in broken
-    assert mj.fix_mojibake_python(broken) == "丁不"
+    assert twins.fix_mojibake_python(broken) == "丁不"
 
 
 # --- spark expr == twin ----------------------------------------------------
@@ -112,7 +113,7 @@ def matrix(spark):
 
 def test_spark_forward_matches_twin(matrix):
     for r in matrix:
-        assert r["broken"] == mj.mojibake_python(CASES[r["i"]])
+        assert r["broken"] == twins.mojibake_python(CASES[r["i"]])
 
 
 def test_spark_roundtrip_exact(matrix):
@@ -123,8 +124,8 @@ def test_spark_roundtrip_exact(matrix):
 def test_spark_fix_and_signature_match_twin(matrix):
     for r in matrix:
         s = CASES[r["i"]]
-        assert r["fix_clean"] == mj.fix_mojibake_python(s)
-        assert r["sig_clean"] == mj.is_mojibake_python(s)
+        assert r["fix_clean"] == twins.fix_mojibake_python(s)
+        assert r["sig_clean"] == twins.is_mojibake_python(s)
 
 
 def test_repair_mojibake_operator_schema(spark):
@@ -133,7 +134,7 @@ def test_repair_mojibake_operator_schema(spark):
     from granulate_char_ocr_spark.operators.curation import repair_mojibake
 
     df = spark.createDataFrame(
-        [(1, mj.mojibake_python("naïve €")), (2, "clean")],
+        [(1, twins.mojibake_python("naïve €")), (2, "clean")],
         "doc_id int, text string",
     )
     out = repair_mojibake(df).orderBy("doc_id").collect()

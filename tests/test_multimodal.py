@@ -1,4 +1,4 @@
-"""Multimodal-column plumbing: schemas, batch shapes, 1→N fan-out, stubs."""
+"""Multimodal-column plumbing: schemas, batch shapes, decode, stubs."""
 
 import numpy as np
 import pytest
@@ -22,14 +22,6 @@ def images(spark):
     return spark.createDataFrame(pdf, schema=multimodal.MULTIMODAL_SCHEMA).cache()
 
 
-def test_resize_shapes(spark, images):
-    out = multimodal.resize_images(images, 32, 32).collect()
-    assert len(out) == 20
-    for r in out:
-        assert (r["width"], r["height"]) == (32, 32)
-        assert len(r["payload"]) == 32 * 32
-
-
 def test_image_embeddings_feed_similarity(spark, images):
     emb = multimodal.image_embeddings(images)
     rows = emb.collect()
@@ -48,22 +40,6 @@ def test_image_embeddings_feed_similarity(spark, images):
     del q
     pairs = emb_ids.count()
     assert pairs == 20
-
-
-def test_video_frame_sampling(spark):
-    h = w = 4
-    frames = [np.full((h, w), i, dtype=np.uint8) for i in range(6)]
-    payload = b"".join(f.tobytes() for f in frames)
-    vid = spark.createDataFrame(
-        [("vid_1", "video", "raw", w, h, 6, 0, payload)],
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    out = multimodal.sample_frames(vid, every_k=2).orderBy("frame_index").collect()
-    assert [r["frame_index"] for r in out] == [0, 2, 4]
-    assert all(
-        np.frombuffer(r["payload"], np.uint8).reshape(h, w)[0, 0] == r["frame_index"]
-        for r in out
-    )
 
 
 def test_audio_features_deterministic(spark):
@@ -90,6 +66,7 @@ def test_compressed_codecs_decode_h264_rejected(spark):
     # PNG and baseline JPEG decode for real; H.264 video stays out of scope
     import numpy as np
 
+    from granulate_char_ocr_spark.functions import kernels
     from granulate_char_ocr_spark.functions.jpeg import encode_jpeg
     from granulate_char_ocr_spark.functions.png import encode_png
 
@@ -101,14 +78,19 @@ def test_compressed_codecs_decode_h264_rejected(spark):
         ],
         schema=multimodal.MULTIMODAL_SCHEMA,
     )
-    rows = {r["media_ref"]: r for r in multimodal.resize_images(df, 4, 4).collect()}
-    assert all((r["width"], r["height"]) == (4, 4) for r in rows.values())
+    rows = {
+        r["media_ref"]: r["embedding"]
+        for r in multimodal.image_embeddings(df).collect()
+    }
+    want = kernels.ahash_bits_batch(img[None]).astype(np.float32)[0]
+    assert np.array_equal(rows["img_png"], want)  # lossless
+    assert len(rows["img_jpg"]) == 64
     h264 = spark.createDataFrame(
         [("clip", "video", "h264", 8, 8, 2, 0, b"\x00\x00\x01...")],
         schema=multimodal.MULTIMODAL_SCHEMA,
     )
     with pytest.raises(Exception, match="not available|NotImplemented"):
-        multimodal.resize_images(h264).collect()
+        multimodal.image_embeddings(h264).collect()
 
 
 def test_decode_media_store_matches_raw_extraction(spark):
@@ -174,400 +156,3 @@ def test_decode_media_store_permissive_vs_strict(spark):
     }
     assert bytes(rows["ok"]["pixels"]) == good.tobytes()
     assert rows["bad"]["pixels"] is None and rows["bad"]["width"] == 0
-
-
-def test_explode_tiff_pages(spark):
-    """1→N multi-page TIFF explode into MEDIA_STORE-shaped page rows the
-    extraction kernel can consume directly; permissive mode maps a
-    corrupt payload to one null-pixel row."""
-    import pandas as pd
-
-    from granulate_char_ocr_spark.functions.tiff import encode_tiff_multipage
-    from granulate_char_ocr_spark.operators.multimodal import (
-        explode_tiff_pages,
-    )
-
-    rng = np.random.default_rng(4)
-    stores = {
-        "m0": [
-            (np.cumsum(rng.integers(-2, 3, (16 + i, 21)), axis=1) % 256)
-            .astype(np.uint8)
-            for i in range(3)
-        ],
-        "m1": [np.full((9, 11), 77, np.uint8)],
-    }
-    pdf = pd.DataFrame(
-        {
-            "media_ref": list(stores) + ["bad"],
-            "word": ["w0", "w1", "w2"],
-            "width": [21, 11, 4],
-            "height": [16, 9, 4],
-            "pixels": [
-                encode_tiff_multipage(stores["m0"], compression=5),
-                encode_tiff_multipage(stores["m1"]),
-                b"\x00garbage not a tiff",
-            ],
-        }
-    )
-    df = spark.createDataFrame(
-        pdf,
-        "media_ref string, word string, width int, height int, pixels binary",
-    )
-    rows = explode_tiff_pages(df, permissive=True).collect()
-    by_ref: dict[str, dict[int, object]] = {}
-    for r in rows:
-        by_ref.setdefault(r["media_ref"], {})[r["page_no"]] = r
-    assert set(by_ref) == {"m0", "m1", "bad"}
-    assert len(by_ref["m0"]) == 3 and len(by_ref["m1"]) == 1
-    for ref, pages in stores.items():
-        for i, img in enumerate(pages):
-            r = by_ref[ref][i]
-            assert (r["height"], r["width"]) == img.shape
-            got = np.frombuffer(r["pixels"], np.uint8).reshape(img.shape)
-            assert np.array_equal(got, img)
-    assert by_ref["bad"][0]["pixels"] is None
-    # non-permissive: the corrupt payload fails the job
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        explode_tiff_pages(df, permissive=False).collect()
-
-
-def test_multipage_fax_to_ocr_end_to_end(spark):
-    """Composition: a store of multi-page G4 fax TIFFs (3 word-pages per
-    file) explodes into page rows that feed the extraction kernel
-    directly — per-page recognized text equals the rendered words."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from granulate_char_ocr_spark.functions.tiff import encode_tiff_multipage
-    from granulate_char_ocr_spark.operators.extract import extract_unique_media
-    from granulate_char_ocr_spark.operators.multimodal import (
-        explode_tiff_pages,
-    )
-    from granulate_char_ocr_spark.sources.synthetic import render_word
-
-    books = {
-        "fax0": ["TEAM", "SPARK", "JOIN"],
-        "fax1": ["MERGE", "ORDER", "BATCH"],
-    }
-    rows = []
-    for ref, words in books.items():
-        pages = [render_word(w, 0) for w in words]
-        payload = encode_tiff_multipage(
-            pages, compression=4, bilevel=True
-        )
-        rows.append((ref, words[0], 0, 0, payload))
-    media = spark.createDataFrame(
-        rows,
-        "media_ref string, word string, width int, height int, pixels binary",
-    )
-    paged = explode_tiff_pages(media).withColumn(
-        "media_ref",
-        F.concat_ws("#", "media_ref", F.col("page_no").cast("string")),
-    )
-    got = {
-        r["media_ref"]: r["text"]
-        for r in extract_unique_media(paged, detail=False).collect()
-    }
-    want = {
-        f"{ref}#{i}": w
-        for ref, words in books.items()
-        for i, w in enumerate(words)
-    }
-    assert got == want
-
-
-def test_explode_tiff_pages_rgb_luminance(spark):
-    """Review fix: decode_tiff returns RGB; the grayscale conversion must
-    reverse to BGR before kernels.to_grayscale (R weight 0.299)."""
-    import pandas as pd
-
-    from granulate_char_ocr_spark.functions.tiff import encode_tiff_multipage
-    from granulate_char_ocr_spark.operators.multimodal import (
-        explode_tiff_pages,
-    )
-
-    red = np.zeros((8, 8, 3), np.uint8)
-    red[..., 0] = 255  # pure red
-    payload = encode_tiff_multipage([red])
-    pdf = pd.DataFrame(
-        {
-            "media_ref": ["m"],
-            "word": ["w"],
-            "width": [8],
-            "height": [8],
-            "pixels": [payload],
-        }
-    )
-    df = spark.createDataFrame(
-        pdf,
-        "media_ref string, word string, width int, height int, pixels binary",
-    )
-    [row] = explode_tiff_pages(df).collect()
-    gray = np.frombuffer(row["pixels"], np.uint8).reshape(8, 8)
-    assert int(gray[0, 0]) == 76  # 0.299 * 255, not 0.114 * 255 = 29
-
-
-def test_sample_frames_animated_gif(spark):
-    """Animated GIFs sniff under 'auto' and fan out per composed frame
-    (every_k sampling), grayscale like the AVI path."""
-    import pandas as pd
-
-    from granulate_char_ocr_spark.functions.gif import encode_gif_frames
-    from granulate_char_ocr_spark.operators.multimodal import sample_frames
-
-    pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-    frames = [np.full((12, 10), 40 * i, np.uint8) for i in range(5)]
-    payload = encode_gif_frames(frames, pal)
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_ref": ["g0"],
-                "codec": ["auto"],
-                "width": [10],
-                "height": [12],
-                "n_frames": [5],
-                "payload": [payload],
-            }
-        ),
-        "media_ref string, codec string, width int, height int, "
-        "n_frames int, payload binary",
-    )
-    rows = sample_frames(df, every_k=2).collect()
-    got = {r["frame_index"]: r for r in rows}
-    assert sorted(got) == [0, 2, 4]
-    for i, r in got.items():
-        assert (r["height"], r["width"]) == (12, 10)
-        plane = np.frombuffer(r["payload"], np.uint8).reshape(12, 10)
-        # neutral palette -> gray == index, within 1 LSB of the
-        # float-weight truncation in to_grayscale
-        assert np.all(np.abs(plane.astype(int) - 40 * i) <= 1)
-
-
-def test_image_phash_packs_embedding_bits(spark, images):
-    """phash must be the embedding bit vector packed little-endian
-    (bit i of the bigint = embedding[i]), including a set bit 63."""
-    emb = {r["media_ref"]: r["embedding"]
-           for r in multimodal.image_embeddings(images).collect()}
-    ph = {r["media_ref"]: r["phash"]
-          for r in multimodal.image_phashes(images).collect()}
-    assert set(emb) == set(ph)
-    for ref, bits in emb.items():
-        want = 0
-        for i, b in enumerate(bits):
-            if b > 0.5:
-                want |= 1 << i
-        # compare as signed 64-bit (Spark bigint wraps bit 63)
-        if want >= 1 << 63:
-            want -= 1 << 64
-        assert ph[ref] == want, ref
-    # at least one hash in the glyph store must exercise the sign bit
-    # path in some corpus... if none does here, the pack parity above
-    # still pins the arithmetic; assert variety instead
-    assert len(set(ph.values())) > 1
-
-
-def test_image_near_pairs_matches_bruteforce(spark, images):
-    """The pigeonhole equi-join is EXACT: equal to the all-pairs
-    popcount at the same threshold."""
-    ph = {r["media_ref"]: r["phash"] & ((1 << 64) - 1)
-          for r in multimodal.image_phashes(images).collect()}
-    refs = sorted(ph)
-    want = set()
-    for i, a in enumerate(refs):
-        for b in refs[i + 1:]:
-            hd = bin(ph[a] ^ ph[b]).count("1")
-            if hd <= 10:
-                want.add((min(a, b), max(a, b), hd))
-    got = {
-        (r.ref_a, r.ref_b, r.hd)
-        for r in multimodal.image_near_pairs(images, max_hd=10).collect()
-    }
-    assert got == want
-    assert got  # the glyph store has near neighbors at this threshold
-
-
-def test_image_near_pairs_duplicate_images_hd0(spark, images):
-    """An exact duplicate payload under a new ref must pair at hd=0."""
-    import pandas as pd
-
-    pdf = images.toPandas()
-    dup = pdf.iloc[[0]].copy()
-    dup["media_ref"] = "dup-of-first"
-    store = spark.createDataFrame(
-        pd.concat([pdf, dup], ignore_index=True),
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    first = pdf.iloc[0]["media_ref"]
-    got = {
-        (r.ref_a, r.ref_b): r.hd
-        for r in multimodal.image_near_pairs(store, max_hd=0).collect()
-    }
-    key = (min(first, "dup-of-first"), max(first, "dup-of-first"))
-    assert got.get(key) == 0
-
-
-# --- EXIF capture metadata --------------------------------------------------
-
-
-def test_exif_roundtrip_fields():
-    from granulate_char_ocr_spark.functions import exif
-
-    f = exif.parse_exif(exif.build_exif())
-    assert f["make"] == "ExampleCorp" and f["model"] == "Cam 9"
-    assert f["orientation"] == 6 and f["iso"] == 200
-    assert abs(f["exposure_time"] - 1 / 250) < 1e-12
-    assert abs(f["f_number"] - 2.8) < 1e-12
-    assert f["datetime"] == "2024:03:01 10:20:30"
-    assert abs(f["gps_lat"] - 48.8584) < 1e-4
-    assert abs(f["gps_lon"] - 2.2945) < 1e-4
-
-
-def test_exif_southern_western_hemisphere():
-    from granulate_char_ocr_spark.functions import exif
-
-    f = exif.parse_exif(exif.build_exif(gps=(-33.8688, -70.6693)))
-    assert abs(f["gps_lat"] + 33.8688) < 1e-4
-    assert abs(f["gps_lon"] + 70.6693) < 1e-4
-
-
-def test_exif_big_endian_and_malformed():
-    import struct
-
-    from granulate_char_ocr_spark.functions import exif
-
-    # hand-build a minimal MM (big-endian) block: one orientation tag
-    ifd = (
-        struct.pack(">H", 1)
-        + struct.pack(">HHI", 0x0112, 3, 1)
-        + struct.pack(">H", 8)
-        + b"\x00\x00"
-        + struct.pack(">I", 0)
-    )
-    blob = exif.EXIF_SIG + b"MM" + struct.pack(">H", 42) + struct.pack(">I", 8) + ifd
-    f = exif.parse_exif(blob)
-    assert f["orientation"] == 8 and f["make"] is None
-    # malformed inputs: all-None, never a raise
-    for junk in (b"", b"II", exif.EXIF_SIG + b"XX\x00\x00", b"\x00" * 40):
-        g = exif.parse_exif(junk)
-        assert all(v is None for v in g.values())
-
-
-def test_exif_from_jpeg_and_without(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from granulate_char_ocr_spark.functions import exif
-    from granulate_char_ocr_spark.functions.jpeg import encode_jpeg
-    from granulate_char_ocr_spark.operators.multimodal import image_exif
-
-    img = (np.arange(48 * 32, dtype=np.uint8).reshape(48, 32) % 251)
-    plain = encode_jpeg(img)
-    tagged = exif.splice_exif_into_jpeg(plain, exif.build_exif())
-    # JPEG with EXIF still decodes identically (APP1 is skipped)
-    from granulate_char_ocr_spark.functions.jpeg import decode_jpeg
-
-    assert np.array_equal(decode_jpeg(tagged), decode_jpeg(plain))
-
-    df = spark.createDataFrame(
-        [("with", bytearray(tagged)), ("without", bytearray(plain))],
-        "media_ref string, payload binary",
-    )
-    rows = {r.media_ref: r for r in image_exif(df).collect()}
-    assert rows["with"].make == "ExampleCorp"
-    assert rows["with"].orientation == 6
-    assert abs(rows["with"].gps_lat - 48.8584) < 1e-4
-    assert rows["without"].make is None
-    assert rows["without"].orientation is None
-    plan = image_exif(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_scene_changes_raw_video(spark):
-    # three scenes: black run, white run, mid-gray run; in-scene noise
-    # must stay below threshold
-    h = w = 16
-    rng = np.random.RandomState(7)
-
-    def scene(level, n):
-        return [
-            np.clip(
-                np.full((h, w), level, np.int16) + rng.randint(-3, 4, (h, w)),
-                0, 255,
-            ).astype(np.uint8)
-            for _ in range(n)
-        ]
-
-    frames = scene(10, 3) + scene(200, 3) + scene(100, 2)
-    payload = b"".join(f.tobytes() for f in frames)
-    vid = spark.createDataFrame(
-        [("v1", "video", "raw", w, h, len(frames), 0, payload)],
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    out = multimodal.scene_changes(vid).orderBy("frame_index").collect()
-    assert len(out) == len(frames)
-    starts = [r.frame_index for r in out if r.is_scene_start]
-    assert starts == [0, 3, 6]
-    # diffs exposed so the caller can re-threshold without re-decoding
-    assert out[0].diff == 0.0
-    assert out[3].diff > 100 and out[1].diff < 10
-
-
-def test_scene_changes_mjpeg_avi(spark):
-    from granulate_char_ocr_spark.functions.avi import encode_avi_mjpeg
-
-    h = w = 32
-    frames = [
-        np.full((h, w), 20, np.uint8),
-        np.full((h, w), 22, np.uint8),  # same scene (tiny diff)
-        np.full((h, w), 230, np.uint8),  # hard cut
-    ]
-    payload = encode_avi_mjpeg(frames)
-    vid = spark.createDataFrame(
-        [("v2", "video", "avi", w, h, len(frames), 0, bytearray(payload))],
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    out = multimodal.scene_changes(vid).orderBy("frame_index").collect()
-    starts = [r.frame_index for r in out if r.is_scene_start]
-    assert starts == [0, 2]
-
-
-def test_video_truncated_and_null_payloads_tolerated(spark):
-    # truncated raw tail -> complete frames only; NULL payload -> no
-    # frames; neither fails the task (review r4)
-    h = w = 4
-    frames = [np.full((h, w), i, np.uint8) for i in range(2)]
-    truncated = b"".join(f.tobytes() for f in frames) + b"\x01\x02"
-    vid = spark.createDataFrame(
-        [
-            ("t", "video", "raw", w, h, 3, 0, truncated),
-            ("n", "video", "raw", w, h, 3, 0, None),
-        ],
-        schema=multimodal.MULTIMODAL_SCHEMA,
-    )
-    out = multimodal.scene_changes(vid).collect()
-    assert {r.media_ref for r in out} == {"t"}
-    assert sorted(r.frame_index for r in out) == [0, 1]
-
-
-def test_image_exif_null_payload(spark):
-    from granulate_char_ocr_spark.operators.multimodal import image_exif
-
-    df = spark.createDataFrame(
-        [("nul", None)], "media_ref string, payload binary"
-    )
-    [r] = image_exif(df).collect()
-    assert r.make is None and r.orientation is None
-
-
-def test_exif_survives_fill_bytes():
-    # 0xFF fill bytes before a marker are legal (T.81 B.1.1.2) and must
-    # not hide the APP1 (review r4)
-    from granulate_char_ocr_spark.functions import exif
-
-    app1 = exif.build_exif()
-    seg = b"\xff\xe1" + (len(app1) + 2).to_bytes(2, "big") + app1
-    jpeg = b"\xff\xd8" + b"\xff\xff\xff" + seg + b"\xff\xd9"
-    f = exif.exif_from_jpeg(jpeg)
-    assert f["make"] == "ExampleCorp"

@@ -10,11 +10,11 @@ import zlib
 
 import pytest
 
+from codec_fixtures import decode_pdf_runs, encode_pdf_cid
 from granulate_char_ocr_spark.functions import pdf
 from granulate_char_ocr_spark.functions.pdf import (
     _assemble_single,
     decode_pdf_layout_pages,
-    decode_pdf_runs,
     decode_pdf_text,
     decode_pdf_text_layout,
     encode_pdf,
@@ -121,8 +121,8 @@ def test_relative_positioning_operators():
 
 def test_layout_pages_mirror_text_pages():
     """decode_pdf_layout_pages yields one string per text-bearing
-    stream, like decode_pdf_text_pages; a graphics-only BT/ET stream is
-    omitted from both."""
+    stream, like decode_pdf_text's stream walk; a graphics-only BT/ET
+    stream is omitted from both."""
     data = encode_pdf_runs(TWO_COL)
     assert decode_pdf_layout_pages(data) == [TWO_COL_READING]
     empty = zlib.compress(b"BT\nET")
@@ -170,11 +170,11 @@ def test_cid_font_roundtrip_all_paths():
         "naïve — café €2 中文 😀",  # BMP + supplementary plane
         "ligature ﬃ expands",
     ]
-    blob = pdf.encode_pdf_cid(lines)
+    blob = encode_pdf_cid(lines)
     want = "\n".join(lines)
     assert pdf.decode_pdf_text(blob) == want
     assert pdf.decode_pdf_text_layout(blob) == want
-    assert pdf.decode_pdf_text_pages(blob) == [want]
+    assert pdf.decode_pdf_layout_pages(blob) == [want]
 
 
 def _cid_pdf_with_cmap(cmap_body: bytes, hex_show: bytes) -> bytes:
@@ -322,7 +322,7 @@ def test_mixed_fonts_cmap_and_plain():
 def test_tounicode_writer_emits_bfranges():
     # consecutive alphabet → the writer must use the bfrange form (the
     # reader's range path is then under the round-trip, not just bfchar)
-    blob = pdf.encode_pdf_cid(["abcdefgh", "XYZ"])
+    blob = encode_pdf_cid(["abcdefgh", "XYZ"])
     # find + inflate the CMap stream and check its shape
     import re
     import zlib

@@ -618,10 +618,9 @@ def test_semi_join_active_customers(spark):
 
 
 def test_explode_sentences_twin_and_corners(spark):
-    from granulate_char_ocr_spark.operators.textstats import (
-        explode_sentences,
-        split_sentences_python,
-    )
+    from reference_twins import split_sentences_python
+
+    from granulate_char_ocr_spark.operators.textstats import explode_sentences
 
     texts = [
         'First sentence. Second one! Third? "Quoted start." And more.',

@@ -135,7 +135,7 @@ def test_png_media_embeddings_match_raw(spark):
 @pytest.mark.parametrize("depth", [1, 2, 4, 8])
 @pytest.mark.parametrize("ftype", [0, 1, 4])
 def test_roundtrip_palette_depths(depth, ftype):
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from codec_fixtures import encode_png_palette
 
     n_colors = 1 << depth
     rng = np.random.default_rng(3)
@@ -146,7 +146,7 @@ def test_roundtrip_palette_depths(depth, ftype):
 
 
 def test_roundtrip_palette_trns_alpha():
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from codec_fixtures import encode_png_palette
 
     palette = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8)
     trns = np.array([0, 128], dtype=np.uint8)  # entry 2 defaults to 255
@@ -162,7 +162,7 @@ def test_palette_through_image_embeddings(spark):
     sniffing multimodal path and embeds identically to the raw glyph."""
     import pandas as pd
 
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from codec_fixtures import encode_png_palette
     from granulate_char_ocr_spark.operators import multimodal
 
     glyph = render_word("LAB", 0)  # values are 0/255 → a 2-color palette
@@ -281,7 +281,7 @@ def test_16bit_roundtrip(interlace):
 
 
 def test_palette_adam7_with_trns():
-    from granulate_char_ocr_spark.functions.png import encode_png_palette
+    from codec_fixtures import encode_png_palette
 
     rng = np.random.default_rng(9)
     pal = rng.integers(0, 256, (3, 3), dtype=np.uint8)
@@ -299,8 +299,10 @@ def test_subbyte_grayscale_scales_to_full_range():
     import struct
     import zlib
 
+    from codec_fixtures import _pack_subbyte
+
     from granulate_char_ocr_spark.functions.png import (
-        _SIGNATURE, _chunk, _filter_rows, _pack_subbyte)
+        _SIGNATURE, _chunk, _filter_rows)
 
     rng = np.random.default_rng(3)
     for d in (1, 2, 4):

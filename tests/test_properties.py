@@ -181,11 +181,9 @@ def test_jpeg_progressive_equals_baseline_property(
     approximation must recover every coefficient bit."""
     import numpy as np
 
-    from granulate_char_ocr_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
+    from codec_fixtures import encode_jpeg_progressive
+
+    from granulate_char_ocr_spark.functions.jpeg import decode_jpeg, encode_jpeg
 
     shape = (h, w) if gray else (h, w, 3)
     img = np.random.default_rng(seed).integers(0, 256, shape, dtype=np.uint8)

@@ -12,7 +12,6 @@ RAISES = "raises"
 DOC = "doc_id string, payload binary"
 MEDIA = multimodal.MULTIMODAL_SCHEMA
 STORE = "media_ref string, word string, width int, height int, pixels binary"
-PAGES = STORE + ", page_no int"
 RAW = "media_ref string, width int, height int"
 
 # name -> (operator, input DDL, the one input row, output DDL, outcome)
@@ -34,25 +33,6 @@ CASES = {
         "doc_id string, text string",
         [("d", None)],
     ),
-    "pdf_pages": (
-        docparse.pdf_pages, DOC, ("d", None),
-        "doc_id string, page_no int, page_text string", RAISES,
-    ),
-    "docx_texts": (
-        docparse.docx_texts, DOC, ("d", None),
-        "doc_id string, extracted string, n_members int", RAISES,
-    ),
-    "archive_members": (
-        docparse.archive_members, DOC, ("d", None),
-        "doc_id string, member_name string, member_size bigint, "
-        "member binary",
-        RAISES,
-    ),
-    "xlsx_tables": (
-        docparse.xlsx_tables, DOC, ("d", None),
-        "doc_id string, row_idx int, cells array<string>, n_cells int",
-        RAISES,
-    ),
     "decode_media_store": (
         multimodal.decode_media_store, STORE, ("m", "w", 2, 2, None),
         STORE, RAISES,
@@ -62,54 +42,11 @@ CASES = {
         STORE, ("m", "w", 2, 2, None),
         STORE, [("m", "w", 0, 0, None)],
     ),
-    "explode_tiff_pages": (
-        multimodal.explode_tiff_pages, STORE, ("m", "w", 2, 2, None),
-        PAGES, RAISES,
-    ),
-    "explode_tiff_pages_permissive": (
-        lambda df: multimodal.explode_tiff_pages(df, permissive=True),
-        STORE, ("m", "w", 2, 2, None),
-        PAGES, [("m", "w", 0, 0, None, 0)],
-    ),
-    "resize_images": (
-        multimodal.resize_images, MEDIA,
-        ("m", "image", "raw", 2, 2, 1, 0, None),
-        RAW + ", payload binary", RAISES,
-    ),
-    "sample_frames": (
-        multimodal.sample_frames, MEDIA,
-        ("m", "video", "raw", 2, 2, 3, 0, None),
-        "media_ref string, frame_index int, width int, height int, "
-        "payload binary",
-        [],
-    ),
     "audio_features": (
         multimodal.audio_features, MEDIA,
         ("m", "audio", "raw", 0, 0, 0, 8000, None),
         "media_ref string, duration_sec double, features array<float>",
         [("m", 0.0, [0.0] * 16)],
-    ),
-    "audio_segments": (
-        multimodal.audio_segments, MEDIA,
-        ("m", "audio", "raw", 0, 0, 0, 8000, None),
-        "media_ref string, seg_index int, start_sec double, end_sec double, "
-        "active boolean",
-        [],
-    ),
-    "image_exif": (
-        multimodal.image_exif, MEDIA,
-        ("m", "image", "jpeg", 2, 2, 1, 0, None),
-        "media_ref string, make string, model string, orientation int, "
-        "datetime string, datetime_original string, exposure_time double, "
-        "f_number double, iso int, gps_lat double, gps_lon double",
-        [("m",) + (None,) * 10],
-    ),
-    "scene_changes": (
-        multimodal.scene_changes, MEDIA,
-        ("m", "video", "raw", 2, 2, 3, 0, None),
-        "media_ref string, frame_index int, diff double, "
-        "is_scene_start boolean",
-        [],
     ),
     "media_stream_info": (
         multimodal.media_stream_info, MEDIA,
@@ -150,9 +87,9 @@ def test_null_payload_contract_and_schema(spark, name):
 
 @pytest.mark.parametrize("permissive", [True, False])
 def test_read_image_corpus_undecodable_file(spark, tmp_path, permissive):
-    """binaryFile content is never NULL (and empty files are not listed),
-    so the scan's fault case is a payload no codec recognizes: a null-pixel
-    row carrying the reason, or a raise."""
+    """binaryFile content is never NULL, so the scan's fault case is a
+    payload no codec recognizes: a null-pixel row carrying the reason, or
+    a raise."""
     (tmp_path / "JUNK_1.png").write_bytes(b"\x00")
     df = binary_files.read_image_corpus(
         spark, os.path.join(tmp_path, "*.png"), permissive=permissive
@@ -165,3 +102,36 @@ def test_read_image_corpus_undecodable_file(spark, tmp_path, permissive):
         [("JUNK", None, None, None, err)] if permissive else RAISES,
     )
     assert _ddl(df).startswith("path string, expected string")
+
+
+@pytest.mark.parametrize("permissive", [True, False])
+def test_read_image_corpus_empty_file(spark, tmp_path, permissive):
+    """The binaryFile source does not list zero-length files; the scan
+    still reports each one: a null-pixel 'empty file' row that the error
+    summary counts, or a raise naming the path."""
+    (tmp_path / "EMPTY_1.png").write_bytes(b"")
+    (tmp_path / "BAD_2.png").write_bytes(b"\x00")
+    glob = os.path.join(tmp_path, "*.png")
+    if not permissive:
+        with pytest.raises(Exception, match="EMPTY_1.png"):
+            binary_files.read_image_corpus(
+                spark, glob, permissive=False
+            ).collect()
+        return
+    df = binary_files.read_image_corpus(spark, glob)
+    err = "unknown image signature (png/jpeg/gif/tiff/bmp/pdf supported)"
+    rows = sorted(
+        (r.expected, r.pixels, r.decode_error, os.path.basename(r.path))
+        for r in df.collect()
+    )
+    assert rows == [
+        ("BAD", None, err, "BAD_2.png"),
+        ("EMPTY", None, "empty file", "EMPTY_1.png"),
+    ]
+    assert df.collect()[0].path.startswith("file:")
+    summary = binary_files.decode_error_summary(df).collect()
+    assert sum(r.n for r in summary) == 2
+    assert _ddl(df) == (
+        "path string, expected string, width int, height int, "
+        "pixels binary, decode_error string"
+    )

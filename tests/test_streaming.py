@@ -284,84 +284,3 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
     )
     want = {(r["l_id"], r["r_id"]) for r in batch.collect()}
     assert got == want == {(1, 10), (2, 11)}
-
-
-def test_warc_ingest_stream_equals_batch(spark, tmp_path):
-    # streaming WARC ingest (continuous crawl drop-off) must yield
-    # exactly the batch fetch leg's output over the same files
-    import gzip
-
-    from granulate_char_ocr_spark.operators.docparse import (
-        build_warc_files,
-        decode_bodies,
-        html_main_texts,
-        warc_records,
-    )
-    from granulate_char_ocr_spark.streaming import stream as gstream
-
-    pages = spark.createDataFrame(
-        [
-            (0, "https://a.example/1", "<html><body><p>alpha one</p></body></html>"),
-            (0, "https://a.example/2", "<html><body><p>beta &amp; two</p></body></html>"),
-            (1, "https://b.example/3", "<html><body><p>gamma</p></body></html>"),
-        ],
-        "file_id int, url string, html string",
-    )
-    warcs = build_warc_files(pages).collect()
-    warc_dir = tmp_path / "warcs"
-    warc_dir.mkdir()
-    for r in warcs:
-        (warc_dir / f"f{r.file_id}.warc.gz").write_bytes(bytes(r.payload))
-
-    out_rows = []
-    stream_df = gstream.warc_ingest_stream(spark, str(warc_dir))
-
-    def sink(df, epoch_id):
-        out_rows.extend(
-            (r.url, r.main_text) for r in df.collect()
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # batch twin over the same files
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(str(warc_dir))
-        .select(F.col("path").alias("file_id"), F.col("content").alias("payload"))
-    )
-    recs = warc_records(files).filter(
-        (F.col("rec_type") == "response") & (F.col("http_status") == 200)
-    ).select("url", "body", "content_type")
-    batch = {
-        (r.url, r.main_text)
-        for r in html_main_texts(
-            decode_bodies(recs, key_col="url"), html_col="text", key_col="url"
-        ).collect()
-    }
-    assert set(out_rows) == batch
-    assert len(out_rows) == 3
-    assert ("https://a.example/2", "beta & two") in batch
-
-    # resume contract: a second availableNow run over the SAME
-    # checkpoint reprocesses nothing
-    more = []
-
-    def sink2(df, epoch_id):
-        more.extend(df.collect())
-
-    q2 = (
-        gstream.warc_ingest_stream(spark, str(warc_dir))
-        .writeStream.foreachBatch(sink2)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    assert more == []
