@@ -12,7 +12,7 @@ _LINE = ("n_lines", "frac_bullet_lines", "frac_ellipsis_lines", "line_pass")
 _C4 = ("n_lines", "n_kept", "clean_text", "has_lorem", "has_brace", "c4_pass")
 
 
-def gopher_quality_flags(docs):
+def _gopher_flags(docs):
     """The document-level Gopher columns of the fused quality gate."""
     return curation.quality_filter(docs).select("doc_id", *_GOPHER)
 
@@ -45,7 +45,7 @@ def test_gopher_quality_flags_each_rule(spark):
         ],
         "doc_id bigint, text string",
     )
-    got = {r["doc_id"]: r.asDict() for r in gopher_quality_flags(docs).collect()}
+    got = {r["doc_id"]: r.asDict() for r in _gopher_flags(docs).collect()}
     assert got[1]["gopher_pass"] is True
     assert got[1]["n_words"] == 62 and got[1]["n_req_stopwords"] == 2
     assert got[2]["gopher_pass"] is False and got[2]["n_words"] == 4
@@ -61,7 +61,7 @@ def test_gopher_symbol_counting(spark):
     docs = spark.createDataFrame(
         [(1, "a # b … c ... d ....")], "doc_id bigint, text string"
     )
-    row = gopher_quality_flags(docs).collect()[0]
+    row = _gopher_flags(docs).collect()[0]
     # tokens: a # b … c ... d .... -> 8 words; symbols: # + … + '...' + '....'(1) = 4
     assert row["n_words"] == 8
     assert row["symbol_ratio"] == round(4 / 8, 6)
@@ -114,7 +114,7 @@ def test_gopher_quality_flags_duckdb_parity(spark):
     )
     got = {
         r["doc_id"]: tuple(r)[1:]
-        for r in gopher_quality_flags(docs).collect()
+        for r in _gopher_flags(docs).collect()
     }
     con = duckdb.connect()
     con.execute(
