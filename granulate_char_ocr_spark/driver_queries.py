@@ -798,7 +798,7 @@ def vocab_kmv_docs(spark, sf_dir):
         .select(                         # map-side partial agg on one core
             "lang",
             F.explode(
-                F.expr(_gram_windows_expr(2, distinct=False))
+                F.expr(_gram_windows_expr(2, with_pos=False, distinct=False))
             ).alias("g"),
         )
     )

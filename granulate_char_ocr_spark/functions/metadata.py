@@ -285,3 +285,36 @@ def indexability_cols(
         nofollow_expr(html, headers).alias("nofollow"),
         soft404_expr(html).alias("soft404"),
     ]
+
+
+# --- JSON-LD structured data ---------------------------------------------
+#
+# schema.org JSON-LD is the machine-readable page summary publishers
+# actually maintain (search engines consume it, so it is kept accurate
+# where visible HTML rots). The published-date ladder above already
+# trusts it first; these columns surface the other curation-relevant
+# fields. The FIRST ld+json block wins (the page's primary entity by
+# convention); JSON traversal is JVM-side get_json_object — a
+# non-string @type (array form) comes back as its compact JSON text,
+# documented rather than exploded.
+
+_LD_TYPE_PATH = "$['@type']"
+_LD_HEADLINE_PATH = "$.headline"
+_LD_AUTHOR_NAME_PATH = "$.author.name"
+_LD_AUTHOR_PATH = "$.author"
+
+
+def jsonld_cols(col: Column) -> list[Column]:
+    """(ld_type, ld_headline, ld_author) from the first
+    application/ld+json block; NULL when absent or malformed
+    (get_json_object returns NULL on bad JSON — never throws)."""
+    block = F.nullif(F.regexp_extract(col, _LD_SCRIPT, 1), F.lit(""))
+    author = F.coalesce(
+        F.get_json_object(block, _LD_AUTHOR_NAME_PATH),
+        F.get_json_object(block, _LD_AUTHOR_PATH),
+    )
+    return [
+        F.get_json_object(block, _LD_TYPE_PATH).alias("ld_type"),
+        F.get_json_object(block, _LD_HEADLINE_PATH).alias("ld_headline"),
+        author.alias("ld_author"),
+    ]

@@ -22,7 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.operators.skew import (
@@ -49,12 +49,15 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def _gram_windows_expr(n: int, distinct: bool) -> str:
-    """The one gram-builder shingles() and the vocabulary sketch share, so
-    the gram space can never silently diverge between them: n-token
-    windows over ``_toks``, optionally in-row-distinct; docs shorter than
-    n yield array()."""
+def _gram_windows_expr(n: int, with_pos: bool, distinct: bool) -> str:
+    """The one gram-builder shingles(), the vocabulary sketch and
+    duplicated_passage_stats() share, so the gram space can never silently
+    diverge between them: n-token windows over ``_toks``, optionally
+    positioned (struct(pos, g)) and optionally in-row-distinct; docs
+    shorter than n yield array()."""
     inner = f"concat_ws(' ', slice(_toks, i + 1, {n}))"
+    if with_pos:
+        inner = f"struct(i as pos, {inner} as g)"
     body = f"transform(sequence(0, size(_toks) - {n}), i -> {inner})"
     if distinct:
         body = f"array_distinct({body})"
@@ -66,7 +69,7 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     distinct happens IN-ROW (array_distinct before the explode), not as a
     post-explode ``.distinct()`` — same rows for unique doc_ids, zero
     shuffle. Docs shorter than n tokens contribute no rows."""
-    expr = _gram_windows_expr(n, distinct=True)
+    expr = _gram_windows_expr(n, with_pos=False, distinct=True)
     return (
         widen_narrow_scan(docs)
         .withColumn("_toks", TOKENS())
@@ -740,4 +743,129 @@ def simhash_near_pairs(docs: DataFrame, bits: int = 16, max_hd: int = 2) -> Data
         _simhash_kernel(docs, bits), "doc_id", "simhash", bits, max_hd
     ).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hd"
+    )
+
+
+def duplicated_passage_stats(docs: DataFrame, n: int = 20) -> DataFrame:
+    """(doc_id, n_tokens, dup_tokens, dup_fraction): the ExactSubstr /
+    RefinedWeb duplication metric — for each document, how many of its
+    tokens sit inside at least one n-token window that occurs MORE THAN
+    ONCE anywhere in the corpus (including elsewhere in the same doc).
+    Docs shorter than n tokens report 0. Lee et al. 2021 use suffix
+    arrays over the byte stream; the fixed-window formulation here is the
+    standard distributed approximation (windows, not arbitrary-length
+    substrings) and is exact for windows of length n.
+
+    Scale shape: every window occurrence (position kept, NOT distinct)
+    explodes once; the global occurrence count is a partial-aggregated
+    groupBy; the join back is gram-keyed (both sides big by nature — at
+    real scale key on xxhash64(gram) to shuffle 8-byte keys instead of
+    strings; the string key here keeps the DuckDB parity test exact).
+    Token coverage is a per-doc interval union done with ONE window pass:
+    sort duplicated windows by position and count only the part of each
+    [pos, pos+n) not already covered by the running max end."""
+    win = _gram_windows_expr(n, with_pos=True, distinct=False)
+    grams = (
+        docs.withColumn("_toks", TOKENS())
+        .select("doc_id", F.explode(F.expr(win)).alias("w"))
+        .select("doc_id", F.col("w.pos").alias("pos"), F.col("w.g").alias("g"))
+    )
+    dup_grams = (
+        grams.groupBy("g")
+        .agg(F.count("*").alias("occ"))
+        .where(F.col("occ") > 1)
+        .select("g")
+    )
+    hits = grams.join(dup_grams, "g").select("doc_id", "pos")
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    covered = (
+        hits.withColumn("prev_end", F.max(F.col("pos") + n).over(w))
+        .withColumn(
+            "new_cov",
+            F.greatest(
+                F.lit(0),
+                F.col("pos")
+                + n
+                - F.greatest(F.coalesce("prev_end", F.lit(0)), F.col("pos")),
+            ),
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("new_cov").alias("dup_tokens"))
+    )
+    # per-doc token counts come straight off docs (narrow map) — deriving
+    # them from grams would re-run the window explosion plus a corpus-wide
+    # distinct shuffle for a value docs already holds
+    base = docs.select("doc_id", F.size(TOKENS()).alias("n_tokens"))
+    return base.join(covered, "doc_id", "left").select(
+        "doc_id",
+        "n_tokens",
+        F.coalesce("dup_tokens", F.lit(0)).alias("dup_tokens"),
+        F.round(
+            F.coalesce("dup_tokens", F.lit(0))
+            / F.greatest("n_tokens", F.lit(1)),
+            6,
+        ).alias("dup_fraction"),
+    )
+
+
+def remove_duplicated_passages(docs: DataFrame, n: int = 20) -> DataFrame:
+    """(doc_id, text, n_tokens, n_removed): the removal half of ExactSubstr
+    dedup (Lee et al. 2021 "Deduplicating Training Data Makes Language
+    Models Better") over the same fixed n-token windows as
+    :func:`duplicated_passage_stats`. Every occurrence of a window that
+    appears more than once in the corpus is removed EXCEPT the globally
+    first occurrence, ordered by (doc_id, pos) — one copy of each
+    duplicated passage survives, exactly like the suffix-array original
+    keeps one copy of each duplicated byte range. Tokens covered by at
+    least one removable window are dropped and the survivors re-joined on
+    single spaces; untouched documents pass through verbatim.
+
+    Scale shape: one window explosion, one gram-keyed partial aggregate
+    for the global first occurrence (min over a (doc_id, pos) struct —
+    no per-gram window function, so no per-gram sort), one gram-keyed
+    join back, then a per-doc collect of removable starts re-joined to
+    the corpus. The in-row rebuild is exists() over the starts array per
+    token — O(tokens x removable windows) per doc, which is bounded by
+    the doc itself; heavily duplicated docs are exactly the ones that end
+    up short."""
+    win = _gram_windows_expr(n, with_pos=True, distinct=False)
+    grams = (
+        docs.withColumn("_toks", TOKENS())
+        .select("doc_id", F.explode(F.expr(win)).alias("w"))
+        .select("doc_id", F.col("w.pos").alias("pos"), F.col("w.g").alias("g"))
+    )
+    first = grams.groupBy("g").agg(
+        F.min(F.struct("doc_id", "pos")).alias("keep"),
+        F.count("*").alias("occ"),
+    )
+    starts = (
+        grams.join(first, "g")
+        .where(
+            (F.col("occ") > 1)
+            & (F.struct("doc_id", "pos") != F.col("keep"))
+        )
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("pos")).alias("_starts"))
+    )
+    removed = f"exists(_starts, p -> p <= i and i < p + {n})"
+    return (
+        docs.join(starts, "doc_id", "left")
+        .withColumn("_toks", TOKENS())
+        .withColumn(
+            "_starts",
+            F.coalesce("_starts", F.expr("cast(array() as array<int>)")),
+        )
+        .withColumn(
+            "_kept", F.expr(f"filter(_toks, (t, i) -> not {removed})")
+        )
+        .select(
+            "doc_id",
+            F.array_join("_kept", " ").alias("text"),
+            F.size("_toks").alias("n_tokens"),
+            (F.size("_toks") - F.size("_kept")).alias("n_removed"),
+        )
     )

@@ -3,7 +3,7 @@ rule names explicitly: "HTML boilerplate strip" and "PDF/layout parse".
 
 HTML main-content extraction is PURE whole-stage codegen (a regex
 cascade over a string column — functions/html.py); the binary-payload
-parsers (PDF, WARC, charset, office, archive) are per-row kernels on the
+parsers (PDF, WARC, charset) are per-row kernels on the
 Arrow-batched harness (operators/doc_kernel.row_kernel). All are
 deterministic, so the driver gate checks them against exact oracles."""
 
@@ -37,6 +37,18 @@ def html_main_contents(
     return df.select(
         key_col, main_content_expr(F.col(html_col)).alias("main_content")
     )
+
+
+def jsonld_metadata(
+    df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
+) -> DataFrame:
+    """(key, html) -> (key, ld_type, ld_headline, ld_author): the
+    schema.org JSON-LD fields of the page's first ld+json block
+    (functions/metadata.jsonld_cols) — JVM-side get_json_object, NULL
+    on absent/malformed JSON, zero exchanges."""
+    from granulate_char_ocr_spark.functions.metadata import jsonld_cols
+
+    return df.select(key_col, *jsonld_cols(F.col(html_col)))
 
 
 def html_tables(

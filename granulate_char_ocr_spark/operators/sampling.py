@@ -45,6 +45,52 @@ def stratified_sample(
     return df.filter(_bucket(F.col(key_col)) < pct)
 
 
+def temperature_resample(
+    df: DataFrame, key_col: str, strata_col: str, alpha: float = 0.5
+) -> DataFrame:
+    """Temperature-based stratum rebalancing (the XLM-R / mC4 multilingual
+    recipe): keep each stratum at a rate proportional to ``count^(alpha-1)``
+    so expected kept counts scale as ``count^alpha`` — alpha=1 keeps the
+    natural distribution, alpha->0 equalizes strata. Rates are normalized
+    so the stratum they favor most keeps 100% (for alpha<1 that is the
+    SMALLEST stratum: dominant strata are downsampled, the tail is kept
+    whole). Output adds a ``rate`` column (rounded 9dp so the pow/division
+    result is engine-portable).
+
+    A NULL stratum is a stratum like any other (counted, weighted, and
+    matched null-safely), not silently dropped.
+
+    Deterministic like everything in this module: the per-row draw is the
+    same md5 32-bit primitive (_draw32) the other ops use, mapped to
+    [0,1), so retries and other engines keep the same rows. Scale shape:
+    stratum counts and the max weight are two tiny aggregates broadcast
+    back; the corpus itself is one filter pass.
+    """
+    if "rate" in df.columns:
+        raise ValueError("input already has a 'rate' column (the output name)")
+    counts = df.groupBy(strata_col).agg(F.count("*").alias("_c"))
+    weights = counts.select(
+        strata_col, F.pow(F.col("_c").cast("double"), alpha - 1).alias("_w")
+    )
+    wmax = weights.agg(F.max("_w").alias("_wmax"))
+    rates = (
+        weights.crossJoin(F.broadcast(wmax))
+        .select(
+            F.col(strata_col).alias("_strata"),
+            F.round(F.col("_w") / F.col("_wmax"), 9).alias("rate"),
+        )
+    )
+    u = _draw32(F.col(key_col)).cast("double") / F.lit(4294967296.0)
+    return (
+        df.join(
+            F.broadcast(rates),
+            F.col(strata_col).eqNullSafe(F.col("_strata")),
+        )
+        .drop("_strata")
+        .filter(u < F.col("rate"))
+    )
+
+
 def _hashed_grams(
     df: DataFrame, buckets: int, carry_cols: tuple[str, ...] = ()
 ) -> DataFrame:

@@ -591,6 +591,36 @@ def charlm_perplexity(docs: DataFrame, ref: DataFrame | None = None) -> DataFram
     )
 
 
+def perplexity_buckets(
+    docs: DataFrame, ref: DataFrame | None = None, by: str = "lang"
+) -> DataFrame:
+    """(doc_id, <by>, perplexity, bucket): CCNet's head/middle/tail split —
+    perplexity terciles within each ``by`` group (per-language in CCNet),
+    'head' being the cleanest third. Deterministic tie-break on doc_id;
+    unscorable docs (NULL perplexity) sort last. Note ntile splits by ROW
+    COUNT, not value: NULLs land in 'tail' only while they are fewer than
+    a third of their group (true of any real corpus; in a 3-doc group with
+    2 unscorable docs, one of them would be bucketed 'middle')."""
+    from pyspark.sql import Window
+
+    scored = charlm_perplexity(docs, ref).join(
+        docs.select("doc_id", by), "doc_id"
+    )
+    t = F.ntile(3).over(
+        Window.partitionBy(by).orderBy(
+            F.col("perplexity").asc_nulls_last(), "doc_id"
+        )
+    )
+    return scored.select(
+        "doc_id",
+        by,
+        "perplexity",
+        F.element_at(
+            F.array(F.lit("head"), F.lit("middle"), F.lit("tail")), t
+        ).alias("bucket"),
+    )
+
+
 # --- sentence segmentation ------------------------------------------------
 
 # sentence-final punctuation, optional closing quote/bracket, then

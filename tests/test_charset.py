@@ -1,5 +1,5 @@
-"""Charset sniffing + decode (functions/charset.py) and the decode_bodies
-operator."""
+"""Charset sniffing + decode (functions/charset.py), the decode_bodies
+operator, and the sitemap parser."""
 
 import codecs
 
@@ -102,3 +102,44 @@ def test_decode_bodies_null_body_passes_through(spark):
     )
     got = {r.doc_id: r.text for r in decode_bodies(df).collect()}
     assert got == {1: None, 2: "ok"}
+
+
+SITEMAP = """<?xml version="1.0" encoding="UTF-8"?>
+<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
+  <url><loc>https://h/a</loc><lastmod>2026-01-02</lastmod></url>
+  <url>
+    <loc>
+      https://h/b
+    </loc>
+  </url>
+  <url><lastmod>2026-01-03</lastmod><loc>https://h/c</loc></url>
+</urlset>"""
+
+
+def test_sitemap_urls(spark):
+    from granulate_char_ocr_spark.operators.crawl import sitemap_urls
+
+    df = spark.createDataFrame(
+        [("h", SITEMAP)], "host string, sitemap_xml string"
+    )
+    got = {
+        (r.loc, r.lastmod) for r in sitemap_urls(df).collect()
+    }
+    assert got == {
+        ("https://h/a", "2026-01-02"),
+        ("https://h/b", None),
+        ("https://h/c", "2026-01-03"),
+    }
+
+
+def test_sitemap_index_yields_no_rows(spark):
+    from granulate_char_ocr_spark.operators.crawl import sitemap_urls
+
+    idx = (
+        "<sitemapindex><sitemap><loc>https://h/s1.xml</loc></sitemap>"
+        "</sitemapindex>"
+    )
+    df = spark.createDataFrame(
+        [("h", idx)], "host string, sitemap_xml string"
+    )
+    assert sitemap_urls(df).count() == 0

@@ -6,7 +6,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from reference_twins import indexability_python, page_metadata_python
+from reference_twins import (
+    indexability_python,
+    jsonld_python,
+    page_metadata_python,
+)
 
 from granulate_char_ocr_spark.functions.metadata import (
     indexability_cols,
@@ -296,3 +300,55 @@ def test_canonical_does_not_bleed_across_tags():
         page_metadata_python(ok)["canonical_url"]
         == "https://good.example/p"
     )
+
+
+# --- JSON-LD structured data -----------------------------------------------
+
+LD_CASES = [
+    (
+        '<script type="application/ld+json">{"@type": "Article", '
+        '"headline": "Big News", "author": {"name": "Ada L"}}</script>',
+        {"ld_type": "Article", "ld_headline": "Big News", "ld_author": "Ada L"},
+    ),
+    # author as a plain string
+    (
+        '<script type=application/ld+json>{"@type": "BlogPosting", '
+        '"author": "Bob"}</script>',
+        {"ld_type": "BlogPosting", "ld_headline": None, "ld_author": "Bob"},
+    ),
+    # array @type comes back as compact JSON text (documented)
+    (
+        '<script type="application/ld+json">'
+        '{"@type":["Article","NewsArticle"]}</script>',
+        {
+            "ld_type": '["Article","NewsArticle"]',
+            "ld_headline": None,
+            "ld_author": None,
+        },
+    ),
+    # malformed JSON: NULLs, never a throw
+    (
+        '<script type="application/ld+json">{not json</script>',
+        {"ld_type": None, "ld_headline": None, "ld_author": None},
+    ),
+    # no block at all
+    ("<p>plain</p>", {"ld_type": None, "ld_headline": None, "ld_author": None}),
+]
+
+
+@pytest.mark.parametrize("html,want", LD_CASES)
+def test_jsonld_python_twin(html, want):
+    assert jsonld_python(html) == want
+
+
+def test_jsonld_expr_matches_twin(spark):
+    from granulate_char_ocr_spark.operators.docparse import jsonld_metadata
+
+    df = spark.createDataFrame(
+        [(i, h) for i, (h, _) in enumerate(LD_CASES)],
+        "doc_id int, html string",
+    )
+    rows = {r.doc_id: r for r in jsonld_metadata(df).collect()}
+    for i, (_, want) in enumerate(LD_CASES):
+        got = {k: getattr(rows[i], k) for k in want}
+        assert got == want, f"case {i}"
