@@ -53,40 +53,36 @@ def partition_lineage(
         ).alias("char_accuracy")
     else:
         acc = F.first(F.lit(None).cast("double")).alias("char_accuracy")
+    # one collect_set feeds both the hash and the count, and one percentile
+    # both quantiles: a countDistinct beside them would expand the rows and
+    # add a second exchange
+    n_chars = F.coalesce("n_chars", F.lit(0))
     return (
         rows.groupBy("_pid")
         .agg(
-            F.xxhash64(
-                F.concat_ws(",", F.sort_array(F.collect_set("doc_id")))
-            ).alias("partition_hash"),
-            F.countDistinct("doc_id").alias("n_docs"),
+            F.collect_set("doc_id").alias("_doc_ids"),
             F.sum((F.col("kind") == "text").cast("long")).alias("n_text_spans"),
             F.sum((F.col("kind") == "media").cast("long")).alias("n_media_spans"),
-            F.sum(F.coalesce(F.col("n_chars"), F.lit(0)).cast("long")).alias(
-                "n_chars"
-            ),
+            F.sum(n_chars.cast("long")).alias("n_chars"),
             # per-partition span-length distribution (reference evaluation
             # record's distribution block, evaluate_new_testdata.py:86-95):
             # exact interpolated percentiles, same machinery the oracled
             # percentile_order_prices query pins cross-engine
-            F.round(
-                F.percentile(F.coalesce("n_chars", F.lit(0)), F.lit(0.5)), 2
-            ).alias("p50_chars"),
-            F.round(
-                F.percentile(F.coalesce("n_chars", F.lit(0)), F.lit(0.9)), 2
-            ).alias("p90_chars"),
+            F.percentile(n_chars, [0.5, 0.9]).alias("_pcts"),
             acc,
         )
         .select(
             F.lit(run_id).alias("run_id"),
             F.lit(snapshot_id).alias("input_snapshot_id"),
-            F.col("partition_hash").cast("string"),
-            "n_docs",
+            F.xxhash64(F.concat_ws(",", F.sort_array("_doc_ids")))
+            .cast("string")
+            .alias("partition_hash"),
+            F.size("_doc_ids").cast("long").alias("n_docs"),
             "n_text_spans",
             "n_media_spans",
             "n_chars",
-            "p50_chars",
-            "p90_chars",
+            F.round(F.col("_pcts")[0], 2).alias("p50_chars"),
+            F.round(F.col("_pcts")[1], 2).alias("p90_chars"),
             "char_accuracy",
             F.lit(elapsed_ms).cast("long").alias("elapsed_ms"),
             F.current_timestamp().alias("committed_at"),

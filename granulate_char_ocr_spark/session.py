@@ -9,12 +9,25 @@ real cluster shuffle partitions and maxPartitionBytes scale with executors):
   memory (one media row ≈ 64·width bytes — SURVEY.md §7 R4),
 * UTC session timezone so timestamp semantics match the DuckDB oracle,
 * Python workers forked from ``worker_daemon`` (``WORKER_DAEMON_CONF``), which
-  stops every task from re-reading pyspark.zip and the spark-core jar.
+  stops every task from re-reading pyspark.zip and the spark-core jar,
+* ``spark.hadoop.fs.file.impl`` = ``LOCAL_FS_CLASS``, with its jar on
+  ``spark.driver.extraClassPath`` (``local_fs_conf``): without libhadoop the
+  stock ``file://`` FileSystem forks a ``chmod`` for every directory, file
+  and ``.crc`` it creates, ~3 forks per output bucket. The jar is compiled
+  once per source hash into ``dist/``; where ``javac`` is missing the session
+  keeps the stock FileSystem and logs one warning.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +38,94 @@ WORKER_DAEMON_CONF = {
 }
 # the directory (or zip) this package is imported from, for local workers
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# a LocalFileSystem whose permission calls stay in the JVM
+LOCAL_FS_CLASS = "granulate.hadoop.InProcessLocalFileSystem"
+_LOCAL_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    "resources",
+    "InProcessLocalFileSystem.java",
+)
+_DIST_DIR = os.path.join(PACKAGE_PARENT, "dist")
+_LOCAL_FS_JAR_PREFIX = "gcos-localfs-"
+
+log = logging.getLogger(__name__)
+
+
+@functools.cache
+def local_fs_jar() -> str | None:
+    """``dist/gcos-localfs-<source hash>.jar``, compiled with the JDK's
+    ``javac`` and ``jar`` when no jar of this source exists yet (older ones
+    are deleted). None, with one warning, where the JDK tools or the source
+    (a ``--py-files`` zip carries none) are missing or the compile fails."""
+    try:
+        with open(_LOCAL_FS_SOURCE, "rb") as f:
+            key = hashlib.md5(f.read()).hexdigest()[:10]
+    except OSError:
+        log.warning("no %s source: keeping Hadoop's file:// FileSystem",
+                    LOCAL_FS_CLASS)
+        return None
+    jar = os.path.join(_DIST_DIR, f"{_LOCAL_FS_JAR_PREFIX}{key}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac, jar_tool = shutil.which("javac"), shutil.which("jar")
+    if javac is None or jar_tool is None:
+        log.warning("no javac/jar on PATH: keeping Hadoop's file:// "
+                    "FileSystem, which forks a chmod per file it writes")
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars")
+    classpath = glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))
+    os.makedirs(_DIST_DIR, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=_DIST_DIR) as tmp:
+        part = os.path.join(tmp, "fs.jar")
+        try:
+            subprocess.run(
+                [javac, "-nowarn", "-d", tmp,
+                 "-cp", os.pathsep.join(classpath) or os.path.join(jars, "*"),
+                 _LOCAL_FS_SOURCE],
+                check=True, capture_output=True, text=True,
+            )
+            subprocess.run(
+                [jar_tool, "cf", part, "-C", tmp, "granulate"],
+                check=True, capture_output=True, text=True,
+            )
+        except subprocess.CalledProcessError as e:
+            log.warning("building %s failed, keeping Hadoop's file:// "
+                        "FileSystem:\n%s", LOCAL_FS_CLASS, e.stderr)
+            return None
+        os.replace(part, jar)
+    for old in glob.glob(os.path.join(_DIST_DIR, f"{_LOCAL_FS_JAR_PREFIX}*.jar")):
+        if old != jar:
+            try:
+                os.unlink(old)
+            except OSError:
+                pass
+    return jar
+
+
+def local_fs_conf() -> dict[str, str]:
+    """The conf that makes ``file://`` paths use ``LOCAL_FS_CLASS``, or {}
+    without its jar, or when this process's JVM is already running without
+    the jar on its classpath (a ``fs.file.impl`` it cannot load would fail
+    every local read and write)."""
+    jar = local_fs_jar()
+    if jar is None:
+        return {}
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is not None:
+        try:
+            jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+        except Py4JJavaError:  # ClassNotFoundException
+            return {}
+    return {
+        "spark.driver.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+    }
 
 
 def submitted_worker_daemon_conf() -> dict[str, str]:
@@ -57,6 +158,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config(map=WORKER_DAEMON_CONF)
+        .config(map=local_fs_conf())
         # workers start with the JVM's cwd; let them import the package (and
         # the daemon) from wherever this driver does
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)

@@ -1,8 +1,11 @@
 """Production entrypoint, run with spark-submit:
 
+    python tools/make_pyfiles.py   # the zip, and the FileSystem jar
     spark-submit \
       --py-files dist/granulate_char_ocr_spark.zip \
       --conf spark.executorEnv.PYTHONPATH=granulate_char_ocr_spark.zip \
+      [--driver-class-path dist/gcos-localfs-*.jar \
+       --conf spark.hadoop.fs.file.impl=granulate.hadoop.InProcessLocalFileSystem] \
       jobs/extract_job.py \
       --documents s3://bucket/warehouse/docs \
       --media s3://bucket/warehouse/media \
@@ -21,6 +24,16 @@ starts before any task has put ``--py-files`` on the workers' path, so the
 ``spark.executorEnv.PYTHONPATH`` line above puts the zip, which executors
 fetch into their working directory, on it from the start; it must name the
 ``--py-files`` zip's file name.
+
+The bracketed pair matters for ``file://`` outputs only (s3a and hdfs
+writes do not touch it). Without libhadoop, Hadoop's local FileSystem forks
+a ``chmod`` for every directory, part file and ``.crc`` it creates, ~3 forks
+per bucket; ``session.LOCAL_FS_CLASS`` sets the same modes inside the JVM.
+The jar must be on the JVM's class path from launch: ``--jars`` adds it too
+late, and spark-submit then fails with ``ClassNotFoundException`` resolving
+its own local files. Executors that write ``file://`` paths need it on
+``spark.executor.extraClassPath`` as well. ``session.get_spark`` sets the
+pair itself (local mode runs its executor in the driver JVM).
 """
 
 from __future__ import annotations

@@ -94,6 +94,26 @@ def _minhash_signatures_expr(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def _partition_lineage_distinct(flat: DataFrame) -> DataFrame:
+    """Reference formulation of ``lineage.partition_lineage``'s aggregate
+    without an expectation: ``countDistinct`` beside the ``collect_set``
+    hash and one ``percentile`` per quantile, which plans an Expand, two
+    exchanges and four aggregates."""
+    rows = flat.withColumn("_pid", F.spark_partition_id())
+    n_chars = F.coalesce(F.col("n_chars"), F.lit(0))
+    return rows.groupBy("_pid").agg(
+        F.xxhash64(F.concat_ws(",", F.sort_array(F.collect_set("doc_id"))))
+        .cast("string")
+        .alias("partition_hash"),
+        F.countDistinct("doc_id").alias("n_docs"),
+        F.sum((F.col("kind") == "text").cast("long")).alias("n_text_spans"),
+        F.sum((F.col("kind") == "media").cast("long")).alias("n_media_spans"),
+        F.sum(n_chars.cast("long")).alias("n_chars"),
+        F.round(F.percentile(n_chars, F.lit(0.5)), 2).alias("p50_chars"),
+        F.round(F.percentile(n_chars, F.lit(0.9)), 2).alias("p90_chars"),
+    ).drop("_pid")
+
+
 def _embedding_near_pairs_hof(
     embeddings: DataFrame,
     threshold: float = 0.4,

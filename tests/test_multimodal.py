@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.operators import multimodal, similarity
@@ -27,19 +28,31 @@ def test_image_embeddings_feed_similarity(spark, images):
     rows = emb.collect()
     assert all(len(r["embedding"]) == 64 for r in rows)
     assert all(set(r["embedding"]) <= {0.0, 1.0} for r in rows)
-    # embeddings are consumable by the ANN operator
-    emb_ids = emb.withColumn(
-        "vec_id", F.xxhash64("media_ref")
-    ).select("vec_id", "embedding")
-    first = emb_ids.limit(1).collect()[0]["vec_id"]
-    q = similarity.cosine_topk(
-        emb_ids, n_queries=first + 1 if first < 0 else first + 1, k=3
+    # embeddings are consumable by the ANN operator: dense vec_ids so every
+    # vector is a query, checked against a NumPy brute-force top-3 under the
+    # operator's ranking rule (5-decimal sim desc, then neighbor_id asc)
+    emb_ids = emb.select(
+        (F.row_number().over(Window.orderBy("media_ref")) - 1)
+        .cast("long")
+        .alias("vec_id"),
+        "embedding",
     )
-    # at least runs and ranks deterministically (query set may be empty if
-    # the hash is large; use a direct filter instead)
-    del q
-    pairs = emb_ids.count()
-    assert pairs == 20
+    got = sorted(
+        (tuple(r) for r in similarity.cosine_topk(emb_ids, n_queries=20, k=3).collect()),
+        key=lambda r: (r[0], r[2]),  # query_id, rank
+    )
+    vecs = emb_ids.orderBy("vec_id").collect()
+    assert [r["vec_id"] for r in vecs] == list(range(20))
+    x = np.array([r["embedding"] for r in vecs], dtype=np.float64)
+    norms = np.sqrt((x * x).sum(axis=1))
+    assert norms.min() > 0
+    sims = np.round((x @ x.T) / np.outer(norms, norms), 5)
+    want = []
+    for q in range(20):
+        ranked = sorted((-sims[q, n], n) for n in range(20) if n != q)
+        want += [(q, n, rank, -neg) for rank, (neg, n) in enumerate(ranked[:3], 1)]
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert [g[3] for g in got] == pytest.approx([w[3] for w in want], abs=1e-9)
 
 
 def test_audio_features_deterministic(spark):

@@ -142,6 +142,51 @@ def test_partition_lineage_covers_all_docs(spark, corpus):
     assert all(r["elapsed_ms"] == 123 for r in rows2)
 
 
+def _plan_nodes(df, *names):
+    """Count of executed-plan nodes whose name contains each of ``names``
+    (AQE off, so the static plan is the executed one)."""
+    conf = df.sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+    found = {n: 0 for n in names}
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        for n in names:
+            found[n] += n in node.nodeName()
+        stack.extend(node.children().apply(i) for i in range(node.children().size()))
+    return found
+
+
+def test_partition_lineage_one_exchange(spark, corpus):
+    """One collect_set feeds partition_hash and n_docs and one percentile
+    both quantiles: one exchange and two aggregates (the countDistinct
+    formulation planned two and four) with the same rows."""
+    from reference_twins import _partition_lineage_distinct
+
+    docs, media, _ = corpus
+    flat = extract_flat(docs, media).localCheckpoint()
+    got = partition_lineage(flat, run_id="t", snapshot_id="s")
+    ref = _partition_lineage_distinct(flat)
+    assert _plan_nodes(got, "Exchange", "Aggregate") == {"Exchange": 1, "Aggregate": 2}
+    assert _plan_nodes(ref, "Exchange", "Aggregate") == {"Exchange": 2, "Aggregate": 4}
+
+    def key(r):
+        return r["partition_hash"]
+
+    want = sorted((r.asDict() for r in ref.collect()), key=key)
+    rows = sorted(
+        ({c: r[c] for c in ref.columns} for r in got.collect()), key=key
+    )
+    assert len(rows) > 1
+    assert rows == want
+    assert dict(got.dtypes)["n_docs"] == "bigint"
+
+
 def test_extract_flat_media_details(spark, corpus):
     docs, media, _ = corpus
     flat = extract_flat(docs, media).filter(F.col("kind") == "media")

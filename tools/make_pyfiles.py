@@ -1,4 +1,7 @@
-"""Package the engine for spark-submit --py-files: dist/granulate_char_ocr_spark.zip."""
+"""Package the engine for spark-submit: dist/granulate_char_ocr_spark.zip
+for --py-files, and the in-process ``file://`` FileSystem's jar
+(dist/gcos-localfs-<hash>.jar, built with the JDK's javac) for
+--driver-class-path."""
 
 from __future__ import annotations
 
@@ -22,6 +25,11 @@ def main() -> str:
                     full = os.path.join(dirpath, fn)
                     z.write(full, os.path.relpath(full, ROOT))
     print(out)
+    sys.path.insert(0, ROOT)
+    from granulate_char_ocr_spark.session import local_fs_jar
+
+    jar = local_fs_jar()
+    print(jar or "no javac: skipped the file:// FileSystem jar")
     return out
 
 
