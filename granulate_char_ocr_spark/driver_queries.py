@@ -172,30 +172,6 @@ def q3_top_revenue_orders(spark, sf_dir):
     )
 
 
-# (agg_colsum_events left the 50-entry gate window in r4 for the
-# curation family: the A2 multi-aggregate shape is a strict subset of
-# q1_pricing_summary's sum/avg/count block, and the exact parity stays
-# pinned by tests/test_plans.py against the oracle below.)
-AGG_COLSUM_ORACLE = """
-    SELECT event_type, round(sum(value), 4) AS total_value,
-           count(*) AS n_events, round(avg(value), 6) AS avg_value
-    FROM events GROUP BY event_type
-    """
-
-
-def agg_colsum_events(spark, sf_dir):
-    """The column-projection-sum analog (SURVEY §2.4 A2)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.round(F.sum("value"), 4).alias("total_value"),
-            F.count("*").alias("n_events"),
-            F.round(F.avg("value"), 6).alias("avg_value"),
-        )
-    )
-
-
 # (sessionize_events rotated BACK into the gate window in r5 — the W1
 # family's freshest ⊕ row was two rounds old, the rotation-policy
 # trigger written into PARITY.md; it had left in r4 for
@@ -231,62 +207,6 @@ def sessionize_events(spark, sf_dir):
                 ).otherwise(0)
             ).alias("n_sessions"),
             F.count("*").alias("n_events"),
-        )
-    )
-
-
-# (filter_bbox_parts left the 50-entry gate window in r4 for
-# url_filter_docs: the P3 conjunctive pushed-down filter stays
-# gate-visible via q3_top_revenue_orders' date filters and the
-# clean_corpus_manifest quality cut, pushdown itself stays pinned by
-# tests/test_bucketing_pruning.py, and the exact parity stays pinned by
-# tests/test_urlfilter.py::test_filter_bbox_parts against the oracle
-# below.)
-FILTER_BBOX_ORACLE = """
-    SELECT p_partkey, p_size, p_retailprice
-    FROM part WHERE p_size > 10 AND p_retailprice > 500.0
-    """
-
-
-def filter_bbox_parts(spark, sf_dir):
-    """Conjunctive pushed-down filter (SURVEY §2.2 P3 min-size analog)."""
-    return (
-        _t(spark, sf_dir, "part")
-        .filter((F.col("p_size") > 10) & (F.col("p_retailprice") > 500.0))
-        .select("p_partkey", "p_size", "p_retailprice")
-    )
-
-
-# (cascade_case_lineitem left the 50-entry gate window in r4 for
-# markdown_convert_docs: the P4/A11 when-ladder cascade stays
-# gate-visible via ocr_method_histogram (exact/hamming/vote tier counts)
-# and quality_filter_docs' rule ladder, and the exact parity stays pinned
-# by tests/test_markdown.py::test_cascade_case_lineitem against the oracle
-# below.)
-CASCADE_CASE_ORACLE = """
-    SELECT CASE WHEN l_discount >= 0.08 THEN 'high'
-                WHEN l_discount >= 0.05 THEN 'mid'
-                WHEN l_discount > 0.0 THEN 'low'
-                ELSE 'zero' END AS bucket,
-           count(*) AS n, round(sum(l_extendedprice), 2) AS total_price
-    FROM lineitem GROUP BY 1
-    """
-
-
-def cascade_case_lineitem(spark, sf_dir):
-    """The confidence-cascade when-ladder (SURVEY §2.2 P4, §2.4 A11)."""
-    li = _t(spark, sf_dir, "lineitem")
-    bucket = (
-        F.when(F.col("l_discount") >= 0.08, "high")
-        .when(F.col("l_discount") >= 0.05, "mid")
-        .when(F.col("l_discount") > 0.0, "low")
-        .otherwise("zero")
-    )
-    return (
-        li.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
         )
     )
 
@@ -338,26 +258,6 @@ def anti_join_inactive_customers(spark, sf_dir):
     ).select("c_custkey", "c_name")
 
 
-# (semi_join_active_customers left the 50-entry gate window in r4 for the
-# clustering family: membership semantics stay gate-visible via
-# anti_join_inactive_customers (the null-aware complement) and
-# decontaminate_docs' broadcast hit-join, and the exact left-semi parity
-# stays pinned by tests/test_plans.py against the oracle below.)
-SEMI_JOIN_ORACLE = """
-    SELECT c_custkey, c_acctbal FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """
-
-
-def semi_join_active_customers(spark, sf_dir):
-    """Left-semi join (SURVEY §2.7 E3 membership)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(
-        o, c.c_custkey == o.o_custkey, "left_semi"
-    ).select("c_custkey", "c_acctbal")
-
-
 # (rank_orders_per_customer rotated BACK into the gate window in r5 per
 # the PARITY.md policy — the W5 family's freshest ⊕ row was two rounds
 # old; it had left in r4 for the curation family. The parity twin in
@@ -387,94 +287,6 @@ def rank_orders_per_customer(spark, sf_dir):
             F.col("o_orderkey").alias("orderkey"),
             F.col("o_totalprice").alias("totalprice"),
             "rnk",
-        )
-    )
-
-
-# (lag_event_deltas left the 50-entry gate window in r4 for the temporal
-# join family: lag() stays gate-visible in sessionize_events' own oracle,
-# and the exact parity stays pinned by tests/test_plans.py against the
-# oracle below.)
-LAG_DELTAS_ORACLE = """
-    WITH d AS (
-      SELECT event_type,
-             epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta_ms
-      FROM events)
-    SELECT event_type, count(delta_ms) AS n_deltas,
-           round(avg(delta_ms), 4) AS avg_delta_ms
-    FROM d GROUP BY event_type
-    """
-
-
-def lag_event_deltas(spark, sf_dir):
-    """lag/lead neighbor pass (SURVEY §2.5 W3, §2.3 J5)."""
-    ev = _t(spark, sf_dir, "events").withColumn("ms", F.unix_millis(F.col("ts").cast("timestamp")))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("delta_ms", F.col("ms") - F.lag("ms").over(w))
-        .groupBy("event_type")
-        .agg(
-            F.count("delta_ms").alias("n_deltas"),
-            F.round(F.avg("delta_ms"), 4).alias("avg_delta_ms"),
-        )
-    )
-
-
-# (corpus_stats_docs left the 50-entry gate window in r4 for
-# warc_extract_docs: the A6 corpus-stats multi-aggregate stays
-# gate-visible via quality_score_docs / ocr_word_length_analysis /
-# ocr_eval_metrics, and the exact parity stays pinned by
-# tests/test_plans.py::test_corpus_stats_docs against the oracle below.)
-CORPUS_STATS_ORACLE = """
-    SELECT lang, count(*) AS n_docs, round(avg(n_chars), 4) AS avg_chars,
-           round(stddev_pop(n_chars), 4) AS sd_chars,
-           min(n_chars) AS min_chars, max(n_chars) AS max_chars
-    FROM documents GROUP BY lang
-    """
-
-
-def corpus_stats_docs(spark, sf_dir):
-    """Corpus statistics aggregate (SURVEY §2.4 A6)."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            F.round(F.stddev_pop("n_chars"), 4).alias("sd_chars"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-        )
-    )
-
-
-# (positional_zip_tokens left the 50-entry gate window in r4 for
-# quality_filter_docs: the J4 positional zip-join stays gate-visible via
-# ocr_eval_metrics' arrays_zip span compare (plans/lineage.py), and the
-# exact parity stays pinned by tests/test_plans.py::test_positional_zip_tokens
-# against the oracle below.)
-POSITIONAL_ZIP_ORACLE = """
-    SELECT pos, count(*) AS n_at_pos, min(tok) AS min_tok, max(tok) AS max_tok
-    FROM (
-      SELECT unnest(string_split(text, ' ')) AS tok,
-             unnest(range(1, len(string_split(text, ' ')) + 1)) AS pos
-      FROM documents WHERE doc_id < 200) t
-    GROUP BY pos
-    """
-
-
-def positional_zip_tokens(spark, sf_dir):
-    """posexplode positional zip-join (SURVEY §2.3 J4). pos is 1-based to
-    match SQL subscripts."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return (
-        d.select(F.posexplode(F.split("text", " ")).alias("pos0", "tok"))
-        .select((F.col("pos0") + 1).alias("pos"), "tok")
-        .groupBy("pos")
-        .agg(
-            F.count("*").alias("n_at_pos"),
-            F.min("tok").alias("min_tok"),
-            F.max("tok").alias("max_tok"),
         )
     )
 
@@ -577,121 +389,6 @@ def quality_filter_docs(spark, sf_dir):
     return curation.quality_filter(inj, min_kept_lines=1)
 
 
-# gate slot freed for mm_audio_features (r4): O5 sorted-unique left the
-# 50-entry graded surface but stays pytest-covered
-# (tests/test_plans.py::test_sorted_unique_event_types) — its
-# distinct+sort shape is also visible via the rank/top-k entries
-def sorted_unique_event_types(spark, sf_dir):
-    """distinct + order (SURVEY §2.6 O5)."""
-    return _t(spark, sf_dir, "events").select("event_type").distinct().orderBy(
-        "event_type"
-    )
-
-
-# (mode_event_type_per_user left the 50-entry gate window in r4 for the
-# curation family: the A12 grouped-mode/vote semantics stay gate-visible
-# via ocr_extract_noisy's pinned 'vote' method tier, and the exact parity
-# stays pinned by tests/test_plans.py against the oracle below.)
-MODE_EVENT_ORACLE = """
-    SELECT user_id, event_type AS top_event FROM (
-      SELECT user_id, event_type,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY count(*) DESC, event_type) AS rn
-      FROM events GROUP BY user_id, event_type) t WHERE rn = 1
-    """
-
-
-def mode_event_type_per_user(spark, sf_dir):
-    """Grouped mode with deterministic tie-break (SURVEY §2.4 A12)."""
-    ev = _t(spark, sf_dir, "events")
-    counts = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
-    w = Window.partitionBy("user_id").orderBy(F.desc("c"), "event_type")
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("top_event"))
-    )
-
-
-# (value_islands_per_user left the 50-entry gate window in r4 for the
-# temporal join family: its lag -> change-flag -> grouped conditional-sum
-# shape stays gate-visible via sessionize_events, the running-sum window
-# via pack_sequences_docs, and the exact parity stays pinned by
-# tests/test_plans.py against the oracle below.)
-VALUE_ISLANDS_ORACLE = """
-    WITH f AS (
-      SELECT user_id, CASE WHEN value > 50 THEN 1 ELSE 0 END AS flag,
-             lag(CASE WHEN value > 50 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_flag
-      FROM events)
-    SELECT user_id,
-           CAST(sum(CASE WHEN flag = 1 AND (prev_flag IS NULL OR prev_flag = 0)
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_islands,
-           CAST(sum(flag) AS BIGINT) AS n_above
-    FROM f GROUP BY user_id
-    """
-
-
-def value_islands_per_user(spark, sf_dir):
-    """Threshold run-length islands over an ordered stream — the projection
-    segmentation (SURVEY §2.5 W1) as a relational window."""
-    ev = _t(spark, sf_dir, "events")
-    flag = F.when(F.col("value") > 50, 1).otherwise(0)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("flag", flag)
-        .withColumn("prev_flag", F.lag("flag").over(w))
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("flag") == 1)
-                    & (F.col("prev_flag").isNull() | (F.col("prev_flag") == 0)),
-                    1,
-                ).otherwise(0)
-            ).alias("n_islands"),
-            F.sum("flag").alias("n_above"),
-        )
-    )
-
-
-# (json_props_sum left the 50-entry gate window in r4 for the quality-LM
-# family: JSON handling stays gate-visible via ocr_result_json_roundtrip's
-# to_json/from_json round-trip, and the json-path extraction parity stays
-# pinned by tests/test_plans.py against the oracle below.)
-JSON_PROPS_ORACLE = """
-    SELECT event_type,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS total_k
-    FROM events GROUP BY event_type
-    """
-
-
-def json_props_sum(spark, sf_dir):
-    """JSON extraction + grouped sum (SURVEY §2.8 json sinks analog)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.sum(F.get_json_object("props", "$.k").cast("bigint")).alias("total_k")
-    )
-
-
-# (events_per_day left the 50-entry gate window in r4 for the curation
-# family: timestamp handling stays gate-visible via sessionize_events /
-# lag_event_deltas, and the date_trunc bucketing parity stays pinned by
-# tests/test_plans.py against the oracle below.)
-EVENTS_PER_DAY_ORACLE = """
-    SELECT CAST(date_trunc('day', ts) AS DATE) AS day, count(*) AS n
-    FROM events GROUP BY 1
-    """
-
-
-def events_per_day(spark, sf_dir):
-    """Date bucketing (SURVEY §2.8 F18 timestamps)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").alias("n"))
-
-
 # (rollup_order_priority rotated BACK into the gate window in r5 per
 # the PARITY.md policy — its freshest ⊕ row was two rounds old; it had
 # left in r4 for the quality-LM family. The parity twin in
@@ -720,29 +417,6 @@ def rollup_order_priority(spark, sf_dir):
             F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
             "n",
             "total",
-        )
-    )
-
-
-# (distinct_users_per_type left the 50-entry gate window in r4 for
-# vocab_kmv_docs, which grades the SAME exact distinct-count shape in its
-# vocab_exact column plus the KMV sketch upgrade; the exact parity stays
-# pinned by tests/test_plans.py::test_distinct_users_per_type against the
-# oracle below.)
-DISTINCT_USERS_ORACLE = """
-    SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-    FROM events GROUP BY event_type
-    """
-
-
-def distinct_users_per_type(spark, sf_dir):
-    """Exact distinct-count aggregate (expand + two-phase agg in Spark)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.countDistinct("user_id").alias("n_users"),
-            F.count("*").alias("n_events"),
         )
     )
 
@@ -798,7 +472,7 @@ def vocab_kmv_docs(spark, sf_dir):
         .select(                         # map-side partial agg on one core
             "lang",
             F.explode(
-                F.expr(_gram_windows_expr(2, with_pos=False, distinct=False))
+                F.expr(_gram_windows_expr(2, distinct=False))
             ).alias("g"),
         )
     )
@@ -820,12 +494,6 @@ def vocab_kmv_docs(spark, sf_dir):
     )
     kmv = sketches.kmv_distinct(lg, ["lang"], "g", k=64)
     return exact.join(kmv, "lang")
-
-
-# (running_sum_per_user was retired from the 50-entry gate window in r3
-# in favor of pdf_extract_docs: the explicit cumulative-sum frame it
-# pinned stays exercised by value_islands_per_user / sessionize_events,
-# and the window family keeps rank/lag/mode coverage.)
 
 
 @q(
@@ -891,51 +559,6 @@ def pdf_extract_docs(spark, sf_dir):
     key_type = docs.schema["doc_id"].dataType.simpleString()
     pdfs = docs.mapInPandas(build, f"doc_id {key_type}, payload binary")
     return pdf_texts(pdfs, layout=True)
-
-
-# gate slot freed for html_main_content_docs (r4): the TPC-H q13 shape
-# left the 50-entry graded surface but stays pytest-covered
-# (tests/test_plans.py::test_customer_order_distribution) — its
-# outer-join + two-level aggregate shape is also visible via
-# rollup_order_priority and distinct_users_per_type
-def customer_order_distribution(spark, sf_dir):
-    """TPC-H q13 shape — outer join preserving empty groups, then a second
-    aggregation over the group sizes (the two-level aggregate no single
-    groupBy can express; zero-order customers must survive the join)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-    return per_cust.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
-
-
-# (percentile_order_prices left the 50-entry gate window in r4 in favor
-# of repetition_signals_docs: the interpolated-percentile ≡ quantile_cont
-# parity stays pinned by tests/test_plans.py::test_percentile_order_prices
-# against the DuckDB oracle below, and p50/p90 stays gate-adjacent via
-# plans/lineage.py's metrics.)
-PERCENTILE_ORACLE = """
-    SELECT o_orderpriority AS priority,
-           round(quantile_cont(o_totalprice, 0.5), 2) AS median_price,
-           round(quantile_cont(o_totalprice, 0.9), 2) AS p90_price,
-           count(*) AS n
-    FROM orders GROUP BY 1
-    """
-
-
-def percentile_order_prices(spark, sf_dir):
-    """Exact interpolated percentiles (Spark `percentile` ≡ DuckDB
-    `quantile_cont`, both linear interpolation) — the distribution-summary
-    aggregate the reference's evaluation scripts compute in pandas."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy(F.col("o_orderpriority").alias("priority")).agg(
-        F.round(F.percentile("o_totalprice", F.lit(0.5)), 2).alias("median_price"),
-        F.round(F.percentile("o_totalprice", F.lit(0.9)), 2).alias("p90_price"),
-        F.count("*").alias("n"),
-    )
 
 
 # =============================================================================
@@ -2754,42 +2377,6 @@ def decontaminate_docs(spark, sf_dir):
         docs.where(F.col("doc_id") % 97 != 0),
         docs.where(F.col("doc_id") % 97 == 0),
         n=3,
-    )
-
-
-# (pack_sequences_docs left the 50-entry gate window in r5 for the
-# rotated-back relational cohort: the shard-partitioned running-sum
-# window shape stays gate-visible via sessionize_events' lag window and
-# rank_orders_per_customer's row_number (both ⊕ again this round).
-# Exact parity stays pinned by
-# tests/test_curation.py::test_pack_sequences_docs_parity against the
-# oracle below.)
-PACK_SEQUENCES_ORACLE = """
-    WITH sized AS (
-      SELECT doc_id, doc_id % 16 AS shard,
-             len(string_split(text, ' ')) AS n_tokens
-      FROM documents),
-    packed AS (
-      SELECT doc_id, shard, n_tokens,
-             coalesce(sum(n_tokens) OVER (
-               PARTITION BY shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS cum_before
-      FROM sized)
-    SELECT doc_id, shard, n_tokens,
-           CAST(floor(cum_before / 256.0) AS BIGINT) AS pack_id,
-           CAST(cum_before % 256 AS BIGINT) AS pack_offset
-    FROM packed
-    """
-
-
-def pack_sequences_docs(spark, sf_dir):
-    """GPT-style training-sequence packing: concat docs in doc_id order
-    per shard, slice into 256-token sequences, report each doc's pack
-    and offset. Shard-partitioned running-sum window (a global window
-    would serialize) — operators/curation.py."""
-    return curation.pack_sequences(
-        _t(spark, sf_dir, "documents"), budget=256, n_shards=16
     )
 
 

@@ -47,15 +47,6 @@ _ENTITIES_PRE = [  # named entities decoded BEFORE the numeric pass
     ("&quot;", '"'),
     ("&nbsp;", " "),
 ]
-# the five predefined XML 1.0 §4.6 entities (minus amp, which is always
-# last) — feeds/sitemaps decode THIS set instead of the HTML one
-# (&apos; is predefined in XML; &nbsp; is NOT defined there)
-XML_ENTITIES_PRE = [
-    ("&lt;", "<"),
-    ("&gt;", ">"),
-    ("&quot;", '"'),
-    ("&apos;", "'"),
-]
 _ENTITY_AMP = ("&amp;", "&")  # ampersand LAST (see module docstring)
 
 # numeric character references (ADVICE/VERDICT r3 item 9): &#NNN; decimal
@@ -112,13 +103,13 @@ def _numeric_entities_expr(out: Column) -> Column:
     return F.array_join(F.transform(F.split(out, "&#"), piece), "")
 
 
-def decode_entities_expr(out: Column, pre=None) -> Column:
+def decode_entities_expr(out: Column) -> Column:
     """The shared entity-decode tail (named set → numeric refs →
     ampersand LAST) — one implementation for every leg that decodes
     entities (main-text strip here, Markdown render in markdown.py,
-    feed/XML parsing via ``pre=XML_ENTITIES_PRE``), so an entity fix —
-    and the amp-LAST ordering contract — lands everywhere at once."""
-    for ent, rep in pre if pre is not None else _ENTITIES_PRE:
+    page metadata in metadata.py), so an entity fix — and the amp-LAST
+    ordering contract — lands everywhere at once."""
+    for ent, rep in _ENTITIES_PRE:
         out = F.replace(out, F.lit(ent), F.lit(rep))
     out = _numeric_entities_expr(out)
     return F.replace(out, F.lit(_ENTITY_AMP[0]), F.lit(_ENTITY_AMP[1]))

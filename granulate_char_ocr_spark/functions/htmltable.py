@@ -35,8 +35,8 @@ cell text explicitly replaces U+001F with a space before joining
 (review finding r4: without this, one numeric entity desynchronizes
 ``cells``' split count from ``n_cells``).
 
-Documented scope bounds (the regex-parse tradeoff, same contract as
-the sitemap/feed parsers): NESTED tables truncate — the inner
+Documented scope bounds (the regex-parse tradeoff): NESTED tables
+truncate — the inner
 ``</table>`` ends the outer lazy match, so the outer table yields its
 rows up to the nesting point and the inner table is extracted as its
 own table_idx (row recall is preserved, attribution shifts); legacy

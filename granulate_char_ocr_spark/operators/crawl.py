@@ -217,230 +217,6 @@ def _governing_groups(
     )
 
 
-def robots_crawl_delay(
-    robots: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    agent: str | None = None,
-) -> DataFrame:
-    """(host, robots_txt) -> (host, crawl_delay): the governing group's
-    ``Crawl-delay`` in seconds — the de-facto politeness directive
-    (not in RFC 9309 but honored by most crawlers). Group selection is
-    the same machinery as robots_rules; when a group states several
-    delays the MAXIMUM non-negative one wins — the strictest directive
-    is the conservative reading for the site (review finding r4: min
-    would fetch faster than the site asked) — and non-numeric values
-    are ignored. Hosts without a valid directive emit no row (crawler
-    default applies)."""
-    lines_g = _grouped_lines(robots, host_col, text_col)
-    groups = _governing_groups(lines_g, host_col, agent)
-    # try_cast: ANSI mode (Spark 4 default) would THROW on a malformed
-    # delay value; a junk directive must be ignored, not kill the job
-    delay = F.col("value").try_cast("double")
-    delays = lines_g.filter(
-        (F.col("field") == "crawl-delay")
-        & delay.isNotNull()
-        & (delay >= 0)
-    )
-    return (
-        delays.join(F.broadcast(groups), [host_col, "gid"])
-        .groupBy(host_col)
-        .agg(F.max(delay).alias("crawl_delay"))
-    )
-
-
-def host_budget_sample(
-    urls: DataFrame,
-    k: int,
-    host_col: str = "host",
-    url_col: str = "url",
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministic per-host frontier budget: keep at most ``k`` URLs
-    per host, chosen by hash rank — the politeness/anti-spam cap every
-    crawl scheduler applies before fetch (a single host must not own
-    the batch).
-
-    Selection is ``xxhash64(url, seed)``-ordered, so it is
-    partition-layout-invariant and stable across retries (the same
-    property as operators/sampling.py), and changing ``seed`` rotates
-    the kept set without re-ranking semantics. One exchange on host;
-    the per-host window sort is bounded by per-host frontier size —
-    at 100 TB the frontier is consumed in batches, so the sort input
-    per host is the batch slice, not the full crawl history. Ties on
-    the 64-bit hash are broken by the URL itself, making the kept set
-    a pure function of (url set, k, seed)."""
-    w = Window.partitionBy(host_col).orderBy(
-        F.xxhash64(F.col(url_col), F.lit(seed)), F.col(url_col)
-    )
-    return (
-        urls.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def sitemap_urls(
-    df: DataFrame, xml_col: str = "sitemap_xml", key_col: str = "host"
-) -> DataFrame:
-    """(key, sitemap_xml) -> (key, loc, lastmod): the <url> entries of a
-    sitemap (sitemaps.org schema), parsed as pure column expressions —
-    extract <url> blocks, then each block's <loc>/<lastmod> (lastmod
-    NULL when absent). Namespace prefixes and attribute noise inside
-    the tags are not handled (the published schema doesn't prefix these
-    elements); <sitemapindex> files yield zero rows here — feed their
-    child sitemaps back through this operator."""
-    blocks = F.regexp_extract_all(
-        F.col(xml_col), F.lit(r"(?is)<url>(.*?)</url>"), 1
-    )
-    entries = F.transform(
-        blocks,
-        lambda b: F.struct(
-            F.regexp_extract(
-                b, r"(?is)<loc>[ \t\r\n]*([^<]*?)[ \t\r\n]*</loc>", 1
-            ).alias("loc"),
-            F.regexp_extract(
-                b,
-                r"(?is)<lastmod>[ \t\r\n]*([^<]*?)[ \t\r\n]*</lastmod>",
-                1,
-            ).alias("lastmod"),
-        ),
-    )
-    return (
-        df.select(key_col, F.explode(entries).alias("_e"))
-        .select(
-            key_col,
-            F.col("_e.loc").alias("loc"),
-            F.nullif(F.col("_e.lastmod"), F.lit("")).alias("lastmod"),
-        )
-        .filter(F.col("loc") != "")
-    )
-
-
-_CDATA = r"(?s)<!\[CDATA\[(.*?)\]\]>"
-
-
-def _feed_text(c):
-    """CDATA-unwrap, XML-entity-decode and trim an extracted feed field
-    (pure column expressions). Entity decode is the SHARED
-    functions/html.py tail with the predefined-XML named set
-    (lt/gt/quot/apos — no &nbsp;, which XML doesn't define) — the
-    named-first/amp-LAST ordering contract and the numeric
-    character-reference pass live in one place (review finding r4)."""
-    from granulate_char_ocr_spark.functions.html import (
-        XML_ENTITIES_PRE,
-        decode_entities_expr,
-    )
-
-    out = F.regexp_replace(c, F.lit(_CDATA), F.lit("$1"))
-    return F.trim(decode_entities_expr(out, pre=XML_ENTITIES_PRE))
-
-
-def feed_entries(
-    df: DataFrame, xml_col: str = "feed_xml", key_col: str = "host"
-) -> DataFrame:
-    """(key, feed_xml) -> (key, fmt, link, title, published): the
-    entries of an RSS 2.0 or Atom 1.0 feed — the third crawl-discovery
-    channel next to sitemaps and the link graph (feeds surface NEW
-    urls faster than either; every crawl scheduler polls them).
-
-    Parsed as pure column expressions, one regex family per format:
-
-    - RSS 2.0 (RSS Advisory Board spec): ``<item>`` blocks; ``link`` is
-      the ``<link>`` element TEXT, ``published`` is ``<pubDate>``.
-    - Atom 1.0 (RFC 4287): ``<entry>`` blocks; ``link`` is the ``href``
-      ATTRIBUTE of the first ``<link>`` whose ``rel`` is absent or
-      ``alternate`` (§4.2.7.2: no rel means alternate), ``published``
-      prefers ``<published>``, falling back to ``<updated>``.
-
-    Both formats can appear in one corpus (or one row), so both block
-    families are extracted and concatenated before the single explode.
-    Titles and links are CDATA-unwrapped and XML-entity-decoded;
-    ``published`` stays the raw date string (RFC 822 vs RFC 3339 —
-    normalization is the caller's tier). Entries without a link are
-    dropped (nothing to fetch). Namespace-prefixed dialects (RSS 1.0 /
-    RDF) yield zero rows here — documented out of scope, as with
-    <sitemapindex> above. Per row the work is a bounded regex cascade
-    in whole-stage codegen; the explode is the only row multiplier —
-    the same 100 TB posture as ``sitemap_urls``."""
-    xml = F.col(xml_col)
-    rss_blocks = F.regexp_extract_all(
-        xml, F.lit(r"(?is)<item\b[^>]*>(.*?)</item>"), 1
-    )
-    atom_blocks = F.regexp_extract_all(
-        xml, F.lit(r"(?is)<entry\b[^>]*>(.*?)</entry>"), 1
-    )
-    title_re = r"(?is)<title\b[^>]*>(.*?)</title>"
-
-    def rss_entry(b):
-        return F.struct(
-            F.lit("rss").alias("fmt"),
-            _feed_text(
-                F.regexp_extract(b, r"(?is)<link\b[^>]*>(.*?)</link>", 1)
-            ).alias("link"),
-            _feed_text(F.regexp_extract(b, title_re, 1)).alias("title"),
-            F.trim(
-                F.regexp_extract(
-                    b, r"(?is)<pubDate\b[^>]*>(.*?)</pubDate>", 1
-                )
-            ).alias("published"),
-        )
-
-    # Atom link: first <link> element carrying rel="alternate" or no
-    # rel at all, href pulled from inside that one tag. The no-rel
-    # branch must reject only a rel ATTRIBUTE — i.e. 'rel=' preceded by
-    # whitespace — not the substring 'rel=' inside an href value
-    # ('<link href="…/v?rel=author"/>' is a valid bare link; review
-    # finding r4). The negative lookahead is Java-regex-only (this
-    # pattern never needs a DuckDB mirror — the feed leg is
-    # pytest-verified); a URL containing a literal space before 'rel='
-    # would still be rejected, but spaces are illegal in URLs.
-    _ATOM_ALT_LINK = (
-        r"(?is)<link\b(?:[^>]*[ \t\r\n]rel\s*=\s*[\"']alternate[\"'][^>]*"
-        r"|(?:[^>\s]|\s(?!rel\s*=))*)>"
-    )
-
-    def atom_link(b):
-        tag = F.regexp_extract(b, _ATOM_ALT_LINK, 0)
-        return _feed_text(
-            F.regexp_extract(
-                tag, r"(?is)\bhref\s*=\s*[\"']([^\"']*)[\"']", 1
-            )
-        )
-
-    def atom_entry(b):
-        pub = F.trim(
-            F.regexp_extract(
-                b, r"(?is)<published\b[^>]*>(.*?)</published>", 1
-            )
-        )
-        upd = F.trim(
-            F.regexp_extract(b, r"(?is)<updated\b[^>]*>(.*?)</updated>", 1)
-        )
-        return F.struct(
-            F.lit("atom").alias("fmt"),
-            atom_link(b).alias("link"),
-            _feed_text(F.regexp_extract(b, title_re, 1)).alias("title"),
-            F.when(pub != "", pub).otherwise(upd).alias("published"),
-        )
-
-    entries = F.concat(
-        F.transform(rss_blocks, rss_entry),
-        F.transform(atom_blocks, atom_entry),
-    )
-    return (
-        df.select(key_col, F.explode(entries).alias("_e"))
-        .select(
-            key_col,
-            F.col("_e.fmt").alias("fmt"),
-            F.col("_e.link").alias("link"),
-            F.nullif(F.col("_e.title"), F.lit("")).alias("title"),
-            F.nullif(F.col("_e.published"), F.lit("")).alias("published"),
-        )
-        .filter(F.col("link") != "")
-    )
-
-
 def apply_robots(
     urls: DataFrame,
     rules: DataFrame,
@@ -489,95 +265,6 @@ def apply_robots(
     return j.withColumn("allowed", best["is_allow"]).drop("_rules", "_path")
 
 
-# --- CDX: the crawl-index lookup format --------------------------------
-
-# A CDXJ line (the Common Crawl index layout) is 'SURT timestamp JSON':
-#   org,example)/path 20240101123456 {"url": "...", "status": "200",
-#   "mime": "text/html", "digest": "sha1:..", "length": "1234",
-#   "offset": "456", "filename": "crawl/.../x.warc.gz"}
-# Parsing it is how a pipeline FINDS records inside a petabyte WARC
-# store without reading the WARCs — the index is the random-access
-# layer the ingest planner queries.
-_CDX_JSON = r"^\S+ \S+ (.*)$"
-_CDX_TS = r"^\S+ (\S+) "
-
-
-def surt_expr(url):
-    """URL -> SURT key (Sort-friendly URI Reordering Transform): host
-    lowercased, leading 'www.' dropped, dot-segments REVERSED and
-    comma-joined, then ')' and the lowercased path. The key Common
-    Crawl's index sorts on — same-site rows become one contiguous,
-    prefix-scannable range. Query strings are dropped (the documented
-    simplification vs CC's full canonicalizer, which also strips
-    sessions params — our canonical_url_expr handles that separately).
-    Pure codegen."""
-    from granulate_char_ocr_spark.operators.urlfilter import (
-        _RE_HOST,
-        _RE_PATH,
-    )
-
-    host = F.lower(F.regexp_extract(url, _RE_HOST, 1))
-    host = F.regexp_replace(host, r"^www\.", "")
-    path = F.lower(F.regexp_extract(url, _RE_PATH, 1))
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    return F.concat(
-        F.array_join(F.reverse(F.split(host, r"\.")), ","),
-        F.lit(")"),
-        path,
-    )
-
-
-def cdx_records(df: DataFrame, line_col: str = "cdx_line") -> DataFrame:
-    """(…, cdx_line) -> (…, surt, ts, url, status, mime, digest,
-    length, offset, filename): one CDXJ index line parsed to typed
-    columns. get_json_object is JVM-side; numeric fields use try_cast
-    (ANSI mode throws on junk — CLAUDE.md), so a malformed line yields
-    NULL fields, never a task failure. Zero exchanges."""
-    line = F.col(line_col)
-    j = F.regexp_extract(line, _CDX_JSON, 1)
-
-    def g(field):
-        return F.get_json_object(j, f"$.{field}")
-
-    # a carried column named like one of the nine outputs (a frontier
-    # row that already has 'url'/'status') would duplicate the name
-    # and make every downstream F.col ambiguous — the parse wins
-    out_names = {
-        "surt", "ts", "url", "status", "mime",
-        "digest", "length", "offset", "filename",
-    }
-    carried = [
-        c for c in df.columns if c != line_col and c not in out_names
-    ]
-    return df.select(
-        *carried,
-        F.substring_index(line, " ", 1).alias("surt"),
-        F.regexp_extract(line, _CDX_TS, 1).alias("ts"),
-        g("url").alias("url"),
-        g("status").try_cast("int").alias("status"),
-        g("mime").alias("mime"),
-        g("digest").alias("digest"),
-        g("length").try_cast("bigint").alias("length"),
-        g("offset").try_cast("bigint").alias("offset"),
-        g("filename").alias("filename"),
-    )
-
-
-def cdx_first_by_digest(cdx: DataFrame) -> DataFrame:
-    """Keep ONE index row per content digest — the earliest capture
-    (ties broken by surt) — the crawl-index twin of exact dedup: plan
-    WARC reads for distinct content only, skipping re-crawls of
-    unchanged pages. One exchange (hash by digest); rows with a NULL
-    digest (malformed lines) are dropped — nothing to fetch."""
-    w = Window.partitionBy("digest").orderBy("ts", "surt")
-    return (
-        cdx.filter(F.col("digest").isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def crawl_schedule(
     frontier: DataFrame,
     ranks: DataFrame,
@@ -594,9 +281,8 @@ def crawl_schedule(
                  a URL with no diff row is new → 1.0;
                  'removed' pages leave the schedule entirely.
 
-    Capped per host (politeness twin of host_budget_sample, but
-    priority-ranked rather than hash-sampled) and ordered so the
-    fetcher drains highest-value URLs first.
+    Capped per host (the politeness budget, priority-ranked) and
+    ordered so the fetcher drains highest-value URLs first.
 
     Plan shape at scale: the rank table is hosts (small — broadcast),
     the diff join is one url-key shuffle, the budget cap one host-key
@@ -609,7 +295,7 @@ def crawl_schedule(
     newly-discovered sites are crawlable but never outrank known
     authority."""
     # project first: a frontier carrying its own 'rank'/'status'
-    # columns (cdx_records output does) would make the joins ambiguous
+    # columns would make the joins ambiguous
     f = frontier.select("url", "host").join(
         F.broadcast(ranks.select("host", "rank")), "host", "left"
     )
@@ -638,99 +324,3 @@ def crawl_schedule(
         .filter(F.col("_rn") <= per_host_budget)
         .drop("_rn")
     )
-
-
-def robots_sitemaps(
-    robots: DataFrame, host_col: str = "host", text_col: str = "robots_txt"
-) -> DataFrame:
-    """(host, robots_txt) -> (host, sitemap_url): the ``Sitemap:``
-    lines — per RFC 9309 §2.3 / sitemaps.org these are GLOBAL (outside
-    any User-agent group), so every such line counts regardless of
-    grouping. Completes the discovery chain: robots_sitemaps →
-    sitemap_urls → frontier. Reuses the grouped-line parse (comments,
-    field case, whitespace already handled there)."""
-    lines = _grouped_lines(robots, host_col, text_col)
-    return (
-        lines.filter(
-            (F.col("field") == "sitemap") & (F.col("value") != "")
-        )
-        .select(host_col, F.col("value").alias("sitemap_url"))
-        .distinct()
-    )
-
-
-_REDIRECT_STATUSES = (301, 302, 303, 307, 308)
-
-
-def resolve_redirects(
-    pages: DataFrame, max_hops: int = 5
-) -> DataFrame:
-    """(url, status, location) -> (url, final_url, n_hops): follow
-    HTTP redirect chains relationally so the corpus keys pages by
-    where the content actually lives (the crawl-side twin of the
-    canonical-URL dedup — a 301 is the server's own canonicalization
-    statement).
-
-    ``location`` is absolutized against the source URL when relative
-    (RFC 9110 §10.2.2 allows both): absolute URLs pass through,
-    '//host/path' network-path references (RFC 3986 — common on
-    CDN-fronted sites) take the source's scheme, '/path' targets keep
-    the source's full scheme://authority (port included), anything
-    else (rare relative-path form) is treated as unresolvable and ends
-    the chain. Duplicate fetch records for the same redirecting URL
-    (recrawls) fold to one deterministic hop (min destination) so the
-    output stays one row per url. Each hop is one equi-join of the url
-    table against the (bounded, redirect-only) hop map — ``max_hops``
-    joins total, the standard browser/crawler hop cap; loops and
-    over-long chains stop at the cap with ``n_hops = max_hops`` rather
-    than spinning."""
-    from granulate_char_ocr_spark.operators.urlfilter import _RE_SCHEME
-
-    loc = F.col("location")
-    # scheme://authority INCLUDING any port — _RE_HOST stops at ':'
-    # and dropped the port (review finding r4)
-    src_origin = F.regexp_extract(
-        "url", r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1
-    )
-    src_scheme = F.regexp_extract("url", _RE_SCHEME, 1)
-    absolute = (
-        F.when(loc.rlike(r"^[a-zA-Z][a-zA-Z0-9+.-]*://"), loc)
-        .when(loc.startswith("//"), F.concat(src_scheme, F.lit(":"), loc))
-        .when(loc.startswith("/"), F.concat(src_origin, loc))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    hop = (
-        pages.filter(
-            F.col("status").isin(*_REDIRECT_STATUSES)
-            & F.col("location").isNotNull()
-        )
-        .select(F.col("url").alias("_src"), absolute.alias("_dst"))
-        .filter(F.col("_dst").isNotNull())
-        # recrawl duplicates would fan out multiplicatively across the
-        # hop joins (2 rows -> 2^max_hops); min() is the deterministic
-        # fold (review finding r4)
-        .groupBy("_src")
-        .agg(F.min("_dst").alias("_dst"))
-    )
-    cur = pages.select(
-        "url",
-        F.col("url").alias("final_url"),
-        F.lit(0).alias("n_hops"),
-    )
-    for _ in range(max_hops):
-        cur = (
-            cur.join(
-                hop.withColumnRenamed("_src", "final_url"),
-                "final_url",
-                "left",
-            )
-            .select(
-                "url",
-                F.coalesce("_dst", "final_url").alias("final_url"),
-                (
-                    F.col("n_hops")
-                    + F.when(F.col("_dst").isNotNull(), 1).otherwise(0)
-                ).alias("n_hops"),
-            )
-        )
-    return cur.select("url", "final_url", "n_hops")

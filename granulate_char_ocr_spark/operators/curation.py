@@ -1,7 +1,6 @@
 """Corpus-curation operators an LLM training-data pipeline runs after the
-text-analysis pass: PII redaction, benchmark decontamination, training-
-sequence packing, TF-IDF keyword extraction, and the fused Gopher/C4
-quality gate. Column expressions (whole-stage codegen), except TF-IDF's
+text-analysis pass: PII redaction, benchmark decontamination, TF-IDF
+keyword extraction, and the fused Gopher/C4 quality gate. Column expressions (whole-stage codegen), except TF-IDF's
 term counts, a per-document text kernel (operators/doc_kernel.py). Each
 is graded with an exact DuckDB oracle, at the gate in driver_queries.py
 or in tests/.
@@ -116,43 +115,6 @@ def decontaminate(
             F.when(F.col("n_shared_grams").isNotNull(), 1)
             .otherwise(0)
             .alias("contaminated"),
-        )
-    )
-
-
-def pack_sequences(
-    docs: DataFrame, budget: int = 256, n_shards: int = 16
-) -> DataFrame:
-    """(doc_id, shard, n_tokens, pack_id, pack_offset): GPT-style
-    sequence packing — documents are concatenated in doc_id order and
-    sliced into fixed ``budget``-token training sequences, documents
-    straddling boundaries (the standard concat-then-chunk scheme; each
-    doc reports the pack and offset where it starts).
-
-    Packing is per shard (doc_id mod n_shards), which is both what real
-    pipelines do (each worker packs its own shard) and what keeps the
-    running-sum window partitioned — a global unpartitioned window would
-    serialize on one task at scale."""
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        docs.select(
-            "doc_id",
-            (F.col("doc_id") % n_shards).alias("shard"),
-            F.size(F.split("text", " ")).alias("n_tokens"),
-        )
-        .withColumn(
-            "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        )
-        .select(
-            "doc_id",
-            "shard",
-            "n_tokens",
-            F.floor(F.col("cum_before") / budget).alias("pack_id"),
-            (F.col("cum_before") % budget).alias("pack_offset"),
         )
     )
 

@@ -39,18 +39,6 @@ def html_main_contents(
     )
 
 
-def jsonld_metadata(
-    df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
-) -> DataFrame:
-    """(key, html) -> (key, ld_type, ld_headline, ld_author): the
-    schema.org JSON-LD fields of the page's first ld+json block
-    (functions/metadata.jsonld_cols) — JVM-side get_json_object, NULL
-    on absent/malformed JSON, zero exchanges."""
-    from granulate_char_ocr_spark.functions.metadata import jsonld_cols
-
-    return df.select(key_col, *jsonld_cols(F.col(html_col)))
-
-
 def html_tables(
     df: DataFrame, html_col: str = "html", key_col: str = "doc_id"
 ) -> DataFrame:

@@ -66,8 +66,8 @@ def partition_lineage(
             F.sum(n_chars.cast("long")).alias("n_chars"),
             # per-partition span-length distribution (reference evaluation
             # record's distribution block, evaluate_new_testdata.py:86-95):
-            # exact interpolated percentiles, same machinery the oracled
-            # percentile_order_prices query pins cross-engine
+            # exact linearly interpolated percentiles, numpy's default
+            # method (tests/test_pipeline.py checks both against it)
             F.percentile(n_chars, [0.5, 0.9]).alias("_pcts"),
             acc,
         )

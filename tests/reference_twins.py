@@ -171,8 +171,8 @@ def _hashed_grams_expr(
     (tests/test_dsir.py) and as the DuckDB-oracle-shaped build. The gram
     windows come from dedup's shared ``_gram_windows_expr`` so DSIR's gram
     space can never silently diverge from the dedup/decontamination one."""
-    uni = _gram_windows_expr(1, with_pos=False, distinct=False)
-    bi = _gram_windows_expr(2, with_pos=False, distinct=False)
+    uni = _gram_windows_expr(1, distinct=False)
+    bi = _gram_windows_expr(2, distinct=False)
     return (
         widen_narrow_scan(df)
         .withColumn("_toks", F.split(F.col(text_col), " "))
@@ -281,9 +281,9 @@ def _ngram_jaccard_pairs_joined(
 # test pins the Spark expression equal to its twin.
 
 
-def decode_entities_python(out: str, pre=None) -> str:
+def decode_entities_python(out: str) -> str:
     """Python twin of decode_entities_expr."""
-    for ent, rep in pre if pre is not None else _ENTITIES_PRE:
+    for ent, rep in _ENTITIES_PRE:
         out = out.replace(ent, rep)
     out = _numeric_entities_python(out)
     return out.replace(*_ENTITY_AMP)
@@ -464,40 +464,6 @@ def indexability_python(
         bool(re.search(_S404_MARK, body)) and len(body) < _S404_BODY_MAX
     )
     return {"noindex": noindex, "nofollow": nofollow, "soft404": soft404}
-
-
-def jsonld_python(html: str) -> dict[str, str | None]:
-    """Python twin of metadata.jsonld_cols (pinned on the test matrix;
-    exotic JSON renderings may differ from Jackson's compact form — the
-    tests stay within the common subset)."""
-    import json
-
-    m = re.search(_LD_SCRIPT, html)
-    out = {"ld_type": None, "ld_headline": None, "ld_author": None}
-    if not m or not m.group(1).strip():
-        return out
-    try:
-        doc = json.loads(m.group(1))
-    except ValueError:
-        return out
-    if not isinstance(doc, dict):
-        return out
-
-    def render(v):
-        if v is None:
-            return None
-        if isinstance(v, str):
-            return v
-        return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-
-    out["ld_type"] = render(doc.get("@type"))
-    out["ld_headline"] = render(doc.get("headline"))
-    author = doc.get("author")
-    if isinstance(author, dict) and isinstance(author.get("name"), str):
-        out["ld_author"] = author["name"]
-    else:
-        out["ld_author"] = render(author)
-    return out
 
 
 _UNDISPLAY_TABLE = str.maketrans(CP1252_DISPLAY, C1_CONTROLS)

@@ -1,14 +1,11 @@
 """Crawl-maintenance operators: snapshot diff (full-outer), relational
-robots.txt parse + apply, gate parity, and the r4 demotion parities."""
+robots.txt parse + apply, the crawl schedule, and query parity."""
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.operators.crawl import (
     apply_robots,
-    host_budget_sample,
-    robots_crawl_delay,
     robots_rules,
     snapshot_diff,
 )
@@ -196,63 +193,6 @@ def test_apply_robots_wildcard_and_anchor(spark):
     assert got == {1: False, 2: True, 3: False, 4: True}
 
 
-def test_robots_crawl_delay_parse(spark):
-    df = spark.createDataFrame(
-        [
-            # governing '*' group: the STRICTEST (max) valid delay
-            # wins; junk and negative values ignored
-            (
-                "a",
-                "User-agent: *\nCrawl-delay: 10\nCrawl-delay: 2.5\n"
-                "Crawl-delay: junk\nCrawl-delay: -3\n",
-            ),
-            # delay in a foreign group does not apply
-            ("b", "User-agent: other\nCrawl-delay: 9\n"),
-            # only junk -> no row
-            ("c", "User-agent: *\nCrawl-delay: soon\n"),
-        ],
-        "host string, robots_txt string",
-    )
-    got = {r.host: r.crawl_delay for r in robots_crawl_delay(df).collect()}
-    assert got == {"a": 10.0}
-
-
-def test_robots_crawl_delay_agent_group(spark):
-    txt = (
-        "User-agent: *\nCrawl-delay: 1\n\n"
-        "User-agent: mybot\nCrawl-delay: 7\n"
-    )
-    df = spark.createDataFrame(
-        [("h", txt)], "host string, robots_txt string"
-    )
-    [star] = robots_crawl_delay(df).collect()
-    [mine] = robots_crawl_delay(df, agent="MyBot").collect()
-    assert star.crawl_delay == 1.0 and mine.crawl_delay == 7.0
-
-
-def test_host_budget_sample_caps_and_is_deterministic(spark):
-    urls = spark.createDataFrame(
-        [(f"https://h{i}/p/{j}", f"h{i}")
-         for i in range(3) for j in range(40)],
-        "url string, host string",
-    )
-    kept = host_budget_sample(urls, 5)
-    got = kept.groupBy("host").count().collect()
-    assert {r.host: r["count"] for r in got} == {"h0": 5, "h1": 5, "h2": 5}
-    # partition-layout invariance + determinism
-    a = {r.url for r in kept.collect()}
-    b = {r.url for r in host_budget_sample(urls.repartition(7), 5).collect()}
-    assert a == b
-    # a different seed rotates the kept set
-    c = {r.url for r in host_budget_sample(urls, 5, seed=1).collect()}
-    assert a != c
-    # hosts under budget keep everything
-    small = spark.createDataFrame(
-        [("https://s/1", "s"), ("https://s/2", "s")], "url string, host string"
-    )
-    assert host_budget_sample(small, 5).count() == 2
-
-
 def test_apply_robots_metachars_match_literally(spark):
     # a rule containing regex metachars must match them as literals:
     # /a.b blocks /a.b but NOT /aXb
@@ -343,9 +283,7 @@ def test_web_corpus_manifest_parity(spark):
 
 
 def test_sessionize_events(spark):
-    """W1 gaps-and-islands (left the 50-entry gate for
-    web_corpus_manifest in r4; the shape stays gate-visible via
-    pack_sequences_docs' running-sum window): exact DuckDB parity."""
+    """W1 gaps-and-islands (a gate entry): exact DuckDB parity."""
     from granulate_char_ocr_spark import driver_queries
 
     sf = "/root/testdata/sf0.001"
@@ -409,255 +347,6 @@ def test_confusion_matrix_docs(spark):
     assert got == want
 
 
-RSS_FEED = """<?xml version="1.0"?>
-<rss version="2.0"><channel>
-  <title>Example Blog</title>
-  <link>https://blog.example.com/</link>
-  <item>
-    <title><![CDATA[Hello <world> &amp; more]]></title>
-    <link>https://blog.example.com/a?x=1&amp;y=2</link>
-    <pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate>
-  </item>
-  <item>
-    <title>Second &lt;post&gt;</title>
-    <link> https://blog.example.com/b </link>
-  </item>
-  <item><title>no link: dropped</title></item>
-</channel></rss>"""
-
-ATOM_FEED = """<?xml version="1.0"?>
-<feed xmlns="http://www.w3.org/2005/Atom">
-  <title>Site</title>
-  <link rel="self" href="https://site.example.com/feed.xml"/>
-  <entry>
-    <title>Entry one</title>
-    <link rel="self" href="https://site.example.com/e1.meta"/>
-    <link rel="alternate" href="https://site.example.com/e1"/>
-    <published>2024-03-01T12:00:00Z</published>
-    <updated>2024-03-02T12:00:00Z</updated>
-  </entry>
-  <entry>
-    <title>Entry two &amp;lt;kept encoded&amp;gt;</title>
-    <link href="https://site.example.com/e2"/>
-    <updated>2024-04-01T00:00:00Z</updated>
-  </entry>
-</feed>"""
-
-
-def test_feed_entries_rss(spark):
-    from granulate_char_ocr_spark.operators.crawl import feed_entries
-
-    df = spark.createDataFrame(
-        [("blog.example.com", RSS_FEED)], "host string, feed_xml string"
-    )
-    rows = feed_entries(df).orderBy("link").collect()
-    # the link-less third item is dropped
-    assert [(r.fmt, r.link, r.title, r.published) for r in rows] == [
-        (
-            "rss",
-            "https://blog.example.com/a?x=1&y=2",
-            "Hello <world> & more",
-            "Mon, 01 Jan 2024 00:00:00 GMT",
-        ),
-        ("rss", "https://blog.example.com/b", "Second <post>", None),
-    ]
-
-
-def test_feed_entries_atom(spark):
-    from granulate_char_ocr_spark.operators.crawl import feed_entries
-
-    df = spark.createDataFrame(
-        [("site.example.com", ATOM_FEED)], "host string, feed_xml string"
-    )
-    rows = feed_entries(df).orderBy("link").collect()
-    # rel="self" link skipped in favor of rel="alternate"; bare <link
-    # href> (no rel) accepted per RFC 4287 §4.2.7.2; <published> beats
-    # <updated>, falls back when absent; double-escaped &amp;lt; decodes
-    # exactly one level
-    assert [(r.fmt, r.link, r.title, r.published) for r in rows] == [
-        (
-            "atom",
-            "https://site.example.com/e1",
-            "Entry one",
-            "2024-03-01T12:00:00Z",
-        ),
-        (
-            "atom",
-            "https://site.example.com/e2",
-            "Entry two &lt;kept encoded&gt;",
-            "2024-04-01T00:00:00Z",
-        ),
-    ]
-
-
-def test_feed_entries_mixed_corpus(spark):
-    """Both formats in one DataFrame; per-host provenance preserved."""
-    from granulate_char_ocr_spark.operators.crawl import feed_entries
-
-    df = spark.createDataFrame(
-        [("blog", RSS_FEED), ("site", ATOM_FEED), ("empty", "<rss/>")],
-        "host string, feed_xml string",
-    )
-    rows = feed_entries(df).collect()
-    assert {(r.host, r.fmt) for r in rows} == {
-        ("blog", "rss"), ("site", "atom"),
-    }
-    assert len(rows) == 4
-
-
-def test_feed_atom_bare_link_with_rel_inside_href(spark):
-    # review r4: 'rel=' INSIDE the href value must not disqualify a
-    # bare (rel-less) Atom link — only a rel ATTRIBUTE does
-    from granulate_char_ocr_spark.operators.crawl import feed_entries
-
-    xml = (
-        '<feed><entry><title>t</title>'
-        '<link href="https://ex.com/v?rel=author"/>'
-        "<updated>2024-01-01</updated></entry>"
-        '<entry><title>u</title>'
-        '<link rel="self" href="https://ex.com/feed.xml"/>'
-        "<updated>2024-01-02</updated></entry></feed>"
-    )
-    df = spark.createDataFrame([("h", xml)], "host string, feed_xml string")
-    rows = feed_entries(df).collect()
-    # entry 1 keeps its link; entry 2's only link is rel=self -> dropped
-    assert [r.link for r in rows] == ["https://ex.com/v?rel=author"]
-
-
-def test_feed_numeric_entities_decode(spark):
-    # the shared decoder now handles &#NNN; in feed fields too
-    from granulate_char_ocr_spark.operators.crawl import feed_entries
-
-    xml = (
-        "<rss><channel><item><title>a &#8212; b &apos;q&apos;</title>"
-        "<link>https://ex.com/1</link>"
-        "<pubDate>x</pubDate></item></channel></rss>"
-    )
-    df = spark.createDataFrame([("h", xml)], "host string, feed_xml string")
-    [r] = feed_entries(df).collect()
-    assert r.title == "a — b 'q'"
-
-
-# --- CDX index parse -------------------------------------------------------
-
-
-def _cdx_corpus(spark):
-    # deterministic CDXJ lines incl. a duplicate digest (recrawl), a
-    # later timestamp, and one malformed line (no JSON tail)
-    lines = [
-        (
-            1,
-            'com,example)/a 20240101000000 {"url": "https://example.com/a",'
-            ' "status": "200", "mime": "text/html", "digest": "sha1:AAA",'
-            ' "length": "100", "offset": "0", "filename": "w1.warc.gz"}',
-        ),
-        (
-            2,
-            'com,example)/a 20240301000000 {"url": "https://example.com/a",'
-            ' "status": "200", "mime": "text/html", "digest": "sha1:AAA",'
-            ' "length": "100", "offset": "900", "filename": "w2.warc.gz"}',
-        ),
-        (
-            3,
-            'org,other)/b 20240201000000 {"url": "https://other.org/b",'
-            ' "status": "404", "mime": "text/html", "digest": "sha1:BBB",'
-            ' "length": "7", "offset": "50", "filename": "w1.warc.gz"}',
-        ),
-        (4, "garbage-without-json"),
-    ]
-    return spark.createDataFrame(lines, "id int, cdx_line string")
-
-
-def test_cdx_records_parse_and_types(spark):
-    from granulate_char_ocr_spark.operators.crawl import cdx_records
-
-    out = cdx_records(_cdx_corpus(spark)).orderBy("id").collect()
-    assert out[0].surt == "com,example)/a"
-    assert out[0].ts == "20240101000000"
-    assert out[0].url == "https://example.com/a"
-    assert out[0].status == 200 and out[0].length == 100
-    assert out[2].status == 404
-    # malformed line: NULL fields, no task failure (try_cast, ANSI-safe)
-    assert out[3].url is None and out[3].status is None
-
-
-def test_cdx_first_by_digest(spark):
-    from granulate_char_ocr_spark.operators.crawl import (
-        cdx_first_by_digest,
-        cdx_records,
-    )
-
-    out = cdx_first_by_digest(cdx_records(_cdx_corpus(spark)))
-    rows = {r.digest: r for r in out.collect()}
-    assert set(rows) == {"sha1:AAA", "sha1:BBB"}
-    # earliest capture of the recrawled content wins
-    assert rows["sha1:AAA"].ts == "20240101000000"
-    assert rows["sha1:AAA"].filename == "w1.warc.gz"
-
-
-def test_cdx_duckdb_parity(spark):
-    # the CDX parse replicated in DuckDB (json_extract_string +
-    # try_cast) must agree field-for-field — the gate is capped at 50,
-    # so parity is pinned here instead
-    import duckdb
-
-    from granulate_char_ocr_spark.operators.crawl import cdx_records
-
-    got = {
-        r.id: r.asDict()
-        for r in cdx_records(_cdx_corpus(spark)).collect()
-    }
-    con = duckdb.connect()
-    lines = [
-        (i, line)
-        for i, line in _cdx_corpus(spark).orderBy("id").collect()
-    ]
-    con.execute("CREATE TABLE c (id int, cdx_line varchar)")
-    con.executemany("INSERT INTO c VALUES (?, ?)", lines)
-    want = con.execute(
-        """
-        SELECT id,
-          split_part(cdx_line, ' ', 1) AS surt,
-          regexp_extract(cdx_line, '^\\S+ (\\S+) ', 1) AS ts,
-          json_extract_string(j, '$.url') AS url,
-          try_cast(json_extract_string(j, '$.status') AS int) AS status,
-          json_extract_string(j, '$.digest') AS digest,
-          try_cast(json_extract_string(j, '$.length') AS bigint) AS length
-        FROM (SELECT id, cdx_line,
-                     nullif(regexp_extract(cdx_line,
-                                           '^\\S+ \\S+ (.*)$', 1), '') AS j
-              FROM c)
-        """
-    ).fetchall()
-    for wid, surt, ts, url, status, digest, length in want:
-        g = got[wid]
-        # DuckDB regexp_extract yields '' on no-match; Spark too for
-        # surt/ts; JSON of '' yields NULL on both engines
-        assert g["surt"] == surt or (not g["surt"] and not surt)
-        assert g["ts"] == ts or (not g["ts"] and not ts)
-        assert g["url"] == url
-        assert g["status"] == status
-        assert g["digest"] == digest
-        assert g["length"] == length
-
-
-def test_surt_expr(spark):
-    from granulate_char_ocr_spark.operators.crawl import surt_expr
-
-    df = spark.createDataFrame(
-        [
-            (1, "https://www.Example.COM/Path/X"),
-            (2, "http://a.b.example.org"),
-            (3, "https://example.net/p?q=1"),
-        ],
-        "id int, url string",
-    )
-    rows = {r.id: r.s for r in df.select("id", surt_expr(F.col("url")).alias("s")).collect()}
-    assert rows[1] == "com,example)/path/x"
-    assert rows[2] == "org,example,b,a)/"
-    assert rows[3] == "net,example)/p"
-
-
 def test_crawl_schedule(spark):
     from granulate_char_ocr_spark.operators.crawl import crawl_schedule
 
@@ -718,8 +407,8 @@ def test_crawl_schedule_no_diff(spark):
 
 
 def test_crawl_schedule_frontier_with_status_and_rank_columns(spark):
-    # review r4: a frontier built from cdx_records output carries its
-    # own url/status columns — the joins must not become ambiguous
+    # a frontier carrying its own url/status/rank columns must not make
+    # the joins ambiguous
     from granulate_char_ocr_spark.operators.crawl import crawl_schedule
 
     frontier = spark.createDataFrame(
@@ -732,102 +421,6 @@ def test_crawl_schedule_frontier_with_status_and_rank_columns(spark):
     )
     [r] = crawl_schedule(frontier, ranks, diff).collect()
     assert abs(r.priority - 0.5 * 0.8) < 1e-12
-
-
-def test_cdx_records_drops_colliding_carried_columns(spark):
-    from granulate_char_ocr_spark.operators.crawl import cdx_records
-
-    df = spark.createDataFrame(
-        [("keep", "old-url", 'a)/x 20240101 {"url": "https://e/x"}')],
-        "extra string, url string, cdx_line string",
-    )
-    out = cdx_records(df)
-    # the parse's url wins; no duplicate names
-    assert out.columns.count("url") == 1 and "extra" in out.columns
-    [r] = out.collect()
-    assert r.url == "https://e/x" and r.extra == "keep"
-
-
-def test_robots_sitemaps_discovery(spark):
-    from granulate_char_ocr_spark.operators.crawl import robots_sitemaps
-
-    df = spark.createDataFrame(
-        [
-            (
-                "a",
-                "Sitemap: https://a/s1.xml\nUser-agent: *\nDisallow: /x\n"
-                "sitemap: https://a/s2.xml  # trailing comment\n",
-            ),
-            ("b", "User-agent: *\nDisallow: /\n"),
-        ],
-        "host string, robots_txt string",
-    )
-    got = {(r.host, r.sitemap_url) for r in robots_sitemaps(df).collect()}
-    # Sitemap lines count wherever they appear (global per RFC 9309),
-    # field name case-insensitive, comments stripped
-    assert got == {
-        ("a", "https://a/s1.xml"),
-        ("a", "https://a/s2.xml"),
-    }
-
-
-def test_resolve_redirects_chain_relative_and_loop(spark):
-    from granulate_char_ocr_spark.operators.crawl import resolve_redirects
-
-    pages = spark.createDataFrame(
-        [
-            # two-hop chain, second hop relative
-            ("https://a.example/old", 301, "https://a.example/mid"),
-            ("https://a.example/mid", 302, "/new"),
-            ("https://a.example/new", 200, None),
-            # loop: capped at max_hops, must terminate
-            ("https://l.example/p", 301, "https://l.example/q"),
-            ("https://l.example/q", 301, "https://l.example/p"),
-            # unresolvable relative-path form ends the chain
-            ("https://r.example/x", 301, "y/z"),
-        ],
-        "url string, status int, location string",
-    )
-    rows = {r.url: r for r in resolve_redirects(pages, max_hops=5).collect()}
-    assert rows["https://a.example/old"].final_url == "https://a.example/new"
-    assert rows["https://a.example/old"].n_hops == 2
-    assert rows["https://a.example/new"].n_hops == 0
-    assert rows["https://l.example/p"].n_hops == 5  # loop hit the cap
-    assert rows["https://r.example/x"].final_url == "https://r.example/x"
-
-
-def test_resolve_redirects_port_protocol_relative_and_recrawl(spark):
-    # review r4: ports survive absolutization, protocol-relative
-    # Locations take the source scheme, and duplicate fetch records
-    # fold to one hop (no fan-out)
-    from granulate_char_ocr_spark.operators.crawl import resolve_redirects
-
-    pages = spark.createDataFrame(
-        [
-            ("https://a.example:8080/old", 301, "/new"),
-            ("https://a.example:8080/new", 200, None),
-            ("https://b.example/p", 301, "//cdn.example/x"),
-            # the same redirecting url fetched twice (recrawl)
-            ("https://c.example/r", 301, "https://c.example/s"),
-            ("https://c.example/r", 301, "https://c.example/s"),
-        ],
-        "url string, status int, location string",
-    )
-    out = resolve_redirects(pages).collect()
-    rows = {}
-    for r in out:
-        rows.setdefault(r.url, []).append(r)
-    [a] = rows["https://a.example:8080/old"]
-    assert a.final_url == "https://a.example:8080/new" and a.n_hops == 1
-    [b] = rows["https://b.example/p"]
-    assert b.final_url == "https://cdn.example/x"
-    # one row per INPUT row even under recrawl duplicates (the hop map
-    # folds; the two identical input rows stay two rows, same answer)
-    assert len(rows["https://c.example/r"]) == 2
-    assert all(
-        r.final_url == "https://c.example/s" and r.n_hops == 1
-        for r in rows["https://c.example/r"]
-    )
 
 
 def test_crawl_diff_docs_parity(spark):

@@ -1,7 +1,7 @@
 """Corpus-curation operators (operators/curation.py): PII redaction,
-benchmark decontamination, sequence packing, TF-IDF keywords — unit
-semantics on hand-checked rows plus the plan properties that make each
-scale (broadcast sides, partitioned windows, no UDFs)."""
+benchmark decontamination, TF-IDF keywords — unit semantics on
+hand-checked rows plus the plan properties that make each scale
+(broadcast sides, partitioned windows, no UDFs)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,41 +100,6 @@ def test_decontaminate_broadcasts_benchmark(spark):
     assert "BroadcastHashJoin" in plan
 
 
-# ------------------------------------------------------------ pack_sequences
-
-
-def test_pack_sequences_offsets(spark):
-    # one shard (n_shards=1) so the packing order is just doc_id
-    docs = _docs(
-        spark,
-        [(0, "a b c"), (1, "d e f g"), (2, "h i"), (3, "j k l m n")],
-    )
-    out = {
-        r["doc_id"]: (r["n_tokens"], r["pack_id"], r["pack_offset"])
-        for r in curation.pack_sequences(docs, budget=5, n_shards=1).collect()
-    }
-    # cum_before: 0, 3, 7, 9 -> pack floor(c/5), offset c%5
-    assert out[0] == (3, 0, 0)
-    assert out[1] == (4, 0, 3)
-    assert out[2] == (2, 1, 2)
-    assert out[3] == (5, 1, 4)
-
-
-def test_pack_sequences_sharded_independently(spark):
-    docs = _docs(spark, [(i, "w " * (i + 1)) for i in range(6)])
-    out = {
-        r["doc_id"]: r
-        for r in curation.pack_sequences(docs, budget=4, n_shards=2).collect()
-    }
-    assert {r["shard"] for r in out.values()} == {0, 1}
-    # first doc of each shard starts at pack 0 offset 0
-    assert (out[0]["pack_id"], out[0]["pack_offset"]) == (0, 0)
-    assert (out[1]["pack_id"], out[1]["pack_offset"]) == (0, 0)
-    # shard 0 order 0,2,4: trailing-space split gives len+1 tokens ->
-    # n_tokens 2,4,6; cum_before for doc 4 is 6 -> pack 1 offset 2
-    assert (out[4]["pack_id"], out[4]["pack_offset"]) == (1, 2)
-
-
 # ----------------------------------------------------------- tfidf_top_terms
 
 
@@ -187,16 +152,13 @@ def test_tfidf_broadcasts_df_side(spark):
     [
         "pii_redact_docs",
         "decontaminate_docs",
-        "pack_sequences_docs",
         "tfidf_top_terms_docs",
     ],
 )
 def test_gate_entries_run_nonempty(spark, name):
     from granulate_char_ocr_spark import driver_queries as dq
 
-    # gate-demoted queries (r5 rotation) resolve to the module function
-    fn = dq.QUERIES.get(name, getattr(dq, name))
-    df = fn(spark, "/root/testdata/sf0.001")
+    df = dq.QUERIES[name](spark, "/root/testdata/sf0.001")
     assert df.count() > 0
 
 
@@ -239,20 +201,6 @@ def test_chunk_lines_empty_and_null_text(spark):
         for r in curation.quality_filter(docs, words_per_line=2).collect()
     }
     assert n_lines == {1: 2, 2: 0, 3: 0}
-
-
-def test_pack_sequences_docs_parity(spark):
-    """Sequence packing (left the 50-entry gate in r5 for the rotated-
-    back relational cohort): exact DuckDB parity."""
-    from parity import assert_parity
-
-    from granulate_char_ocr_spark import driver_queries
-
-    assert_parity(
-        spark,
-        driver_queries.pack_sequences_docs,
-        driver_queries.PACK_SEQUENCES_ORACLE,
-    )
 
 
 def test_tf_kernel_equals_expr(spark):

@@ -3,7 +3,6 @@ with planted duplicates and known vectors (the oracle harness checks engine
 parity; these check the semantics are the intended ones)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 import reference_twins as twins
 from granulate_char_ocr_spark.operators import dedup, similarity, textstats
@@ -229,302 +228,6 @@ def test_lang_id_mixed_language_fixture(spark):
     out = {r["doc_id"]: r["predicted_lang"] for r in textstats.lang_id(d).collect()}
     for i, expect, _ in sentences:
         assert out[i] == expect, (i, out[i], expect)
-
-
-# ------------------------------------------- duplicated-passage (ExactSubstr)
-
-
-def test_duplicated_passage_stats_semantics(spark):
-    from granulate_char_ocr_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [
-            # docs 1 and 2 share the window 'a b c'; doc 1 also has it at
-            # two OVERLAPPING positions (a b c a b c -> windows at 0 and 3,
-            # plus 'b c a'/'c a b' which occur once each)
-            (1, "a b c a b c"),
-            (2, "x a b c y"),
-            (3, "p q r s t"),  # all windows unique -> 0
-            (4, "to sh"),  # shorter than n -> no windows, 0
-        ],
-        "doc_id bigint, text string",
-    )
-    out = {
-        r["doc_id"]: (r["n_tokens"], r["dup_tokens"], r["dup_fraction"])
-        for r in dedup.duplicated_passage_stats(docs, n=3).collect()
-    }
-    # doc 1: 'a b c' at pos 0 and 3 -> union [0,3)+[3,6) = 6 of 6 tokens
-    assert out[1] == (6, 6, 1.0)
-    # doc 2: 'a b c' at pos 1 -> [1,4) = 3 of 5
-    assert out[2] == (5, 3, 0.6)
-    assert out[3] == (5, 0, 0.0)
-    assert out[4] == (2, 0, 0.0)
-    assert len(out) == 4  # every doc reported
-
-
-def test_duplicated_passage_overlap_not_double_counted(spark):
-    from granulate_char_ocr_spark.operators import dedup
-
-    # 'a a a a a' (n=3): windows 'a a a' at pos 0,1,2 all duplicated ->
-    # union [0,5) = 5, NOT 9
-    docs = spark.createDataFrame(
-        [(1, "a a a a a")], "doc_id bigint, text string"
-    )
-    [r] = dedup.duplicated_passage_stats(docs, n=3).collect()
-    assert (r["n_tokens"], r["dup_tokens"]) == (5, 5)
-
-
-def test_duplicated_passage_duckdb_parity(spark):
-    """Full replica over the real docs at n=3 (the tiny vocab makes
-    duplicated 3-grams common, so the metric is non-vacuous)."""
-    import duckdb
-
-    from granulate_char_ocr_spark.operators import dedup
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["dup_tokens"], r["dup_fraction"])
-        for r in dedup.duplicated_passage_stats(
-            spark.read.parquet(f"{sf}/documents.parquet"), n=3
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        r[0]: (r[1], r[2], r[3])
-        for r in con.execute(
-            """
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents),
-        gw AS (
-          SELECT doc_id, unnest(list_transform(
-              range(0, greatest(len(toks) - 2, 0)),
-              i -> {'pos': i,
-                    'g': array_to_string(list_slice(toks, i+1, i+3), ' ')}
-            )) AS w
-          FROM t),
-        g AS (SELECT doc_id, w['pos'] AS pos, w['g'] AS g FROM gw),
-        dup AS (SELECT g FROM g GROUP BY g HAVING count(*) > 1),
-        hits AS (SELECT doc_id, pos FROM g JOIN dup USING (g)),
-        cov AS (
-          SELECT doc_id, pos,
-                 greatest(0, pos + 3 - greatest(
-                   coalesce(max(pos + 3) OVER (
-                     PARTITION BY doc_id ORDER BY pos
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0),
-                   pos)) AS new_cov
-          FROM hits),
-        c AS (SELECT doc_id, sum(new_cov) AS dup_tokens FROM cov GROUP BY 1)
-        SELECT d.doc_id,
-               CAST(len(string_split(d.text, ' ')) AS INT) AS n_tokens,
-               CAST(coalesce(c.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-               round(coalesce(c.dup_tokens, 0) /
-                     greatest(len(string_split(d.text, ' ')), 1), 6)
-        FROM documents d LEFT JOIN c USING (doc_id)
-        """
-        ).fetchall()
-    }
-    assert got == want
-    assert sum(v[1] for v in got.values()) > 0
-
-
-# ----------------------------------------------- ExactSubstr removal
-
-
-def test_remove_duplicated_passages_semantics(spark):
-    from granulate_char_ocr_spark.operators.dedup import (
-        remove_duplicated_passages,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e"),          # first occurrence: untouched
-            (2, "x a b c d y"),        # repeats two windows from doc 1
-            (3, "p q r s p q r s"),    # repeats its own prefix
-            (4, "lone words only"),    # no duplicated window anywhere
-        ],
-        "doc_id bigint, text string",
-    )
-    got = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_removed"])
-        for r in remove_duplicated_passages(docs, n=3).collect()
-    }
-    assert got[1] == ("a b c d e", 5, 0)
-    # windows at pos 1 and 2 are dups -> tokens [1,5) go, 'x y' stays
-    assert got[2] == ("x y", 6, 4)
-    # second 'p q r'/'q r s' at pos 4/5 -> suffix [4,8) removed
-    assert got[3] == ("p q r s", 8, 4)
-    assert got[4] == ("lone words only", 3, 0)
-
-
-def test_remove_duplicated_passages_duckdb_parity(spark):
-    import duckdb
-
-    from granulate_char_ocr_spark.operators.dedup import (
-        remove_duplicated_passages,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    got = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_removed"])
-        for r in remove_duplicated_passages(docs, n=3).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        r[0]: (r[1], r[2], r[3])
-        for r in con.execute(
-            """
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents),
-        gw AS (SELECT doc_id,
-                 unnest(CASE WHEN len(toks) >= 3 THEN
-                   list_transform(range(0, len(toks) - 2),
-                     i -> {'pos': i,
-                           'g': array_to_string(
-                                  list_slice(toks, i+1, i+3), ' ')})
-                   ELSE [] END) AS w
-               FROM t),
-        g AS (SELECT doc_id, w['pos'] AS pos, w['g'] AS g FROM gw),
-        r AS (SELECT doc_id, pos,
-                row_number() OVER (PARTITION BY g
-                                   ORDER BY doc_id, pos) AS rn
-              FROM g),
-        s AS (SELECT doc_id, list_sort(list(pos)) AS starts
-              FROM r WHERE rn > 1 GROUP BY 1),
-        k AS (SELECT t.doc_id, t.toks,
-                list_filter(range(0, len(t.toks)),
-                  i -> len(list_filter(coalesce(s.starts, []),
-                        p -> p <= i AND i < p + 3)) = 0) AS kept
-              FROM t LEFT JOIN s USING (doc_id))
-        SELECT doc_id,
-               coalesce(array_to_string(
-                 list_transform(kept, i -> toks[i + 1]), ' '), '') AS text,
-               CAST(len(toks) AS INT) AS n_tokens,
-               CAST(len(toks) - len(kept) AS INT) AS n_removed
-        FROM k
-        """
-        ).fetchall()
-    }
-    assert got == want
-    assert sum(v[2] for v in got.values()) > 0
-
-
-# ----------------------------------------------- temperature resampling
-
-
-def test_temperature_resample_rebalances(spark):
-    from granulate_char_ocr_spark.operators.sampling import (
-        temperature_resample,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    before = {
-        r["lang"]: r["count"]
-        for r in docs.groupBy("lang").count().collect()
-    }
-    out = temperature_resample(docs, "doc_id", "lang", alpha=0.5)
-    rates = {
-        r["lang"]: r["rate"] for r in out.select("lang", "rate").distinct().collect()
-    }
-    after = {
-        r["lang"]: r["count"]
-        for r in out.groupBy("lang").count().collect()
-    }
-    smallest = min(before, key=before.get)
-    # the smallest stratum is kept whole (rate 1.0), dominant strata cut
-    assert rates[smallest] == 1.0
-    assert after[smallest] == before[smallest]
-    for lang, c in before.items():
-        if lang != smallest:
-            assert rates[lang] < 1.0
-    # kept fraction tracks the rate (binomial tolerance on small strata)
-    for lang, r in rates.items():
-        frac = after.get(lang, 0) / before[lang]
-        assert abs(frac - r) < 0.25, (lang, frac, r)
-
-
-def test_temperature_resample_alpha_one_keeps_everything(spark):
-    from granulate_char_ocr_spark.operators.sampling import (
-        temperature_resample,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = temperature_resample(docs, "doc_id", "lang", alpha=1.0)
-    # alpha=1: every weight is count^0 = 1 -> rate 1.0 -> natural dist
-    assert out.count() == docs.count()
-
-
-def test_temperature_resample_duckdb_parity(spark):
-    import duckdb
-
-    from granulate_char_ocr_spark.operators.sampling import (
-        temperature_resample,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["doc_id"], r["lang"], r["rate"])
-        for r in temperature_resample(
-            spark.read.parquet(f"{sf}/documents.parquet"),
-            "doc_id",
-            "lang",
-            alpha=0.5,
-        )
-        .select("doc_id", "lang", "rate")
-        .collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        tuple(r)
-        for r in con.execute(
-            """
-        WITH c AS (SELECT lang, count(*) AS c FROM documents GROUP BY 1),
-        w AS (SELECT lang, power(c, -0.5) AS w FROM c),
-        r AS (SELECT lang, round(w / (SELECT max(w) FROM w), 9) AS rate
-              FROM w)
-        SELECT d.doc_id, d.lang, r.rate
-        FROM documents d JOIN r USING (lang)
-        WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
-              / 4294967296.0 < r.rate
-        """
-        ).fetchall()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
-def test_temperature_resample_null_stratum_and_guards(spark):
-    from granulate_char_ocr_spark.operators.sampling import (
-        temperature_resample,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, None if i < 3 else "en") for i in range(100)],
-        "doc_id bigint, lang string",
-    )
-    out = temperature_resample(docs, "doc_id", "lang", alpha=0.5)
-    rates = {
-        r["lang"]: r["rate"]
-        for r in out.select("lang", "rate").distinct().collect()
-    }
-    # NULL is the smallest stratum: kept whole, rows NOT dropped
-    assert rates[None] == 1.0
-    assert out.where(F.col("lang").isNull()).count() == 3
-    assert rates["en"] < 1.0
-    # output-name collision raises instead of producing an ambiguous plan
-    with pytest.raises(ValueError, match="rate"):
-        temperature_resample(
-            docs.withColumn("rate", F.lit(0.0)), "doc_id", "lang"
-        )
 
 
 def test_dedup_simhash32_parity(spark):

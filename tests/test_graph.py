@@ -10,7 +10,6 @@ import numpy as np
 import pytest
 
 from granulate_char_ocr_spark.operators.graph import (
-    anchor_texts,
     link_edges,
     pagerank,
 )
@@ -103,206 +102,3 @@ def test_pagerank_duplicate_edges_collapse(spark):
     want = _numpy_pagerank([("a.com", "b.com"), ("b.com", "a.com")], 4)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-12)
-
-
-def test_anchor_texts_extraction(spark):
-    pages = spark.createDataFrame(
-        [
-            (
-                "a.com",
-                '<p>See <a class="x" href="https://B.com/Path#frag">the '
-                "<b>big</b>\n  fish &amp; chips</a> and "
-                '<a href="/relative">rel</a> and '
-                '<a href="https://c.com/"><img src="i.png"></a> and '
-                '<a href="https://d.com/d">D&#233;j\u00e0</a>.</p>',
-            ),
-        ],
-        "src_host string, html string",
-    )
-    rows = {
-        (r.dst_url, r.anchor): r for r in anchor_texts(pages).collect()
-    }
-    # canonicalized target (host lowercased, fragment stripped), inner
-    # markup stripped, entities decoded, whitespace collapsed
-    assert ("https://b.com/Path", "the big fish & chips") in rows
-    assert rows[("https://b.com/Path", "the big fish & chips")].dst_host == "b.com"
-    # relative links and empty (image-only) anchors are dropped
-    assert all(u != "/relative" for u, _ in rows)
-    assert all("c.com" not in u for u, _ in rows)
-    # numeric entity decode in the anchor body
-    assert ("https://d.com/d", "D\u00e9j\u00e0") in rows
-    assert len(rows) == 2
-
-
-def test_anchor_texts_pairs_align_with_python(spark):
-    """zip_with pairing must stay index-aligned with a reference
-    re.findall over the same pattern."""
-    import re as _re
-
-    from granulate_char_ocr_spark.operators.graph import _RE_ANCHOR
-
-    html = "".join(
-        f'<a href="https://h{i}.com/p{i}">t{i}</a><a name="x">skip</a>'
-        for i in range(7)
-    )
-    want = _re.findall(_RE_ANCHOR, html)
-    pages = spark.createDataFrame(
-        [("s", html)], "src_host string, html string"
-    )
-    got = [
-        (r.dst_url, r.anchor)
-        for r in anchor_texts(pages).orderBy("dst_url").collect()
-    ]
-    assert got == sorted(
-        (f"https://h{i}.com/p{i}", f"t{i}") for i in range(7)
-    )
-    assert len(want) == 7
-
-
-def test_anchor_texts_no_python_in_plan(spark):
-    pages = spark.createDataFrame(
-        [("s", "<a href=\'x\'>y</a>")], "src_host string, html string"
-    )
-    plan = (
-        anchor_texts(pages)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-# --- registrable domains / nepotistic links --------------------------------
-
-
-def test_registrable_domain_cases(spark):
-    from granulate_char_ocr_spark.operators.graph import (
-        registrable_domain_expr,
-    )
-    from pyspark.sql import functions as F
-
-    cases = [
-        ("news.example.com", "example.com"),
-        ("a.b.example.org", "example.org"),
-        ("example.co.uk", "example.co.uk"),
-        ("www.shop.example.co.uk", "example.co.uk"),
-        ("ac.jp", "ac.jp"),  # bare suffix: nothing above it to keep
-        ("foo.ne.jp", "foo.ne.jp"),
-        ("example.com", "example.com"),
-        ("localhost", "localhost"),
-        ("10.1.0.7", "10.1.0.7"),  # IP literal passes through whole
-        ("UPPER.Example.COM", "example.com"),
-    ]
-    df = spark.createDataFrame(
-        [(i, h) for i, (h, _) in enumerate(cases)], "i int, h string"
-    )
-    got = {
-        r.i: r.d
-        for r in df.select(
-            "i", registrable_domain_expr(F.col("h")).alias("d")
-        ).collect()
-    }
-    for i, (h, want) in enumerate(cases):
-        assert got[i] == want, (h, got[i], want)
-
-
-def test_domain_link_stats(spark):
-    from granulate_char_ocr_spark.operators.graph import domain_link_stats
-
-    edges = spark.createDataFrame(
-        [
-            # farm.example self-links heavily across its own subdomains
-            ("a.farm.example.com", "b.farm.example.com", 8),
-            ("a.farm.example.com", "c.farm.example.com", 4),
-            ("a.farm.example.com", "real.example.org", 1),
-            # editorial site links out
-            ("news.example.org", "cdn.example.net", 3),
-            ("news.example.org", "news.example.org", 1),
-        ],
-        "src_host string, dst_host string, n_links int",
-    )
-    rows = {r.src_domain: r for r in domain_link_stats(edges).collect()}
-    farm = rows["example.com"]
-    assert farm.n_links == 13 and farm.n_intra == 12
-    assert abs(farm.intra_ratio - 12 / 13) < 1e-6
-    news = rows["example.org"]
-    assert news.n_links == 4 and news.n_intra == 1
-
-
-def test_domain_link_stats_duckdb_parity(spark):
-    # DuckDB replica of the PSL-core domain fold + aggregate (gate
-    # capped at 50 entries, parity pinned here instead)
-    import duckdb
-
-    from granulate_char_ocr_spark.operators.graph import domain_link_stats
-
-    edges = [
-        ("x.example.com", "y.example.com", 2),
-        ("x.example.com", "z.other.co.uk", 3),
-        ("shop.other.co.uk", "z.other.co.uk", 5),
-        ("10.0.0.1", "x.example.com", 1),
-    ]
-    df = spark.createDataFrame(
-        edges, "src_host string, dst_host string, n_links int"
-    )
-    got = {
-        (r.src_domain, r.n_links, r.n_intra, float(r.intra_ratio))
-        for r in domain_link_stats(df).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE e (src_host varchar, dst_host varchar, n_links int)"
-    )
-    con.executemany("INSERT INTO e VALUES (?, ?, ?)", edges)
-    dom = """
-    CASE WHEN lower({h}) SIMILAR TO '[0-9.]+' THEN lower({h})
-         WHEN len(string_split(lower({h}), '.')) <= 2 THEN lower({h})
-         WHEN len(string_split(lower({h}), '.')) >= 3
-              AND len(string_split(lower({h}), '.')[-1]) = 2
-              AND list_contains(
-                    string_split('co,com,org,net,ac,gov,edu,mil,sch,or,ne,go', ','),
-                    string_split(lower({h}), '.')[-2])
-           THEN array_to_string(string_split(lower({h}), '.')[-3:], '.')
-         ELSE array_to_string(string_split(lower({h}), '.')[-2:], '.')
-    END
-    """
-    want = set(
-        con.execute(
-            f"""
-        SELECT src_domain, sum(n_links)::bigint,
-               sum(intra)::bigint,
-               round(sum(intra) * 1.0 / sum(n_links), 6)
-        FROM (SELECT {dom.format(h='src_host')} AS src_domain,
-                     n_links,
-                     CASE WHEN {dom.format(h='src_host')} =
-                               {dom.format(h='dst_host')}
-                          THEN n_links ELSE 0 END AS intra
-              FROM e)
-        GROUP BY src_domain
-        """
-        ).fetchall()
-    )
-    want = {(d, int(n), int(i), float(r)) for d, n, i, r in want}
-    assert got == want
-
-
-def test_registrable_domain_null_host_stays_null(spark):
-    from pyspark.sql import functions as F
-
-    from granulate_char_ocr_spark.operators.graph import (
-        registrable_domain_expr,
-    )
-
-    df = spark.createDataFrame([(1, None)], "i int, h string")
-    [r] = df.select(registrable_domain_expr(F.col("h")).alias("d")).collect()
-    assert r.d is None
-
-
-def test_domain_link_stats_zero_links_no_ansi_throw(spark):
-    # ANSI mode is on by default: a zero-weight group must yield NULL
-    # ratio, not DIVIDE_BY_ZERO (review r4)
-    from granulate_char_ocr_spark.operators.graph import domain_link_stats
-
-    edges = spark.createDataFrame(
-        [("a.example.com", "b.example.com", 0)],
-        "src_host string, dst_host string, n_links int",
-    )
-    [r] = domain_link_stats(edges).collect()
-    assert r.n_links == 0 and r.intra_ratio is None

@@ -77,30 +77,6 @@ def test_expr_equals_twin(spark):
         assert got[i] == to_markdown_python(html), CASES[i][0]
 
 
-def test_cascade_case_lineitem(spark):
-    """P4/A11 when-ladder (left the 50-entry gate for
-    markdown_convert_docs in r4; the cascade stays gate-visible via
-    ocr_method_histogram): exact DuckDB parity."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.cascade_case_lineitem(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'"
-    )
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.CASCADE_CASE_ORACLE).fetchall()
-    }
-    assert got == want
-
-
 def test_markdown_convert_docs_parity(spark):
     """HTML→Markdown gate query (left the 50-entry gate in r5 within the
     HTML family's near-duplicate retirement): exact DuckDB parity."""

@@ -240,150 +240,6 @@ def test_partition_policy_at_four_cores(spark, corpus):
     assert per_task == [[1] * 10], per_task
 
 
-def test_sorted_unique_event_types(spark):
-    """O5 (left the 50-entry gate for mm_audio_features in r4): distinct +
-    order over events, checked against DuckDB."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = [
-        r["event_type"]
-        for r in driver_queries.sorted_unique_event_types(spark, sf).collect()
-    ]
-    want = [
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT DISTINCT event_type FROM '{sf}/events.parquet' "
-            "ORDER BY event_type"
-        ).fetchall()
-    ]
-    assert got == want
-
-
-def test_customer_order_distribution(spark):
-    """TPC-H q13 shape (left the 50-entry gate for html_main_content_docs
-    in r4): outer join preserving empty groups + two-level aggregate,
-    checked against DuckDB."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["n_orders"], r["n_customers"])
-        for r in driver_queries.customer_order_distribution(
-            spark, sf
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in duckdb.sql(
-            "SELECT n_orders, count(*) AS n_customers FROM ("
-            "  SELECT c.c_custkey, count(o.o_orderkey) AS n_orders"
-            f"  FROM '{sf}/customer.parquet' c"
-            f"  LEFT JOIN '{sf}/orders.parquet' o"
-            "   ON c.c_custkey = o.o_custkey GROUP BY 1) t GROUP BY 1"
-        ).fetchall()
-    }
-    assert got == want
-
-
-def test_percentile_order_prices(spark):
-    """Interpolated percentiles (left the 50-entry gate for
-    repetition_signals_docs in r4): Spark `percentile` must equal DuckDB
-    `quantile_cont` exactly — both linear interpolation."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["priority"], r["median_price"], r["p90_price"], r["n"])
-        for r in driver_queries.percentile_order_prices(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{sf}/orders.parquet'"
-    )
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.PERCENTILE_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_distinct_users_per_type(spark):
-    """A10 exact distinct-count (left the 50-entry gate for vocab_kmv_docs
-    in r4, which grades the same exact-distinct shape in its vocab_exact
-    column): exact DuckDB parity."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.distinct_users_per_type(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
-    want = {
-        (r[0], int(r[1]), int(r[2]))
-        for r in con.execute(driver_queries.DISTINCT_USERS_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_corpus_stats_docs(spark):
-    """A6 corpus-stats multi-aggregate (left the 50-entry gate for
-    warc_extract_docs in r4; the shape stays gate-visible via
-    quality_score_docs / ocr_word_length_analysis): exact DuckDB parity."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.corpus_stats_docs(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.CORPUS_STATS_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_positional_zip_tokens(spark):
-    """J4 posexplode zip-join (left the 50-entry gate for
-    quality_filter_docs in r4; the shape stays gate-visible via
-    ocr_eval_metrics' arrays_zip compare): exact DuckDB parity."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.positional_zip_tokens(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
-    )
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.POSITIONAL_ZIP_ORACLE).fetchall()
-    }
-    assert got == want
-
-
 def test_quality_score_docs(spark):
     """F22 quality scoring (left the 50-entry gate for pagerank_hosts in
     r4; the shape stays gate-visible via quality_filter_docs and the
@@ -461,60 +317,6 @@ def test_rank_orders_per_customer(spark):
     assert got == want
 
 
-def test_mode_event_type_per_user(spark):
-    """A12 grouped mode (left the 50-entry gate for the curation family
-    in r4): checked against DuckDB via the retained oracle."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.mode_event_type_per_user(spark, sf).collect()
-    }
-    con = _duck_events(sf)
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.MODE_EVENT_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_agg_colsum_events(spark):
-    """A2 multi-aggregate (left the 50-entry gate for the curation family
-    in r4): checked against DuckDB via the retained oracle."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.agg_colsum_events(spark, sf).collect()
-    }
-    con = _duck_events(sf)
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.AGG_COLSUM_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_json_props_sum(spark):
-    """JSON-path extraction sum (left the 50-entry gate for the quality-LM
-    family in r4): checked against DuckDB via the retained oracle."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.json_props_sum(spark, sf).collect()
-    }
-    con = _duck_events(sf)
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.JSON_PROPS_ORACLE).fetchall()
-    }
-    assert got == want
-
-
 def test_rollup_order_priority(spark):
     """ROLLUP grouping sets (left the 50-entry gate for the quality-LM
     family in r4): checked against DuckDB via the retained oracle."""
@@ -534,82 +336,6 @@ def test_rollup_order_priority(spark):
         for r in con.execute(
             driver_queries.ROLLUP_PRIORITY_ORACLE
         ).fetchall()
-    }
-    assert got == want
-
-
-def test_events_per_day(spark):
-    """F18 date bucketing (left the 50-entry gate for the curation family
-    in r4): checked against DuckDB via the retained oracle."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["day"], r["n"])
-        for r in driver_queries.events_per_day(spark, sf).collect()
-    }
-    con = _duck_events(sf)
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.EVENTS_PER_DAY_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_lag_event_deltas(spark):
-    """W2 lag deltas (left the 50-entry gate for the temporal join family
-    in r4): checked against DuckDB via the retained oracle."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.lag_event_deltas(spark, sf).collect()
-    }
-    con = _duck_events(sf)
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.LAG_DELTAS_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_value_islands_per_user(spark):
-    """W1 threshold islands (left the 50-entry gate for the temporal join
-    family in r4): checked against DuckDB via the retained oracle."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.value_islands_per_user(spark, sf).collect()
-    }
-    con = _duck_events(sf)
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.VALUE_ISLANDS_ORACLE).fetchall()
-    }
-    assert got == want
-
-
-def test_semi_join_active_customers(spark):
-    """E3 left-semi join (left the 50-entry gate for the clustering family
-    in r4): checked against DuckDB via the retained oracle."""
-    import duckdb
-
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.semi_join_active_customers(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW customer AS SELECT * FROM '{sf}/customer.parquet'")
-    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{sf}/orders.parquet'")
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.SEMI_JOIN_ORACLE).fetchall()
     }
     assert got == want
 

@@ -1,14 +1,17 @@
-"""Regrowth guard: every top-level def in the package's operator layers
-is reached by production code, or is named in ``KEEP`` with a reason.
+"""Regrowth guard: every top-level def in the package's operator layers,
+query module and session modules (``SCANNED``) is reached by production
+code, or is named in ``KEEP`` with a reason.
 
 Production code is the package itself, ``jobs/``, ``tools/``, the
 ``bench*.py`` scripts, ``__spark_entry__.py`` and ``perfbench/``. A def
 is reached when a Name, an Attribute, an import alias or an
 identifier-shaped string constant in production code names it, outside
-the bodies of scanned defs that are themselves unreached. Liveness is a
-fixed point: a helper that only an unreached operator calls is
-unreached too. Tests do not count as callers: an operator that only its
-own test calls serves no workload and has no DuckDB oracle.
+the bodies of scanned defs that are themselves unreached. A query
+decorated with ``@q(...)`` is reached: the decorator registers it in
+``driver_queries.QUERIES``. Liveness is a fixed point: a helper that
+only an unreached operator or query calls is unreached too. Tests do
+not count as callers: an operator that only its own test calls serves
+no workload and has no DuckDB oracle.
 """
 
 import ast
@@ -16,7 +19,10 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "granulate_char_ocr_spark"
-SCANNED = ("operators", "functions", "sources", "streaming", "plans")
+SCANNED = (
+    "operators/", "functions/", "sources/", "streaming/", "plans/",
+    "driver_queries.py", "alphabet.py", "session.py", "worker_daemon.py",
+)
 
 # def name, or module path under the package (every def in it), -> why
 # it stays without a production caller (SURVEY ids are the rows of the
@@ -38,20 +44,15 @@ KEEP = {
     "train_bpe_spark": "Spark trainer of the committed BPE merges",
     "explode_sentences": "Java-regex only (no DuckDB oracle); pinned to "
     "its Python twin",
-    # unreached like the deleted operators; each goes, with its tests, in
-    # a follow-up deletion, so one change never drops the whole batch
-    **dict.fromkeys(
-        (
-            "feed_entries", "resolve_redirects", "robots_crawl_delay",
-            "robots_sitemaps", "sitemap_urls", "surt_expr", "cdx_records",
-            "cdx_first_by_digest", "host_budget_sample", "anchor_texts",
-            "domain_link_stats", "registrable_domain_expr",
-            "jsonld_metadata", "duplicated_passage_stats",
-            "remove_duplicated_passages", "temperature_resample",
-            "perplexity_buckets",
-        ),
-        "deletion deferred to a follow-up change (ROADMAP open item 8)",
-    ),
+    "quality_score_docs": "retired query; the only exact DuckDB parity "
+    "check of textstats.quality_score",
+    "html_extract_docs": "retired query; the only exact DuckDB parity "
+    "check of docparse.html_main_texts",
+    "dedup_simhash32": "retired query; the only exact DuckDB parity check "
+    "of dedup.simhash at 32 bits",
+    "purchases_within_72h_events": "retired query; the only exact DuckDB "
+    "parity check of temporal.range_join",
+    "prototype_matrix": "golden-fingerprint source (alphabet.py)",
 }
 
 
@@ -90,6 +91,15 @@ def _names(node):
     return out
 
 
+def _registers_query(stmt):
+    """True for a def decorated with ``@q(...)``: the decorator puts it in
+    ``driver_queries.QUERIES``, the graded query surface."""
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+        and d.func.id == "q" for d in stmt.decorator_list
+    )
+
+
 def _kept(path, name, keep):
     rel = os.path.relpath(path, os.path.join(ROOT, PKG))
     return name in keep or rel in keep
@@ -98,7 +108,7 @@ def _kept(path, name, keep):
 def unreached(keep=KEEP):
     """(module path, def name) of every scanned top-level def that no
     production code reaches and ``keep`` does not name."""
-    scanned = tuple(os.path.join(ROOT, PKG, d) + os.sep for d in SCANNED)
+    scanned = tuple(os.path.join(ROOT, PKG, s) for s in SCANNED)
     defs = {}  # (path, name) -> names its body references
     roots = set()
     for path in _production_files():
@@ -110,6 +120,8 @@ def unreached(keep=KEEP):
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 defs[(path, stmt.name)] = _names(stmt) - {stmt.name}
+                if _registers_query(stmt):
+                    roots.add(stmt.name)
             else:
                 roots |= _names(stmt)
     live = roots | {n for p, n in defs if _kept(p, n, keep)}

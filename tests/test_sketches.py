@@ -20,7 +20,7 @@ def _bigrams(spark, sf):
         .select(
             "lang",
             F.explode(
-                F.expr(_gram_windows_expr(2, with_pos=False, distinct=False))
+                F.expr(_gram_windows_expr(2, distinct=False))
             ).alias("g"),
         )
     )

@@ -1,5 +1,5 @@
-"""URL quality filter: per-rule semantics, Spark ≡ DuckDB rule parity,
-gate-query parity, and the filter_bbox_parts demotion parity."""
+"""URL quality filter: per-rule semantics, Spark ≡ DuckDB rule parity
+and gate-query parity."""
 
 import duckdb
 import pytest
@@ -201,23 +201,3 @@ def test_zero_exchange_plan(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_filter_bbox_parts(spark):
-    """P3 conjunctive pushed-down filter (left the 50-entry gate for
-    url_filter_docs in r4; pushdown stays pinned by
-    test_bucketing_pruning.py): exact DuckDB parity."""
-    from granulate_char_ocr_spark import driver_queries
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        tuple(r)
-        for r in driver_queries.filter_bbox_parts(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW part AS SELECT * FROM '{sf}/part.parquet'")
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.FILTER_BBOX_ORACLE).fetchall()
-    }
-    assert got == want
