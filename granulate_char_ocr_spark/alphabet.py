@@ -69,8 +69,6 @@ GRANULATE_TO_LATIN: dict[str, str] = {
     "ᑖ": "7", "ᑗ": "8", "ᐉ": "9",
 }
 
-LATIN_TO_GRANULATE: dict[str, str] = {v: k for k, v in GRANULATE_TO_LATIN.items()}
-
 # Reference tests/debug/test_similarity_mapping.py:39-47 accepts a
 # Hamming-nearest match only when the distance is <= 10 bits.
 HAMMING_MAX_DISTANCE = 10
@@ -98,12 +96,6 @@ def render_glyph(latin: str) -> np.ndarray:
     """
     bits = hash_to_bits(LATIN_TO_HASH[latin]).reshape(HASH_SIDE, HASH_SIDE)
     return np.kron(bits, np.ones((8, 8), dtype=np.uint8)) * np.uint8(255)
-
-
-def prototype_matrix() -> tuple[np.ndarray, str]:
-    """(26, 64) uint8 bit matrix of the pinned full-glyph hashes + letter order."""
-    mat = np.stack([hash_to_bits(LATIN_TO_HASH[c]) for c in LETTERS])
-    return mat, LETTERS
 
 
 @dataclass(frozen=True)

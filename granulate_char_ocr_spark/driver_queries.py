@@ -924,11 +924,6 @@ def lang_id_docs(spark, sf_dir):
     return textstats.lang_id(_tw(spark, sf_dir, "documents"))
 
 
-# (token_count_docs was folded into bpe_token_count_docs in r3 — that
-# entry now carries n_bpe_tokens + n_ws_tokens + n_types — to free a gate
-# slot for html_extract_docs; textstats.token_count stays pytest-covered.)
-
-
 # (html_extract_docs left the 50-entry gate window in r4 for
 # link_graph_hosts: the name-based HTML boilerplate strip stays
 # gate-visible via html_main_content_docs (density DOM heuristics run
@@ -3268,7 +3263,7 @@ def ocr_method_histogram(spark, sf_dir):
 def ocr_extract_noisy(spark, sf_dir):
     """The ROBUST extraction path at the driver gate (VERDICT r2 item 2):
     salt-and-pepper media variants through ``extract_flat(noisy=True)`` —
-    Otsu/bilateral/deskew preprocess, adjacent-region merge, and the
+    Gaussian/Otsu/deskew preprocess, adjacent-region merge, and the
     multi-binarization vote tier for cascade rejects (reference
     ocr_service_backup.py; extract_from_reference.py:352-356). ``methods``
     lists the distinct cascade tiers each span used; 'vote' appears in the

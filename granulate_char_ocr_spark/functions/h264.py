@@ -27,9 +27,7 @@ _HIGH_PROFILES = {100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135}
 # nal_unit_type values (§7.4.1 table 7-1)
 NAL_SLICE = 1
 NAL_IDR = 5
-NAL_SEI = 6
 NAL_SPS = 7
-NAL_PPS = 8
 
 
 @dataclass

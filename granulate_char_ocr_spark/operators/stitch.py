@@ -14,9 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# flat span rows flowing into the stitch
-FLAT_COLS = ("doc_id", "offset", "kind", "text", "media_ref")
-
 
 def assemble_documents(flat: DataFrame) -> DataFrame:
     """(doc_id, offset, kind, text, media_ref) → (doc_id, spans) with spans =

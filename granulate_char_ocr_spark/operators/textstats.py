@@ -1,7 +1,7 @@
 """Text-analysis operators over a document corpus: language-ID, quality
-scoring, token counting, fingerprinting. Column expressions (whole-stage
-codegen) where Catalyst can say it; winnowing runs as a per-document text
-kernel (operators/doc_kernel.py). Each has an exact DuckDB oracle.
+scoring, fingerprinting. Column expressions (whole-stage codegen) where
+Catalyst can say it; winnowing runs as a per-document text kernel
+(operators/doc_kernel.py). Each has an exact DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -158,16 +158,6 @@ def lang_id(docs: DataFrame) -> DataFrame:
         .otherwise(script_pred)
     )
     return scored.select("doc_id", pred.alias("predicted_lang"))
-
-
-def token_count(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, n_types): whitespace token count + distinct types."""
-    toks = F.split(F.col("text"), " ")
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_types"),
-    )
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -588,35 +578,4 @@ def charlm_perplexity(docs: DataFrame, ref: DataFrame | None = None) -> DataFram
         "doc_id",
         F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
         "perplexity",
-    )
-
-
-# --- sentence segmentation ------------------------------------------------
-
-# sentence-final punctuation, optional closing quote/bracket, then
-# whitespace before an upper-case/quote/digit opener. Java regex only
-# (fixed-width lookbehind; RE2/DuckDB has no lookbehind, so this leg is
-# pytest-pinned against the Python twin rather than SQL-oracled).
-# Documented naive-splitter limits, the standard ones: abbreviations
-# ("Dr. Smith"), decimal points inside numbers are safe (no following
-# whitespace+capital), ellipses split at the final dot.
-SENTENCE_SPLIT_RE = r"(?<=[.!?][\")”’])\s+(?=[A-Z0-9\"“])" \
-    r"|(?<=[.!?])\s+(?=[A-Z0-9\"“])"
-
-
-def explode_sentences(
-    docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
-    """(key, text) -> (key, sent_idx, sentence): 1→N rule-based
-    sentence segmentation — the unit of sentence-level dedup,
-    decontamination and packing. Pure codegen split + posexplode;
-    empty pieces dropped; the split keeps all characters (boundaries
-    consume only the whitespace run)."""
-    pieces = F.split(F.col(text_col), SENTENCE_SPLIT_RE)
-    return (
-        docs.select(
-            key_col,
-            F.posexplode(pieces).alias("sent_idx", "sentence"),
-        )
-        .filter(F.trim(F.col("sentence")) != "")
     )

@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 
 from granulate_char_ocr_spark.operators.stitch import explode_expected
 
-METRICS_SCHEMA_DOC = (
-    "run_id, input_snapshot_id, partition_hash, n_docs, n_text_spans, "
-    "n_media_spans, n_chars, p50_chars, p90_chars, committed_at"
-)
-
 
 def partition_lineage(
     flat: DataFrame,

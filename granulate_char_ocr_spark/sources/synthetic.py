@@ -539,25 +539,6 @@ NOISE_SEED = 11       # noisy-media seed: exercises all three cascade tiers
 MULTIROW_GAP = 40     # blank rows between stacked words (> row_gap=24)
 
 
-def noisy_media_pandas(noise_seed: int = NOISE_SEED) -> pd.DataFrame:
-    """The noisy media store: one salt-and-pepper variant per (word, variant),
-    refs suffixed ``_n`` so the clean and noisy stores can coexist."""
-    rows = []
-    for word in WORDS:
-        for v in range(N_VARIANTS):
-            img = render_word_noisy(word, v, seed=noise_seed)
-            rows.append(
-                {
-                    "media_ref": media_ref_for(word, v) + "_n",
-                    "word": word,
-                    "width": img.shape[1],
-                    "height": img.shape[0],
-                    "pixels": img.tobytes(),
-                }
-            )
-    return pd.DataFrame(rows)
-
-
 def noisy_corpus_spark(spark, n_docs: int, seed: int = 42):
     """(documents, noisy_media): the standard corpus with every media span
     re-pointed at the noisy variant of the same image (documents AND the

@@ -76,7 +76,6 @@ from granulate_char_ocr_spark.functions.mojibake import (
 from granulate_char_ocr_spark.operators.dedup import _gram_windows_expr, shingles
 from granulate_char_ocr_spark.operators.sampling import _draw32
 from granulate_char_ocr_spark.operators.skew import widen_narrow_scan
-from granulate_char_ocr_spark.operators.textstats import SENTENCE_SPLIT_RE
 
 
 def _minhash_signatures_expr(
@@ -498,9 +497,3 @@ def fix_mojibake_python(s: str | None) -> str | None:
     if _VALID_RE.match(u) and _LEAD_RE.search(u):
         return u.encode("latin-1").decode("utf-8")
     return s
-
-
-def split_sentences_python(text: str) -> list[str]:
-    """Python twin of textstats.explode_sentences' split (same pattern;
-    Python re and Java regex agree on fixed-width lookbehind/lookahead)."""
-    return [p for p in re.split(SENTENCE_SPLIT_RE, text) if p.strip()]

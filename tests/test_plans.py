@@ -338,40 +338,3 @@ def test_rollup_order_priority(spark):
         ).fetchall()
     }
     assert got == want
-
-
-# --- sentence segmentation -------------------------------------------------
-
-
-def test_explode_sentences_twin_and_corners(spark):
-    from reference_twins import split_sentences_python
-
-    from granulate_char_ocr_spark.operators.textstats import explode_sentences
-
-    texts = [
-        'First sentence. Second one! Third? "Quoted start." And more.',
-        "No terminal punctuation here",
-        "Decimals like 3.14 stay. Numbers 42 open sentences.",
-        "Trailing spaces.   Next sentence.",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    out = explode_sentences(df).collect()
-    got = {}
-    for r in out:
-        got.setdefault(r.doc_id, []).append((r.sent_idx, r.sentence))
-    for i, t in enumerate(texts):
-        want = split_sentences_python(t)
-        have = [s for _, s in sorted(got.get(i, []))]
-        assert have == want, (i, have, want)
-    # corners pinned concretely
-    assert [s for _, s in sorted(got[0])][0] == "First sentence."
-    assert len(got[0]) == 5
-    assert len(got[1]) == 1
-    assert [s for _, s in sorted(got[2])] == [
-        "Decimals like 3.14 stay.",
-        "Numbers 42 open sentences.",
-    ]
-    assert 4 not in got  # empty text yields no rows

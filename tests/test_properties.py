@@ -68,22 +68,6 @@ def test_ahash_roundtrip_any_bit_pattern(bits_int):
     assert (got == bits).all()
 
 
-@given(
-    st.integers(10, 80),
-    st.integers(10, 80),
-    st.integers(2, 9),
-    st.integers(2, 9),
-)
-@settings(max_examples=30, deadline=None)
-def test_resize_preserves_mass(h, w, oh, ow):
-    """Area-average resize preserves total mass (mean invariance) within fp
-    tolerance for any geometry."""
-    rng = np.random.default_rng(h * 100 + w)
-    img = (rng.random((h, w)) * 255).astype(np.uint8)
-    out = kernels.resize_area(img, oh, ow)
-    assert abs(out.mean() - img.mean()) < 1e-6 * max(1.0, img.mean()) + 1e-6
-
-
 @given(st.binary(min_size=0, max_size=64))
 @settings(max_examples=50, deadline=None)
 def test_classify_never_crashes_on_garbage(payload):

@@ -12,6 +12,9 @@ decorated with ``@q(...)`` is reached: the decorator registers it in
 only an unreached operator or query calls is unreached too. Tests do
 not count as callers: an operator that only its own test calls serves
 no workload and has no DuckDB oracle.
+
+Module-level assignments in ``SCANNED`` are held to the same name rule,
+with tests counted as readers: a constant that nothing reads is deleted.
 """
 
 import ast
@@ -34,16 +37,9 @@ KEEP = {
     "sources/binary_files.py": "SURVEY S4 corpus scan, EP3 corpus evaluation",
     "read_ledger": "resume audit: the committed-bucket ledger",
     "read_output": "resume audit: the committed output",
-    "functions/kernels.py": "golden-fingerprint source, left untouched so "
-    "no golden regenerates",
-    "noisy_media_pandas": "golden-fingerprint source (sources/synthetic.py)",
-    "activity_segments": "golden-fingerprint source (functions/audio.py)",
     "cosine_topk": "exact reference of cosine_topk_gemm (ANN recall tests)",
     "ivf_topk": "single-probe baseline of ivf_topk_multiprobe's recall",
-    "token_count": "gate-demoted operator, pinned in test_dedup_ops",
     "train_bpe_spark": "Spark trainer of the committed BPE merges",
-    "explode_sentences": "Java-regex only (no DuckDB oracle); pinned to "
-    "its Python twin",
     "quality_score_docs": "retired query; the only exact DuckDB parity "
     "check of textstats.quality_score",
     "html_extract_docs": "retired query; the only exact DuckDB parity "
@@ -52,7 +48,6 @@ KEEP = {
     "of dedup.simhash at 32 bits",
     "purchases_within_72h_events": "retired query; the only exact DuckDB "
     "parity check of temporal.range_join",
-    "prototype_matrix": "golden-fingerprint source (alphabet.py)",
 }
 
 
@@ -74,13 +69,20 @@ def _production_files():
     return list(_py_files(PKG, "jobs", "tools", "perfbench", *top))
 
 
-def _names(node):
+def _parse(path):
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _names(node, loads_only=False):
     """Every name a node references: Names, Attributes, import aliases
-    and identifier-shaped string constants."""
+    and identifier-shaped string constants. ``loads_only`` skips the
+    Names a statement assigns."""
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            if not (loads_only and isinstance(n.ctx, ast.Store)):
+                out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
@@ -112,8 +114,7 @@ def unreached(keep=KEEP):
     defs = {}  # (path, name) -> names its body references
     roots = set()
     for path in _production_files():
-        with open(path, encoding="utf-8") as f:
-            tree = ast.parse(f.read(), path)
+        tree = _parse(path)
         in_scope = path.startswith(scanned)
         for stmt in tree.body:
             if in_scope and isinstance(
@@ -154,3 +155,35 @@ def test_keep_entries_are_needed():
     names = {n for _, n in dead}
     modules = {os.path.relpath(p, PKG) for p, _ in dead}
     assert set(KEEP) <= names | modules, sorted(set(KEEP) - names - modules)
+
+
+def unread_constants():
+    """(module path, name) of every module-level assignment in a scanned
+    module that no production file and no test reads."""
+    scanned = tuple(os.path.join(ROOT, PKG, s) for s in SCANNED)
+    consts = set()
+    read = set()
+    for path in _production_files() + list(_py_files("tests")):
+        tree = _parse(path)
+        read |= _names(tree, loads_only=True)
+        if not path.startswith(scanned):
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = stmt.targets if isinstance(stmt, ast.Assign) \
+                    else [stmt.target]
+                consts |= {
+                    (os.path.relpath(path, ROOT), n.id)
+                    for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name)
+                    and not (n.id.startswith("__") and n.id.endswith("__"))
+                }
+    return sorted((p, n) for p, n in consts if n not in read)
+
+
+def test_every_scanned_constant_is_read():
+    unread = unread_constants()
+    assert not unread, (
+        "module-level assignments nothing reads; delete them:\n"
+        + "\n".join(f"  {p}:{n}" for p, n in unread)
+    )

@@ -56,7 +56,7 @@ def _cut_word(
 
 def test_split_glyph_over_segments_without_merge():
     img = _cut_word("TEAM", 2, cut_w=3)  # cut through the A
-    pre = kernels.preprocess_noisy(img)
+    pre = kernels.preprocess_noisy_pair(img)[0]
     raw_regions = kernels.segment_regions(pre)
     assert len(raw_regions) == 5  # A split in two islands
     merged = kernels.merge_adjacent_regions(raw_regions, kernels.NOISY_MERGE_GAP)
