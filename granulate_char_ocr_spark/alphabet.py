@@ -82,11 +82,6 @@ def hash_to_bits(hash_str: str) -> np.ndarray:
     return np.frombuffer(hash_str.encode("ascii"), dtype=np.uint8) - ord("0")
 
 
-def bits_to_hash(bits: np.ndarray) -> str:
-    """uint8[64] of {0,1} -> 64-char bitstring."""
-    return "".join("1" if b else "0" for b in bits.reshape(-1))
-
-
 def render_glyph(latin: str) -> np.ndarray:
     """Render the canonical 64x64 binary glyph for a letter from its hash.
 
@@ -102,7 +97,7 @@ def render_glyph(latin: str) -> np.ndarray:
 class ClassifierState:
     """Immutable per-worker classifier state (built once per Python worker).
 
-    ``crop_hash_to_latin`` / ``crop_bits`` are the prototypes *as the segment
+    ``crop_key_to_latin`` / ``crop_bits`` are the prototypes *as the segment
     stage sees them*: the reference hashes the tight ink crop of a region
     (``granulate_alphabet_generated.py:63-80`` resizes the raw crop to 8x8),
     so prototypes are derived by running the identical preprocess+segment+hash
@@ -112,9 +107,7 @@ class ClassifierState:
     """
 
     letters: str
-    full_hash_to_latin: dict[str, str]
-    crop_hash_to_latin: dict[str, str]
-    crop_key_to_latin: dict[bytes, str]  # same map keyed by bits.tobytes()
+    crop_key_to_latin: dict[bytes, str]  # keyed by bits.tobytes()
     crop_bits: np.ndarray  # (26, 64) uint8
 
 
@@ -127,7 +120,6 @@ def classifier_state() -> ClassifierState:
     if _STATE is None:
         from granulate_char_ocr_spark.functions import kernels
 
-        crop_hash_to_latin: dict[str, str] = {}
         crop_key_to_latin: dict[bytes, str] = {}
         crop_bits = np.zeros((len(LETTERS), 64), dtype=np.uint8)
         for i, letter in enumerate(LETTERS):
@@ -142,15 +134,12 @@ def classifier_state() -> ClassifierState:
                 raise RuntimeError(f"glyph {letter}: {len(regions)} islands")
             x, y, w, h = regions[0]
             bits = kernels.ahash_bits(pre[y : y + h, x : x + w])
-            crop_hash_to_latin[bits_to_hash(bits)] = letter
             crop_key_to_latin[bits.tobytes()] = letter
             crop_bits[i] = bits
-        if len(crop_hash_to_latin) != len(LETTERS):  # pragma: no cover
+        if len(crop_key_to_latin) != len(LETTERS):  # pragma: no cover
             raise RuntimeError("crop-hash collision among prototypes")
         _STATE = ClassifierState(
             letters=LETTERS,
-            full_hash_to_latin=dict(HASH_TO_LATIN),
-            crop_hash_to_latin=crop_hash_to_latin,
             crop_key_to_latin=crop_key_to_latin,
             crop_bits=crop_bits,
         )

@@ -633,7 +633,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
-def _simhash_sql(bits: int = 16, where: str = "") -> str:
+def _simhash_sql(bits: int) -> str:
     hex_digits = (bits + 3) // 4  # token-hash width derives from bits,
     sums = ", ".join(             # mirroring dedup.simhash (ADVICE r1)
         f"sum(CASE WHEN (th >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s_{i}"
@@ -644,31 +644,13 @@ def _simhash_sql(bits: int = 16, where: str = "") -> str:
     )
     return f"""
     WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-                 FROM documents {where}),
+                 FROM documents),
     th AS (SELECT doc_id,
                   ('0x' || substr(md5(tok), 1, {hex_digits}))::BIGINT AS th
            FROM tok),
     s AS (SELECT doc_id, {sums} FROM th GROUP BY doc_id)
     SELECT doc_id, CAST({val} AS BIGINT) AS simhash FROM s
     """
-
-
-# (dedup_simhash32 left the 50-entry gate window in r4 for
-# html_table_rows_docs: the 32-bit signature computation is a strict
-# subset of simhash_near_pairs — that gate entry computes the SAME
-# dedup.simhash(bits=32) signatures before its pigeonhole join, and its
-# oracle embeds the SAME _simhash_sql(bits=32) — and the exact parity
-# stays pinned by tests/test_dedup_ops.py::test_dedup_simhash32_parity
-# against the oracle below.)
-SIMHASH32_ORACLE = _simhash_sql(bits=32)
-
-
-def dedup_simhash32(spark, sf_dir):
-    """Production-width SimHash (32 of the supported 60 bits): wider hashes
-    keep the near-pair graph sparse at corpus scale (the 16-bit space
-    saturates by sf0.1 — see dedup_clusters_lsh). Also the cross-engine
-    regression proof of the bits-derived token-hash width (ADVICE r1)."""
-    return dedup.simhash(_t(spark, sf_dir, "documents"), bits=32)
 
 
 @q(

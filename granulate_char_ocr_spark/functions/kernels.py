@@ -9,7 +9,7 @@ reference pipeline (citations are reference file:line; see SURVEY.md §2.8):
   threshold             ocr_service.py:195       (F4, fixed 128)
   otsu_threshold        optimize_preprocessing.py:81 (F5)
   adaptive_threshold    preprocess_color_images.py:133-136 (F6)
-  dilate/erode/close    ocr_service.py:198-199,346-347 (F7)
+  morph_close (2×2)     ocr_service.py:198-199,346-347 (F7)
   gaussian_blur3        ocr_service.py:370       (F10)
   ahash_bits            granulate_alphabet_generated.py:66-77 (F11)
   deskew_angle          optimize_preprocessing.py:102-128 (F20)
@@ -99,29 +99,9 @@ def adaptive_threshold(img: np.ndarray, block: int = 11, c: int = 2) -> np.ndarr
 # ---------------------------------------------------------------------------
 
 
-def _pool(img: np.ndarray, kh: int, kw: int, reduce_max: bool) -> np.ndarray:
-    """Max (dilate) / min (erode) over a kh×kw rect anchored like cv2 (origin
-    at kernel center, ties to top-left for even sizes)."""
-    pads = ((kh - 1) // 2, kh // 2, (kw - 1) // 2, kw // 2)
-    if reduce_max:
-        padded = np.pad(img, ((pads[0], pads[1]), (pads[2], pads[3])), constant_values=0)
-        op = np.maximum
-    else:
-        padded = np.pad(img, ((pads[0], pads[1]), (pads[2], pads[3])), constant_values=255)
-        op = np.minimum
-    h, w = img.shape
-    out = padded[0:h, 0:w].copy()
-    for dy in range(kh):
-        for dx in range(kw):
-            if dy == 0 and dx == 0:
-                continue
-            out = op(out, padded[dy : dy + h, dx : dx + w])
-    return out
-
-
 def _dilate2(img: np.ndarray) -> np.ndarray:
-    """2×2 dilate, separable in-place (exactly _pool(img, 2, 2, max): the
-    window is {0,+1}² with zero padding at the right/bottom edge)."""
+    """2×2 dilate, separable in-place: max over the window {0,+1}² (cv2's
+    anchor for an even kernel) with zero padding at the right/bottom edge."""
     out = img.copy()
     np.maximum(out[:, :-1], img[:, 1:], out=out[:, :-1])
     np.maximum(out[:-1, :], out[1:, :], out=out[:-1, :])
@@ -136,20 +116,10 @@ def _erode2(img: np.ndarray) -> np.ndarray:
     return out
 
 
-def dilate(img: np.ndarray, kh: int = 3, kw: int = 3) -> np.ndarray:
-    if kh == 2 and kw == 2:
-        return _dilate2(img)
-    return _pool(img, kh, kw, reduce_max=True)
-
-
-def erode(img: np.ndarray, kh: int = 3, kw: int = 3) -> np.ndarray:
-    if kh == 2 and kw == 2:
-        return _erode2(img)
-    return _pool(img, kh, kw, reduce_max=False)
-
-
-def morph_close(img: np.ndarray, kh: int = 2, kw: int = 2) -> np.ndarray:
-    return erode(dilate(img, kh, kw), kh, kw)
+def morph_close(img: np.ndarray) -> np.ndarray:
+    """2×2 closing (dilate then erode), the size every recognition chain
+    uses."""
+    return _erode2(_dilate2(img))
 
 
 # ---------------------------------------------------------------------------
@@ -235,21 +205,14 @@ def _bm_geometry(h: int, w: int, oh: int, ow: int):
     return ys, xs, counts.astype(np.float64)
 
 
-def _block_mean(img: np.ndarray, oh: int, ow: int) -> np.ndarray:
-    """Pixel-aligned block-mean downsample via two reduceat passes (~4 numpy
-    calls). Identical to exact block-mean when dims divide evenly — the
-    pinned full-glyph-hash case."""
-    h, w = img.shape
-    ys, xs, counts = _bm_geometry(h, w, oh, ow)
-    colsum = np.add.reduceat(img.astype(np.int32), ys, axis=0)
-    block = np.add.reduceat(colsum, xs, axis=1)
-    return block / counts
-
-
 def ahash_bits_batch(stack: np.ndarray) -> np.ndarray:
-    """(B, H, W) uint8 -> (B, 64) {0,1} aHash bits: the batched twin of
-    ``ahash_bits`` (same pixel-aligned block-mean, reduceat over axes 1/2 of
-    the whole stack — one pair of NumPy calls for B images instead of B)."""
+    """(B, H, W) uint8 -> (B, 64) {0,1} 8×8 mean-threshold aHash bits
+    (strict >, as the reference's ``'1' if pixel > avg else '0'``). The
+    downsample is a pixel-aligned block-mean, reduceat over axes 1/2 of the
+    whole stack — one pair of NumPy calls for B images. The reference minted
+    its table from 64×64 crops, where block-mean is exact; for general crops
+    our prototypes are built with the identical kernel, so the choice is
+    self-consistent."""
     b, h, w = stack.shape
     ys, xs, counts = _bm_geometry(h, w, alphabet.HASH_SIDE, alphabet.HASH_SIDE)
     colsum = np.add.reduceat(stack.astype(np.int32), ys, axis=1)
@@ -258,14 +221,22 @@ def ahash_bits_batch(stack: np.ndarray) -> np.ndarray:
     return (flat > flat.mean(axis=1, keepdims=True)).astype(np.uint8)
 
 
+def ahash_bits_many(imgs: list[np.ndarray]) -> np.ndarray:
+    """aHash bits of N images of any shapes -> (N, 64) uint8: images of one
+    shape are stacked and hashed by one ``ahash_bits_batch`` call (crop and
+    thumbnail shapes repeat heavily within a batch)."""
+    out = np.empty((len(imgs), 64), dtype=np.uint8)
+    by_shape: dict[tuple[int, ...], list[int]] = {}
+    for i, img in enumerate(imgs):
+        by_shape.setdefault(img.shape, []).append(i)
+    for idxs in by_shape.values():
+        out[idxs] = ahash_bits_batch(np.stack([imgs[i] for i in idxs]))
+    return out
+
+
 def ahash_bits(img: np.ndarray) -> np.ndarray:
-    """8×8 mean-threshold aHash -> uint8[64] of {0,1} (strict >, as the
-    reference's ``'1' if pixel > avg else '0'``). Uses the pixel-aligned
-    block-mean (the reference minted its table from 64×64 crops where
-    block-mean is exact; for general crops our prototypes are built with the
-    identical kernel, so the choice is self-consistent)."""
-    small = _block_mean(img, alphabet.HASH_SIDE, alphabet.HASH_SIDE)
-    return (small > small.mean()).astype(np.uint8).reshape(-1)
+    """aHash of one H×W image -> uint8[64] of {0,1}."""
+    return ahash_bits_batch(img[None])[0]
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +257,7 @@ def preprocess(img: np.ndarray) -> np.ndarray:
     gray = to_grayscale(img)
     gray = polarity_invert(gray)
     binary = threshold(gray, 128)
-    return morph_close(binary, 2, 2)
+    return morph_close(binary)
 
 
 def preprocess_noisy_pair(img: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -302,7 +273,7 @@ def preprocess_noisy_pair(img: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     if a != 0.0:
         binary = _rotate_nn(binary, a)
         smooth = _rotate_nn(smooth, a)
-    return morph_close(binary, 2, 2), smooth
+    return morph_close(binary), smooth
 
 
 # x-gap for the noisy path's adjacent-region merge: below the corpus'
@@ -518,9 +489,7 @@ def classify_batch(
     if not crops:
         return []
     state = alphabet.classifier_state()
-    bits = np.empty((len(crops), 64), dtype=np.uint8)
-    for i, c in enumerate(crops):
-        bits[i] = ahash_bits(c)
+    bits = ahash_bits_many(crops)
     # one popcount matmul: Hamming(a,b) = |a| + |b| - 2 a·b over {0,1} vectors
     proto = state.crop_bits  # (26, 64)
     dists = (
@@ -554,9 +523,9 @@ def vote_classify_crop(gray_crop: np.ndarray) -> tuple[str | None, float, str]:
     letter wins (first occurrence breaks ties, as Counter.most_common does).
     Confidence = mean confidence of the winner's votes; method = 'vote'."""
     variants = [
-        morph_close(threshold(gray_crop, 128), 2, 2),
-        morph_close(otsu_threshold(gray_crop), 2, 2),
-        morph_close(adaptive_threshold(gray_crop), 2, 2),
+        morph_close(threshold(gray_crop, 128)),
+        morph_close(otsu_threshold(gray_crop)),
+        morph_close(adaptive_threshold(gray_crop)),
     ]
     results = [r for r in classify_batch(variants) if r[0] is not None]
     if not results:

@@ -5,7 +5,8 @@ Hashing is `md5`, which is bit-identical across engines, so every operator
 has an exact DuckDB oracle. The reference formulations are pure DataFrame
 compositions; the hot paths run Python kernels (per-document text kernels on
 operators/doc_kernel.py, plus the n-gram and embedding pair kernels), each
-pinned to its reference by a parity test.
+pinned to its reference by a parity test (SimHash, which has no DataFrame
+twin, to its DuckDB oracle).
 
 Scale notes:
 * exact dedup — one hash-aggregate shuffle on the fingerprint; at 100 TB this
@@ -313,42 +314,6 @@ def ngram_jaccard_pairs(
     return joined.mapInPandas(
         kernel, schema="doc_a bigint, doc_b bigint, jaccard double"
     )
-
-
-def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """(doc_id, simhash): ``bits``-wide SimHash over whitespace tokens.
-
-    Token hash = first ceil(bits/4) md5 hex digits as int (width derived
-    from ``bits`` — a fixed 4-digit slice would leave every bit past 16
-    voting uniformly, ADVICE r1); each bit contributes ±1, bit set when the
-    signed sum is strictly positive (deterministic ties).
-    """
-    # widen_narrow_scan'd since r6: the r2-era A/B (0.94 s serial vs
-    # 1.37 s widened, sf0.1) no longer holds — the driver's single-row-
-    # group documents.parquet serializes the whole md5+32-sum stage on one
-    # core, and at sf1.0 the interleaved A/B is 3.64 s serial vs 2.26 s
-    # widened (sf0.1: 1.20 vs 1.15 — neutral where it used to lose).
-    if not 1 <= bits <= 60:
-        raise ValueError(f"bits must be in [1, 60], got {bits}")
-    hex_digits = (bits + 3) // 4
-    tok = widen_narrow_scan(docs).select(
-        "doc_id", F.explode(TOKENS()).alias("tok")
-    ).withColumn(
-        "th",
-        F.conv(F.substring(F.md5("tok"), 1, hex_digits), 16, 10).cast("long"),
-    )
-    aggs = [
-        F.sum(
-            F.when(F.expr(f"(shiftright(th, {i}) & 1) = 1"), 1).otherwise(-1)
-        ).alias(f"s_{i}")
-        for i in range(bits)
-    ]
-    summed = tok.groupBy("doc_id").agg(*aggs)
-    sim = None
-    for i in range(bits):
-        term = F.when(F.col(f"s_{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return summed.select("doc_id", sim.cast("long").alias("simhash"))
 
 
 def embedding_near_pairs(
@@ -689,16 +654,18 @@ def hamming_near_pairs(
     )
 
 
-def _simhash_kernel(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """Arrow-kernel formulation of :func:`simhash` — identical values
-    (token hash = first ceil(bits/4) md5 hex digits, ±1 votes over token
-    OCCURRENCES including empty tokens, bit set when the signed sum is
-    strictly positive; integer arithmetic, so order-free). The former
-    expression plan evaluated ``bits`` conditional-sum expressions per
-    exploded token row (~86M when-branches at sf1.0 for bits=32); the
-    kernel computes each doc's signature in-row from its token Counter
-    with token→hash memoized per task (guide §4.2). Pinned equal to the
-    expression-shaped :func:`simhash` by tests/test_dedup_ops.py."""
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
+    """(doc_id, simhash): ``bits``-wide SimHash over whitespace tokens.
+
+    Token hash = first ceil(bits/4) md5 hex digits as int (width derived
+    from ``bits`` — a fixed 4-digit slice would leave every bit past 16
+    voting uniformly, ADVICE r1); each token OCCURRENCE, empty tokens
+    included, votes ±1 per bit, and a bit is set when the signed sum is
+    strictly positive (deterministic ties; integer arithmetic, so
+    order-free). Null text yields no row. Each doc's signature is computed
+    in-row from its token Counter with token→hash memoized per task
+    (guide §4.2). Pinned to DuckDB's ``driver_queries._simhash_sql`` at 16
+    and 32 bits by tests/test_dedup_ops.py."""
     from collections import Counter
     from hashlib import md5
 
@@ -731,13 +698,12 @@ def simhash_near_pairs(docs: DataFrame, bits: int = 16, max_hd: int = 2) -> Data
     """(doc_a, doc_b, hd): SimHash pairs within Hamming distance
     ``max_hd`` — exact via the pigeonhole equi-join
     (``hamming_near_pairs``); the DuckDB oracle stays the brute-force
-    quadratic, uncapped. Signatures come from the r6 Arrow kernel
-    (_simhash_kernel, value-identical to :func:`simhash`); the pigeonhole
+    quadratic, uncapped. Signatures come from :func:`simhash`; the pigeonhole
     self-join runs it once per side (MapInPandas defeats exchange-reuse
     canonicalization) — a checkpoint barrier was A/B'd and lost, the
     spread kernel being cheaper than a materialization job."""
     return hamming_near_pairs(
-        _simhash_kernel(docs, bits), "doc_id", "simhash", bits, max_hd
+        simhash(docs, bits), "doc_id", "simhash", bits, max_hd
     ).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hd"
     )

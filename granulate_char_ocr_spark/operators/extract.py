@@ -27,10 +27,12 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StructType
 
 from granulate_char_ocr_spark.functions import kernels
 
-# recognized-payload columns appended to the passthrough keys; the nested
+# recognized-payload columns appended to the passthrough keys, whose types
+# come from the input (string ids in the flagship's tables); the nested
 # chars struct array is optional — building + Arrow-encoding per-char Python
 # dicts costs more than the classification itself, so the hot path (stitch
 # only needs text) runs with detail=False
@@ -38,15 +40,6 @@ _BASE_COLS = "text string, n_chars int, avg_confidence double"
 _CHARS_COL = (
     "chars array<struct<latin:string,confidence:double,method:string,char_order:int>>"
 )
-
-
-def _schema(passthrough_schema: str, detail: bool) -> str:
-    cols = f"{passthrough_schema}, {_BASE_COLS}"
-    return f"{cols}, {_CHARS_COL}" if detail else cols
-
-
-SPAN_KEYS = "doc_id string, offset int, media_ref string"
-UNIQUE_KEYS = "media_ref string"
 
 
 def _process_batch(
@@ -128,7 +121,6 @@ def _process_batch(
 
 def _map_extract(
     df: DataFrame,
-    keys_schema: str,
     passthrough: tuple[str, ...],
     noisy: bool,
     detail: bool,
@@ -139,8 +131,12 @@ def _map_extract(
             if len(pdf):
                 yield _process_batch(pdf, noisy, passthrough, detail, segmenter)
 
+    payload = f"{_BASE_COLS}, {_CHARS_COL}" if detail else _BASE_COLS
+    schema = StructType(
+        df.select(*passthrough).schema.fields + DataType.fromDDL(payload).fields
+    )
     cols = [*passthrough, "width", "height", "pixels"]
-    return df.select(*cols).mapInPandas(fn, schema=_schema(keys_schema, detail))
+    return df.select(*cols).mapInPandas(fn, schema=schema)
 
 
 def extract_media_spans(
@@ -154,7 +150,6 @@ def extract_media_spans(
     its own payload. ``detail=False`` skips the nested per-char structs."""
     return _map_extract(
         media_spans,
-        SPAN_KEYS,
         ("doc_id", "offset", "media_ref"),
         noisy,
         detail,
@@ -173,4 +168,4 @@ def extract_unique_media(
     pure function of the pixels, so each distinct media_ref is classified
     exactly once and the (small) results join back to the span stream —
     pixel bytes never enter a span-stream shuffle."""
-    return _map_extract(media, UNIQUE_KEYS, ("media_ref",), noisy, detail, segmenter)
+    return _map_extract(media, ("media_ref",), noisy, detail, segmenter)

@@ -199,28 +199,20 @@ def image_embeddings(images: DataFrame) -> DataFrame:
     """64-dim {0,1} aHash embedding per image — a real, deterministic feature
     column compatible with operators/similarity.py (cosine / IVF top-k).
 
-    Images sharing a (height, width) within an Arrow batch are stacked into
-    one (B, H, W) tensor and hashed with a single batched block-mean
-    (kernels.ahash_bits_batch) — shapes repeat heavily in real corpora
-    (fixed-size thumbnails; same-length words here), so the per-image Python
-    loop of r1 collapses to one NumPy call per distinct shape."""
+    Images sharing a (height, width) within an Arrow batch are stacked and
+    hashed by one NumPy call (kernels.ahash_bits_many) — shapes repeat
+    heavily in real corpora (fixed-size thumbnails; same-length words
+    here)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
+            imgs = [
+                decode_payload(r.payload, r.codec, r.width, r.height)
+                for r in pdf.itertuples(index=False)
+            ]
+            bits = kernels.ahash_bits_many(imgs).astype(np.float32)
             refs = pdf["media_ref"].to_numpy()
-            embs: list[np.ndarray | None] = [None] * n
-            by_shape: dict[tuple[int, int], list[int]] = {}
-            for i, r in enumerate(pdf.itertuples(index=False)):
-                img = decode_payload(r.payload, r.codec, r.width, r.height)
-                by_shape.setdefault(img.shape, []).append(i)
-                embs[i] = img  # decoded plane, hashed per shape group below
-            for shape, idxs in by_shape.items():
-                stack = np.stack([embs[i] for i in idxs])
-                bits = kernels.ahash_bits_batch(stack).astype(np.float32)
-                for j, i in enumerate(idxs):
-                    embs[i] = bits[j]
-            yield pd.DataFrame({"media_ref": refs, "embedding": embs})
+            yield pd.DataFrame({"media_ref": refs, "embedding": list(bits)})
 
     cols = ["media_ref", "codec", "width", "height", "payload"]
     return images.select(*cols).mapInPandas(fn, schema=EMBED_SCHEMA)

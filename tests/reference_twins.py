@@ -9,9 +9,11 @@ column expression. No package code calls them.
 
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from granulate_char_ocr_spark import alphabet
 from granulate_char_ocr_spark.functions.dom import (
     _BLOCK_SPLIT,
     _DROP_CODE_SUBTREES,
@@ -39,6 +41,7 @@ from granulate_char_ocr_spark.functions.htmltable import (
     _TR,
     CELL_SEP,
 )
+from granulate_char_ocr_spark.functions.kernels import _bm_geometry
 from granulate_char_ocr_spark.functions.markdown import (
     _BLOCK,
     _DROP,
@@ -497,3 +500,37 @@ def fix_mojibake_python(s: str | None) -> str | None:
     if _VALID_RE.match(u) and _LEAD_RE.search(u):
         return u.encode("latin-1").decode("utf-8")
     return s
+
+
+# --- NumPy twins of the image kernels -------------------------------------
+
+
+def _pool(img: np.ndarray, kh: int, kw: int, reduce_max: bool) -> np.ndarray:
+    """Max (dilate) / min (erode) over a kh×kw rect anchored like cv2 (origin
+    at kernel center, ties to top-left for even sizes): the generic form of
+    kernels._dilate2 / _erode2."""
+    pads = ((kh - 1) // 2, kh // 2, (kw - 1) // 2, kw // 2)
+    if reduce_max:
+        padded = np.pad(img, ((pads[0], pads[1]), (pads[2], pads[3])), constant_values=0)
+        op = np.maximum
+    else:
+        padded = np.pad(img, ((pads[0], pads[1]), (pads[2], pads[3])), constant_values=255)
+        op = np.minimum
+    h, w = img.shape
+    out = padded[0:h, 0:w].copy()
+    for dy in range(kh):
+        for dx in range(kw):
+            if dy == 0 and dx == 0:
+                continue
+            out = op(out, padded[dy : dy + h, dx : dx + w])
+    return out
+
+
+def ahash_bits_single(img: np.ndarray) -> np.ndarray:
+    """One image's aHash through a 2-D block-mean (two reduceat passes):
+    the per-image form of kernels.ahash_bits_batch."""
+    h, w = img.shape
+    ys, xs, counts = _bm_geometry(h, w, alphabet.HASH_SIDE, alphabet.HASH_SIDE)
+    colsum = np.add.reduceat(img.astype(np.int32), ys, axis=0)
+    small = np.add.reduceat(colsum, xs, axis=1) / counts
+    return (small > small.mean()).astype(np.uint8).reshape(-1)

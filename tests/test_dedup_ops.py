@@ -227,29 +227,57 @@ def test_lang_id_mixed_language_fixture(spark):
         assert out[i] == expect, (i, out[i], expect)
 
 
-def test_dedup_simhash32_parity(spark):
-    """dedup_simhash32 left the 50-entry gate window in r4 for
-    html_table_rows_docs (its signature computation is a strict subset
-    of the still-gated simhash_near_pairs): exact DuckDB parity over
-    the sf0.001 documents table, pinned here instead."""
+def _assert_simhash_matches_duckdb(spark, bits):
+    """dedup.simhash emits exactly DuckDB's ``_simhash_sql(bits)`` values
+    over the sf0.001 documents plus edge rows: empty tokens vote
+    (split(' ') keeps them), a tie leaves its bit clear (set only when the
+    signed sum is STRICTLY positive) and null text yields no row."""
     import duckdb
+    import pandas as pd
+    from parity import SF
 
     from granulate_char_ocr_spark import driver_queries
 
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r.doc_id, r.simhash)
-        for r in driver_queries.dedup_simhash32(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+    path = f"{SF}/documents.parquet"
+    edges = pd.DataFrame(
+        {
+            "doc_id": [400001, 400002, 400003, 400004, 400005],
+            "text": [
+                "a  b c  d",  # empty tokens vote too
+                " x ",
+                "",           # one empty token
+                None,         # null text -> no row
+                "tie tie",    # even counts exercise ties
+            ],
+        }
     )
-    want = {
-        tuple(r)
-        for r in con.execute(driver_queries.SIMHASH32_ORACLE).fetchall()
-    }
-    assert got == want
+    docs = (
+        spark.read.parquet(path)
+        .select("doc_id", "text")
+        .unionAll(spark.createDataFrame(edges, "doc_id bigint, text string"))
+    )
+    con = duckdb.connect()
+    con.register("edges", edges)
+    con.execute(
+        "CREATE VIEW documents AS SELECT doc_id, text "
+        f"FROM '{path}' UNION ALL SELECT doc_id, text FROM edges"
+    )
+    got = {(r.doc_id, r.simhash) for r in dedup.simhash(docs, bits).collect()}
+    want = set(con.execute(driver_queries._simhash_sql(bits)).fetchall())
+    assert got == want, f"bits={bits}"
+    assert 400004 not in {d for d, _ in got}
+
+
+def test_simhash_kernel_equals_expr(spark):
+    """The Arrow kernel dedup.simhash equals the SQL expression (DuckDB's
+    ``_simhash_sql``) at the legacy 16-bit width."""
+    _assert_simhash_matches_duckdb(spark, 16)
+
+
+def test_dedup_simhash32_parity(spark):
+    """dedup.simhash at the production 32-bit width (the signatures
+    simhash_near_pairs compares) has exact DuckDB parity."""
+    _assert_simhash_matches_duckdb(spark, 32)
 
 
 def test_embedding_near_pairs_blocked_kernel_equals_hof(spark):
@@ -367,37 +395,3 @@ def test_shingles_kernel_equals_expr(spark):
         )
         ref = Counter(tuple(r) for r in dedup.shingles(docs, n).collect())
         assert new == ref, f"n={n}"
-
-
-def test_simhash_kernel_equals_expr(spark):
-    """_simhash_kernel must emit IDENTICAL (doc_id, simhash) values as
-    the expression-shaped simhash() at both the legacy 16-bit and the
-    graded 32-bit width — including empty-token votes (split(' ') keeps
-    them) and tie behavior (bit set only when the signed sum is
-    STRICTLY positive)."""
-    from granulate_char_ocr_spark.operators import dedup
-
-    base = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    edges = spark.createDataFrame(
-        [
-            (400001, "a  b c  d"),  # empty tokens vote too
-            (400002, " x "),
-            (400003, ""),           # one empty token
-            (400004, None),         # null text -> no row
-            (400005, "tie tie"),    # even counts exercise ties
-        ],
-        "doc_id bigint, text string",
-    )
-    docs = base.unionAll(edges)
-    for bits in (16, 32):
-        new = {
-            (r.doc_id, r.simhash)
-            for r in dedup._simhash_kernel(docs, bits).collect()
-        }
-        ref = {
-            (r.doc_id, r.simhash)
-            for r in dedup.simhash(docs, bits).collect()
-        }
-        assert new == ref, f"bits={bits}"

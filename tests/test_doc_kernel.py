@@ -8,6 +8,7 @@ import pyarrow as pa
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 import reference_twins as twins
+from granulate_char_ocr_spark import driver_queries
 from granulate_char_ocr_spark.operators import (
     curation,
     dedup,
@@ -99,6 +100,20 @@ def _edge_docs(spark, id_type: str):
     )
 
 
+def _simhash_duckdb(docs, bits):
+    """DuckDB's simhash oracle over ``docs``, keyed by their doc_id type
+    (SimHash has no DataFrame twin)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("documents", docs.select("doc_id", "text").toPandas())
+    rows = con.execute(driver_queries._simhash_sql(bits)).fetchall()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    return docs.sparkSession.createDataFrame(
+        rows, f"doc_id {id_type}, simhash bigint"
+    )
+
+
 def _kernel_twin_pairs(docs):
     """(name, kernel, twin) for the six doc_kernel kernels."""
     return [
@@ -108,7 +123,7 @@ def _kernel_twin_pairs(docs):
             dedup.minhash_signatures(docs, 4, 2),
             twins._minhash_signatures_expr(docs, 4, 2),
         ),
-        ("simhash", dedup._simhash_kernel(docs, 32), dedup.simhash(docs, 32)),
+        ("simhash", dedup.simhash(docs, 32), _simhash_duckdb(docs, 32)),
         (
             "hashed_grams",
             sampling._hashed_grams(docs, 64, carry_cols=("lang",)),

@@ -53,6 +53,24 @@ def test_dedup_and_salted_paths_agree(spark, corpus):
     assert dedup == salted == exp
 
 
+def test_bigint_doc_ids_on_both_paths(spark, corpus):
+    """The span keys take their types from the input: bigint doc_ids run
+    through the per-span path as well as the dedup path, and both give
+    the golden spans under the same ids."""
+    docs, media, expected = corpus
+
+    def bigint_ids(df):
+        return df.withColumn("doc_id", F.xxhash64("doc_id"))
+
+    exp = _as_map(bigint_ids(expected).collect())
+    for dedup_media in (True, False):
+        out = extract_documents(
+            bigint_ids(docs), media, dedup_media=dedup_media, n_salts=4
+        )
+        assert out.schema["doc_id"].dataType.simpleString() == "bigint"
+        assert _as_map(out.collect()) == exp, dedup_media
+
+
 def test_heavy_doc_extracted(spark, corpus):
     docs, media, expected = corpus
     heavy_id = "doc_00000007"

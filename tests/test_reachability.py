@@ -44,8 +44,6 @@ KEEP = {
     "check of textstats.quality_score",
     "html_extract_docs": "retired query; the only exact DuckDB parity "
     "check of docparse.html_main_texts",
-    "dedup_simhash32": "retired query; the only exact DuckDB parity check "
-    "of dedup.simhash at 32 bits",
     "purchases_within_72h_events": "retired query; the only exact DuckDB "
     "parity check of temporal.range_join",
 }
